@@ -1478,8 +1478,8 @@ def q_ft_classic_tfidf(spark, sf_dir):
 
 def q_ft_lm_dirichlet(spark, sf_dir):
     """LM Dirichlet ranking (Similarities/LMDirichletSimilarity.cs:48,
-    mu=2000): per matched term ln(1 + tf/(mu*p)) + ln(mu/(dl+mu)) with
-    the collection model p = ttf/sum_ttf — the second non-BM25
+    mu=2000): per matched term max(ln(1 + tf/(mu*p)) + ln(mu/(dl+mu)), 0)
+    with the collection model p = ttf/sum_ttf — the second non-BM25
     similarity on the shared-postings extension point. Integer-exact
     per-term micro floor; SQL oracle mirrors the op order."""
     s = _searcher(spark, sf_dir)
@@ -5091,7 +5091,8 @@ scored AS (
         + _TOPK_TAIL.format(k=10)
     )
 
-    # LM Dirichlet (r5): ln(1 + tf/(mu*p)) + ln(mu/(dl+mu)), mu=2000
+    # LM Dirichlet (r5): ln(1 + tf/(mu*p)) + ln(mu/(dl+mu)), mu=2000, each
+    # term's contribution clamped at 0 (LMDirichletSimilarity.cs:77)
     _lm_terms = ["query", "stream"]
     _lm_tfs = ",\n".join(
         f"t{i} AS (SELECT doc_id, count(*)::DOUBLE AS tf FROM tok "
@@ -5099,9 +5100,9 @@ scored AS (
         for i, t in enumerate(_lm_terms)
     )
     _lm_scores = " UNION ALL ".join(
-        f"SELECT doc_id, CAST(floor((ln(1.0 + t{i}.tf / (2000.0 * "
+        f"SELECT doc_id, CAST(floor(greatest(ln(1.0 + t{i}.tf / (2000.0 * "
         f"((SELECT sum(tf) FROM t{i}) / st.sum_ttf))) + "
-        f"ln(2000.0 / (d.dl + 2000.0))) * 1000000.0 + 0.5) AS BIGINT) AS s "
+        f"ln(2000.0 / (d.dl + 2000.0)), 0.0) * 1000000.0 + 0.5) AS BIGINT) AS s "
         f"FROM t{i} JOIN dl d USING (doc_id) CROSS JOIN st"
         for i in range(len(_lm_terms))
     )

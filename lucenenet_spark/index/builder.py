@@ -214,6 +214,18 @@ class IndexBuilder:
             self.docids_dense = True  # rank assignment is dense 0..n-1
         if overwrite:
             self.storage.drop()
+        summary, run = self._stage_runner()
+        if not self.config.external_docids:
+            run("docoffsets", lambda: self._stage_docoffsets(pages))
+        run("partials", lambda: self._stage_partials(pages))
+        return self._finish(summary, run)
+
+    def _stage_runner(self):
+        """A fresh build summary and the one stage runner that fills it: a
+        stage whose commit marker matches the fingerprint is skipped
+        (resume); any other stage runs and its meta records ``wall_sec``."""
+        import time
+
         fp = self._fp()
         summary = {"fingerprint": fp, "stages": {}}
 
@@ -221,18 +233,13 @@ class IndexBuilder:
             if self.storage.is_committed(stage, fp):
                 summary["stages"][stage] = {"skipped": True}
                 return
-            import time as _time
-
-            t0 = _time.time()
+            t0 = time.time()
             meta = fn()
             if isinstance(meta, dict):
-                meta["wall_sec"] = round(_time.time() - t0, 3)
+                meta["wall_sec"] = round(time.time() - t0, 3)
             summary["stages"][stage] = meta
 
-        if not self.config.external_docids:
-            run("docoffsets", lambda: self._stage_docoffsets(pages))
-        run("partials", lambda: self._stage_partials(pages))
-        return self._finish(summary, run)
+        return summary, run
 
     def _finish(self, summary: dict, run) -> dict:
         """Stages downstream of the partials table — also the entry point
@@ -247,17 +254,7 @@ class IndexBuilder:
     def finish_from_partials(self) -> dict:
         """Run every stage downstream of an externally-written partials
         table (compaction path)."""
-        fp = self._fp()
-        summary = {"fingerprint": fp, "stages": {}}
-
-        def run(stage: str, fn):
-            if self.storage.is_committed(stage, fp):
-                summary["stages"][stage] = {"skipped": True}
-                return
-            meta = fn()
-            summary["stages"][stage] = meta
-
-        return self._finish(summary, run)
+        return self._finish(*self._stage_runner())
 
     # ------------------------------------------------------------------ #
     def _stage_docoffsets(self, pages: DataFrame) -> dict:

@@ -22,11 +22,22 @@ Scoring precision contract (SURVEY.md §4.4): per-term scores are computed in
 numpy float32 in the exact reference op order ``(idf*(k1+1) * freq) / (freq +
 cache[norm])``; cross-clause accumulation is float64 summed then cast to
 float32 once (DisjunctionSumScorer convention, see scoring/oracle.py).
+
+Every query kernel shares one decode/score path of three private helpers:
+
+- :func:`_decode_blocks` — the one posting-block decode (``first_docid`` +
+  cumsum(``docid_deltas``), flat per-block ``positions`` split by ``freqs``);
+- :class:`_BM25Scorer` — the one per-entry BM25 score, float32 on quantized
+  norm bytes or ``exact_int`` double micro-units, owning the per-field norm
+  cache / avgdl and the boost placement;
+- :func:`_flat_keys` — the one ``row * 2^33 + position`` flat-key builder of
+  the phrase and span kernels.
 """
 
 from __future__ import annotations
 
 import fnmatch
+import math
 from dataclasses import dataclass
 from functools import reduce
 
@@ -159,20 +170,167 @@ def _df_bounded(q: Query) -> bool:
     return False
 
 
-def _decode_tf_dl(pdf: pd.DataFrame):
-    """Posting-block batch -> flat (docids, tf float64, dl float64) — the
-    shared delta-decode for scorers that need (tf, doclen) pairs."""
-    docids = np.concatenate([
-        fd + np.cumsum(np.asarray(d, dtype=np.int64))
-        for fd, d in zip(pdf["first_docid"], pdf["docid_deltas"])
-    ])
-    tf = np.concatenate(
-        [np.asarray(x, dtype=np.int64) for x in pdf["freqs"]]
-    ).astype(np.float64)
-    dl = np.concatenate(
-        [np.asarray(x, dtype=np.int64) for x in pdf["doclens"]]
-    ).astype(np.float64)
-    return docids, tf, dl
+def _idf(maxdoc: int, df) -> float:
+    """Reference idf formula in pure double (BM25Similarity.cs:67-70
+    without the final float32 cast) — glibc ``log``, the same libm DuckDB
+    calls, so oracle idf is bit-identical."""
+    return math.log(1.0 + (maxdoc - df + 0.5) / (df + 0.5))
+
+
+def _idf_per_entry(dfs: pd.Series, lens: np.ndarray, maxdoc: int) -> np.ndarray:
+    """Double idf of every posting entry of a batch whose blocks carry a
+    joined ``df`` column (the scored multi-term rewrites): libm log once
+    per UNIQUE df (numpy's vectorized log may differ from the SQL oracle's
+    ln by 1 ulp), repeated over each block's ``lens`` entries."""
+    dfs = dfs.to_numpy(np.int64)
+    uniq = np.unique(dfs)
+    idf_u = np.array([_idf(maxdoc, int(d)) for d in uniq])
+    return np.repeat(idf_u[np.searchsorted(uniq, dfs)], lens)
+
+
+def _decode_blocks(batches, *cols: str):
+    """The one posting-block decode (Lucene41PostingsReader.RefillDocs,
+    Lucene41PostingsReader.cs:385-404). For every non-empty batch of
+    posting-block rows yields ``(pdf, docids, lens, flat)``:
+
+    - ``docids``: ``first_docid`` + cumsum(``docid_deltas``) per block,
+      concatenated;
+    - ``lens``: entries per block, to repeat block-level columns (``df``,
+      ``term``) per entry;
+    - ``flat[c]``: each column of ``cols`` concatenated as int64. The flat
+      per-block ``positions`` come back split into one array per entry by
+      ``freqs`` (freq == the entry's position count), so they need
+      ``"freqs"`` in ``cols`` too.
+
+    Callers project only the columns they read before the scan."""
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        lens = pdf["docid_deltas"].map(len).to_numpy(np.int64)
+        deltas = np.concatenate(
+            [np.asarray(d, dtype=np.int64) for d in pdf["docid_deltas"]]
+        )
+        # one cumsum over the batch; each block subtracts the running sum
+        # before its first entry and adds its first_docid
+        cs = np.cumsum(deltas)
+        before = np.concatenate(([0], cs))[np.cumsum(lens) - lens]
+        docids = np.repeat(pdf["first_docid"].to_numpy(np.int64) - before, lens) + cs
+        flat = {
+            c: np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf[c]])
+            for c in cols
+        }
+        if "positions" in flat:
+            flat["positions"] = np.split(
+                flat["positions"], np.cumsum(flat["freqs"])[:-1]
+            )
+        yield pdf, docids, lens, flat
+
+
+# flat-key row stride: > 2 * max position, so rows never overlap
+_ROW_KEY = np.int64(1) << 33
+
+
+def _flat_keys(col: pd.Series):
+    """The one flat-key builder of the positional kernels: a column of
+    per-row sorted position arrays -> ``(keys, rows)`` with key = row *
+    2^33 + position. Rows are batch-ordered and positions ascending, so
+    the keys are globally sorted and one searchsorted answers a per-row
+    question for the whole batch. ``None`` (a left-join miss) counts as
+    no positions."""
+    lens = np.array([0 if v is None else len(v) for v in col], dtype=np.int64)
+    vals = (
+        np.concatenate(
+            [np.asarray(x, dtype=np.int64) for x in col if x is not None]
+        )
+        if lens.sum()
+        else np.array([], dtype=np.int64)
+    )
+    rows = np.repeat(np.arange(len(col), dtype=np.int64), lens)
+    return rows * _ROW_KEY + vals, rows
+
+
+class _BM25Scorer:
+    """The one per-entry BM25 scorer (BM25DocScorer.Score,
+    BM25Similarity.cs:259-264) behind every query kernel. Built on the
+    driver from the Searcher's scoring mode, the field (its norm cache and
+    exact avgdl), the term stats and the boost; shipped to the executors
+    inside the kernel closures.
+
+    - float32 (``"lucene"``): ``(w*f)/(f+cache[nb & 0xFF])`` on quantized
+      norm bytes, ``w = idf*(k1+1)``; the boost multiplies that float32
+      score afterwards.
+    - ``exact_int``: ``floor((w*f)/(f+k1*((1-b)+(b*dl)/avgdl))*1e6+0.5)``
+      on exact doclens, the boost folded into ``w`` as a double multiply
+      so the integers stay reproducible.
+
+    ``sts`` lists the term stats of the (pseudo-)term: a phrase or span
+    scores with the sum of its members' idfs. ``sts=None`` leaves the
+    weight to the caller, which passes per-entry :meth:`weight` values
+    (the scored multi-term rewrite, whose float32 weight also folds the
+    boost in: ``fold_boost``)."""
+
+    def __init__(
+        self, s: "Searcher", field: str, sts, boost: float = 1.0,
+        fold_boost: bool = False,
+    ):
+        self.exact = s.scoring == "exact_int"
+        self.k1, self.b = s.k1d, s.bd
+        text = field == "text"
+        self.cache = s.cache if text else s.field_cache[field]
+        self.avgdl = s.avgdl_exact if text else s.field_avgdl_exact[field]
+        self.boost, self.fold_boost = float(boost), fold_boost
+        self.w = None
+        if sts is not None:
+            self.w = self.weight(
+                np.float32(sum(float(st.idf) for st in sts)),
+                sum(_idf(s.maxdoc, st.df) for st in sts),
+            )
+
+    def weight(self, idf, idf_exact):
+        """``idf*(k1+1)`` in the mode's precision (scalar or per entry)."""
+        if self.exact:
+            return idf_exact * (self.k1 + 1.0) * self.boost
+        w = np.float32(idf) * (np.float32(self.k1) + np.float32(1.0))
+        return w * np.float32(self.boost) if self.fold_boost else w
+
+    def __call__(self, freq, norm, w=None) -> np.ndarray:
+        """Per-entry scores as float64 (holding the float32 value, or the
+        integer micro-units). ``norm`` is the entry's norm byte (float32)
+        or exact doclen (exact_int); ``w`` overrides the driver weight."""
+        w = self.w if w is None else w
+        if self.exact:
+            f = np.asarray(freq, dtype=np.float64)
+            dl = np.asarray(norm, dtype=np.float64)
+            denom = f + self.k1 * ((1.0 - self.b) + (self.b * dl) / self.avgdl)
+            return np.floor((w * f) / denom * 1e6 + 0.5)
+        f = np.asarray(freq, dtype=np.float32)
+        nb = np.asarray(norm, dtype=np.int64) & 0xFF
+        s = ((w * f) / (f + self.cache[nb])).astype(np.float32)
+        if self.boost != 1.0 and not self.fold_boost:
+            s = (np.float32(self.boost) * s).astype(np.float32)
+        return s.astype(np.float64)
+
+
+def _score_hits(scorer: _BM25Scorer, pdf: pd.DataFrame, hit, freq) -> pd.DataFrame:
+    """(docid, score) of the matching rows ``hit`` of a positional batch,
+    ``freq`` per hit row, scored on the anchor slot's norm column."""
+    norm = pdf["doclen" if scorer.exact else "norm_byte"].to_numpy(np.int64)
+    return pd.DataFrame(
+        {"docid": pdf["docid"].to_numpy(np.int64)[hit], "score": scorer(freq, norm[hit])}
+    )
+
+
+def _sloppy_freq(rows, match_len, n: int, hit, exact: bool) -> np.ndarray:
+    """Per-row sum over a batch's matches of sloppyFreq = 1/(1+matchLength)
+    (BM25Similarity.cs:74), for the ``hit`` rows. exact_int sums integer
+    micro-unit factors (bit-reproducible in any engine); float32 mode sums
+    float64 in anchor order and the scorer casts once (the engine-wide
+    double-accumulate convention, see scoring/oracle.py)."""
+    m = match_len.astype(np.float64)
+    if exact:
+        sf = np.floor(1e6 / (1.0 + m) + 0.5)
+        return np.bincount(rows, weights=sf, minlength=n)[hit] / 1e6
+    return np.bincount(rows, weights=1.0 / (1.0 + m), minlength=n)[hit]
 
 
 def _topk_with_rank(scored: DataFrame, k: int) -> DataFrame:
@@ -204,7 +362,6 @@ class Searcher:
         index_dir: str,
         k1: float = 1.2,
         b: float = 0.75,
-        cache_tables: bool = False,
         scoring: str = "lucene",
     ):
         """``scoring``:
@@ -342,16 +499,6 @@ class Searcher:
         # CachingWrapperFilter: persisted docid-set DataFrames keyed by the
         # wrapped filter's canonical (frozen dataclass) repr
         self._filter_cache: dict[str, DataFrame] = {}
-        if cache_tables:
-            # OFF by default, and measured strictly worse on this engine:
-            # caching the postings table pays a full materialization scan of
-            # EVERY column (positions included), and InMemoryTableScan loses
-            # the Parquet footer min/max pushdown on the term-sorted files —
-            # the seek-by-term design (BlockTree analogue) lives in that
-            # pushdown. At 100 TB the postings table could never be cached
-            # anyway. Kept as an option for small hot indexes only.
-            self.postings = self.postings.cache()
-            self.termstats = self.termstats.cache()
         # the UNPRUNED postings view: cached filter sets must be built
         # against this, never against a temporarily block-pruned
         # self.postings (FilteredQuery sort-field prune / index-sort probe)
@@ -422,14 +569,6 @@ class Searcher:
             ascii_only=am.get("ascii_tokens", False),
         )
 
-    def _idf_exact(self, df: int) -> float:
-        """Reference idf formula in pure double (BM25Similarity.cs:67-70
-        without the final float32 cast) — glibc ``log`` on the driver, the
-        same libm DuckDB calls, so oracle idf is bit-identical."""
-        import math
-
-        return math.log(1.0 + (self.maxdoc - df + 0.5) / (df + 0.5))
-
     # ---------------- term statistics (Weight creation) ----------------- #
     def term_stats(self, terms: list[str]) -> dict[str, TermStat]:
         """Pull TermStatistics for the query's terms — the
@@ -437,8 +576,6 @@ class Searcher:
         small pushdown-pruned scan, bounded by the query's term count."""
         if not terms:
             return {}
-        import math
-
         rows = self.termstats.filter(F.col("term").isin(list(set(terms)))).collect()
         out = {}
         for r in rows:
@@ -446,118 +583,99 @@ class Searcher:
             # idf recomputed from the COMPOSITE df (BM25Similarity.cs:67-70:
             # double log, one float cast) — the stored per-generation idf is
             # stale the moment a delta lands
-            idf = np.float32(math.log(1.0 + (self.maxdoc - df + 0.5) / (df + 0.5)))
+            idf = np.float32(_idf(self.maxdoc, df))
             out[r["term"]] = TermStat(df, int(r["ttf"]), idf, np.float32(r["max_ub"]))
         return out
 
     # ---------------- decode + score kernel ----------------------------- #
-    def _decode_score(
-        self, blocks: DataFrame, st: TermStat, boost: float = 1.0,
-        field: str = "text",
-    ) -> DataFrame:
-        """Posting blocks -> (docid, score float64-holding-float32-value).
-        The vectorized analogue of Lucene41PostingsReader.RefillDocs
-        (Lucene41PostingsReader.cs:385-404) fused with BM25DocScorer.Score
-        (BM25Similarity.cs:259-264). In exact_int mode the kernel computes
-        the double-precision BM25 on exact doclens and emits integer
-        micro-scores (see __init__ docstring); op order mirrors the SQL
-        oracle exactly: ((idf*(k1+1))*tf) / (tf + k1*((1-b) + (b*dl)/avgdl)).
-        ``boost`` applies only on the exact path (folded into the weight as
-        a double multiply BEFORE the micro-int floor, keeping integers
-        exact); the float32 path applies boost in _score_term instead."""
-        exact = self.scoring == "exact_int"
-        # norms/avgdl are PER FIELD (FieldInfos norms separation): an extra
-        # text field's postings carry that field's doclens/norm bytes, and
-        # its scoring uses that field's avgdl-derived cache
-        cache = self.cache if field == "text" else self.field_cache[field]
-        w = np.float32(st.idf) * (self.k1 + np.float32(1.0))
-        w_exact = self._idf_exact(st.df) * (self.k1d + 1.0) * float(boost)
-        k1d, bd = self.k1d, self.bd
-        avgdl_exact = (
-            self.avgdl_exact if field == "text"
-            else self.field_avgdl_exact[field]
-        )
-        one_minus_b = 1.0 - bd
+    def _decode_score(self, blocks: DataFrame, scorer: _BM25Scorer) -> DataFrame:
+        """Posting blocks -> (docid, score float64-holding-float32-value):
+        the one decode fused with the one per-entry scorer — the vectorized
+        Lucene41PostingsReader.RefillDocs + BM25DocScorer.Score. The scan
+        reads ``norm_bytes`` only in float32 mode and ``doclens`` only in
+        exact_int mode. A scorer without term stats (the scored multi-term
+        rewrite) weighs each entry by the idf of its block's joined ``df``."""
+        norm = "doclens" if scorer.exact else "norm_bytes"
+        per_df = scorer.w is None
+        maxdoc = self.maxdoc
 
         def decode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                docids = []
-                for fd, deltas in zip(pdf["first_docid"], pdf["docid_deltas"]):
-                    d = np.asarray(deltas, dtype=np.int64)
-                    d = np.cumsum(d)
-                    docids.append(fd + d)
-                docids = np.concatenate(docids)
-                freqs = np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf["freqs"]])
-                if exact:
-                    dls = np.concatenate(
-                        [np.asarray(x, dtype=np.int64) for x in pdf["doclens"]]
-                    ).astype(np.float64)
-                    f = freqs.astype(np.float64)
-                    denom = f + k1d * (one_minus_b + (bd * dls) / avgdl_exact)
-                    s = (w_exact * f) / denom
-                    score = np.floor(s * 1e6 + 0.5)
-                else:
-                    norms = np.concatenate(
-                        [np.asarray(x, dtype=np.int64) for x in pdf["norm_bytes"]]
-                    )
-                    f = freqs.astype(np.float32)
-                    score = ((w * f) / (f + cache[norms & 0xFF])).astype(np.float32)
-                yield pd.DataFrame({"docid": docids, "score": score.astype(np.float64)})
+            for pdf, docids, lens, flat in _decode_blocks(batches, "freqs", norm):
+                w = None
+                if per_df:
+                    idf = _idf_per_entry(pdf["df"], lens, maxdoc)
+                    w = scorer.weight(idf, idf)
+                score = scorer(flat["freqs"], flat[norm], w)
+                yield pd.DataFrame({"docid": docids, "score": score})
 
-        cols = blocks.select(
-            "first_docid", "docid_deltas", "freqs", "doclens" if exact else "norm_bytes"
+        cols = ["first_docid", "docid_deltas", "freqs", norm]
+        return blocks.select(*cols, *(["df"] if per_df else [])).mapInPandas(
+            decode, schema=_EMPTY_SCHEMA
         )
-        return cols.mapInPandas(decode, schema=_EMPTY_SCHEMA)
+
+    def _decode_docids(self, blocks: DataFrame) -> DataFrame:
+        """Posting blocks -> the docids alone (deduped per batch): the
+        match set of a norms-free or constant-score scorer."""
+
+        def decode(batches):
+            for _, docids, _, _ in _decode_blocks(batches):
+                yield pd.DataFrame({"docid": np.unique(docids)})
+
+        return blocks.select("first_docid", "docid_deltas").mapInPandas(
+            decode, schema="docid long"
+        )
 
     def _decode_positions(self, blocks: DataFrame, need_norms: bool = True) -> DataFrame:
-        """Posting blocks -> (docid, freq, norm_byte, positions) for
+        """Posting blocks -> (docid, [norm_byte, doclen,] positions) for
         positional queries. ``need_norms=False`` prunes the norm_bytes /
         doclens array columns out of the Parquet scan entirely — a
         non-anchor slot of a phrase/span only contributes positions, and
         the scoring columns ride the anchor slot's scan."""
+        norms = ["norm_bytes", "doclens"] if need_norms else []
+
         def decode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                out_doc, out_freq, out_norm, out_dl, out_pos = [], [], [], [], []
-                for fd, deltas, freqs, norms, dls, poss in zip(
-                    pdf["first_docid"], pdf["docid_deltas"], pdf["freqs"],
-                    pdf["norm_bytes"] if need_norms else pdf["freqs"],
-                    pdf["doclens"] if need_norms else pdf["freqs"],
-                    pdf["positions"],
-                ):
-                    d = fd + np.cumsum(np.asarray(deltas, dtype=np.int64))
-                    f = np.asarray(freqs, dtype=np.int64)
-                    out_doc.append(d)
-                    out_freq.append(f)
-                    if need_norms:
-                        out_norm.append(np.asarray(norms, dtype=np.int64))
-                        out_dl.append(np.asarray(dls, dtype=np.int64))
-                    # positions are stored flat per block; freq == per-entry
-                    # position count, so cumsum(freqs) are the split points
-                    flat = np.asarray(poss, dtype=np.int64)
-                    out_pos.extend(np.split(flat, np.cumsum(f)[:-1]))
-                res = {
-                    "docid": np.concatenate(out_doc),
-                    "freq": np.concatenate(out_freq),
-                }
+            for _, docids, _, flat in _decode_blocks(
+                batches, "freqs", *norms, "positions"
+            ):
+                res = {"docid": docids}
                 if need_norms:
-                    res["norm_byte"] = np.concatenate(out_norm)
-                    res["doclen"] = np.concatenate(out_dl)
-                res["positions"] = out_pos
+                    res["norm_byte"] = flat["norm_bytes"]
+                    res["doclen"] = flat["doclens"]
+                res["positions"] = flat["positions"]
                 yield pd.DataFrame(res)
 
+        schema = "docid long, positions array<int>"
         if need_norms:
-            cols = blocks.select(
-                "first_docid", "docid_deltas", "freqs", "norm_bytes", "doclens", "positions"
-            )
-            schema = "docid long, freq long, norm_byte int, doclen int, positions array<int>"
-        else:
-            cols = blocks.select("first_docid", "docid_deltas", "freqs", "positions")
-            schema = "docid long, freq long, positions array<int>"
+            schema = "docid long, norm_byte int, doclen int, positions array<int>"
+        cols = blocks.select("first_docid", "docid_deltas", "freqs", *norms, "positions")
         return cols.mapInPandas(decode, schema=schema)
+
+    def _slot(self, keys: list[str], i: int) -> DataFrame:
+        """Slot ``i`` of a positional join: docid + ``pos_i``, the sorted
+        positions of ``keys``. Several keys merge into one deduped position
+        stream per doc — MultiPhraseQuery's UnionDocsAndPositionsEnum, the
+        SpanOrQuery.cs:36-58 union (two alternatives at one position count
+        a single match site). Slot 0 also carries norm_byte/doclen for the
+        scorer."""
+        term = F.col("term")
+        blocks = self.postings.filter(
+            term == keys[0] if len(keys) == 1 else term.isin(keys)
+        )
+        dec = self._decode_positions(blocks, need_norms=(i == 0))
+        if len(keys) == 1:
+            norms = [F.col("norm_byte"), F.col("doclen")] if i == 0 else []
+            return dec.select("docid", F.col("positions").alias(f"pos_{i}"), *norms)
+        aggs = [
+            F.array_sort(
+                F.array_distinct(F.flatten(F.collect_list("positions")))
+            ).alias(f"pos_{i}")
+        ]
+        if i == 0:
+            aggs += [
+                F.first("norm_byte").alias("norm_byte"),
+                F.first("doclen").alias("doclen"),
+            ]
+        return dec.groupBy("docid").agg(*aggs)
 
     # ---------------- per-query-type scoring ----------------------------- #
     def _empty(self) -> DataFrame:
@@ -566,19 +684,12 @@ class Searcher:
     def _score_term(self, q: TermQuery, stats: dict[str, TermStat]) -> DataFrame:
         if q.field != "text" and q.field not in self.text_fields:
             return self._score_keyword_term(q, stats)
-        key = q.term if q.field == "text" else _skey(q.field, q.term)
+        key = _skey(q.field, q.term)
         st = stats.get(key)
         if st is None:
             return self._empty()
         blocks = self.postings.filter(F.col("term") == key)
-        scored = self._decode_score(blocks, st, boost=q.boost, field=q.field)
-        if q.boost != 1.0 and self.scoring != "exact_int":
-            scored = scored.withColumn(
-                "score",
-                (F.col("score").cast("float") * F.lit(float(np.float32(q.boost))).cast("float"))
-                .cast("float").cast("double"),
-            )
-        return scored
+        return self._decode_score(blocks, _BM25Scorer(self, q.field, [st], q.boost))
 
     def _score_keyword_term(self, q: TermQuery, stats: dict[str, TermStat]) -> DataFrame:
         """TermQuery on a keyword field (StringField.cs:43): postings seek
@@ -591,24 +702,10 @@ class Searcher:
         st = stats.get(key)
         if st is None:
             return self._empty()
-        blocks = self.postings.filter(F.col("term") == key)
-
-        def decode_docs(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ds = [
-                    fd + np.cumsum(np.asarray(deltas, dtype=np.int64))
-                    for fd, deltas in zip(pdf["first_docid"], pdf["docid_deltas"])
-                ]
-                yield pd.DataFrame({"docid": np.concatenate(ds)})
-
-        docs = blocks.select("first_docid", "docid_deltas").mapInPandas(
-            decode_docs, schema="docid long"
-        )
+        docs = self._decode_docids(self.postings.filter(F.col("term") == key))
         if self.scoring == "exact_int":
             # op order mirrors the SQL oracle: floor((idf*boost)*1e6 + 0.5)
-            val = float(np.floor(self._idf_exact(st.df) * float(q.boost) * 1e6 + 0.5))
+            val = float(np.floor(_idf(self.maxdoc, st.df) * float(q.boost) * 1e6 + 0.5))
         else:
             val = float(np.float32(st.idf) * np.float32(q.boost))
         return docs.withColumn("score", F.lit(val).cast("double"))
@@ -665,22 +762,7 @@ class Searcher:
         relative to postings), docids decoded, deduplicated."""
         terms = self._expand_terms(q)
         blocks = self.postings.join(F.broadcast(terms), "term", "left_semi")
-
-        def decode_docs(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ds = [
-                    fd + np.cumsum(np.asarray(deltas, dtype=np.int64))
-                    for fd, deltas in zip(pdf["first_docid"], pdf["docid_deltas"])
-                ]
-                yield pd.DataFrame({"docid": np.unique(np.concatenate(ds))})
-
-        docs = (
-            blocks.select("first_docid", "docid_deltas")
-            .mapInPandas(decode_docs, schema="docid long")
-            .distinct()
-        )
+        docs = self._decode_docids(blocks).distinct()
         boost = float(np.float32(getattr(q, "boost", 1.0))) * self.const_score
         return docs.withColumn("score", F.lit(boost).cast("double"))
 
@@ -699,64 +781,27 @@ class Searcher:
             raise ValueError(
                 "phrase queries need an index built with index_positions=True"
             )
-        idf_sum = np.float32(sum(float(stats[k].idf) for k in keys))
-        per_term = []
-        for i, k in enumerate(keys):
-            blocks = self.postings.filter(F.col("term") == k)
-            dec = self._decode_positions(blocks, need_norms=(i == 0)).select(
-                "docid",
-                F.col("positions").alias(f"pos_{i}"),
-                *([F.col("norm_byte"), F.col("doclen")] if i == 0 else []),
-            )
-            per_term.append(dec)
+        per_term = [self._slot([k], i) for i, k in enumerate(keys)]
         joined = reduce(lambda a, b: a.join(b, "docid", "inner"), per_term)
-        # exact mode: phrase idf = sum of constituent exact idfs in term
-        # order; boost folds into the weight as a double multiply (the
-        # float32 path applies it per-score in the kernel), so boosted
-        # phrases keep the reproducible-integer contract
-        idf_sum_exact = 0.0
-        for k in keys:
-            idf_sum_exact = idf_sum_exact + self._idf_exact(stats[k].df)
-        return self._positions_kernel(
-            joined, len(q.terms), q.slop, idf_sum, idf_sum_exact, q.boost,
-            field=fld,
-        )
+        scorer = _BM25Scorer(self, fld, [stats[k] for k in keys], q.boost)
+        return self._positions_kernel(joined, len(q.terms), q.slop, scorer)
 
     def _positions_kernel(
-        self,
-        joined: DataFrame,
-        nterms: int,
-        slop: int,
-        idf_sum: np.float32,
-        idf_sum_exact: float,
-        qboost: float,
-        field: str = "text",
+        self, joined: DataFrame, nterms: int, slop: int, scorer: _BM25Scorer
     ) -> DataFrame:
         """Shared position-intersection + pseudo-term BM25 scorer behind
         PhraseQuery AND MultiPhraseQuery: ``joined`` carries one sorted
         position array per slot (pos_0..pos_{n-1}) plus docid/norm_byte/
-        doclen; slot i must have a position p0+i (within ±slop). ``field``
-        selects the norm cache / avgdl — a phrase on an extra text field
-        carries that FIELD'S doclens in its postings."""
-        cache = self.cache if field == "text" else self.field_cache[field]
-        w = idf_sum * (self.k1 + np.float32(1.0))
-        boost = np.float32(qboost)
-        exact = self.scoring == "exact_int"
-        w_exact = idf_sum_exact * (self.k1d + 1.0) * float(qboost)
-        k1d, bd = self.k1d, self.bd
-        avgdl_exact = (
-            self.avgdl_exact if field == "text"
-            else self.field_avgdl_exact[field]
-        )
-        one_minus_b = 1.0 - bd
+        doclen; slot i must have a position p0+i (within ±slop). The
+        ``scorer`` carries the field's norm cache / avgdl — a phrase on an
+        extra text field carries that FIELD'S doclens in its postings."""
+        exact = scorer.exact
 
         def phrase_score(batches):
             """Fully vectorized across the batch (the chunked style of
-            ExactPhraseScorer.cs:26-99): each term's per-row position lists
-            are flattened once, and matches are found with searchsorted on
-            composite (row, position) int64 keys — positions within a row
-            are ascending and rows are batch-ordered, so the flat key array
-            is globally sorted. No per-row or per-position Python loops.
+            ExactPhraseScorer.cs:26-99): matches are found with
+            searchsorted on the :func:`_flat_keys` of each slot. No per-row
+            or per-position Python loops.
 
             Semantics are IDENTICAL to the row-at-a-time form: slop==0
             needs position p0+i present in term i's list (freq = match
@@ -772,28 +817,17 @@ class Searcher:
             a deterministic convention; the reference's own PhraseQueue
             enumeration is likewise order-dependent and approximate (see
             the SloppyPhraseScorer.cs PhraseFreq doc comment)."""
-            M = np.int64(1) << 33  # > 2*max position; rows separated safely
             BIG = np.int64(1) << 40  # poison distance; masked by `match`
-
-            def flat_keys(col):
-                lens = col.map(len).to_numpy(np.int64)
-                vals = (
-                    np.concatenate([np.asarray(x, dtype=np.int64) for x in col])
-                    if lens.sum()
-                    else np.array([], dtype=np.int64)
-                )
-                rows = np.repeat(np.arange(len(col), dtype=np.int64), lens)
-                return rows * M + vals, rows
 
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                base_keys, base_rows = flat_keys(pdf["pos_0"])
+                base_keys, base_rows = _flat_keys(pdf["pos_0"])
                 match = np.ones(len(base_keys), dtype=bool)
                 maxc = np.zeros(len(base_keys), dtype=np.int64)
                 minc = np.zeros(len(base_keys), dtype=np.int64)
                 for i in range(1, nterms):
-                    keys_i, _ = flat_keys(pdf[f"pos_{i}"])
+                    keys_i, _ = _flat_keys(pdf[f"pos_{i}"])
                     if slop == 0:
                         cand = base_keys + i
                         idx = np.searchsorted(keys_i, cand)
@@ -829,43 +863,14 @@ class Searcher:
                 hit = counts > 0
                 if not hit.any():
                     continue
-                docids = pdf["docid"].to_numpy(np.int64)[hit]
                 if slop == 0:
                     # exact phrase: slop factor 1 per match, freq = count
-                    fd = counts[hit].astype(np.float64)
-                    f64 = fd
+                    f = counts[hit].astype(np.float64)
                 else:
-                    # damped freq: exact mode sums integer micro-unit slop
-                    # factors (bit-reproducible in any engine); lucene mode
-                    # sums 1/(1+matchLength) in float64 in anchor order and
-                    # casts once (the engine-wide double-accumulate
-                    # convention, see scoring/oracle.py module docstring)
-                    m_m = matchlen[match].astype(np.float64)
-                    rows_m = base_rows[match]
-                    if exact:
-                        sf_int = np.floor(1e6 / (1.0 + m_m) + 0.5)
-                        fd = (
-                            np.bincount(rows_m, weights=sf_int, minlength=len(pdf))[hit]
-                            / 1e6
-                        )
-                        f64 = None
-                    else:
-                        f64 = np.bincount(
-                            rows_m, weights=1.0 / (1.0 + m_m), minlength=len(pdf)
-                        )[hit]
-                if exact:
-                    dl = pdf["doclen"].to_numpy(np.float64)[hit]
-                    denom = fd + k1d * (one_minus_b + (bd * dl) / avgdl_exact)
-                    score = np.floor((w_exact * fd) / denom * 1e6 + 0.5)
-                else:
-                    f32 = f64.astype(np.float32)
-                    nb = pdf["norm_byte"].to_numpy(np.int64)[hit] & 0xFF
-                    score = (boost * ((w * f32) / (f32 + cache[nb])).astype(np.float32)).astype(
-                        np.float32
+                    f = _sloppy_freq(
+                        base_rows[match], matchlen[match], len(pdf), hit, exact
                     )
-                yield pd.DataFrame(
-                    {"docid": docids, "score": score.astype(np.float64)}
-                )
+                yield _score_hits(scorer, pdf, hit, f)
 
         return joined.mapInPandas(phrase_score, schema=_EMPTY_SCHEMA)
 
@@ -886,40 +891,12 @@ class Searcher:
             if not alts:
                 return self._empty()
             slots.append(alts)
-        all_terms = [t for slot in slots for t in slot]
-        idf_sum = np.float32(sum(float(stats[t].idf) for t in all_terms))
-        idf_sum_exact = 0.0
-        for t in all_terms:
-            idf_sum_exact = idf_sum_exact + self._idf_exact(stats[t].df)
-        per_slot = []
-        for i, alts in enumerate(slots):
-            blocks = self.postings.filter(F.col("term").isin(alts))
-            dec = self._decode_positions(blocks, need_norms=(i == 0))
-            if len(alts) > 1:
-                # union of alternatives' positions per doc, sorted + deduped
-                # (two alts at one position count a single match site)
-                aggs = [
-                    F.array_sort(
-                        F.array_distinct(F.flatten(F.collect_list("positions")))
-                    ).alias(f"pos_{i}")
-                ]
-                if i == 0:
-                    aggs += [
-                        F.first("norm_byte").alias("norm_byte"),
-                        F.first("doclen").alias("doclen"),
-                    ]
-                dec = dec.groupBy("docid").agg(*aggs)
-            else:
-                dec = dec.select(
-                    "docid",
-                    F.col("positions").alias(f"pos_{i}"),
-                    *([F.col("norm_byte"), F.col("doclen")] if i == 0 else []),
-                )
-            per_slot.append(dec)
+        per_slot = [self._slot(alts, i) for i, alts in enumerate(slots)]
         joined = reduce(lambda a, b: a.join(b, "docid", "inner"), per_slot)
-        return self._positions_kernel(
-            joined, len(slots), q.slop, idf_sum, idf_sum_exact, q.boost
+        scorer = _BM25Scorer(
+            self, "text", [stats[t] for slot in slots for t in slot], q.boost
         )
+        return self._positions_kernel(joined, len(slots), q.slop, scorer)
 
     def _score_span_near(self, q: SpanNearQuery, stats: dict[str, TermStat]) -> DataFrame:
         """Spans module proximity scorer (SpanNearQuery.cs:38-66).
@@ -966,14 +943,8 @@ class Searcher:
         if built is None:
             return self._empty()
         joined, kinds, member_keys = built
-        idf_sum = np.float32(sum(float(stats[t].idf) for t in member_keys))
-        idf_sum_exact = 0.0
-        for t in member_keys:
-            idf_sum_exact = idf_sum_exact + self._idf_exact(stats[t].df)
-        return self._span_kernel(
-            joined, kinds, q.slop, q.in_order, idf_sum, idf_sum_exact,
-            q.boost, field=fld,
-        )
+        scorer = _BM25Scorer(self, fld, [stats[t] for t in member_keys], q.boost)
+        return self._span_kernel(joined, kinds, q.slop, q.in_order, scorer)
 
     def _span_join(
         self, q: SpanNearQuery, stats: dict[str, TermStat], fld: str
@@ -1007,8 +978,7 @@ class Searcher:
                 sub_joined, sub_kinds, sub_members = sub
                 member_keys.extend(sub_members)
                 spans = self._span_kernel(
-                    sub_joined, sub_kinds, c.slop, c.in_order,
-                    np.float32(0.0), 0.0, 1.0, field=fld, emit_spans=True,
+                    sub_joined, sub_kinds, c.slop, c.in_order, None
                 )
                 cols = [
                     F.col("docid"),
@@ -1057,30 +1027,7 @@ class Searcher:
                 if not alts:
                     return None
             member_keys.extend(alts)
-            blocks = self.postings.filter(F.col("term").isin(alts))
-            dec = self._decode_positions(blocks, need_norms=(i == 0))
-            if len(alts) > 1:
-                # span union: merged, deduped position stream per doc —
-                # the same slot-union as MultiPhraseQuery's
-                # UnionDocsAndPositionsEnum
-                aggs = [
-                    F.array_sort(
-                        F.array_distinct(F.flatten(F.collect_list("positions")))
-                    ).alias(f"pos_{i}")
-                ]
-                if i == 0:
-                    aggs += [
-                        F.first("norm_byte").alias("norm_byte"),
-                        F.first("doclen").alias("doclen"),
-                    ]
-                dec = dec.groupBy("docid").agg(*aggs)
-            else:
-                dec = dec.select(
-                    "docid",
-                    F.col("positions").alias(f"pos_{i}"),
-                    *([F.col("norm_byte"), F.col("doclen")] if i == 0 else []),
-                )
-            per_slot.append(dec)
+            per_slot.append(self._slot(alts, i))
             kinds.append("unit")
         joined = reduce(lambda a, b: a.join(b, "docid", "inner"), per_slot)
         return joined, kinds, member_keys
@@ -1091,20 +1038,15 @@ class Searcher:
         kinds: "list[str]",
         slop: int,
         in_order: bool,
-        idf_sum: np.float32,
-        idf_sum_exact: float,
-        qboost: float,
-        field: str = "text",
-        emit_spans: bool = False,
+        scorer: "_BM25Scorer | None",
     ) -> DataFrame:
-        """Vectorized span matcher on flat (row, position) int64 keys — the
-        same batch-flattening trick as ``_positions_kernel`` (rows are
-        batch-ordered and positions ascending, so the flat key array is
-        globally sorted; a chain that escapes its row overshoots the window
-        bound ``slop + nterms - 1 << M`` and can never false-positive).
-        ``field`` selects the norm cache / avgdl — spans on an extra text
-        field carry that FIELD'S doclens in their namespaced postings
-        (same contract as the phrase kernel).
+        """Vectorized span matcher on :func:`_flat_keys` — the same
+        batch-flattening trick as ``_positions_kernel`` (a chain that
+        escapes its row overshoots the window bound ``slop + nterms - 1 <<
+        2^33`` and can never false-positive). The ``scorer`` carries the
+        field's norm cache / avgdl — spans on an extra text field carry
+        that FIELD'S doclens in their namespaced postings (same contract as
+        the phrase kernel).
 
         ``kinds[i]`` says whether clause i is a ``unit`` term/union clause
         (column ``pos_i``, span [p, p+1)) or an enumerated nested ``span``
@@ -1115,43 +1057,23 @@ class Searcher:
         clauses the arithmetic reduces exactly to the flat
         slop + n - 1 window rule, so flat queries score bit-identically.
 
-        ``emit_spans=True`` returns the enumerated matches themselves
-        (docid, starts, ends arrays, sorted and deduped per doc) instead
-        of scores — the recursion step for nested clauses."""
-        cache = self.cache if field == "text" else self.field_cache[field]
-        w = idf_sum * (self.k1 + np.float32(1.0))
-        boost = np.float32(qboost)
-        exact = self.scoring == "exact_int"
-        w_exact = idf_sum_exact * (self.k1d + 1.0) * float(qboost)
-        k1d, bd = self.k1d, self.bd
-        avgdl_exact = (
-            self.avgdl_exact if field == "text"
-            else self.field_avgdl_exact[field]
-        )
-        one_minus_b = 1.0 - bd
+        ``scorer=None`` returns the enumerated matches themselves (docid,
+        starts, ends arrays, sorted and deduped per doc) instead of scores
+        — the recursion step for nested clauses."""
+        emit_spans = scorer is None
         nterms = len(kinds)
         slop64 = np.int64(slop)
 
         def span_score(batches):
-            M = np.int64(1) << 33
-
-            def flat_keys(col):
-                lens = col.map(len).to_numpy(np.int64)
-                vals = (
-                    np.concatenate([np.asarray(x, dtype=np.int64) for x in col])
-                    if lens.sum()
-                    else np.array([], dtype=np.int64)
-                )
-                rows = np.repeat(np.arange(len(col), dtype=np.int64), lens)
-                return rows * M + vals, rows
+            M = _ROW_KEY
 
             def flat_spans(pdf, i):
                 """Clause i as parallel (start_key, end_key, rows)."""
                 if kinds[i] == "unit":
-                    keys, rows = flat_keys(pdf[f"pos_{i}"])
+                    keys, rows = _flat_keys(pdf[f"pos_{i}"])
                     return keys, keys + 1, rows
-                s_keys, rows = flat_keys(pdf[f"start_{i}"])
-                e_keys, _ = flat_keys(pdf[f"end_{i}"])
+                s_keys, rows = _flat_keys(pdf[f"start_{i}"])
+                e_keys, _ = _flat_keys(pdf[f"end_{i}"])
                 return s_keys, e_keys, rows
 
             for pdf in batches:
@@ -1257,35 +1179,12 @@ class Searcher:
                 hit = counts > 0
                 if not hit.any():
                     continue
-                docids = pdf["docid"].to_numpy(np.int64)[hit]
                 # SpanScorer.cs SetFreqCurrentDoc: freq += sloppyFreq(
-                # matchLength) per enumerated span, sloppyFreq = 1/(1+d)
-                # (BM25Similarity.cs:74). exact mode sums integer micro-unit
-                # factors (bit-reproducible); lucene mode sums float64 in
-                # anchor order, cast once (double-accumulate convention).
-                m_m = mlen[match].astype(np.float64)
-                rows_m = base_rows[match]
-                if exact:
-                    sf_int = np.floor(1e6 / (1.0 + m_m) + 0.5)
-                    fd = (
-                        np.bincount(rows_m, weights=sf_int, minlength=len(pdf))[hit]
-                        / 1e6
-                    )
-                    dl = pdf["doclen"].to_numpy(np.float64)[hit]
-                    denom = fd + k1d * (one_minus_b + (bd * dl) / avgdl_exact)
-                    score = np.floor((w_exact * fd) / denom * 1e6 + 0.5)
-                else:
-                    f64 = np.bincount(
-                        rows_m, weights=1.0 / (1.0 + m_m), minlength=len(pdf)
-                    )[hit]
-                    f32 = f64.astype(np.float32)
-                    nb = pdf["norm_byte"].to_numpy(np.int64)[hit] & 0xFF
-                    score = (
-                        boost * ((w * f32) / (f32 + cache[nb])).astype(np.float32)
-                    ).astype(np.float32)
-                yield pd.DataFrame(
-                    {"docid": docids, "score": score.astype(np.float64)}
+                # matchLength) per enumerated span
+                f = _sloppy_freq(
+                    base_rows[match], mlen[match], len(pdf), hit, scorer.exact
                 )
+                yield _score_hits(scorer, pdf, hit, f)
 
         return joined.mapInPandas(
             span_score, schema=_SPANS_SCHEMA if emit_spans else _EMPTY_SCHEMA
@@ -1295,7 +1194,7 @@ class Searcher:
         """SpanFirstQuery.cs:33-49: a unit term span at 0-based position p
         has end() == p+1 and matches when p+1 <= end (token among the first
         ``end`` positions); tf is the count of qualifying positions — one
-        vectorized ``vals < end`` mask + bincount. ``field`` seeks the
+        vectorized ``position < end`` mask + bincount. ``field`` seeks the
         namespaced postings and scores with that field's norms/avgdl."""
         fld = getattr(q, "field", "text")
         key = _skey(fld, q.term)
@@ -1309,55 +1208,22 @@ class Searcher:
         joined = self._decode_positions(blocks).select(
             "docid", "positions", "norm_byte", "doclen"
         )
-        st = stats[key]
-        cache = self.cache if fld == "text" else self.field_cache[fld]
-        w = np.float32(st.idf) * (self.k1 + np.float32(1.0))
-        boost = np.float32(qboost := q.boost)
-        exact = self.scoring == "exact_int"
-        w_exact = self._idf_exact(st.df) * (self.k1d + 1.0) * float(qboost)
-        k1d, bd = self.k1d, self.bd
-        avgdl_exact = (
-            self.avgdl_exact if fld == "text" else self.field_avgdl_exact[fld]
-        )
-        one_minus_b = 1.0 - bd
+        scorer = _BM25Scorer(self, fld, [stats[key]], q.boost)
         end = int(q.end)
 
         def first_score(batches):
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                col = pdf["positions"]
-                lens = col.map(len).to_numpy(np.int64)
-                vals = (
-                    np.concatenate([np.asarray(x, dtype=np.int64) for x in col])
-                    if lens.sum()
-                    else np.array([], dtype=np.int64)
-                )
-                rows = np.repeat(np.arange(len(col), dtype=np.int64), lens)
-                mask = vals < end
+                keys, rows = _flat_keys(pdf["positions"])
+                mask = keys - rows * _ROW_KEY < end
                 freqs = np.bincount(rows[mask], minlength=len(pdf)).astype(np.int64)
                 hit = freqs > 0
-                if not hit.any():
-                    continue
-                # every unit term span has matchLength = End - Start = 1, so
-                # SpanScorer's sloppyFreq contributes 1/(1+1) per match
-                # (exact halves: no float drift)
-                f = freqs[hit]
-                docids = pdf["docid"].to_numpy(np.int64)[hit]
-                if exact:
-                    fd = f.astype(np.float64) * 0.5
-                    dl = pdf["doclen"].to_numpy(np.float64)[hit]
-                    denom = fd + k1d * (one_minus_b + (bd * dl) / avgdl_exact)
-                    score = np.floor((w_exact * fd) / denom * 1e6 + 0.5)
-                else:
-                    f32 = (f.astype(np.float64) * 0.5).astype(np.float32)
-                    nb = pdf["norm_byte"].to_numpy(np.int64)[hit] & 0xFF
-                    score = (
-                        boost * ((w * f32) / (f32 + cache[nb])).astype(np.float32)
-                    ).astype(np.float32)
-                yield pd.DataFrame(
-                    {"docid": docids, "score": score.astype(np.float64)}
-                )
+                if hit.any():
+                    # every unit term span has matchLength = End - Start = 1,
+                    # so SpanScorer's sloppyFreq contributes 1/(1+1) per
+                    # match (exact halves: no float drift)
+                    yield _score_hits(scorer, pdf, hit, freqs[hit] * 0.5)
 
         return joined.mapInPandas(first_score, schema=_EMPTY_SCHEMA)
 
@@ -1385,63 +1251,24 @@ class Searcher:
             joined = inc.join(exc, "docid", "left_outer")
         else:
             joined = inc.withColumn("pos_exc", F.lit(None).cast("array<long>"))
-        st = stats[ikey]
-        cache = self.cache if fld == "text" else self.field_cache[fld]
-        w = np.float32(st.idf) * (self.k1 + np.float32(1.0))
-        boost = np.float32(q.boost)
-        exact = self.scoring == "exact_int"
-        w_exact = self._idf_exact(st.df) * (self.k1d + 1.0) * float(q.boost)
-        k1d, bd = self.k1d, self.bd
-        avgdl_exact = (
-            self.avgdl_exact if fld == "text" else self.field_avgdl_exact[fld]
-        )
-        one_minus_b = 1.0 - bd
+        scorer = _BM25Scorer(self, fld, [stats[ikey]], q.boost)
         pre, post = np.int64(q.pre), np.int64(q.post)
 
         def not_score(batches):
-            M = np.int64(1) << 33
-
-            def flat_keys(col):
-                col = col.map(lambda v: v if v is not None else [])
-                lens = col.map(len).to_numpy(np.int64)
-                vals = (
-                    np.concatenate([np.asarray(x, dtype=np.int64) for x in col])
-                    if lens.sum()
-                    else np.array([], dtype=np.int64)
-                )
-                rows = np.repeat(np.arange(len(col), dtype=np.int64), lens)
-                return rows * M + vals, rows
-
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                inc_keys, inc_rows = flat_keys(pdf["pos_inc"])
-                exc_keys, _ = flat_keys(pdf["pos_exc"])
+                inc_keys, inc_rows = _flat_keys(pdf["pos_inc"])
+                exc_keys, _ = _flat_keys(pdf["pos_exc"])
                 lo = np.searchsorted(exc_keys, inc_keys - pre, "left")
                 hi = np.searchsorted(exc_keys, inc_keys + post, "right")
                 survive = hi == lo  # no exclude span overlaps the window
                 freqs = np.bincount(inc_rows[survive], minlength=len(pdf)).astype(np.int64)
                 hit = freqs > 0
-                if not hit.any():
-                    continue
-                # surviving unit spans contribute sloppyFreq(1) = 1/2 each
-                # (SpanScorer.cs SetFreqCurrentDoc; exact halves)
-                f = freqs[hit]
-                docids = pdf["docid"].to_numpy(np.int64)[hit]
-                if exact:
-                    fd = f.astype(np.float64) * 0.5
-                    dl = pdf["doclen"].to_numpy(np.float64)[hit]
-                    denom = fd + k1d * (one_minus_b + (bd * dl) / avgdl_exact)
-                    score = np.floor((w_exact * fd) / denom * 1e6 + 0.5)
-                else:
-                    f32 = (f.astype(np.float64) * 0.5).astype(np.float32)
-                    nb = pdf["norm_byte"].to_numpy(np.int64)[hit] & 0xFF
-                    score = (
-                        boost * ((w * f32) / (f32 + cache[nb])).astype(np.float32)
-                    ).astype(np.float32)
-                yield pd.DataFrame(
-                    {"docid": docids, "score": score.astype(np.float64)}
-                )
+                if hit.any():
+                    # surviving unit spans contribute sloppyFreq(1) = 1/2
+                    # each (SpanScorer.cs SetFreqCurrentDoc; exact halves)
+                    yield _score_hits(scorer, pdf, hit, freqs[hit] * 0.5)
 
         return joined.mapInPandas(not_score, schema=_EMPTY_SCHEMA)
 
@@ -1533,8 +1360,6 @@ class Searcher:
         expansion at q.max_expansions terms first (fuzzy: fewest edits
         first — the reference's closest-boost-first; ties by df desc then
         term asc), which bounds the scan for huge expansions."""
-        import math
-
         terms = self._expand_terms(q)
         ts = self.termstats.join(F.broadcast(terms), "term", "left_semi").select("term", "df")
         if getattr(q, "rewrite_method", "") == "top_terms_scoring":
@@ -1550,112 +1375,33 @@ class Searcher:
                 order = [F.desc("df"), F.asc("term")]
             ts = ts.orderBy(*order).limit(n)
         blocks = self.postings.join(F.broadcast(ts), "term")
-        exact = self.scoring == "exact_int"
         fld = getattr(q, "field", "text")
+        qboost = float(getattr(q, "boost", 1.0))
         if fld != "text" and fld not in self.text_fields:
-            return self._scored_rewrite_keyword(blocks, q, exact)
+            return self._scored_rewrite_keyword(blocks, qboost)
         # an extra ANALYZED field scores the full BM25 kernel with the
         # FIELD'S norms/avgdl (its namespaced postings carry the field's
         # doclens) — only KEYWORD fields take the norms-omitted path
-        maxdoc = self.maxdoc
-        k1f, k1d, bd = self.k1, self.k1d, self.bd
-        avgdl_exact = (
-            self.avgdl_exact if fld == "text" else self.field_avgdl_exact[fld]
-        )
-        one_minus_b = 1.0 - bd
-        cache = self.cache if fld == "text" else self.field_cache[fld]
-        qboost = float(getattr(q, "boost", 1.0))
-
-        def decode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                row_lens = pdf["docid_deltas"].map(len).to_numpy(np.int64)
-                docids = np.concatenate(
-                    [
-                        fd + np.cumsum(np.asarray(d, dtype=np.int64))
-                        for fd, d in zip(pdf["first_docid"], pdf["docid_deltas"])
-                    ]
-                )
-                freqs = np.concatenate(
-                    [np.asarray(x, dtype=np.int64) for x in pdf["freqs"]]
-                )
-                dfs = pdf["df"].to_numpy(np.int64)
-                # idf per UNIQUE df via libm log (bit-identical to the SQL
-                # oracle's ln; numpy's vectorized log may differ by 1 ulp)
-                uniq = np.unique(dfs)
-                idf_u = np.array(
-                    [
-                        math.log(1.0 + (maxdoc - float(d) + 0.5) / (float(d) + 0.5))
-                        for d in uniq
-                    ]
-                )
-                idf_blk = idf_u[np.searchsorted(uniq, dfs)]
-                idf_e = np.repeat(idf_blk, row_lens)
-                if exact:
-                    w = idf_e * (k1d + 1.0) * qboost
-                    dls = np.concatenate(
-                        [np.asarray(x, dtype=np.int64) for x in pdf["doclens"]]
-                    ).astype(np.float64)
-                    f = freqs.astype(np.float64)
-                    denom = f + k1d * (one_minus_b + (bd * dls) / avgdl_exact)
-                    score = np.floor((w * f) / denom * 1e6 + 0.5)
-                else:
-                    w = (
-                        idf_e.astype(np.float32)
-                        * (k1f + np.float32(1.0))
-                        * np.float32(qboost)
-                    )
-                    norms = np.concatenate(
-                        [np.asarray(x, dtype=np.int64) for x in pdf["norm_bytes"]]
-                    )
-                    f = freqs.astype(np.float32)
-                    score = ((w * f) / (f + cache[norms & 0xFF])).astype(np.float32)
-                yield pd.DataFrame({"docid": docids, "score": score.astype(np.float64)})
-
-        cols = blocks.select(
-            "first_docid", "docid_deltas", "freqs", "df",
-            "doclens" if exact else "norm_bytes",
-        )
-        scored = cols.mapInPandas(decode, schema=_EMPTY_SCHEMA)
+        scorer = _BM25Scorer(self, fld, None, qboost, fold_boost=True)
+        scored = self._decode_score(blocks, scorer)
         return scored.groupBy("docid").agg(F.sum("score").alias("score"))
 
-    def _scored_rewrite_keyword(self, blocks: DataFrame, q: Query, exact: bool) -> DataFrame:
+    def _scored_rewrite_keyword(self, blocks: DataFrame, qboost: float) -> DataFrame:
         """Scored rewrite over a KEYWORD field: norms are omitted and tf is 1
         by construction (StringField contract, same as _score_keyword_term),
         so each expanded-term match scores boost*idf — NOT the text-field
         BM25 kernel with doclen norms. Disjunction-sums per doc, so a
         multi-valued doc matching several expanded terms adds their idfs."""
-        import math
-
+        exact = self.scoring == "exact_int"
         maxdoc = self.maxdoc
-        qboost = float(getattr(q, "boost", 1.0))
 
         def decode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                row_lens = pdf["docid_deltas"].map(len).to_numpy(np.int64)
-                docids = np.concatenate(
-                    [
-                        fd + np.cumsum(np.asarray(d, dtype=np.int64))
-                        for fd, d in zip(pdf["first_docid"], pdf["docid_deltas"])
-                    ]
-                )
-                dfs = pdf["df"].to_numpy(np.int64)
-                uniq = np.unique(dfs)
-                idf_u = np.array(
-                    [
-                        math.log(1.0 + (maxdoc - float(d) + 0.5) / (float(d) + 0.5))
-                        for d in uniq
-                    ]
-                )
-                idf_blk = idf_u[np.searchsorted(uniq, dfs)]
-                idf_e = np.repeat(idf_blk, row_lens)
+            for pdf, docids, lens, _ in _decode_blocks(batches):
+                idf = _idf_per_entry(pdf["df"], lens, maxdoc)
                 if exact:
-                    score = np.floor(idf_e * qboost * 1e6 + 0.5)
+                    score = np.floor(idf * qboost * 1e6 + 0.5)
                 else:
-                    score = (idf_e.astype(np.float32) * np.float32(qboost)).astype(
+                    score = (idf.astype(np.float32) * np.float32(qboost)).astype(
                         np.float32
                     )
                 yield pd.DataFrame({"docid": docids, "score": score.astype(np.float64)})
@@ -1876,7 +1622,7 @@ class Searcher:
                 .orderBy(F.desc("block_max_ub"))
                 .limit(m)
             )
-            scored.append(self._decode_score(blocks, st))
+            scored.append(self._decode_score(blocks, _BM25Scorer(self, "text", [st])))
         if not scored:
             return None
         u = reduce(lambda a, b: a.unionAll(b), scored)
@@ -1913,7 +1659,7 @@ class Searcher:
                 # keep block iff w_t*ub + rest >= theta (with safety margin)
                 bound = F.col("block_max_ub").cast("double") * F.lit(w_t) + F.lit(rest)
                 blocks = blocks.filter(bound >= F.lit(float(theta) * (1.0 - 1e-6)))
-            scored.append(self._decode_score(blocks, st))
+            scored.append(self._decode_score(blocks, _BM25Scorer(self, "text", [st])))
         if not scored:
             return self._empty().select(
                 "docid", F.col("score").cast("float").alias("score")
@@ -1976,9 +1722,12 @@ class Searcher:
         per-doc contribution floors to micro units BEFORE summation, so
         cross-engine comparison is integer arithmetic; classic's coord is
         applied as ``(sum * matched) DIV |q|`` — a rational floor both
-        engines compute identically."""
-        import math
+        engines compute identically.
 
+        LM Dirichlet clamps each term's contribution at zero before the
+        micro-unit floor, as LMDirichletSimilarity.cs:77 does (``score > 0
+        ? score : 0``): a common term in a long document otherwise adds a
+        negative score."""
         if similarity not in (
             "classic", "lm_dirichlet", "lm_jelinek_mercer", "dfr_ine_b2",
             "ib_ll_d2",
@@ -2002,7 +1751,8 @@ class Searcher:
                 mup = mu * (st.ttf / float(self.sum_ttf))
 
                 def score_fn(tf, dl, mup=mup, mu=mu):
-                    return np.log(1.0 + tf / mup) + np.log(mu / (dl + mu))
+                    s = np.log(1.0 + tf / mup) + np.log(mu / (dl + mu))
+                    return np.maximum(s, 0.0)
             elif similarity == "lm_jelinek_mercer":
                 lp = jm_lambda * (st.ttf / float(self.sum_ttf))
 
@@ -2029,11 +1779,9 @@ class Searcher:
                     return (tfn * bw) * (gnum / (gdf * (tfn + 1.0)))
 
             def decode(batches, score_fn=score_fn):
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    docids, tf, dl = _decode_tf_dl(pdf)
-                    s = score_fn(tf, dl)
+                for _, docids, _, flat in _decode_blocks(batches, "freqs", "doclens"):
+                    tf = flat["freqs"].astype(np.float64)
+                    s = score_fn(tf, flat["doclens"].astype(np.float64))
                     yield pd.DataFrame({
                         "docid": docids,
                         "s": np.floor(s * 1e6 + 0.5).astype(np.int64),
@@ -2512,7 +2260,7 @@ class Searcher:
             if not rows:
                 return {"value": 0.0, "description": f"keyword({key!r}): no match", "details": []}
             idf = (
-                self._idf_exact(st.df) if self.scoring == "exact_int" else float(st.idf)
+                _idf(self.maxdoc, st.df) if self.scoring == "exact_int" else float(st.idf)
             )
             return {
                 "value": float(rows[0]["score"]),
@@ -2522,66 +2270,55 @@ class Searcher:
                 ],
             }
         if isinstance(q, TermQuery):
-            fld = q.field
-            key = q.term if fld == "text" else _skey(fld, q.term)
-            e_cache = self.cache if fld == "text" else self.field_cache[fld]
-            e_avgdl_exact = (
-                self.avgdl_exact if fld == "text"
-                else self.field_avgdl_exact[fld]
-            )
+            key = _skey(q.field, q.term)
             st = stats.get(key)
             if st is None:
                 return {"value": 0.0, "description": f"term({key!r}): no match", "details": []}
-            row = (
+            cols = ("freqs", "norm_bytes", "doclens")
+            pdf = (
                 self.postings.filter(
                     (F.col("term") == key)
                     & (F.col("first_docid") <= docid)
                     & (F.col("last_docid") >= docid)
                 )
-                .select("first_docid", "docid_deltas", "freqs", "norm_bytes", "doclens")
-                .collect()
+                .select("first_docid", "docid_deltas", *cols)
+                .toPandas()
             )
-            tf = norm_byte = doclen = None
-            for r in row:
-                d = r["first_docid"] + np.cumsum(np.asarray(r["docid_deltas"], dtype=np.int64))
-                hit = np.flatnonzero(d == docid)
+            entry = None
+            for _, docids, _, flat in _decode_blocks([pdf], *cols):
+                hit = np.flatnonzero(docids == docid)
                 if len(hit):
-                    i = int(hit[0])
-                    tf = int(r["freqs"][i])
-                    norm_byte = int(r["norm_bytes"][i])
-                    doclen = int(r["doclens"][i])
-                    break
-            if tf is None:
+                    entry = [int(flat[c][hit[0]]) for c in cols]
+            if entry is None:
                 return {"value": 0.0, "description": f"term({key!r}): no match", "details": []}
-            if self.scoring == "exact_int":
-                idf = self._idf_exact(st.df)
-                denom = float(tf) + self.k1d * (
-                    (1.0 - self.bd) + (self.bd * float(doclen)) / e_avgdl_exact
-                )
-                value = float(np.floor((idf * (self.k1d + 1.0) * tf) / denom * 1e6 + 0.5))
+            tf, norm_byte, doclen = entry
+            # the search path's own scorer, so value == score (boost included)
+            sc = _BM25Scorer(self, q.field, [st], q.boost)
+            value = float(sc([tf], [doclen if sc.exact else norm_byte])[0])
+            if sc.exact:
+                idf = _idf(self.maxdoc, st.df)
                 norm_detail = {"value": doclen, "description": "exact doclen", "details": []}
+                avgdl = sc.avgdl
             else:
-                f = np.float32(tf)
-                w = np.float32(st.idf) * (self.k1 + np.float32(1.0))
-                value = float(np.float32((w * f) / (f + e_cache[norm_byte & 0xFF])))
                 idf = float(st.idf)
                 norm_detail = {
                     "value": norm_byte,
                     "description": f"norm byte (quantized doclen {doclen})",
                     "details": [],
                 }
+                avgdl = float(self.avgdl if q.field == "text" else np.float32(sc.avgdl))
+            details = [
+                {"value": float(idf), "description": f"idf(docFreq={st.df}, maxDocs={self.maxdoc})", "details": []},
+                {"value": tf, "description": "termFreq", "details": []},
+                norm_detail,
+                {"value": avgdl, "description": "avgFieldLength", "details": []},
+            ]
+            if q.boost != 1.0:
+                details.append({"value": float(q.boost), "description": "boost", "details": []})
             return {
                 "value": value,
                 "description": f"weight(term={key!r} in {docid}) [BM25 k1={self.k1d} b={self.bd}]",
-                "details": [
-                    {"value": float(idf), "description": f"idf(docFreq={st.df}, maxDocs={self.maxdoc})", "details": []},
-                    {"value": tf, "description": "termFreq", "details": []},
-                    norm_detail,
-                    {"value": float(
-                        (self.avgdl if fld == "text" else np.float32(e_avgdl_exact))
-                        if self.scoring == 'lucene' else e_avgdl_exact),
-                     "description": "avgFieldLength", "details": []},
-                ],
+                "details": details,
             }
         if isinstance(q, BooleanQuery):
             must, should, must_not = q.parts()
@@ -2682,21 +2419,9 @@ class Searcher:
         )
 
         def decode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                lens = pdf["docid_deltas"].map(len).to_numpy(np.int64)
-                docids = np.concatenate(
-                    [
-                        fd + np.cumsum(np.asarray(x, dtype=np.int64))
-                        for fd, x in zip(pdf["first_docid"], pdf["docid_deltas"])
-                    ]
-                ) if lens.sum() else np.array([], dtype=np.int64)
+            for pdf, docids, lens, _ in _decode_blocks(batches):
                 yield pd.DataFrame(
-                    {
-                        "term": np.repeat(pdf["term"].to_numpy(), lens),
-                        "docid": docids,
-                    }
+                    {"term": np.repeat(pdf["term"].to_numpy(), lens), "docid": docids}
                 )
 
         pairs = cand_docs.mapInPandas(decode, schema="term string, docid long")

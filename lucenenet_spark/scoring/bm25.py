@@ -76,18 +76,3 @@ class BM25:
         )
         norm = cache[np.asarray(norm_byte, dtype=np.int64) & 0xFF]
         return (weight_value * f / (f + norm)).astype(np.float32)
-
-    def max_score_for_block(
-        self,
-        freqs: np.ndarray,
-        norm_bytes: np.ndarray,
-        idf: np.float32,
-        cache: np.ndarray,
-    ) -> np.float32:
-        """Exact block-max impact: max of entry scores within one posting
-        block. Stored at build time as ``block_max_score`` and used for
-        block-max-WAND pruning (a capability the 4.8 reference lacks — its
-        closest analogues are the skip lists, Lucene41SkipWriter.cs:69, and
-        TopTermsRewrite's MaxNonCompetitiveBoostAttribute)."""
-        s = self.score(freqs, norm_bytes, idf, cache)
-        return np.float32(s.max(initial=np.float32(0.0)))

@@ -119,6 +119,10 @@ def test_compaction_preserves_results_and_restores_wand(spark, tmp_path_factory)
 
     s = compact_index(spark, out, CFG)
     assert s["compacted_generations"] == 2
+    # compaction runs its stages through the build's stage runner, so each
+    # rebuilt stage reports its wall time like a fresh build does
+    for stage in ("docmap", "stats", "postings", "termstats", "lineage"):
+        assert s["stages"][stage]["wall_sec"] >= 0.0, (stage, s["stages"][stage])
     after = Searcher(spark, out)
     assert not after.is_composite
     assert after.docmap.count() == want_count

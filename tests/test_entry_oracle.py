@@ -27,6 +27,15 @@ SUBSET = [
     "ann_cosine_topk",   # fold-ordered double dot product
     "txt_fingerprint",   # rolling-hash fold
     "ft_lucene_rank",    # float32 battery vs the DuckDB REAL oracle (r5)
+    # the exact_int kernels behind the shared decode / scorer / flat keys
+    "ft_span_first",
+    "ft_span_not",
+    "ft_span_nested",
+    "ft_multi_phrase",
+    "ft_fuzzy_scored",
+    "ft_prefix_scored_field",
+    "ft_field_keyword",
+    "ft_span_field",
 ]
 
 

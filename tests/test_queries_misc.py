@@ -186,6 +186,47 @@ def test_explain_matches_score(searcher):
         assert ex["details"], "expected per-clause details"
 
 
+@pytest.fixture(scope="module")
+def titled_index(spark, tmp_path_factory):
+    """A small index with an extra analyzed ``title`` field."""
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path_factory.mktemp("titledidx"))
+    pages = pages_spark_df(spark, 200, seed=42).withColumn(
+        "title", F.expr("substring(text, 1, 60)")
+    )
+    cfg = IndexConfig(
+        num_partitions=4, bucket_width=2, flush_docs=64, text_fields=("title",)
+    )
+    build_index(spark, pages, out, cfg, overwrite=True)
+    return out
+
+
+@pytest.mark.parametrize("scoring", ["lucene", "exact_int"])
+def test_explain_matches_boosted_term_score(spark, titled_index, scoring):
+    """explain(q, d)["value"] equals the search score for boosted terms,
+    on the main text field and on an extra analyzed field, in both
+    scoring modes (the boost must not be dropped by explain)."""
+    from pyspark.sql import functions as F
+
+    s = Searcher(spark, titled_index, scoring=scoring)
+    title_term = (
+        s.termstats.filter(F.col("term").startswith("title:"))
+        .orderBy(F.desc("df"), F.asc("term"))
+        .first()["term"]
+        .split(":", 1)[1]
+    )
+    for q in (
+        TermQuery("heart", boost=2.0),
+        TermQuery(title_term, field="title", boost=2.0),
+    ):
+        top = s.search(q, 3).collect()
+        assert top, q
+        for r in top:
+            ex = s.explain(q, r["docid"])
+            assert ex["value"] == float(r["score"]), (q, ex)
+
+
 def test_explain_non_match(searcher):
     ex = searcher.explain(TermQuery("zzz_not_a_term"), 0)
     assert ex["value"] == 0.0

@@ -1,6 +1,7 @@
 """Pluggable similarities (Searcher.similarity_score_df): Classic TF-IDF
 (TFIDFSimilarity.cs:33 / DefaultSimilarity.cs:30) and LM Dirichlet
-(LMDirichletSimilarity.cs:48) over the shared postings — engine vs an
+(LMDirichletSimilarity.cs:48, per-term contribution clamped at zero as
+LMDirichletSimilarity.cs:77 does) over the shared postings — engine vs an
 independent numpy recomputation from the raw texts, integer-exact."""
 
 import math
@@ -81,7 +82,7 @@ def _lm_expected(terms, mu=2000.0):
             ttf = sum(x.count(t) for x in toks)
             p = ttf / float(total)
             s = math.log(1.0 + tf / (mu * p)) + math.log(mu / (dl + mu))
-            ssum += int(math.floor(s * 1e6 + 0.5))
+            ssum += int(math.floor(max(s, 0.0) * 1e6 + 0.5))
             matched += 1
         if matched:
             out[d] = ssum
@@ -104,6 +105,22 @@ def test_lm_dirichlet_matches_numpy(searcher):
         for r in searcher.similarity_score_df(terms, "lm_dirichlet").collect()
     }
     assert got == _lm_expected(terms)
+
+
+def test_lm_dirichlet_clamps_negative_contribution(searcher):
+    """A common term in a long document: "table" (ttf 7 of 29 tokens)
+    once in the 5-token doc 2 gives ln(1 + 1/(2000*7/29)) +
+    ln(2000/2005) < 0 unclamped; the reference clamps it to 0."""
+    toks, _, total = _corpus()
+    p = sum(x.count("table") for x in toks) / float(total)
+    raw = math.log(1.0 + 1 / (2000.0 * p)) + math.log(2000.0 / (len(toks[2]) + 2000.0))
+    assert toks[2].count("table") == 1 and raw < 0
+    got = {
+        int(r["docid"]): int(r["score"])
+        for r in searcher.similarity_score_df(["table"], "lm_dirichlet").collect()
+    }
+    assert got[2] == 0
+    assert got == _lm_expected(["table"])
 
 
 def _jm_expected(terms, lam=0.7):
