@@ -62,7 +62,6 @@ from ..analysis import StandardAnalyzer
 from ..scoring.bm25 import BM25
 from ..scoring.smallfloat import doclen_to_norm_byte_fast
 from .config import IndexConfig
-from .snapshot_storage import SnapshotStorage, get_storage
 from .storage import IndexStorage
 
 # positions are stored FLAT (concatenated across entries in entry order);
@@ -1172,23 +1171,8 @@ def build_index(
     out_dir: str,
     config: IndexConfig | None = None,
     overwrite: bool = False,
-    backend: str = "auto",
 ) -> dict:
-    """``backend``: "dirs" (per-stage directory swaps + _COMMIT.json),
-    "snapshot" (Iceberg-shaped atomic snapshot commits — see
-    snapshot_storage.SnapshotStorage), or "auto" (default: keep an existing
-    index's backend, dirs for a fresh path). Readers always auto-detect via
-    get_storage(), so append/compact/search work on either."""
-    if backend == "snapshot":
-        storage: IndexStorage = SnapshotStorage(out_dir)
-    elif backend == "dirs":
-        storage = IndexStorage(out_dir)
-    elif backend == "auto":
-        storage = get_storage(out_dir)
-    else:
-        raise ValueError(backend)
-    builder = IndexBuilder(spark, storage, config)
-    return builder.build(pages, overwrite=overwrite)
+    return IndexBuilder(spark, IndexStorage(out_dir), config).build(pages, overwrite=overwrite)
 
 
 def next_docid_base(index_dir: str) -> int:
@@ -1204,8 +1188,8 @@ def next_docid_base(index_dir: str) -> int:
     never collide."""
     maxdoc_sum = 0
     next_max = 0
-    for d in [index_dir, *get_storage(index_dir).delta_dirs()]:
-        m = get_storage(d).commit_meta("stats")
+    for d in [index_dir, *IndexStorage(index_dir).delta_dirs()]:
+        m = IndexStorage(d).commit_meta("stats")
         maxdoc_sum += int(m["maxdoc"])
         if "next_docid" in m:
             next_max = max(next_max, int(m["next_docid"]))
@@ -1220,7 +1204,7 @@ def stored_config(index_dir: str) -> IndexConfig | None:
     import dataclasses
 
     try:
-        meta = get_storage(index_dir).commit_meta("stats")
+        meta = IndexStorage(index_dir).commit_meta("stats")
     except (FileNotFoundError, OSError, KeyError):
         return None
     d = meta.get("config")
@@ -1268,8 +1252,7 @@ def append_index(
     a one-pass count + order-insensitive xxhash64 over ``url`` is used."""
     import os
 
-    base = get_storage(index_dir)
-    deltas0 = base.delta_dirs()
+    deltas0 = IndexStorage(index_dir).delta_dirs()
     next_base = next_docid_base(index_dir)
     gen = len(deltas0)
     delta_dir = os.path.join(index_dir, "deltas", f"{gen:06d}")
@@ -1296,7 +1279,7 @@ def append_index(
         )
     builder = IndexBuilder(
         spark,
-        get_storage(delta_dir, like=base),
+        IndexStorage(delta_dir),
         eff_cfg,
         docid_base=next_base,
         fingerprint_extra=extra,
@@ -1322,14 +1305,11 @@ def compact_index(
 
     The final publish is a per-stage directory swap; on Iceberg this whole
     function is a single snapshot commit. Returns the build summary."""
-    import os
-    import shutil
-
     from functools import reduce as _reduce
 
     from .deletes import read_tombstones
 
-    base = get_storage(index_dir)
+    base = IndexStorage(index_dir)
     deltas = base.delta_dirs()
     tomb = read_tombstones(spark, index_dir)
     if not deltas and tomb is None:
@@ -1339,7 +1319,7 @@ def compact_index(
     # as 'standard' over stemmed postings (silent recall collapse)
     cfg = config or stored_config(index_dir) or IndexConfig()
     tmp_root = index_dir + ".__compact__"
-    st = get_storage(tmp_root, like=base)
+    st = IndexStorage(tmp_root)
     st.drop()
     builder = IndexBuilder(spark, st, cfg)
 
@@ -1351,7 +1331,7 @@ def compact_index(
     parts = []
     pid_offset = 0
     for d in [index_dir, *deltas]:
-        p = get_storage(d).read_stage(spark, "partials", p_schema)
+        p = IndexStorage(d).read_stage(spark, "partials", p_schema)
         parts.append(p.withColumn("pid", (F.col("pid") + F.lit(pid_offset)).cast("int")))
         pid_offset += int(p.select(F.max("pid")).collect()[0][0] or 0) + 1
     merged = _reduce(lambda a, b: a.unionAll(b), parts)

@@ -19,11 +19,11 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from .builder import DOCMAP_SCHEMA, PARTIALS_SCHEMA, POSTINGS_SCHEMA, TERMSTATS_SCHEMA
-from .snapshot_storage import get_storage
+from .storage import IndexStorage
 
 
 def verify(spark: SparkSession, index_dir: str) -> dict:
-    st = get_storage(index_dir)
+    st = IndexStorage(index_dir)
     postings = st.read_stage(spark, "postings", POSTINGS_SCHEMA)
     docmap = st.read_stage(spark, "docmap", DOCMAP_SCHEMA)
     termstats = st.read_stage(spark, "termstats", TERMSTATS_SCHEMA)

@@ -33,6 +33,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .storage import IndexStorage
+
 TOMBSTONES_DIR = "tombstones"
 TOMB_SCHEMA = "docid long"
 
@@ -75,6 +77,9 @@ def delete_docs(spark: SparkSession, index_dir: str, docids) -> dict:
         df = docids.select(F.col("docid").cast("long"))
     else:
         df = spark.createDataFrame([(int(d),) for d in docids], TOMB_SCHEMA)
+    # a pending compaction publish drops tombstones/ when it rolls forward;
+    # finish it first, or this op would be dropped with the applied ones
+    IndexStorage(index_dir).recover_pending_compaction()
     base = tombstone_dir(index_dir)
     os.makedirs(base, exist_ok=True)
     n = int(df.count())
@@ -99,11 +104,9 @@ def delete_by_urls(spark: SparkSession, index_dir: str, urls: list[str]) -> dict
     DeleteDocuments(Term): the re-crawl/update path — tombstone every doc
     whose url matches, across base and delta generations)."""
     from .builder import DOCMAP_SCHEMA
-    from .snapshot_storage import get_storage
 
-    st = get_storage(index_dir)
-    dirs = [index_dir, *st.delta_dirs()]
-    dms = [get_storage(d).read_stage(spark, "docmap", DOCMAP_SCHEMA) for d in dirs]
+    dirs = [index_dir, *IndexStorage(index_dir).delta_dirs()]
+    dms = [IndexStorage(d).read_stage(spark, "docmap", DOCMAP_SCHEMA) for d in dirs]
     from functools import reduce
 
     dm = reduce(lambda a, b: a.unionAll(b), dms)

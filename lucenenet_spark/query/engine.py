@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.builder import DOCMAP_SCHEMA, POSTINGS_SCHEMA, TERMSTATS_SCHEMA
+from ..index.storage import IndexStorage
 from ..scoring.bm25 import BM25
 from .ast import (
     BooleanQuery,
@@ -378,16 +379,13 @@ class Searcher:
         if scoring not in ("lucene", "exact_int"):
             raise ValueError(scoring)
         self.spark = spark
-        from ..index.snapshot_storage import get_storage
-
-        storage = get_storage(index_dir)
         self.index_dir = index_dir
         # composite index = base + committed delta generations (the
         # BaseCompositeReader over segments_N commit points; docids are
         # already globally offset at build time, so composition is a union)
-        dirs = [index_dir, *storage.delta_dirs()]
+        dirs = [index_dir, *IndexStorage(index_dir).delta_dirs()]
         self.is_composite = len(dirs) > 1
-        stores = [get_storage(d) for d in dirs]
+        stores = [IndexStorage(d) for d in dirs]
         posts = [st.read_stage(spark, "postings", POSTINGS_SCHEMA) for st in stores]
         self.postings = reduce(lambda a, b: a.unionAll(b), posts)
         # docmap widened by the doc-values columns recorded at build time
@@ -424,10 +422,7 @@ class Searcher:
         from ..index.deletes import read_tombstones
 
         self.tombstones = read_tombstones(spark, index_dir)
-        if self.tombstones is not None:
-            self.docmap = self.docmap.join(
-                F.broadcast(self.tombstones), "docid", "left_anti"
-            )
+        self.docmap = self._live(self.docmap)
         self.has_positions = all(
             st.commit_meta("postings").get("index_positions", True) for st in stores
         )
@@ -1668,6 +1663,12 @@ class Searcher:
         agg = u.groupBy("docid").agg(F.sum("score").alias("score"))
         return agg.select("docid", F.col("score").cast("float").alias("score"))
 
+    def _live(self, df: DataFrame) -> DataFrame:
+        """Anti-join tombstoned docs out of a docid-keyed frame (liveDocs)."""
+        if self.tombstones is None:
+            return df
+        return df.join(F.broadcast(self.tombstones), "docid", "left_anti")
+
     # ---------------- public API ----------------------------------------- #
     def score_df(self, q: Query) -> DataFrame:
         """Full scored match set as (docid, score float32-in-float column)."""
@@ -1675,9 +1676,7 @@ class Searcher:
         terms: set[str] = set()
         _collect_terms(q, terms)
         stats = self.term_stats(sorted(terms))
-        scored = self._score(q, stats)
-        if self.tombstones is not None:
-            scored = scored.join(F.broadcast(self.tombstones), "docid", "left_anti")
+        scored = self._live(self._score(q, stats))
         if self.scoring == "exact_int":
             # integer micro-units: sums of exact small ints held in doubles
             # are exact, so the final long cast is lossless
@@ -1806,12 +1805,7 @@ class Searcher:
             ).cast("long")
         else:
             score = F.col("ssum").cast("long")
-        scored = agg.select("docid", score.alias("score"))
-        if self.tombstones is not None:
-            scored = scored.join(
-                F.broadcast(self.tombstones), "docid", "left_anti"
-            )
-        return scored
+        return self._live(agg.select("docid", score.alias("score")))
 
     def auto_stop_terms(self, max_doc_freq_frac: float = 0.4) -> set[str]:
         """QueryAutoStopWordAnalyzer analogue (Analysis/Query/
@@ -1867,11 +1861,7 @@ class Searcher:
         stats = self.term_stats(sorted(all_terms))
         parts = []
         for qid, rq in rewritten.items():
-            scored = self._score(rq, stats)
-            if self.tombstones is not None:
-                scored = scored.join(
-                    F.broadcast(self.tombstones), "docid", "left_anti"
-                )
+            scored = self._live(self._score(rq, stats))
             cast = "long" if self.scoring == "exact_int" else "float"
             scored = scored.select(
                 "docid", F.col("score").cast(cast).alias("score")
@@ -2244,7 +2234,11 @@ class Searcher:
         terms: set[str] = set()
         _collect_terms(q, terms)
         stats = self.term_stats(sorted(terms))
-        return self._explain(q, int(docid), stats)
+        ex = self._explain(q, int(docid), stats)
+        if self.scoring == "lucene":
+            # score_df casts the clause sum to float32; so does the explanation
+            ex["value"] = float(np.float32(ex["value"]))
+        return ex
 
     def _explain(self, q: Query, docid: int, stats: dict[str, TermStat]) -> dict:
         if (

@@ -56,8 +56,10 @@ def _check_supported(q: Query) -> None:
     )
 
 
-def _matches(q: Query, toks: list[str], tokset: set[str]) -> bool:
-    """MemoryIndex-style per-document evaluation (one doc, one query)."""
+def _matches(q: Query, at: dict[int, str], tokset: set[str]) -> bool:
+    """MemoryIndex-style per-document evaluation (one doc, one query).
+    ``at`` maps each position to its token; stopwords leave gaps, so a
+    phrase never matches across one (the indexed phrase path's semantics)."""
     if isinstance(q, TermQuery):
         return q.term in tokset
     if isinstance(q, PrefixQuery):
@@ -71,18 +73,18 @@ def _matches(q: Query, toks: list[str], tokset: set[str]) -> bool:
         if any(t not in tokset for t in terms):
             return False
         first = terms[0]
-        for i in range(len(toks) - n + 1):
-            if toks[i] == first and tuple(toks[i:i + n]) == terms:
-                return True
-        return False
+        return any(
+            t == first and all(at.get(p + j) == terms[j] for j in range(1, n))
+            for p, t in at.items()
+        )
     if isinstance(q, BooleanQuery):
         must, should, must_not = q.parts()
-        if any(_matches(m, toks, tokset) for m in must_not):
+        if any(_matches(m, at, tokset) for m in must_not):
             return False
-        if not all(_matches(m, toks, tokset) for m in must):
+        if not all(_matches(m, at, tokset) for m in must):
             return False
         if should:
-            n_should = sum(_matches(s, toks, tokset) for s in should)
+            n_should = sum(_matches(s, at, tokset) for s in should)
             msm = q.minimum_should_match or (0 if must else 1)
             return n_should >= msm
         return bool(must)
@@ -106,17 +108,20 @@ def percolate(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids: list = []
+            rows: list[int] = []
             qids: list[str] = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = analyzer.analyze(text or "").tokens
-                tokset = set(toks)
+            # missing text (None or NaN) is the empty document
+            for i, text in enumerate(pdf[text_col].fillna("").astype(str)):
+                a = analyzer.analyze(text)
+                at = dict(zip(a.positions, a.tokens))
+                tokset = set(a.tokens)
                 for qid, q in qlist:
-                    if _matches(q, toks, tokset):
-                        ids.append(did)
+                    if _matches(q, at, tokset):
+                        rows.append(i)
                         qids.append(qid)
-            yield pd.DataFrame({id_col: pd.Series(ids, dtype="int64"),
+            yield pd.DataFrame({id_col: pdf[id_col].iloc[rows].reset_index(drop=True),
                                 "query_id": pd.Series(qids, dtype=object)})
 
-    out_schema = f"{id_col} long, query_id string"
+    id_type = docs.schema[id_col].dataType.simpleString()
+    out_schema = f"{id_col} {id_type}, query_id string"
     return docs.select(id_col, text_col).mapInPandas(run, schema=out_schema)

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..index.builder import IndexBuilder, compact_index, next_docid_base
 from ..index.config import IndexConfig
-from ..index.snapshot_storage import get_storage
+from ..index.storage import IndexStorage
 
 
 def _append_batch(
@@ -34,7 +34,7 @@ def _append_batch(
     batch_id: int,
 ) -> dict | None:
     delta_dir = os.path.join(index_dir, "deltas", f"b{batch_id:012d}")
-    st = get_storage(delta_dir, like=get_storage(index_dir))
+    st = IndexStorage(delta_dir)
     # replay short-circuits on the FINAL stage's marker (lineage — the last
     # stage _finish commits): a generation whose earlier stages committed but
     # whose build crashed before lineage is invisible to the Searcher AND
@@ -75,7 +75,7 @@ def start_stream_indexer(
         if len(batch_df.take(1)) == 0:
             return
         _append_batch(spark, batch_df, index_dir, cfg, batch_id)
-        if compact_every and len(get_storage(index_dir).delta_dirs()) >= compact_every:
+        if compact_every and len(IndexStorage(index_dir).delta_dirs()) >= compact_every:
             compact_index(spark, index_dir, cfg)
 
     writer = stream_df.writeStream.foreachBatch(handle).option(

@@ -37,10 +37,6 @@ def main() -> int:
              "ascii_folding = accent-folded)",
     )
     ap.add_argument(
-        "--backend", default="auto", choices=["auto", "dirs", "snapshot"],
-        help="storage commit protocol (snapshot = Iceberg-shaped atomic snapshots)",
-    )
-    ap.add_argument(
         "--keyword-fields", default="",
         help="comma-separated input columns indexed as keyword fields",
     )
@@ -98,7 +94,7 @@ def main() -> int:
         )
 
     t0 = time.time()
-    summary = build_index(spark, pages, args.out, cfg, overwrite=args.overwrite, backend=args.backend)
+    summary = build_index(spark, pages, args.out, cfg, overwrite=args.overwrite)
     elapsed = time.time() - t0
     summary["elapsed_sec"] = round(elapsed, 3)
 

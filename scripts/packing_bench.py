@@ -107,7 +107,7 @@ def main() -> None:
     from lucenenet_spark.data.pages import pages_spark_df_distributed
     from lucenenet_spark.index import IndexConfig, build_index
     from lucenenet_spark.index.builder import POSTINGS_SCHEMA
-    from lucenenet_spark.index.snapshot_storage import get_storage
+    from lucenenet_spark.index.storage import IndexStorage
 
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
@@ -126,7 +126,7 @@ def main() -> None:
             pages = pages_spark_df_distributed(spark, 200_000, seed=42, num_partitions=16)
             build_index(spark, pages, idx, IndexConfig(num_partitions=16), overwrite=True)
 
-    post = get_storage(idx).read_stage(spark, "postings", POSTINGS_SCHEMA)
+    post = IndexStorage(idx).read_stage(spark, "postings", POSTINGS_SCHEMA)
     pdf = post.select("term", "bucket", "block_id", "docid_deltas", "freqs").toPandas()
     row_lens = pdf["docid_deltas"].map(len).to_numpy(np.int64)
     flat = np.concatenate([np.asarray(x, np.int64) for x in pdf["docid_deltas"]])

@@ -3,6 +3,8 @@ analogue (Lucene.Net.Memory/MemoryIndex.cs:81): registered queries
 evaluated per document, map-side only. Matcher semantics vs the
 supported AST subset + Spark integration + clear-error contract."""
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from lucenenet_spark.analysis.analyzer import StandardAnalyzer
@@ -19,8 +21,8 @@ AN = StandardAnalyzer(frozenset(), 255, ascii_only=True)
 
 
 def m(q, text):
-    toks = AN.analyze(text).tokens
-    return _matches(q, toks, set(toks))
+    a = AN.analyze(text)
+    return _matches(q, dict(zip(a.positions, a.tokens)), set(a.tokens))
 
 
 def test_term_and_prefix():
@@ -107,6 +109,26 @@ def test_streaming_percolation(spark, tmp_path):
         for r in spark.sql("SELECT * FROM perc_hits ORDER BY doc_id").collect()
     ]
     assert got == [(0, "q1")]
+
+
+def test_phrase_respects_stopword_gaps(spark):
+    # with the English stop set "the" leaves a position gap: a slop-0
+    # phrase must not bridge it, as on the indexed phrase path
+    docs = spark.createDataFrame(
+        [(0, "quick the fox"), (1, "quick fox")], "doc_id long, text string"
+    )
+    got = percolate(docs, [("q", PhraseQuery(("quick", "fox")))], StandardAnalyzer())
+    assert sorted((r["doc_id"], r["query_id"]) for r in got.collect()) == [(1, "q")]
+
+
+def test_dirty_text_and_string_ids(spark):
+    # missing text (NaN in the source frame) is an empty document, and the
+    # output id column keeps the input's type
+    pdf = pd.DataFrame({"doc_id": ["a", "b", "c"], "text": ["the quick fox", np.nan, "fox"]})
+    docs = spark.createDataFrame(pdf, "doc_id string, text string")
+    got = percolate(docs, [("q1", TermQuery("fox"))], AN)
+    assert dict(got.dtypes)["doc_id"] == "string"
+    assert sorted((r["doc_id"], r["query_id"]) for r in got.collect()) == [("a", "q1"), ("c", "q1")]
 
 
 def test_zero_shuffle_plan(spark):

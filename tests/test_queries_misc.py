@@ -186,6 +186,20 @@ def test_explain_matches_score(searcher):
         assert ex["details"], "expected per-clause details"
 
 
+def test_explain_value_is_float32_score(searcher):
+    """In "lucene" mode the explanation of a boolean sum carries the same
+    float32 rounding as the search score, so the two compare equal as
+    plain Python floats."""
+    from lucenenet_spark.query import parse_query
+
+    q = parse_query("+data +search crawl^0.5")
+    top = searcher.search(q, 10).collect()
+    assert top
+    for r in top:
+        ex = searcher.explain(q, r["docid"])
+        assert ex["value"] == r["score"], (r, ex)
+
+
 @pytest.fixture(scope="module")
 def titled_index(spark, tmp_path_factory):
     """A small index with an extra analyzed ``title`` field."""

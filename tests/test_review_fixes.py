@@ -1,7 +1,7 @@
 """Round-3 review fixes, pinned:
 
-1. snapshot backend: post-compaction append/delete survive GC roll-forward
-   (tests/test_snapshot_storage.py::test_append_and_delete_after_compaction_survive_gc)
+1. post-compaction append/delete survive the compaction roll-forward
+   (tests/test_storage.py::test_append_and_delete_after_compaction_survive_gc)
 2. rewrite(): single-clause BooleanQuery unwrap folds the group boost into
    the inner clause (BooleanQuery.cs:541-546 clone.Boost *= Boost)
 3. _wand_shape: a boosted disjunction falls back to the unpruned path

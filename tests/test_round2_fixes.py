@@ -3,36 +3,22 @@
 - minhash LSH survives documents with <3 tokens (and matches the oracle)
 - ASCII-restricted analyzer gives exact tokenizer parity with the oracle's
   [^a-z0-9]+ split on non-ASCII input
-- compaction publish is atomic (crash after manifest -> roll-forward on the
-  next reader, no double counting)
-- delta visibility keys on the FINAL stage's commit marker (lineage)
-- append resume never reuses a crashed generation's stages for a different
-  input batch
 - phrase boost is applied in exact_int scoring mode
+
+The storage crash-injection tests of this round live in test_storage.py.
 """
 
 import os
-import shutil
 import sys
 
 import duckdb
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod  # noqa: E402
-from lucenenet_spark.data.pages import pages_spark_df  # noqa: E402
-from lucenenet_spark.index import (  # noqa: E402
-    IndexConfig,
-    IndexStorage,
-    append_index,
-    build_index,
-    compact_index,
-)
-from lucenenet_spark.index.storage import COMMIT_MARKER  # noqa: E402
-from lucenenet_spark.query.ast import PhraseQuery, TermQuery  # noqa: E402
+from lucenenet_spark.index import IndexConfig, build_index  # noqa: E402
+from lucenenet_spark.query.ast import PhraseQuery  # noqa: E402
 from lucenenet_spark.query.engine import Searcher  # noqa: E402
 
 CFG = IndexConfig(num_partitions=4, bucket_width=2, flush_docs=64)
@@ -89,104 +75,6 @@ def test_ascii_tokenizer_parity_non_ascii(spark, tmp_path):
     pd.testing.assert_frame_equal(_canon(sdf), _canon(odf))
     # regression detail: "café" must tokenize as caf + (split on é), not café
     assert "caf" in set(sdf["term"]) and "café" not in set(sdf["term"])
-
-
-@pytest.fixture()
-def base_with_delta(spark, tmp_path):
-    out = str(tmp_path / "idx")
-    build_index(spark, pages_spark_df(spark, 120, seed=11), out, CFG, overwrite=True)
-    delta = pages_spark_df(spark, 50, seed=22, include_blake=False).withColumn(
-        "url", F.concat(F.lit("g1-"), F.col("url"))
-    )
-    append_index(spark, delta, out, CFG)
-    return out
-
-
-def test_compaction_crash_after_manifest_rolls_forward(spark, base_with_delta, monkeypatch):
-    out = base_with_delta
-    before = Searcher(spark, out)
-    maxdoc_before = before.maxdoc
-    hits_before = [
-        (r["docid"], r["score"]) for r in before.search(TermQuery("data"), 10).collect()
-    ]
-    # simulate a crash immediately after the manifest rename: the publish's
-    # roll-forward step becomes a no-op inside compact_index only
-    real = IndexStorage.recover_pending_compaction
-    state = {"armed": False}
-
-    def fake(self):
-        if state["armed"]:
-            return False  # "crash": manifest written, no swaps executed
-        return real(self)
-
-    monkeypatch.setattr(IndexStorage, "recover_pending_compaction", fake)
-    st = IndexStorage(out)
-    # compact: delta_dirs() at entry must still see the deltas (not armed yet)
-    state["armed"] = False
-    import lucenenet_spark.index.builder as b
-
-    orig_begin = IndexStorage.begin_compaction_publish
-
-    def begin_and_arm(self, *a, **k):
-        r = orig_begin(self, *a, **k)
-        state["armed"] = True  # everything after the manifest write "crashes"
-        return r
-
-    monkeypatch.setattr(IndexStorage, "begin_compaction_publish", begin_and_arm)
-    compact_index(spark, out, CFG)
-    # crash state: manifest exists, old stages + deltas still on disk
-    assert os.path.exists(os.path.join(out, "_COMPACT_MANIFEST.json"))
-    assert os.path.isdir(os.path.join(out, "deltas"))
-    # next reader rolls the publish forward before listing deltas
-    state["armed"] = False
-    after = Searcher(spark, out)
-    assert not os.path.exists(os.path.join(out, "_COMPACT_MANIFEST.json"))
-    assert not after.is_composite          # deltas merged + dropped
-    assert after.maxdoc == maxdoc_before   # no double counting
-    hits_after = [
-        (r["docid"], r["score"]) for r in after.search(TermQuery("data"), 10).collect()
-    ]
-    assert hits_after == hits_before
-    # recovery is idempotent
-    assert IndexStorage(out).recover_pending_compaction() is False
-
-
-def test_delta_invisible_until_final_stage_committed(spark, base_with_delta):
-    out = base_with_delta
-    st = IndexStorage(out)
-    [delta] = st.delta_dirs()
-    full = Searcher(spark, out)
-    # simulate a crash between postings and lineage commits: postings marker
-    # exists but the generation must NOT be visible
-    marker = os.path.join(delta, "lineage", COMMIT_MARKER)
-    os.remove(marker)
-    assert st.delta_dirs() == []
-    partial = Searcher(spark, out)
-    assert not partial.is_composite
-    assert partial.maxdoc < full.maxdoc
-
-
-def test_append_resume_with_different_batch_rebuilds(spark, tmp_path):
-    out = str(tmp_path / "idx")
-    build_index(spark, pages_spark_df(spark, 100, seed=1), out, CFG, overwrite=True)
-    batch_a = spark.createDataFrame(
-        [("a://1", "zzzuniquea data engine"), ("a://2", "zzzuniquea merge")],
-        "url string, text string",
-    )
-    append_index(spark, batch_a, out, CFG)
-    # simulate the crash: generation 0 lost its final commits (uncommitted)
-    [delta] = IndexStorage(out).delta_dirs()
-    os.remove(os.path.join(delta, "lineage", COMMIT_MARKER))
-    os.remove(os.path.join(delta, "termstats", COMMIT_MARKER))
-    # a DIFFERENT batch must not resume batch A's committed stages
-    batch_b = spark.createDataFrame(
-        [("b://1", "zzzuniqueb data engine"), ("b://2", "zzzuniqueb merge")],
-        "url string, text string",
-    )
-    append_index(spark, batch_b, out, CFG)
-    s = Searcher(spark, out)
-    assert s.count(TermQuery("zzzuniqueb")) == 2
-    assert s.count(TermQuery("zzzuniquea")) == 0  # batch A gone, not mixed in
 
 
 def test_phrase_boost_applied_in_exact_int_mode(spark, tmp_path):

@@ -3,26 +3,24 @@
 - the BPE pre-tokenizer regex reaches Spark verbatim (an F.expr string
   literal silently swallowed the \\s escape, diverging from the oracle on
   consecutive/leading whitespace)
-- a crashed delete op (op-NNNNNN.__tmp__ left behind) stays invisible to
-  readers and cannot shadow the next op number
 - append_index docid base falls back to cumulative-sum semantics for
   pre-format-3 delta metas (maxdoc of a DELTA is its own doc count, not an
   absolute docid bound)
 - a scored MTQ rewrite on a keyword field scores matches as boost*idf
   (norms omitted, tf=1) — the StringField contract — not with text-field
   length norms
+
+The crashed-delete-op test of this round lives in test_storage.py.
 """
 
 import json
 import math
 import os
-import shutil
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
@@ -36,14 +34,8 @@ from lucenenet_spark.index import (  # noqa: E402
     build_index,
 )
 from lucenenet_spark.index.builder import next_docid_base  # noqa: E402
-from lucenenet_spark.index.deletes import (  # noqa: E402
-    delete_docs,
-    has_tombstones,
-    read_tombstones,
-    tombstone_dir,
-)
 from lucenenet_spark.index.storage import COMMIT_MARKER  # noqa: E402
-from lucenenet_spark.query.ast import PrefixQuery, TermQuery  # noqa: E402
+from lucenenet_spark.query.ast import PrefixQuery  # noqa: E402
 from lucenenet_spark.query.engine import Searcher  # noqa: E402
 
 CFG = IndexConfig(num_partitions=4, bucket_width=2, flush_docs=64)
@@ -76,38 +68,6 @@ def test_bpe_regex_reaches_spark_verbatim(spark, tmp_path):
         sdf.reset_index(drop=True), odf.reset_index(drop=True), check_dtype=False
     )
     assert int(sdf.loc[sdf["doc_id"] == 0, "n_bpe"].iloc[0]) == 2
-
-
-def test_crashed_delete_op_tmp_dir_invisible(spark, tmp_path):
-    out = str(tmp_path / "idx")
-    pages = pages_spark_df(spark, 60, seed=7)
-    build_index(spark, pages, out, CFG, overwrite=True)
-
-    # simulate a delete_docs crash between write and rename: a partial
-    # parquet dir under the tmp name
-    base = tombstone_dir(out)
-    os.makedirs(base, exist_ok=True)
-    crashed = os.path.join(base, "op-000000.__tmp__")
-    os.makedirs(crashed)
-    with open(os.path.join(crashed, "part-00000.parquet"), "w") as f:
-        f.write("NOT PARQUET")  # partial write
-
-    assert not has_tombstones(out)
-    assert read_tombstones(spark, out) is None
-    # a Searcher over the index must not try to read the partial op
-    s = Searcher(spark, out)
-    assert s.search(TermQuery("the"), k=5) is not None
-
-    # the next real delete publishes as op-000000 (tmp GC'd, no shadowing)
-    r = delete_docs(spark, out, [0, 1])
-    assert os.path.basename(r["op_dir"]) == "op-000000"
-    assert not os.path.exists(crashed)
-    assert has_tombstones(out)
-    got = {x.docid for x in read_tombstones(spark, out).collect()}
-    assert got == {0, 1}
-    # numbering continues from the max published op
-    r2 = delete_docs(spark, out, [2])
-    assert os.path.basename(r2["op_dir"]) == "op-000001"
 
 
 def test_append_docid_base_pre_format3_fallback(spark, tmp_path):

@@ -1,9 +1,5 @@
 """Round-5 robustness fixes (ADVICE.md items):
 
-- SnapshotStorage._commit_snapshot gained a true CAS: the roll-forward
-  clearing commit re-checks the current version UNDER an exclusive flock
-  and is rejected (returns None, state untouched) if a writer landed in
-  between — a reader must never clobber a writer's stage entries.
 - join_scores' broadcast guard now recognises term-free clauses in
   DISJUNCTIVE positions (MatchAll, pure ranges, MTQ rewrites): the df-sum
   estimate is only an upper bound when every match path goes through a
@@ -14,8 +10,6 @@
   postings (span trees are single-field, SpanNearQuery.cs:56).
 """
 
-import json
-import os
 import sys
 
 import pytest
@@ -23,7 +17,6 @@ import pytest
 sys.path.insert(0, "/root/repo")
 
 from lucenenet_spark.index import IndexConfig, build_index  # noqa: E402
-from lucenenet_spark.index.snapshot_storage import SnapshotStorage  # noqa: E402
 from lucenenet_spark.query.ast import (  # noqa: E402
     BooleanQuery,
     ConstantScoreQuery,
@@ -34,55 +27,6 @@ from lucenenet_spark.query.ast import (  # noqa: E402
     TermQuery,
 )
 from lucenenet_spark.query.engine import Searcher, _df_bounded  # noqa: E402
-
-
-# --------------------------------------------------------------------- #
-# CAS-guarded snapshot commit
-# --------------------------------------------------------------------- #
-
-
-def test_commit_snapshot_cas_rejects_stale_base(tmp_path):
-    root = str(tmp_path / "idx")
-    st = SnapshotStorage(root)
-    st._commit_snapshot({"stages": {}, "drop_dirs": []})
-    base = st.current_version()
-
-    # a writer lands AFTER the reader read `base`
-    writer_snap = st._commit_snapshot(
-        {"stages": {"postings": {"fp": "w1"}}, "drop_dirs": []}
-    )
-    assert writer_snap is not None
-
-    # the reader's housekeeping commit, based on the stale version, must
-    # be rejected and must NOT clobber the writer's stage entries
-    rejected = st._commit_snapshot(
-        {"stages": {}, "drop_dirs": []}, expected_base=base
-    )
-    assert rejected is None
-    cur = st.current_snapshot()
-    assert cur["snapshot_id"] == writer_snap["snapshot_id"]
-    assert cur["stages"] == {"postings": {"fp": "w1"}}
-
-
-def test_commit_snapshot_cas_accepts_current_base(tmp_path):
-    root = str(tmp_path / "idx")
-    st = SnapshotStorage(root)
-    st._commit_snapshot({"stages": {"a": {"fp": "1"}}, "drop_dirs": ["x"]})
-    base = st.current_version()
-    out = st._commit_snapshot(
-        {"stages": {"a": {"fp": "1"}}, "drop_dirs": []}, expected_base=base
-    )
-    assert out is not None and out["snapshot_id"] == base + 1
-    assert st.current_snapshot()["drop_dirs"] == []
-
-
-def test_commit_snapshot_writer_still_wins_without_cas(tmp_path):
-    # writers omit expected_base and always land on a fresh version
-    root = str(tmp_path / "idx")
-    st = SnapshotStorage(root)
-    a = st._commit_snapshot({"stages": {}, "drop_dirs": []})
-    b = st._commit_snapshot({"stages": {}, "drop_dirs": []})
-    assert b["snapshot_id"] == a["snapshot_id"] + 1
 
 
 # --------------------------------------------------------------------- #
