@@ -158,8 +158,9 @@ def main() -> None:
 
     # ---- BM25 latency battery (p50/p95 — the metric's second half) -------- #
     # Repeated warm top-k searches over representative query shapes, timed
-    # end-to-end (plan + execute + materialize). The percentile is across
-    # shape x rep, so it reflects the latency a mixed query stream sees.
+    # end-to-end (plan + execute + collect, what a client sees), with the
+    # Spark jobs each one launched. The percentile is across shape x rep,
+    # so it reflects the latency a mixed query stream sees.
     lat_reps = int(os.environ.get("SPARK_GRAFT_BENCH_LAT_REPS", "5"))
     if lat_reps > 0:
         from lucenenet_spark.query.ast import (
@@ -188,15 +189,21 @@ def main() -> None:
             "phrase": PhraseQuery(["part", "filter"]),
         }
         s = entrymod._searcher(spark, sf_dir)
+        sc = spark.sparkContext
         lats: list[float] = []
         per_shape: dict[str, list[float]] = {k: [] for k in shapes}
-        for _ in range(lat_reps):
+        jobs: dict[str, list[int]] = {k: [] for k in shapes}
+        for rep in range(lat_reps):
             for name, q in shapes.items():
+                group = f"bm25-{name}-{rep}"
+                sc.setJobGroup(group, group)
                 t0 = time.time()
-                s.search(q, 10).write.mode("overwrite").format("noop").save()
+                s.search(q, 10).collect()
                 dt = time.time() - t0
+                sc.setLocalProperty("spark.jobGroup.id", None)
                 lats.append(dt)
                 per_shape[name].append(dt)
+                jobs[name].append(len(sc.statusTracker().getJobIdsForGroup(group)))
         lats.sort()
         p = lambda q: round(lats[min(len(lats) - 1, int(q * len(lats)))], 3)  # noqa: E731
         out["bm25_topk_p50_sec"] = p(0.50)
@@ -204,6 +211,9 @@ def main() -> None:
         out["bm25_topk_reps"] = len(lats)
         out["bm25_topk_median_by_shape"] = {
             k: round(sorted(v)[len(v) // 2], 3) for k, v in per_shape.items()
+        }
+        out["bm25_topk_spark_jobs_by_shape"] = {
+            k: sorted(v)[len(v) // 2] for k, v in jobs.items()
         }
 
     print(json.dumps(out))

@@ -82,6 +82,12 @@ POSTINGS_SCHEMA = (
     "block_max_tf int, block_ttf long, block_max_ub float"
 )
 
+# Postings and termstats row groups stay small: a term seek reads only the
+# row groups whose footer min/max term range holds the term, so this bounds
+# the bytes one lookup decompresses (Spark's default, 128 MiB, made every
+# file one row group that each seek read whole)
+SEEK_ROW_GROUP_BYTES = 1 << 20
+
 DOCMAP_SCHEMA = (
     "docid long, url string, doclen int, norm_byte int, text_bytes long, pid int"
 )
@@ -115,6 +121,7 @@ def ddl_names(dv_ddl: str) -> list[str]:
     return names
 
 TERMSTATS_SCHEMA = "term string, df long, ttf long, max_ub float, idf float"
+STATS_SCHEMA = "field string, maxdoc long, sum_ttf long, avgdl float"
 
 STAGES = ("docoffsets", "partials", "docmap", "stats", "postings", "termstats", "lineage")
 
@@ -660,9 +667,7 @@ class IndexBuilder:
         # appends from max(docid)+1 can never collide
         next_docid = int(row["max_docid"]) + 1 if maxdoc else self.docid_base
         avgdl = float(np.float32(sum_ttf / maxdoc)) if maxdoc and sum_ttf > 0 else 1.0
-        df = self.spark.createDataFrame(
-            [("text", maxdoc, sum_ttf, avgdl)], "field string, maxdoc long, sum_ttf long, avgdl float"
-        )
+        df = self.spark.createDataFrame([("text", maxdoc, sum_ttf, avgdl)], STATS_SCHEMA)
         field_stats = {
             tf: {
                 "sum_ttf": int(row[f"__s_{tf}"] or 0),
@@ -902,6 +907,7 @@ class IndexBuilder:
         try:
             return self.storage.write_stage(
                 postings, "postings", self._fp(), compression="zstd",
+                row_group_bytes=SEEK_ROW_GROUP_BYTES,
                 meta={"index_positions": cfg.index_positions},
             )
         finally:
@@ -936,6 +942,7 @@ class IndexBuilder:
         return self.storage.write_stage(
             ts, "termstats", self._fp(),
             range_partition_column="term", sort_columns=["term"],
+            row_group_bytes=SEEK_ROW_GROUP_BYTES,
         )
 
     def _stage_lineage(self) -> dict:

@@ -30,6 +30,7 @@ from __future__ import annotations
 import os
 import re
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,14 +60,31 @@ def has_tombstones(index_dir: str) -> bool:
     return bool(_published_ops(index_dir))
 
 
-def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """Distinct deleted docids across all published delete ops, or None."""
-    ops = [
-        os.path.join(tombstone_dir(index_dir), n) for n in _published_ops(index_dir)
-    ]
+def tombstone_ops(index_dir: str) -> list[str]:
+    """The directories of all published delete ops, in op order."""
+    return [os.path.join(tombstone_dir(index_dir), n) for n in _published_ops(index_dir)]
+
+
+def read_tombstones(
+    spark: SparkSession, index_dir: str, ops: list[str] | None = None
+) -> DataFrame | None:
+    """Distinct deleted docids across all published delete ops (or the
+    given op dirs), or None."""
+    ops = tombstone_ops(index_dir) if ops is None else ops
     if not ops:
         return None
     return spark.read.schema(TOMB_SCHEMA).parquet(*ops).select("docid").distinct()
+
+
+def tombstone_docids(ops: list[str]) -> np.ndarray:
+    """The deleted docids of the given op dirs as one sorted, distinct
+    int64 array, read on the driver (no Spark job)."""
+    cols = [
+        IndexStorage(os.path.dirname(op)).read_local(os.path.basename(op), TOMB_SCHEMA)
+        .column("docid").to_numpy()
+        for op in ops
+    ]
+    return np.unique(np.concatenate(cols)) if cols else np.array([], dtype=np.int64)
 
 
 def delete_docs(spark: SparkSession, index_dir: str, docids) -> dict:

@@ -13,7 +13,9 @@ skipped on resume (the ``IndexDeletionPolicy``/CheckIndex analogue of
 On a real cluster this module is the only thing that changes: writes become
 ``df.writeTo(table).createOrReplace()`` against an Iceberg catalog and the
 marker becomes the snapshot commit. The stage protocol (fingerprint check,
-skip-if-committed) is identical.
+skip-if-committed) is identical. The driver-side reads (``read_local``)
+prune by the Parquet footers' min/max statistics here; on Iceberg the
+manifest statistics take that role.
 """
 
 from __future__ import annotations
@@ -24,6 +26,8 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 
 COMMIT_MARKER = "_COMMIT.json"
@@ -36,6 +40,24 @@ COMPACT_MANIFEST = "_COMPACT_MANIFEST.json"
 # postings, termstats, lineage). A generation is visible only once this
 # stage's marker exists — every stage the Searcher reads commits before it.
 FINAL_STAGE = "lineage"
+# Spark DDL type -> Arrow type, for the stage schemas read on the driver
+_ARROW_TYPES = {
+    "string": pa.string(), "int": pa.int32(), "long": pa.int64(),
+    "float": pa.float32(), "double": pa.float64(), "boolean": pa.bool_(),
+}
+
+
+def _arrow_type(ddl_type: str) -> pa.DataType:
+    if ddl_type.startswith("array<"):
+        # Spark writes Parquet lists with the element field "element"
+        return pa.list_(pa.field("element", _arrow_type(ddl_type[6:-1])))
+    return _ARROW_TYPES[ddl_type]
+
+
+def arrow_schema(ddl: str) -> pa.Schema:
+    """A flat Spark DDL string ("a long, b array<int>") as an Arrow schema."""
+    cols = [c.split() for c in ddl.split(",")]
+    return pa.schema([(name, _arrow_type(t)) for name, t in cols])
 
 
 @dataclass
@@ -71,6 +93,7 @@ class IndexStorage:
         num_files: int | None = None,
         partition_by: list[str] | None = None,
         compression: str | None = None,
+        row_group_bytes: int | None = None,
     ) -> dict:
         """Write a stage table and publish its commit marker.
 
@@ -79,6 +102,8 @@ class IndexStorage:
         BlockTree term dictionary's sorted blocks + FST index
         (BlockTreeTermsWriter.cs:189,196): Parquet footer min/max stats on
         the sort column then give seek-by-term via predicate pushdown.
+        ``row_group_bytes`` caps the Parquet row group size, the unit those
+        footer statistics can skip.
         """
         out = self.path(stage)
         tmp = out + ".__tmp__"
@@ -95,6 +120,8 @@ class IndexStorage:
         writer = w.write.mode("overwrite")
         if compression:
             writer = writer.option("compression", compression)
+        if row_group_bytes:
+            writer = writer.option("parquet.block.size", str(row_group_bytes))
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
@@ -119,6 +146,20 @@ class IndexStorage:
         if schema is not None:
             r = r.schema(schema)
         return r.parquet(self.path(stage))
+
+    def read_local(
+        self, stage: str, schema: str, columns: list[str] | None = None, filter=None
+    ) -> pa.Table:
+        """The driver-side read of a stage: a pyarrow Table of ``columns``
+        under the stage's explicit DDL ``schema`` (so an empty stage is an
+        empty table), keeping the rows of the pyarrow ``filter``
+        expression. The filter is checked against the Parquet footer
+        min/max statistics before any data page is read: on the term-sorted,
+        range-partitioned stages a term lookup opens only the row groups
+        whose term range holds it. No Spark job runs."""
+        return ds.dataset(
+            self.path(stage), schema=arrow_schema(schema), format="parquet"
+        ).to_table(columns=columns, filter=filter)
 
     def delta_dirs(self) -> list[str]:
         """Committed delta generations under <root>/deltas/<gen>, in

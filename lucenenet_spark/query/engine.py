@@ -32,6 +32,19 @@ Every query kernel shares one decode/score path of three private helpers:
   cache / avgdl and the boost placement;
 - :func:`_flat_keys` — the one ``row * 2^33 + position`` flat-key builder of
   the phrase and span kernels.
+
+Two executors run the same per-shape kernels (:func:`_term_kernel`,
+:func:`_docid_kernel`, :func:`_position_kernel`, :func:`_phrase_kernel`),
+generators over an iterator of pandas posting batches:
+
+- Spark: the kernel runs inside ``mapInPandas`` over the pushdown-pruned
+  postings scan; docid joins, unions and the top-k are Spark plans.
+- driver seek (:meth:`Searcher._seek`): for a term, phrase or boolean of
+  those whose terms hold at most ``_SEEK_MAX_ENTRIES`` posting entries,
+  pyarrow reads only those terms' posting blocks from every generation
+  (footer min/max statistics skip the other files and row groups), the
+  kernel runs on the driver and pandas composes the clauses — the
+  reference's single-process term-dictionary seek, with no Spark job.
 """
 
 from __future__ import annotations
@@ -39,15 +52,17 @@ from __future__ import annotations
 import fnmatch
 import math
 from dataclasses import dataclass
-from functools import reduce
+from functools import cached_property, reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.builder import DOCMAP_SCHEMA, POSTINGS_SCHEMA, TERMSTATS_SCHEMA
-from ..index.storage import IndexStorage
+from ..index.builder import DOCMAP_SCHEMA, POSTINGS_SCHEMA, STATS_SCHEMA, TERMSTATS_SCHEMA
+from ..index.storage import IndexStorage, arrow_schema
 from ..scoring.bm25 import BM25
 from .ast import (
     BooleanQuery,
@@ -78,6 +93,12 @@ from .ast import (
 )
 
 _EMPTY_SCHEMA = "docid long, score double"
+# The driver seek answers a seekable query whose terms' df sum to at most
+# this many posting entries; larger ones run on Spark. Measured at local[2]
+# on a 400,000-page synthetic corpus (table in CHANGES.md), the seek's
+# process-tree CPU per single-term query stayed below the Spark path's at
+# every df up to the largest, 241,646; the bound is that df rounded down.
+_SEEK_MAX_ENTRIES = 200_000
 # enumerated span matches (the _span_kernel emit_spans mode): per-doc
 # parallel (start, end) arrays plus the norm columns the outer anchor needs
 _SPANS_SCHEMA = (
@@ -169,6 +190,16 @@ def _df_bounded(q: Query) -> bool:
     # MatchAll, NumericRange, TermRange/Prefix/Wildcard/Regexp/Fuzzy (their
     # expansions are not in the df estimate), DuplicateFilter, unknown types
     return False
+
+
+def _seekable(q: Query) -> bool:
+    """Whether the driver seek can answer ``q`` (a rewritten query): a
+    term, a phrase, or a BooleanQuery whose clauses all are. Its postings
+    are then exactly the blocks of the terms :func:`_collect_terms`
+    reports."""
+    if isinstance(q, (TermQuery, PhraseQuery)):
+        return True
+    return isinstance(q, BooleanQuery) and all(_seekable(c.query) for c in q.clauses)
 
 
 def _idf(maxdoc: int, df) -> float:
@@ -334,6 +365,135 @@ def _sloppy_freq(rows, match_len, n: int, hit, exact: bool) -> np.ndarray:
     return np.bincount(rows, weights=1.0 / (1.0 + m), minlength=n)[hit]
 
 
+# ---------------- per-shape kernels (both executors) ----------------------- #
+def _term_kernel(batches, scorer: _BM25Scorer, maxdoc: int):
+    """Posting blocks -> (docid, score float64-holding-float32-value): the
+    one decode fused with the one per-entry scorer — the vectorized
+    Lucene41PostingsReader.RefillDocs + BM25DocScorer.Score. Reads
+    ``norm_bytes`` in float32 mode and ``doclens`` in exact_int mode. A
+    scorer without term stats (the scored multi-term rewrite) weighs each
+    entry by the idf of its block's joined ``df``."""
+    norm = "doclens" if scorer.exact else "norm_bytes"
+    for pdf, docids, lens, flat in _decode_blocks(batches, "freqs", norm):
+        w = None
+        if scorer.w is None:
+            idf = _idf_per_entry(pdf["df"], lens, maxdoc)
+            w = scorer.weight(idf, idf)
+        yield pd.DataFrame({"docid": docids, "score": scorer(flat["freqs"], flat[norm], w)})
+
+
+def _docid_kernel(batches):
+    """Posting blocks -> the docids alone (deduped per batch): the match
+    set of a norms-free or constant-score scorer."""
+    for _, docids, _, _ in _decode_blocks(batches):
+        yield pd.DataFrame({"docid": np.unique(docids)})
+
+
+def _position_kernel(batches, need_norms: bool):
+    """Posting blocks -> (docid, [norm_byte, doclen,] positions) for the
+    positional queries; ``need_norms`` adds the anchor slot's scoring
+    columns."""
+    norms = ["norm_bytes", "doclens"] if need_norms else []
+    for _, docids, _, flat in _decode_blocks(batches, "freqs", *norms, "positions"):
+        res = {"docid": docids}
+        if need_norms:
+            res["norm_byte"] = flat["norm_bytes"]
+            res["doclen"] = flat["doclens"]
+        res["positions"] = flat["positions"]
+        yield pd.DataFrame(res)
+
+
+def _phrase_kernel(batches, nterms: int, slop: int, scorer: _BM25Scorer):
+    """Position intersection + pseudo-term BM25 score of PhraseQuery and
+    MultiPhraseQuery (ExactPhraseScorer.cs:26-99): each batch row carries
+    one sorted position array per slot (pos_0..pos_{n-1}) plus docid/
+    norm_byte/doclen; slot i must have a position p0+i (within ±slop).
+    The ``scorer`` carries the field's norm cache / avgdl — a phrase on an
+    extra text field carries that FIELD'S doclens in its postings.
+
+    Fully vectorized across the batch (the chunked style of
+    ExactPhraseScorer.cs:26-99): matches are found with searchsorted on
+    the :func:`_flat_keys` of each slot. No per-row or per-position Python
+    loops; every row is scored on its own, so batch boundaries and row
+    order never change a score.
+
+    slop==0 needs position p0+i present in term i's list (freq = match
+    count, slop factor 1). slop>0 follows the reference's
+    SloppyPhraseScorer (SloppyPhraseScorer.cs PhraseFreq, matchLength =
+    adjusted-window size, match iff matchLength <= slop) with damped freq
+    contributions 1/(1+matchLength) (BM25Similarity.cs:74 SloppyFreq): per
+    anchor a0 (slot-0 adjusted position), each slot contributes its
+    NEAREST adjusted position (tie -> earlier), matchLength = max - min
+    over the chosen adjusted positions incl. the anchor. Enumeration is
+    anchor-based — one candidate combination per slot-0 position — a
+    deterministic convention; the reference's own PhraseQueue enumeration
+    is likewise order-dependent and approximate (see the
+    SloppyPhraseScorer.cs PhraseFreq doc comment)."""
+    BIG = np.int64(1) << 40  # poison distance; masked by `match`
+
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        base_keys, base_rows = _flat_keys(pdf["pos_0"])
+        match = np.ones(len(base_keys), dtype=bool)
+        maxc = np.zeros(len(base_keys), dtype=np.int64)
+        minc = np.zeros(len(base_keys), dtype=np.int64)
+        for i in range(1, nterms):
+            keys_i, _ = _flat_keys(pdf[f"pos_{i}"])
+            if slop == 0:
+                cand = base_keys + i
+                idx = np.searchsorted(keys_i, cand)
+                np.minimum(idx, max(len(keys_i) - 1, 0), out=idx)
+                found = (
+                    keys_i[idx] == cand
+                    if len(keys_i)
+                    else np.zeros(len(cand), dtype=bool)
+                )
+            else:
+                # nearest adjusted position per anchor (adj = pos-i;
+                # composite keys keep rows separated, so a cross-row
+                # neighbor's distance always exceeds `slop`)
+                adj = keys_i - i
+                n_i = len(adj)
+                if n_i == 0:
+                    match[:] = False
+                    break
+                idxr = np.searchsorted(adj, base_keys, "left")
+                right = adj[np.minimum(idxr, n_i - 1)]
+                dr = np.where(idxr < n_i, right - base_keys, BIG)
+                left = adj[np.maximum(idxr - 1, 0)]
+                dl_ = np.where(idxr > 0, base_keys - left, BIG)
+                found = np.minimum(dl_, dr) <= slop
+                c = np.where(dl_ <= dr, -dl_, dr)  # tie -> earlier
+                np.maximum(maxc, c, out=maxc)
+                np.minimum(minc, c, out=minc)
+            match &= found
+        if slop > 0:
+            matchlen = maxc - minc
+            match &= matchlen <= slop
+        counts = np.bincount(base_rows[match], minlength=len(pdf)).astype(np.int64)
+        hit = counts > 0
+        if not hit.any():
+            continue
+        if slop == 0:
+            # exact phrase: slop factor 1 per match, freq = count
+            f = counts[hit].astype(np.float64)
+        else:
+            f = _sloppy_freq(
+                base_rows[match], matchlen[match], len(pdf), hit, scorer.exact
+            )
+        yield _score_hits(scorer, pdf, hit, f)
+
+
+def _hits(frames) -> pd.Series:
+    """Kernel output frames -> one score Series indexed by docid."""
+    frames = [f for f in frames if len(f)]
+    if not frames:
+        return pd.Series([], index=pd.Index([], dtype=np.int64), dtype=np.float64)
+    df = pd.concat(frames, ignore_index=True)
+    return pd.Series(df["score"].to_numpy(np.float64), index=df["docid"].to_numpy(np.int64))
+
+
 def _topk_with_rank(scored: DataFrame, k: int) -> DataFrame:
     """Distributed top-k with the HitQueue tie-break (score desc, docid asc
     — HitQueue.cs:77-87) plus a rank column: TakeOrderedAndProject for the
@@ -386,6 +546,7 @@ class Searcher:
         dirs = [index_dir, *IndexStorage(index_dir).delta_dirs()]
         self.is_composite = len(dirs) > 1
         stores = [IndexStorage(d) for d in dirs]
+        self._stores = stores
         posts = [st.read_stage(spark, "postings", POSTINGS_SCHEMA) for st in stores]
         self.postings = reduce(lambda a, b: a.unionAll(b), posts)
         # docmap widened by the doc-values columns recorded at build time
@@ -410,18 +571,20 @@ class Searcher:
         self.termstats = ts
         maxdoc = sum_ttf = 0
         for st in stores:
-            srow = st.read_stage(spark, "stats").collect()[0]
-            maxdoc += int(srow["maxdoc"])
-            sum_ttf += int(srow["sum_ttf"])
+            srow = st.read_local("stats", STATS_SCHEMA, ["maxdoc", "sum_ttf"])
+            maxdoc += sum(srow.column("maxdoc").to_pylist())
+            sum_ttf += sum(srow.column("sum_ttf").to_pylist())
         self.maxdoc = maxdoc
         self.sum_ttf = sum_ttf
         # liveDocs (Lucene40LiveDocsFormat.cs:64 analogue): tombstoned docs
         # are anti-joined out of every match set and the docmap; collection
         # stats (maxdoc/avgdl/df) deliberately STILL count them until a
-        # compaction physically removes them — reference semantics
-        from ..index.deletes import read_tombstones
+        # compaction physically removes them — reference semantics. The
+        # driver seek reads the same ops (listed once, here) on first use.
+        from ..index.deletes import read_tombstones, tombstone_ops
 
-        self.tombstones = read_tombstones(spark, index_dir)
+        self._tombstone_ops = tombstone_ops(index_dir)
+        self.tombstones = read_tombstones(spark, index_dir, self._tombstone_ops)
         self.docmap = self._live(self.docmap)
         self.has_positions = all(
             st.commit_meta("postings").get("index_positions", True) for st in stores
@@ -567,83 +730,61 @@ class Searcher:
     # ---------------- term statistics (Weight creation) ----------------- #
     def term_stats(self, terms: list[str]) -> dict[str, TermStat]:
         """Pull TermStatistics for the query's terms — the
-        CreateNormalizedWeight stats fetch (IndexSearcher.cs:703-715). One
-        small pushdown-pruned scan, bounded by the query's term count."""
+        CreateNormalizedWeight stats fetch (IndexSearcher.cs:703-715). A
+        driver-side read of each generation's term-sorted termstats, whose
+        Parquet footers skip every row group that cannot hold the terms;
+        df and ttf sum exactly over the generations, max_ub takes the max.
+        No Spark job runs."""
         if not terms:
             return {}
-        rows = self.termstats.filter(F.col("term").isin(list(set(terms)))).collect()
-        out = {}
-        for r in rows:
-            df = int(r["df"])
-            # idf recomputed from the COMPOSITE df (BM25Similarity.cs:67-70:
-            # double log, one float cast) — the stored per-generation idf is
-            # stale the moment a delta lands
-            idf = np.float32(_idf(self.maxdoc, df))
-            out[r["term"]] = TermStat(df, int(r["ttf"]), idf, np.float32(r["max_ub"]))
-        return out
+        # an OR of equalities, not isin: pyarrow prunes row groups by their
+        # min/max statistics only for the former
+        keys = reduce(lambda a, b: a | b, [pc.field("term") == t for t in sorted(set(terms))])
+        acc: dict[str, tuple] = {}
+        for st in self._stores:
+            tab = st.read_local("termstats", TERMSTATS_SCHEMA, ["term", "df", "ttf", "max_ub"], keys)
+            for t, df, ttf, ub in zip(*(c.to_pylist() for c in tab.columns)):
+                if t in acc:
+                    df0, ttf0, ub0 = acc[t]
+                    df, ttf, ub = df0 + df, ttf0 + ttf, max(ub0, ub)
+                acc[t] = (df, ttf, ub)
+        # idf recomputed from the COMPOSITE df (BM25Similarity.cs:67-70:
+        # double log, one float cast) — the stored per-generation idf is
+        # stale the moment a delta lands
+        return {
+            t: TermStat(df, ttf, np.float32(_idf(self.maxdoc, df)), np.float32(ub))
+            for t, (df, ttf, ub) in acc.items()
+        }
 
     # ---------------- decode + score kernel ----------------------------- #
     def _decode_score(self, blocks: DataFrame, scorer: _BM25Scorer) -> DataFrame:
-        """Posting blocks -> (docid, score float64-holding-float32-value):
-        the one decode fused with the one per-entry scorer — the vectorized
-        Lucene41PostingsReader.RefillDocs + BM25DocScorer.Score. The scan
-        reads ``norm_bytes`` only in float32 mode and ``doclens`` only in
-        exact_int mode. A scorer without term stats (the scored multi-term
-        rewrite) weighs each entry by the idf of its block's joined ``df``."""
+        """Posting blocks -> (docid, score): :func:`_term_kernel` on the
+        executors, over a scan of only the columns it reads."""
         norm = "doclens" if scorer.exact else "norm_bytes"
-        per_df = scorer.w is None
         maxdoc = self.maxdoc
-
-        def decode(batches):
-            for pdf, docids, lens, flat in _decode_blocks(batches, "freqs", norm):
-                w = None
-                if per_df:
-                    idf = _idf_per_entry(pdf["df"], lens, maxdoc)
-                    w = scorer.weight(idf, idf)
-                score = scorer(flat["freqs"], flat[norm], w)
-                yield pd.DataFrame({"docid": docids, "score": score})
-
         cols = ["first_docid", "docid_deltas", "freqs", norm]
-        return blocks.select(*cols, *(["df"] if per_df else [])).mapInPandas(
-            decode, schema=_EMPTY_SCHEMA
+        return blocks.select(*cols, *(["df"] if scorer.w is None else [])).mapInPandas(
+            lambda it: _term_kernel(it, scorer, maxdoc), schema=_EMPTY_SCHEMA
         )
 
     def _decode_docids(self, blocks: DataFrame) -> DataFrame:
-        """Posting blocks -> the docids alone (deduped per batch): the
-        match set of a norms-free or constant-score scorer."""
-
-        def decode(batches):
-            for _, docids, _, _ in _decode_blocks(batches):
-                yield pd.DataFrame({"docid": np.unique(docids)})
-
+        """Posting blocks -> the docids alone: :func:`_docid_kernel`."""
         return blocks.select("first_docid", "docid_deltas").mapInPandas(
-            decode, schema="docid long"
+            _docid_kernel, schema="docid long"
         )
 
     def _decode_positions(self, blocks: DataFrame, need_norms: bool = True) -> DataFrame:
-        """Posting blocks -> (docid, [norm_byte, doclen,] positions) for
-        positional queries. ``need_norms=False`` prunes the norm_bytes /
-        doclens array columns out of the Parquet scan entirely — a
-        non-anchor slot of a phrase/span only contributes positions, and
-        the scoring columns ride the anchor slot's scan."""
+        """Posting blocks -> (docid, [norm_byte, doclen,] positions):
+        :func:`_position_kernel`. ``need_norms=False`` prunes the
+        norm_bytes / doclens array columns out of the Parquet scan entirely
+        — a non-anchor slot of a phrase/span only contributes positions,
+        and the scoring columns ride the anchor slot's scan."""
         norms = ["norm_bytes", "doclens"] if need_norms else []
-
-        def decode(batches):
-            for _, docids, _, flat in _decode_blocks(
-                batches, "freqs", *norms, "positions"
-            ):
-                res = {"docid": docids}
-                if need_norms:
-                    res["norm_byte"] = flat["norm_bytes"]
-                    res["doclen"] = flat["doclens"]
-                res["positions"] = flat["positions"]
-                yield pd.DataFrame(res)
-
         schema = "docid long, positions array<int>"
         if need_norms:
             schema = "docid long, norm_byte int, doclen int, positions array<int>"
         cols = blocks.select("first_docid", "docid_deltas", "freqs", *norms, "positions")
-        return cols.mapInPandas(decode, schema=schema)
+        return cols.mapInPandas(lambda it: _position_kernel(it, need_norms), schema=schema)
 
     def _slot(self, keys: list[str], i: int) -> DataFrame:
         """Slot ``i`` of a positional join: docid + ``pos_i``, the sorted
@@ -698,12 +839,14 @@ class Searcher:
         if st is None:
             return self._empty()
         docs = self._decode_docids(self.postings.filter(F.col("term") == key))
+        return docs.withColumn("score", F.lit(self._keyword_score(q, st)).cast("double"))
+
+    def _keyword_score(self, q: TermQuery, st: TermStat) -> float:
+        """The constant score of every match of a keyword-field term."""
         if self.scoring == "exact_int":
             # op order mirrors the SQL oracle: floor((idf*boost)*1e6 + 0.5)
-            val = float(np.floor(_idf(self.maxdoc, st.df) * float(q.boost) * 1e6 + 0.5))
-        else:
-            val = float(np.float32(st.idf) * np.float32(q.boost))
-        return docs.withColumn("score", F.lit(val).cast("double"))
+            return float(np.floor(_idf(self.maxdoc, st.df) * float(q.boost) * 1e6 + 0.5))
+        return float(np.float32(st.idf) * np.float32(q.boost))
 
     def _expand_terms(self, q: Query) -> DataFrame:
         """Term-dictionary scan for MultiTermQuery shapes — returns a
@@ -768,106 +911,36 @@ class Searcher:
         idf = sum of constituent idfs. ``q.field`` may name an extra text
         field: each slot seeks the namespaced "<field>:<term>" postings and
         scoring uses the field's own norms/avgdl."""
+        plan = self._phrase_plan(q, stats)
+        if plan is None:
+            return self._empty()
+        keys, scorer = plan
+        per_term = [self._slot([k], i) for i, k in enumerate(keys)]
+        joined = reduce(lambda a, b: a.join(b, "docid", "inner"), per_term)
+        return self._positions_kernel(joined, len(keys), q.slop, scorer)
+
+    def _phrase_plan(self, q: PhraseQuery, stats: dict[str, TermStat]):
+        """(slot term keys, scorer) of a phrase, or None when one of its
+        terms is not in the index (it can never match)."""
         fld = getattr(q, "field", "text")
         keys = [_skey(fld, t) for t in q.terms]
         if any(k not in stats for k in keys):
-            return self._empty()
+            return None
         if not self.has_positions:
             raise ValueError(
                 "phrase queries need an index built with index_positions=True"
             )
-        per_term = [self._slot([k], i) for i, k in enumerate(keys)]
-        joined = reduce(lambda a, b: a.join(b, "docid", "inner"), per_term)
-        scorer = _BM25Scorer(self, fld, [stats[k] for k in keys], q.boost)
-        return self._positions_kernel(joined, len(q.terms), q.slop, scorer)
+        return keys, _BM25Scorer(self, fld, [stats[k] for k in keys], q.boost)
 
     def _positions_kernel(
         self, joined: DataFrame, nterms: int, slop: int, scorer: _BM25Scorer
     ) -> DataFrame:
-        """Shared position-intersection + pseudo-term BM25 scorer behind
-        PhraseQuery AND MultiPhraseQuery: ``joined`` carries one sorted
-        position array per slot (pos_0..pos_{n-1}) plus docid/norm_byte/
-        doclen; slot i must have a position p0+i (within ±slop). The
-        ``scorer`` carries the field's norm cache / avgdl — a phrase on an
-        extra text field carries that FIELD'S doclens in its postings."""
-        exact = scorer.exact
-
-        def phrase_score(batches):
-            """Fully vectorized across the batch (the chunked style of
-            ExactPhraseScorer.cs:26-99): matches are found with
-            searchsorted on the :func:`_flat_keys` of each slot. No per-row
-            or per-position Python loops.
-
-            Semantics are IDENTICAL to the row-at-a-time form: slop==0
-            needs position p0+i present in term i's list (freq = match
-            count, slop factor 1). slop>0 follows the reference's
-            SloppyPhraseScorer (SloppyPhraseScorer.cs PhraseFreq,
-            matchLength = adjusted-window size, match iff matchLength <=
-            slop) with damped freq contributions 1/(1+matchLength)
-            (BM25Similarity.cs:74 SloppyFreq): per anchor a0 (slot-0
-            adjusted position), each slot contributes its NEAREST adjusted
-            position (tie -> earlier), matchLength = max - min over the
-            chosen adjusted positions incl. the anchor. Enumeration is
-            anchor-based — one candidate combination per slot-0 position —
-            a deterministic convention; the reference's own PhraseQueue
-            enumeration is likewise order-dependent and approximate (see
-            the SloppyPhraseScorer.cs PhraseFreq doc comment)."""
-            BIG = np.int64(1) << 40  # poison distance; masked by `match`
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                base_keys, base_rows = _flat_keys(pdf["pos_0"])
-                match = np.ones(len(base_keys), dtype=bool)
-                maxc = np.zeros(len(base_keys), dtype=np.int64)
-                minc = np.zeros(len(base_keys), dtype=np.int64)
-                for i in range(1, nterms):
-                    keys_i, _ = _flat_keys(pdf[f"pos_{i}"])
-                    if slop == 0:
-                        cand = base_keys + i
-                        idx = np.searchsorted(keys_i, cand)
-                        np.minimum(idx, max(len(keys_i) - 1, 0), out=idx)
-                        found = (
-                            keys_i[idx] == cand
-                            if len(keys_i)
-                            else np.zeros(len(cand), dtype=bool)
-                        )
-                    else:
-                        # nearest adjusted position per anchor (adj = pos-i;
-                        # composite keys keep rows separated, so a cross-row
-                        # neighbor's distance always exceeds `slop`)
-                        adj = keys_i - i
-                        n_i = len(adj)
-                        if n_i == 0:
-                            match[:] = False
-                            break
-                        idxr = np.searchsorted(adj, base_keys, "left")
-                        right = adj[np.minimum(idxr, n_i - 1)]
-                        dr = np.where(idxr < n_i, right - base_keys, BIG)
-                        left = adj[np.maximum(idxr - 1, 0)]
-                        dl_ = np.where(idxr > 0, base_keys - left, BIG)
-                        found = np.minimum(dl_, dr) <= slop
-                        c = np.where(dl_ <= dr, -dl_, dr)  # tie -> earlier
-                        np.maximum(maxc, c, out=maxc)
-                        np.minimum(minc, c, out=minc)
-                    match &= found
-                if slop > 0:
-                    matchlen = maxc - minc
-                    match &= matchlen <= slop
-                counts = np.bincount(base_rows[match], minlength=len(pdf)).astype(np.int64)
-                hit = counts > 0
-                if not hit.any():
-                    continue
-                if slop == 0:
-                    # exact phrase: slop factor 1 per match, freq = count
-                    f = counts[hit].astype(np.float64)
-                else:
-                    f = _sloppy_freq(
-                        base_rows[match], matchlen[match], len(pdf), hit, exact
-                    )
-                yield _score_hits(scorer, pdf, hit, f)
-
-        return joined.mapInPandas(phrase_score, schema=_EMPTY_SCHEMA)
+        """:func:`_phrase_kernel` on the executors, behind PhraseQuery AND
+        MultiPhraseQuery: ``joined`` carries pos_0..pos_{n-1} plus
+        docid/norm_byte/doclen."""
+        return joined.mapInPandas(
+            lambda it: _phrase_kernel(it, nterms, slop, scorer), schema=_EMPTY_SCHEMA
+        )
 
     def _score_multiphrase(self, q: MultiPhraseQuery, stats: dict[str, TermStat]) -> DataFrame:
         """MultiPhraseQuery (MultiPhraseQuery.cs:72): per slot, the position
@@ -1669,13 +1742,130 @@ class Searcher:
             return df
         return df.join(F.broadcast(self.tombstones), "docid", "left_anti")
 
+    # ---------------- driver seek ----------------------------------------- #
+    def _seeks(self, q: Query, stats: dict[str, TermStat]) -> bool:
+        """The executor rule: the driver seek answers a seekable (rewritten)
+        query whose terms hold at most ``_SEEK_MAX_ENTRIES`` posting
+        entries; every other query runs on Spark."""
+        if not _seekable(q):
+            return False
+        terms: set[str] = set()
+        _collect_terms(q, terms)
+        return sum(stats[t].df for t in terms if t in stats) <= _SEEK_MAX_ENTRIES
+
+    def _seek_blocks(self, key: str, cols: list[str]) -> list[pd.DataFrame]:
+        """The posting blocks of one term key in every generation, read
+        with pyarrow, as one pandas batch for a kernel."""
+        term = pc.field("term") == key
+        cols = ["first_docid", "docid_deltas", *cols]
+        tabs = [st.read_local("postings", POSTINGS_SCHEMA, cols, term) for st in self._stores]
+        return [pa.concat_tables(tabs).to_pandas()]
+
+    def _seek(self, q: Query, stats: dict[str, TermStat]) -> pd.Series:
+        """The scored matches of a seekable query, on the driver: float64
+        scores indexed by docid, the values :meth:`_score` yields before
+        liveDocs and the final cast. Terms and phrases run the executors'
+        kernels on :meth:`_seek_blocks`; a BooleanQuery composes its
+        clauses as :meth:`_score_boolean` does — must clauses intersect and
+        sum in clause order, should clauses sum per docid and count toward
+        minimum_should_match, must_not clauses drop their docids, and the
+        group boost multiplies the double sum."""
+        if isinstance(q, TermQuery):
+            key = _skey(q.field, q.term)
+            st = stats.get(key)
+            if st is None:
+                return _hits([])
+            if q.field != "text" and q.field not in self.text_fields:
+                val = self._keyword_score(q, st)
+                return _hits(f.assign(score=val) for f in _docid_kernel(self._seek_blocks(key, [])))
+            scorer = _BM25Scorer(self, q.field, [st], q.boost)
+            norm = "doclens" if scorer.exact else "norm_bytes"
+            return _hits(_term_kernel(self._seek_blocks(key, ["freqs", norm]), scorer, self.maxdoc))
+        if isinstance(q, PhraseQuery):
+            plan = self._phrase_plan(q, stats)
+            if plan is None:
+                return _hits([])
+            keys, scorer = plan
+            slots = []
+            for i, key in enumerate(keys):
+                norms = ["norm_bytes", "doclens"] if i == 0 else []
+                blocks = self._seek_blocks(key, ["freqs", *norms, "positions"])
+                dec = pd.concat(list(_position_kernel(blocks, i == 0)))
+                slots.append(dec.rename(columns={"positions": f"pos_{i}"}))
+            joined = reduce(lambda a, b: a.merge(b, on="docid"), slots)
+            return _hits(_phrase_kernel([joined], len(keys), q.slop, scorer))
+        must, should, must_not = q.parts()
+        msm = q.minimum_should_match
+        res = None
+        if must:
+            # aligned adds keep the docids every clause holds
+            res = reduce(lambda a, b: a + b, [self._seek(m, stats) for m in must]).dropna()
+        if should:
+            per_doc = pd.concat([self._seek(c, stats) for c in should]).groupby(level=0)
+            should_score = per_doc.sum()
+            if msm > 0:
+                should_score = should_score[per_doc.size() >= msm]
+            if res is None:
+                res = should_score
+            elif msm > 0:
+                res = (res + should_score).dropna()
+            else:
+                res = res + should_score.reindex(res.index, fill_value=0.0)
+        if res is None:
+            return _hits([])
+        for mn in must_not:
+            res = res[~res.index.isin(self._seek(mn, stats).index)]
+        if q.boost != 1.0:
+            res = res * float(np.float32(q.boost))
+        return res
+
+    @cached_property
+    def _dead(self) -> np.ndarray:
+        """The tombstoned docids, sorted: the driver seek's liveDocs, read
+        on first use from the delete ops listed at open."""
+        from ..index.deletes import tombstone_docids
+
+        return tombstone_docids(self._tombstone_ops)
+
+    def _seek_topk(self, q: Query, stats: dict[str, TermStat], k: int) -> pd.DataFrame:
+        """(docid, score, rank) of the top-k of a seekable query: the live
+        matches of :meth:`_seek`, cast once to float32 (or the exact_int
+        long), cut with the HitQueue tie-break (score desc, docid asc)."""
+        hits = self._seek(q, stats)
+        docid = hits.index.to_numpy(np.int64)
+        live = ~np.isin(docid, self._dead)
+        cast = np.int64 if self.scoring == "exact_int" else np.float32
+        docid, score = docid[live], hits.to_numpy()[live].astype(cast)
+        top = np.lexsort((docid, -score))[:k]
+        return pd.DataFrame({
+            "docid": docid[top], "score": score[top],
+            "rank": np.arange(1, len(top) + 1, dtype=np.int32),
+        })
+
+    def _local_df(self, hits: pd.DataFrame, batch: bool = False) -> DataFrame:
+        """Driver-side hits as a DataFrame over a local relation, with the
+        column types of the Spark path's result: collecting it runs no
+        Spark job. ``batch`` adds the leading ``query_id`` column."""
+        ddl = f"docid long, score {'long' if self.scoring == 'exact_int' else 'float'}, rank int"
+        if batch:
+            ddl = "query_id string, " + ddl
+        schema = arrow_schema(ddl)
+        table = pa.Table.from_pandas(hits[schema.names], schema, preserve_index=False)
+        return self.spark.createDataFrame(table, ddl)
+
     # ---------------- public API ----------------------------------------- #
     def score_df(self, q: Query) -> DataFrame:
         """Full scored match set as (docid, score float32-in-float column)."""
         q = rewrite(q)
+        return self._score_df(q, self._query_stats(q))
+
+    def _query_stats(self, q: Query) -> dict[str, TermStat]:
+        """Term stats of every term a rewritten query reads."""
         terms: set[str] = set()
         _collect_terms(q, terms)
-        stats = self.term_stats(sorted(terms))
+        return self.term_stats(sorted(terms))
+
+    def _score_df(self, q: Query, stats: dict[str, TermStat]) -> DataFrame:
         scored = self._live(self._score(q, stats))
         if self.scoring == "exact_int":
             # integer micro-units: sums of exact small ints held in doubles
@@ -1827,50 +2017,61 @@ class Searcher:
 
     def search(self, q: Query, k: int = 10, wand: bool = False) -> DataFrame:
         """Top-k: (docid, score, rank). Tie-break score desc then docid asc
-        (HitQueue.cs:77-87) via distributed TakeOrderedAndProject.
+        (HitQueue.cs:77-87).
 
-        ``wand=True`` enables block-max WAND pruning for term/disjunction
-        shapes in "lucene" scoring mode — result-identical, skips posting
-        blocks that provably cannot reach the top-k threshold."""
+        Executor: a TermQuery, PhraseQuery, or BooleanQuery of those (any
+        nesting, must/should/must_not, minimum_should_match, boosts) whose
+        terms hold at most ``_SEEK_MAX_ENTRIES`` posting entries is
+        answered on the driver — a pyarrow seek of those terms' posting
+        blocks through the same decode/score kernels — and the result is
+        a local DataFrame whose ``collect`` runs no Spark job. Every other
+        query runs on Spark (distributed TakeOrderedAndProject). Both
+        return identical rows and schema.
+
+        ``wand=True`` is a pruning hint for the Spark path: block-max WAND
+        for term/disjunction shapes in "lucene" scoring mode, skipping
+        posting blocks that provably cannot reach the top-k threshold. A
+        query the driver answers ignores it; the top-k is identical
+        either way."""
+        q = rewrite(q)
+        stats = self._query_stats(q)
+        if self._seeks(q, stats):
+            return self._local_df(self._seek_topk(q, stats, k))
         if wand:
-            terms = self._wand_shape(rewrite(q))
+            terms = self._wand_shape(q)
             if terms is not None:
-                stats = self.term_stats(terms)
                 return _topk_with_rank(self._search_wand(terms, stats, k), k)
-        return _topk_with_rank(self.score_df(q), k)
+        return _topk_with_rank(self._score_df(q, stats), k)
 
     def search_batch(self, queries: dict[str, Query], k: int = 10) -> DataFrame:
-        """Top-k for MANY queries in ONE Spark job: (query_id, docid,
-        score, rank). The per-query scored plans union into a single DAG,
-        so a batch of Q queries pays ONE job's scheduling/exchange
-        overhead instead of Q — the mixed-stream throughput lever the
-        latency battery prices at ~0.3-0.5 s fixed cost per job. Term
-        stats for the whole batch resolve in one metadata lookup. Each
-        branch cuts its own top-k with TakeOrderedAndProject (no shuffle,
-        exactly :meth:`search`'s physical shape — a per-query-id window
-        over the unioned match sets would instead shuffle every branch's
-        FULL match set); the union is k rows per query. Per-query results
-        are identical to :meth:`search` (same scoring paths, same HitQueue
-        tie-break); rank is numbered within each query_id."""
+        """Top-k for many queries: (query_id, docid, score, rank), rank
+        numbered within each query_id. Term stats for the whole batch
+        resolve in one driver-side lookup. Each query takes the executor
+        :meth:`search` would give it: the driver-answered ones concatenate
+        into ONE local table (no Spark job), and only the queries that
+        need Spark union onto it as their own branches, each cutting its
+        top-k with TakeOrderedAndProject (no shuffle, exactly
+        :meth:`search`'s physical shape). Per-query results are identical
+        to :meth:`search` (same scoring paths, same HitQueue tie-break)."""
+        rewritten = {qid: rewrite(q) for qid, q in queries.items()}
         all_terms: set[str] = set()
-        rewritten: dict[str, Query] = {}
-        for qid, q in queries.items():
-            rq = rewrite(q)
-            rewritten[qid] = rq
+        for rq in rewritten.values():
             _collect_terms(rq, all_terms)
         stats = self.term_stats(sorted(all_terms))
-        parts = []
+        seek, parts = [], []
         for qid, rq in rewritten.items():
-            scored = self._live(self._score(rq, stats))
-            cast = "long" if self.scoring == "exact_int" else "float"
-            scored = scored.select(
-                "docid", F.col("score").cast(cast).alias("score")
-            )
+            if self._seeks(rq, stats):
+                seek.append(self._seek_topk(rq, stats, k).assign(query_id=qid))
+                continue
             parts.append(
-                _topk_with_rank(scored, k).select(
+                _topk_with_rank(self._score_df(rq, stats), k).select(
                     F.lit(qid).alias("query_id"), "docid", "score", "rank"
                 )
             )
+        if seek or not parts:
+            cols = ["query_id", "docid", "score", "rank"]
+            local = pd.concat(seek) if seek else pd.DataFrame(columns=cols)
+            parts.insert(0, self._local_df(local, batch=True))
         return reduce(lambda a, b: a.unionAll(b), parts)
 
     def search_after(self, q: Query, after_score: float, after_docid: int, k: int = 10) -> DataFrame:
@@ -2231,10 +2432,7 @@ class Searcher:
         ).count():
             return {"value": 0.0, "description": f"doc {docid} is deleted", "details": []}
         q = rewrite(q)
-        terms: set[str] = set()
-        _collect_terms(q, terms)
-        stats = self.term_stats(sorted(terms))
-        ex = self._explain(q, int(docid), stats)
+        ex = self._explain(q, int(docid), self._query_stats(q))
         if self.scoring == "lucene":
             # score_df casts the clause sum to float32; so does the explanation
             ex["value"] = float(np.float32(ex["value"]))

@@ -26,7 +26,7 @@ def main() -> int:
     ap.add_argument(
         "--query", action="append", required=True,
         help="classic query syntax; repeat the flag to run a BATCH of "
-             "queries in one Spark job (Searcher.search_batch)",
+             "queries (Searcher.search_batch)",
     )
     ap.add_argument("-k", type=int, default=10, help="top-k")
     ap.add_argument(
