@@ -29,8 +29,9 @@ Everything is vectorized over pandas Series — these functions run inside
 
 from __future__ import annotations
 
+import importlib
 import re
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -190,663 +191,72 @@ class StandardAnalyzer:
         return self.analyze(text).tokens
 
 
-class EnglishAnalyzer(StandardAnalyzer):
+class TermFilterAnalyzer(StandardAnalyzer):
+    """A language pack's chain: StandardTokenizer -> LowerCase ->
+    StopFilter -> the pack's term function (its stemmer or normalizer,
+    ``str -> str``). The reference builds each
+    ``Analysis/<Lang>/<Lang>Analyzer.cs`` as this same chain; every pack
+    module's docstring cites its reference chain and where it diverges.
+    :data:`LANGUAGE_PACKS` names each pack's module, stop set and term
+    function.
+
+    Indexing stays on the Arrow fast path: tokenize/lower/stop run in C++
+    and the term function applies per UNIQUE term at dictionary-encode
+    time (term_filter_unique), so Python cost is per vocabulary entry per
+    batch, not per token. The query side (analyze) calls the same
+    function. ``term`` is a module-level function, so the chain pickles by
+    reference to the executors."""
+
+    #: the LANGUAGE_PACKS row whose term function a subclass binds
+    pack: str | None = None
+
+    def __init__(
+        self,
+        stop_words: frozenset[str] = ENGLISH_STOP_WORDS,
+        max_token_length: int = MAX_TOKEN_LENGTH,
+        ascii_only: bool = False,
+        term: Callable[[str], str] | None = None,
+    ):
+        super().__init__(stop_words, max_token_length, ascii_only)
+        self.term = term if term is not None else load_pack(self.pack)[0]
+
+    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
+        """The term function per unique term; namespaced "<field>:<value>"
+        postings pass through (keyword values stay verbatim, and
+        encode_terms applies the chain to text-field suffixes itself)."""
+        term = self.term
+        out = np.empty(len(uniques), dtype=object)
+        for i, t in enumerate(uniques):
+            out[i] = t if ":" in t else term(t)
+        return out
+
+    def analyze(self, text: str) -> Analyzed:
+        a = super().analyze(text)
+        return Analyzed([self.term(t) for t in a.tokens], a.positions)
+
+
+class EnglishAnalyzer(TermFilterAnalyzer):
     """EnglishAnalyzer (Analysis/En/EnglishAnalyzer.cs chain minus the
     possessive filter): StandardTokenizer -> LowerCase -> StopFilter ->
     PorterStemFilter (Analysis/En/PorterStemFilter.cs). Divergence note:
     the reference's UAX#29 tokenizer keeps "dog's" as one token for the
     possessive filter to strip; our tokenizer already splits on the
     apostrophe ("dog", "s"), so no possessive filter exists or is needed.
+    Stops the set it is given (English by default)."""
 
-    Indexing stays on the Arrow fast path: tokenize/lower/stop run in C++
-    and the stemmer applies per UNIQUE term at dictionary-encode time
-    (term_filter_unique), so Python cost is per vocabulary entry per
-    segment, not per token."""
+    pack = "english"
 
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .porter import stem_unique
 
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .porter import porter_stem
-
-        a = super().analyze(text)
-        return Analyzed(
-            [
-                porter_stem(t) if t.isascii() and t.isalpha() else t
-                for t in a.tokens
-            ],
-            a.positions,
-        )
-
-
-class FrenchLightAnalyzer(StandardAnalyzer):
-    """FrenchAnalyzer (Analysis/Fr/FrenchAnalyzer.cs:187-212 chain):
-    StandardTokenizer -> Elision -> LowerCase -> StopFilter(French) ->
-    FrenchLightStemFilter (the UniNE light stemmer, Savoy SAC 2006 —
-    Analysis/Fr/FrenchLightStemmer.cs:69-350). Divergence note: the
-    reference's ElisionFilter strips "l'" from "l'avion" inside one UAX#29
-    token; our tokenizer already splits on the apostrophe, so elision is
-    realized by including the article tokens (l, d, qu, ...) in the stop
-    set (analysis/french.py FRENCH_STOP_WORDS) — same pattern as
-    EnglishAnalyzer's possessive note.
-
-    Indexing stays on the Arrow fast path: the stem applies per UNIQUE
-    term at dictionary-encode time (term_filter_unique)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .french import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .french import french_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([french_light_stem(t) for t in a.tokens], a.positions)
-
-
-class GermanLightAnalyzer(StandardAnalyzer):
-    """GermanAnalyzer (Analysis/De/GermanAnalyzer.cs:171-180 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(German) ->
-    GermanNormalizationFilter -> GermanLightStemFilter (the UniNE light
-    stemmer, Savoy SAC 2006). Normalization folds umlauts / expands
-    eszett / deletes the digraph 'e' (mueller == m-umlaut-ller), then the
-    light stemmer strips plural/declension suffixes. Both run per UNIQUE
-    term at dictionary-encode time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .german import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .german import german_term
-
-        a = super().analyze(text)
-        return Analyzed([german_term(t) for t in a.tokens], a.positions)
-
-
-class PortugueseLightAnalyzer(StandardAnalyzer):
-    """PortugueseAnalyzer (Analysis/Pt/PortugueseAnalyzer.cs:119-133
-    chain): StandardTokenizer -> LowerCase -> StopFilter(Portuguese) ->
-    PortugueseLightStemFilter (the UniNE/RSLP light rules — published in
-    Orengo & Huyck SPIRE 2001 + Savoy SAC 2006; see analysis/portuguese.py).
-    Runs per UNIQUE term at dictionary-encode time (Arrow fast path
-    stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .portuguese import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .portuguese import portuguese_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([portuguese_light_stem(t) for t in a.tokens], a.positions)
-
-
-class DutchSnowballAnalyzer(StandardAnalyzer):
-    """DutchAnalyzer (Analysis/Nl/DutchAnalyzer.cs:47 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Dutch) -> Snowball Dutch
-    stemmer (original implementation of the PUBLISHED algorithm,
-    snowballstem.org — see analysis/dutch.py; the reference runs the
-    tartarus DutchStemmer, the same algorithm). Runs per UNIQUE term at
-    dictionary-encode time (Arrow fast path stays hot). The reference's
-    stem-override dictionary (DutchAnalyzer stemdict: fiets/ei exceptions)
-    is omitted — documented divergence."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .dutch import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .dutch import dutch_stem
-
-        a = super().analyze(text)
-        return Analyzed([dutch_stem(t) for t in a.tokens], a.positions)
-
-
-class SpanishLightAnalyzer(StandardAnalyzer):
-    """SpanishAnalyzer (Analysis/Es/SpanishAnalyzer.cs:120-140 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Spanish) ->
-    SpanishLightStemFilter (the UniNE light stemmer, Savoy SAC 2006 —
-    Analysis/Es/SpanishLightStemmer.cs:63-100): accent fold, then one
-    final-vowel / plural-s suffix strip (-ces -> -z for -z-noun plurals).
-    Runs per UNIQUE term at dictionary-encode time (Arrow fast path
-    stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .spanish import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .spanish import spanish_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([spanish_light_stem(t) for t in a.tokens], a.positions)
-
-
-class ItalianLightAnalyzer(StandardAnalyzer):
-    """ItalianAnalyzer (Analysis/It/ItalianAnalyzer.cs:130-155 chain):
-    StandardTokenizer -> Elision -> LowerCase -> StopFilter(Italian) ->
-    ItalianLightStemFilter (the UniNE light stemmer —
-    Analysis/It/ItalianLightStemmer.cs:63-110): accent fold, then one
-    final-vowel strip with the -he/-hi/-ie hard-consonant plural rules.
-    Elision is realized by stopping the split article tokens (same note
-    as the French pack). Runs per UNIQUE term at dictionary-encode time
-    (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .italian import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .italian import italian_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([italian_light_stem(t) for t in a.tokens], a.positions)
-
-
-class RussianLightAnalyzer(StandardAnalyzer):
-    """RussianAnalyzer (Analysis/Ru/RussianAnalyzer.cs:48 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Russian) ->
-    RussianLightStemFilter (UniNE-family light stemmer over the published
-    Snowball case-ending inventories — see analysis/russian.py). Only
-    Cyrillic terms are rewritten; Latin tokens in a mixed corpus pass
-    through. Runs per UNIQUE term at dictionary-encode time (Arrow fast
-    path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .russian import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .russian import russian_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([russian_light_stem(t) for t in a.tokens], a.positions)
-
-
-class SwedishLightAnalyzer(StandardAnalyzer):
-    """SwedishAnalyzer (Analysis/Sv/SwedishAnalyzer.cs:120 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Swedish) ->
-    SwedishLightStemFilter (UniNE-family light stemmer — see
-    analysis/swedish.py: -ar/-er/-or declensions, definite forms, the
-    -het family, -are/-ast, -ande/-else). Runs per UNIQUE term at
-    dictionary-encode time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .swedish import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .swedish import swedish_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([swedish_light_stem(t) for t in a.tokens], a.positions)
-
-
-class ArabicLightAnalyzer(StandardAnalyzer):
-    """ArabicAnalyzer (Analysis/Ar/ArabicAnalyzer.cs:43 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Arabic) ->
-    ArabicNormalizationFilter -> ArabicStemFilter (the PUBLISHED light10
-    stemmer, Larkey et al. SIGIR 2002 — see analysis/arabic.py). Only
-    Arabic-script terms are rewritten. Runs per UNIQUE term at
-    dictionary-encode time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .arabic import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .arabic import arabic_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([arabic_light_stem(t) for t in a.tokens], a.positions)
-
-
-class IndonesianAnalyzer(StandardAnalyzer):
-    """IndonesianAnalyzer (Analysis/Id/IndonesianAnalyzer.cs:43 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Indonesian) ->
-    IndonesianStemFilter (the PUBLISHED Tala 2003 algorithm, light form —
-    see analysis/indonesian.py; prefix recoding omitted, documented).
-    Runs per UNIQUE term at dictionary-encode time (Arrow fast path
-    stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .indonesian import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .indonesian import indonesian_stem
-
-        a = super().analyze(text)
-        return Analyzed([indonesian_stem(t) for t in a.tokens], a.positions)
-
-
-class FinnishLightAnalyzer(StandardAnalyzer):
-    """FinnishAnalyzer (Analysis/Fi/FinnishAnalyzer.cs:120 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Finnish) ->
-    FinnishLightStemFilter (UniNE-family light stemmer over the frequent
-    case/number endings — see analysis/finnish.py). Runs per UNIQUE term
-    at dictionary-encode time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .finnish import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .finnish import finnish_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([finnish_light_stem(t) for t in a.tokens], a.positions)
-
-
-class HungarianLightAnalyzer(StandardAnalyzer):
-    """HungarianAnalyzer (Analysis/Hu/HungarianAnalyzer.cs:120 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Hungarian) ->
-    HungarianLightStemFilter (UniNE-family light stemmer over the
-    vowel-harmony case endings + plural — see analysis/hungarian.py).
-    Runs per UNIQUE term at dictionary-encode time (Arrow fast path
-    stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .hungarian import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .hungarian import hungarian_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([hungarian_light_stem(t) for t in a.tokens], a.positions)
-
-
-class NorwegianLightAnalyzer(StandardAnalyzer):
-    """NorwegianAnalyzer (Analysis/No/NorwegianAnalyzer.cs:120 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Norwegian) ->
-    NorwegianLightStemFilter (Nordic-light stemmer: declensions, -het
-    family, participles — see analysis/norwegian.py). Runs per UNIQUE
-    term at dictionary-encode time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .norwegian import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .norwegian import norwegian_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([norwegian_light_stem(t) for t in a.tokens], a.positions)
-
-
-class DanishLightAnalyzer(StandardAnalyzer):
-    """DanishAnalyzer (Analysis/Da/DanishAnalyzer.cs:120 chain, Snowball
-    stemmer replaced by the documented light variant): StandardTokenizer
-    -> LowerCase -> StopFilter(Danish) -> DanishLightStemFilter
-    (declensions, -hed family, participles, final-consonant undoubling —
-    see analysis/danish.py). Runs per UNIQUE term at dictionary-encode
-    time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .danish import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .danish import danish_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([danish_light_stem(t) for t in a.tokens], a.positions)
-
-
-class CzechLightAnalyzer(StandardAnalyzer):
-    """CzechAnalyzer (Analysis/Cz/CzechAnalyzer.cs:60 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Czech) -> CzechStemFilter
-    (the PUBLISHED Dolamic & Savoy light stemmer: case endings,
-    possessives, palatalization normalization — see analysis/czech.py).
-    Runs per UNIQUE term at dictionary-encode time (Arrow fast path
-    stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .czech import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .czech import czech_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([czech_light_stem(t) for t in a.tokens], a.positions)
-
-
-class BulgarianLightAnalyzer(StandardAnalyzer):
-    """BulgarianAnalyzer (Analysis/Bg/BulgarianAnalyzer.cs:55 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Bulgarian) ->
-    BulgarianStemFilter (the PUBLISHED BulStem-family light rules:
-    definite article, plural, link vowel — see analysis/bulgarian.py).
-    Only Cyrillic terms are rewritten. Runs per UNIQUE term at
-    dictionary-encode time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .bulgarian import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .bulgarian import bulgarian_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([bulgarian_light_stem(t) for t in a.tokens], a.positions)
-
-
-class PersianAnalyzer(StandardAnalyzer):
-    """PersianAnalyzer (Analysis/Fa/PersianAnalyzer.cs:48 chain):
-    StandardTokenizer -> LowerCase -> Arabic+Persian normalization ->
-    StopFilter(Persian) — NO stemmer, matching the reference (see
-    analysis/persian.py). Only Arabic-script terms are touched. Runs per
-    UNIQUE term at dictionary-encode time (Arrow fast path stays hot).
-
-    Note: the stop list is matched AFTER normalization here (entries are
-    stored normalized), whereas the reference normalizes before its stop
-    filter too — same observable behavior."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .persian import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .persian import persian_normalize
-
-        a = super().analyze(text)
-        return Analyzed([persian_normalize(t) for t in a.tokens], a.positions)
-
-
-class HindiAnalyzer(StandardAnalyzer):
-    """HindiAnalyzer (Analysis/Hi/HindiAnalyzer.cs:47 chain):
-    StandardTokenizer -> LowerCase -> Indic/Hindi normalization ->
-    StopFilter(Hindi) -> HindiStemFilter (the PUBLISHED Ramanathan & Rao
-    light stemmer — see analysis/hindi.py). Only Devanagari terms are
-    rewritten. Runs per UNIQUE term at dictionary-encode time (Arrow
-    fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .hindi import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .hindi import hindi_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([hindi_light_stem(t) for t in a.tokens], a.positions)
-
-
-class GreekLightAnalyzer(StandardAnalyzer):
-    """GreekAnalyzer (Analysis/El/GreekAnalyzer.cs:40 chain):
-    StandardTokenizer -> GreekLowerCase (tonos removal + final sigma) ->
-    StopFilter(Greek) -> light stem (UniNE-family inflectional rules —
-    see analysis/greek.py; the full Ntais automaton is the documented
-    non-goal). Only Greek-script terms are rewritten. Runs per UNIQUE
-    term at dictionary-encode time (Arrow fast path stays hot).
-
-    Stop matching note: entries are stored NORMALIZED and the stop filter
-    runs before term_filter_unique here, so Greek stopwords written WITH
-    tonos in text are normalized by the stem hook instead of dropped —
-    the suite pins the normalized-entry behavior."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .greek import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .greek import greek_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([greek_light_stem(t) for t in a.tokens], a.positions)
-
-
-class TurkishLightAnalyzer(StandardAnalyzer):
-    """TurkishAnalyzer (Analysis/Tr/TurkishAnalyzer.cs:43 chain):
-    StandardTokenizer (apostrophe suffixes split off structurally) ->
-    TurkishLowerCase (dotted/dotless I repair) -> StopFilter(Turkish) ->
-    light stem (UniNE-family case/plural strip — see analysis/turkish.py;
-    the Snowball automaton is the documented non-goal). Runs per UNIQUE
-    term at dictionary-encode time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .turkish import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .turkish import turkish_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([turkish_light_stem(t) for t in a.tokens], a.positions)
-
-
-class RomanianLightAnalyzer(StandardAnalyzer):
-    """RomanianAnalyzer (Analysis/Ro/RomanianAnalyzer.cs:43 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Romanian) -> light stem
-    (UniNE-family enclitic-article + plural strip — see
-    analysis/romanian.py). Runs per UNIQUE term at dictionary-encode
-    time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .romanian import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .romanian import romanian_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([romanian_light_stem(t) for t in a.tokens], a.positions)
-
-
-class LatvianLightAnalyzer(StandardAnalyzer):
-    """LatvianAnalyzer (Analysis/Lv/LatvianAnalyzer.cs:47 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Latvian) ->
-    LatvianStemFilter (the published Kreslins inventory, light form with
-    the 2-syllable guard — see analysis/latvian.py). Runs per UNIQUE
-    term at dictionary-encode time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .latvian import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .latvian import latvian_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([latvian_light_stem(t) for t in a.tokens], a.positions)
-
-
-class SoraniAnalyzer(StandardAnalyzer):
-    """SoraniAnalyzer (Analysis/Ckb/SoraniAnalyzer.cs chain):
-    StandardTokenizer -> SoraniNormalization (yeh/kaf unification, final
-    ae-vowel respelling, tatweel/harakat/ZWNJ removal) -> LowerCase ->
-    StopFilter(Sorani) -> SoraniStemFilter (the PUBLISHED Esmaili et al.
-    2013 suffix inventory — see analysis/sorani.py). Only Arabic-script
-    terms are rewritten. Runs per UNIQUE term at dictionary-encode time
-    (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .sorani import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .sorani import sorani_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([sorani_light_stem(t) for t in a.tokens], a.positions)
-
-
-class CatalanLightAnalyzer(StandardAnalyzer):
-    """CatalanAnalyzer (Analysis/Ca/CatalanAnalyzer.cs:121 chain):
-    StandardTokenizer -> Elision (split article tokens stopped — the
-    French divergence note) -> LowerCase -> StopFilter(Catalan) -> light
-    stem (UniNE-family ending strip + diacritic fold — see
-    analysis/catalan.py; the Snowball automaton is the documented
-    non-goal). Runs per UNIQUE term at dictionary-encode time (Arrow
-    fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .catalan import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .catalan import catalan_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([catalan_light_stem(t) for t in a.tokens], a.positions)
-
-
-class BasqueLightAnalyzer(StandardAnalyzer):
-    """BasqueAnalyzer (Analysis/Eu/BasqueAnalyzer.cs:40 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Basque) -> light
-    de-agglutination (determiner + case endings from the published
-    Snowball inventory — see analysis/basque.py). Runs per UNIQUE term
-    at dictionary-encode time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .basque import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .basque import basque_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([basque_light_stem(t) for t in a.tokens], a.positions)
-
-
-class ArmenianLightAnalyzer(StandardAnalyzer):
-    """ArmenianAnalyzer (Analysis/Hy/ArmenianAnalyzer.cs:40 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Armenian) -> light stem
-    (article/plural/case endings from the published Snowball inventory —
-    see analysis/armenian.py). Only Armenian-script terms are rewritten.
-    Runs per UNIQUE term at dictionary-encode time (Arrow fast path
-    stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .armenian import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .armenian import armenian_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([armenian_light_stem(t) for t in a.tokens], a.positions)
-
-
-class IrishLightAnalyzer(StandardAnalyzer):
-    """IrishAnalyzer (Analysis/Ga/IrishAnalyzer.cs:48 chain):
-    StandardTokenizer -> hyphenation/elision particles stopped ->
-    IrishLowerCase -> StopFilter(Irish) -> demutation + light stem
-    (eclipsis/lenition prefix removal + plural ending strip — see
-    analysis/irish.py; the Snowball automaton is the documented
-    non-goal). Runs per UNIQUE term at dictionary-encode time (Arrow
-    fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .irish import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .irish import irish_light_stem
-
-        a = super().analyze(text)
-        return Analyzed([irish_light_stem(t) for t in a.tokens], a.positions)
-
-
-class GalicianMinimalAnalyzer(StandardAnalyzer):
-    """GalicianAnalyzer, minimal variant (Analysis/Gl/GalicianAnalyzer.cs:40
-    chain with Gl/GalicianMinimalStemmer.cs:25): StandardTokenizer ->
-    LowerCase -> StopFilter(Galician) -> plural-only reduction (published
-    RSLP-for-Galician rules — see analysis/galician.py). Runs per UNIQUE
-    term at dictionary-encode time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .galician import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .galician import galician_minimal_stem
-
-        a = super().analyze(text)
-        return Analyzed(
-            [galician_minimal_stem(t) for t in a.tokens], a.positions
-        )
-
-
-class BrazilianLightAnalyzer(StandardAnalyzer):
-    """BrazilianAnalyzer (Analysis/Br/BrazilianAnalyzer.cs:43 chain):
-    StandardTokenizer -> LowerCase -> StopFilter(Brazilian) -> RSLP light
-    steps (plural -> adverb -> diminutive -> final vowel -> fold, from
-    the published Orengo & Huyck 2001 paper — see analysis/brazilian.py;
-    the derivational rule tables are the documented non-goal). Distinct
-    from the UniNE ``portuguese`` pack, as in the reference. Runs per
-    UNIQUE term at dictionary-encode time (Arrow fast path stays hot)."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .brazilian import stem_unique
-
-        return stem_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .brazilian import brazilian_light_stem
-
-        a = super().analyze(text)
-        return Analyzed(
-            [brazilian_light_stem(t) for t in a.tokens], a.positions
-        )
-
-
-class ASCIIFoldingAnalyzer(StandardAnalyzer):
+class ASCIIFoldingAnalyzer(TermFilterAnalyzer):
     """StandardTokenizer -> LowerCase -> StopFilter -> ASCIIFolding
     (Analysis/Miscellaneous/ASCIIFoldingFilter.cs): accented/decomposable
     tokens fold to their ASCII base forms ("café" -> "cafe", "naïve" ->
     "naive"), unmapped scripts pass through. Folding runs AFTER the stop
     filter (same slot as the Porter stemmer), so an accented stopword
     variant ("thé") is folded, not stop-filtered — a documented divergence
-    from reference chains that place the filter before StopFilter.
+    from reference chains that place the filter before StopFilter."""
 
-    Indexing stays on the Arrow fast path: the fold applies per UNIQUE
-    term at dictionary-encode time (term_filter_unique), so Python cost is
-    per vocabulary entry per batch — the EnglishAnalyzer pattern."""
-
-    def term_filter_unique(self, uniques: np.ndarray) -> np.ndarray:
-        from .folding import fold_unique
-
-        return fold_unique(uniques)
-
-    def analyze(self, text: str) -> Analyzed:
-        from .folding import fold
-
-        a = super().analyze(text)
-        return Analyzed([fold(t) for t in a.tokens], a.positions)
+    pack = "ascii_folding"
 
 
 class KeywordAnalyzer(StandardAnalyzer):
@@ -981,14 +391,7 @@ class StopAnalyzer(StandardAnalyzer):
 
 _SHIPPED_CHAINS = (
     StandardAnalyzer,
-    EnglishAnalyzer,
-    FrenchLightAnalyzer,
-    GermanLightAnalyzer,
-    SpanishLightAnalyzer,
-    ItalianLightAnalyzer,
-    PortugueseLightAnalyzer,
-    DutchSnowballAnalyzer,
-    ASCIIFoldingAnalyzer,
+    TermFilterAnalyzer,
     KeywordAnalyzer,
     WhitespaceAnalyzer,
     SimpleAnalyzer,
@@ -1003,7 +406,7 @@ def arrow_fast_path_for(analyzer: StandardAnalyzer) -> bool:
     semantics the re2 split cannot know about, so it drops to the generic
     row path, matching the pre-flag behavior for such subclasses).
     Overriding ``analyze()``/``term_filter_unique`` for a term filter
-    keeps the fast path — the EnglishAnalyzer language-pack pattern.
+    keeps the fast path — the TermFilterAnalyzer language-pack pattern.
     Fast-path chains ride the Arrow C++ kernel with the term filter
     applied at the dictionary-encode step; generic chains run their full
     ``analyze()`` per row, so encode_terms skips the term filter for those
@@ -1020,6 +423,58 @@ def arrow_fast_path_for(analyzer: StandardAnalyzer) -> bool:
 
 _DEFAULT = StandardAnalyzer()
 
+#: The term-filter language packs: chain name -> (pack module, its own
+#: stop-set constant, its term function). A pack module is imported only
+#: when its chain is built. With a stop-set constant, the chain stops that
+#: set whenever stop filtering is on; ``None`` (english, ascii_folding)
+#: stops the set it is given. To add a pack, write a module with a stop
+#: set and a ``str -> str`` term function and add its row here.
+LANGUAGE_PACKS: dict[str, tuple[str, str | None, str]] = {
+    "english": ("porter", None, "porter_stem"),
+    "ascii_folding": ("folding", None, "fold"),
+    "french": ("french", "FRENCH_STOP_WORDS", "french_light_stem"),
+    "german": ("german", "GERMAN_STOP_WORDS", "german_term"),
+    "spanish": ("spanish", "SPANISH_STOP_WORDS", "spanish_light_stem"),
+    "italian": ("italian", "ITALIAN_STOP_WORDS", "italian_light_stem"),
+    "portuguese": ("portuguese", "PORTUGUESE_STOP_WORDS", "portuguese_light_stem"),
+    "dutch": ("dutch", "DUTCH_STOP_WORDS", "dutch_stem"),
+    "russian": ("russian", "RUSSIAN_STOP_WORDS", "russian_light_stem"),
+    "swedish": ("swedish", "SWEDISH_STOP_WORDS", "swedish_light_stem"),
+    "arabic": ("arabic", "ARABIC_STOP_WORDS", "arabic_light_stem"),
+    "indonesian": ("indonesian", "INDONESIAN_STOP_WORDS", "indonesian_stem"),
+    "finnish": ("finnish", "FINNISH_STOP_WORDS", "finnish_light_stem"),
+    "hungarian": ("hungarian", "HUNGARIAN_STOP_WORDS", "hungarian_light_stem"),
+    "norwegian": ("norwegian", "NORWEGIAN_STOP_WORDS", "norwegian_light_stem"),
+    "danish": ("danish", "DANISH_STOP_WORDS", "danish_light_stem"),
+    "czech": ("czech", "CZECH_STOP_WORDS", "czech_light_stem"),
+    "bulgarian": ("bulgarian", "BULGARIAN_STOP_WORDS", "bulgarian_light_stem"),
+    "persian": ("persian", "PERSIAN_STOP_WORDS", "persian_normalize"),
+    "hindi": ("hindi", "HINDI_STOP_WORDS", "hindi_light_stem"),
+    "greek": ("greek", "GREEK_STOP_WORDS", "greek_light_stem"),
+    "turkish": ("turkish", "TURKISH_STOP_WORDS", "turkish_light_stem"),
+    "romanian": ("romanian", "ROMANIAN_STOP_WORDS", "romanian_light_stem"),
+    "latvian": ("latvian", "LATVIAN_STOP_WORDS", "latvian_light_stem"),
+    "sorani": ("sorani", "SORANI_STOP_WORDS", "sorani_light_stem"),
+    "catalan": ("catalan", "CATALAN_STOP_WORDS", "catalan_light_stem"),
+    "basque": ("basque", "BASQUE_STOP_WORDS", "basque_light_stem"),
+    "armenian": ("armenian", "ARMENIAN_STOP_WORDS", "armenian_light_stem"),
+    "irish": ("irish", "IRISH_STOP_WORDS", "irish_light_stem"),
+    "galician": ("galician", "GALICIAN_STOP_WORDS", "galician_minimal_stem"),
+    "brazilian": ("brazilian", "BRAZILIAN_STOP_WORDS", "brazilian_light_stem"),
+}
+
+
+def load_pack(name: str) -> tuple[Callable[[str], str], frozenset[str] | None]:
+    """(term function, own stop set or None) of a LANGUAGE_PACKS chain;
+    imports that pack's module only."""
+    module, stop_set, term = LANGUAGE_PACKS[name]
+    pack = importlib.import_module(f".{module}", __package__)
+    return getattr(pack, term), getattr(pack, stop_set) if stop_set else None
+
+
+#: the packs exported under their own class names
+_PACK_CLASSES = {c.pack: c for c in (EnglishAnalyzer, ASCIIFoldingAnalyzer)}
+
 
 def analyzer_for(
     name: str,
@@ -1033,161 +488,20 @@ def analyzer_for(
     with — the PerFieldAnalyzerWrapper consistency contract."""
     if name == "standard":
         return StandardAnalyzer(stop_words, max_token_length, ascii_only)
-    if name == "english":
-        return EnglishAnalyzer(stop_words, max_token_length, ascii_only)
-    if name == "french":
-        from .french import FRENCH_STOP_WORDS
-
-        # the stop_words argument is an on/off signal here: a build with
-        # stop_filter=True passes the English set, but a French chain stops
-        # FRENCH words (FrenchAnalyzer.cs:116 DEFAULT_STOP_SET)
-        sw = FRENCH_STOP_WORDS if stop_words else frozenset()
-        return FrenchLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "german":
-        from .german import GERMAN_STOP_WORDS
-
-        sw = GERMAN_STOP_WORDS if stop_words else frozenset()
-        return GermanLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "spanish":
-        from .spanish import SPANISH_STOP_WORDS
-
-        sw = SPANISH_STOP_WORDS if stop_words else frozenset()
-        return SpanishLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "italian":
-        from .italian import ITALIAN_STOP_WORDS
-
-        sw = ITALIAN_STOP_WORDS if stop_words else frozenset()
-        return ItalianLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "portuguese":
-        from .portuguese import PORTUGUESE_STOP_WORDS
-
-        sw = PORTUGUESE_STOP_WORDS if stop_words else frozenset()
-        return PortugueseLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "dutch":
-        from .dutch import DUTCH_STOP_WORDS
-
-        sw = DUTCH_STOP_WORDS if stop_words else frozenset()
-        return DutchSnowballAnalyzer(sw, max_token_length, ascii_only)
-    if name == "russian":
-        from .russian import RUSSIAN_STOP_WORDS
-
-        sw = RUSSIAN_STOP_WORDS if stop_words else frozenset()
-        return RussianLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "swedish":
-        from .swedish import SWEDISH_STOP_WORDS
-
-        sw = SWEDISH_STOP_WORDS if stop_words else frozenset()
-        return SwedishLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "arabic":
-        from .arabic import ARABIC_STOP_WORDS
-
-        sw = ARABIC_STOP_WORDS if stop_words else frozenset()
-        return ArabicLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "indonesian":
-        from .indonesian import INDONESIAN_STOP_WORDS
-
-        sw = INDONESIAN_STOP_WORDS if stop_words else frozenset()
-        return IndonesianAnalyzer(sw, max_token_length, ascii_only)
-    if name == "finnish":
-        from .finnish import FINNISH_STOP_WORDS
-
-        sw = FINNISH_STOP_WORDS if stop_words else frozenset()
-        return FinnishLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "hungarian":
-        from .hungarian import HUNGARIAN_STOP_WORDS
-
-        sw = HUNGARIAN_STOP_WORDS if stop_words else frozenset()
-        return HungarianLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "norwegian":
-        from .norwegian import NORWEGIAN_STOP_WORDS
-
-        sw = NORWEGIAN_STOP_WORDS if stop_words else frozenset()
-        return NorwegianLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "danish":
-        from .danish import DANISH_STOP_WORDS
-
-        sw = DANISH_STOP_WORDS if stop_words else frozenset()
-        return DanishLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "czech":
-        from .czech import CZECH_STOP_WORDS
-
-        sw = CZECH_STOP_WORDS if stop_words else frozenset()
-        return CzechLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "bulgarian":
-        from .bulgarian import BULGARIAN_STOP_WORDS
-
-        sw = BULGARIAN_STOP_WORDS if stop_words else frozenset()
-        return BulgarianLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "persian":
-        from .persian import PERSIAN_STOP_WORDS
-
-        sw = PERSIAN_STOP_WORDS if stop_words else frozenset()
-        return PersianAnalyzer(sw, max_token_length, ascii_only)
-    if name == "hindi":
-        from .hindi import HINDI_STOP_WORDS
-
-        sw = HINDI_STOP_WORDS if stop_words else frozenset()
-        return HindiAnalyzer(sw, max_token_length, ascii_only)
-    if name == "greek":
-        from .greek import GREEK_STOP_WORDS
-
-        sw = GREEK_STOP_WORDS if stop_words else frozenset()
-        return GreekLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "turkish":
-        from .turkish import TURKISH_STOP_WORDS
-
-        sw = TURKISH_STOP_WORDS if stop_words else frozenset()
-        return TurkishLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "romanian":
-        from .romanian import ROMANIAN_STOP_WORDS
-
-        sw = ROMANIAN_STOP_WORDS if stop_words else frozenset()
-        return RomanianLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "latvian":
-        from .latvian import LATVIAN_STOP_WORDS
-
-        sw = LATVIAN_STOP_WORDS if stop_words else frozenset()
-        return LatvianLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "sorani":
-        from .sorani import SORANI_STOP_WORDS
-
-        sw = SORANI_STOP_WORDS if stop_words else frozenset()
-        return SoraniAnalyzer(sw, max_token_length, ascii_only)
+    if name in LANGUAGE_PACKS:
+        term, own_stop = load_pack(name)
+        if own_stop is not None:
+            # the stop_words argument is an on/off signal here: a build with
+            # stop_filter=True passes the English set, but a French chain
+            # stops FRENCH words (FrenchAnalyzer.cs:116 DEFAULT_STOP_SET)
+            stop_words = own_stop if stop_words else frozenset()
+        cls = _PACK_CLASSES.get(name, TermFilterAnalyzer)
+        return cls(stop_words, max_token_length, ascii_only, term=term)
     if name == "cjk":
         from .cjk import CJK_STOP_WORDS, CJKAnalyzer
 
         sw = CJK_STOP_WORDS if stop_words else frozenset()
         return CJKAnalyzer(sw, max_token_length, ascii_only)
-    if name == "catalan":
-        from .catalan import CATALAN_STOP_WORDS
-
-        sw = CATALAN_STOP_WORDS if stop_words else frozenset()
-        return CatalanLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "basque":
-        from .basque import BASQUE_STOP_WORDS
-
-        sw = BASQUE_STOP_WORDS if stop_words else frozenset()
-        return BasqueLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "armenian":
-        from .armenian import ARMENIAN_STOP_WORDS
-
-        sw = ARMENIAN_STOP_WORDS if stop_words else frozenset()
-        return ArmenianLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "irish":
-        from .irish import IRISH_STOP_WORDS
-
-        sw = IRISH_STOP_WORDS if stop_words else frozenset()
-        return IrishLightAnalyzer(sw, max_token_length, ascii_only)
-    if name == "galician":
-        from .galician import GALICIAN_STOP_WORDS
-
-        sw = GALICIAN_STOP_WORDS if stop_words else frozenset()
-        return GalicianMinimalAnalyzer(sw, max_token_length, ascii_only)
-    if name == "brazilian":
-        from .brazilian import BRAZILIAN_STOP_WORDS
-
-        sw = BRAZILIAN_STOP_WORDS if stop_words else frozenset()
-        return BrazilianLightAnalyzer(sw, max_token_length, ascii_only)
     if name == "thai":
         from .thai import THAI_STOP_WORDS, ThaiAnalyzer
 
@@ -1229,8 +543,6 @@ def analyzer_for(
         return SynonymAnalyzer(
             name[len("synonyms:"):], stop_words, max_token_length, ascii_only
         )
-    if name == "ascii_folding":
-        return ASCIIFoldingAnalyzer(stop_words, max_token_length, ascii_only)
     if name == "simple":
         return SimpleAnalyzer(max_token_length)
     if name == "stop":

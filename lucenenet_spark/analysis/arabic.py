@@ -31,7 +31,6 @@ cost, never per-token cost. ':'-namespaced field postings pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Arabic stop list shipped with the reference
 # (Analysis/Ar/ArabicAnalyzer.cs DEFAULT_STOPWORD_FILE; the long
@@ -89,12 +88,3 @@ def arabic_light_stem(term: str) -> str:
         if s.endswith(suf) and len(s) - len(suf) >= 2:
             s = s[: -len(suf)]
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else arabic_light_stem(t)
-    return out

@@ -21,7 +21,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Armenian stop list shipped with the
 # reference (Analysis/Hy/ArmenianAnalyzer.cs DEFAULT_STOPWORD_FILE; tail
@@ -64,12 +63,3 @@ def armenian_light_stem(term: str) -> str:
         if term.endswith(suf) and len(term) - len(suf) >= 3:
             return term[: -len(suf)]
     return term
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else armenian_light_stem(t)
-    return out

@@ -33,7 +33,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Brazilian stop list shipped with the
 # reference (Analysis/Br/BrazilianAnalyzer.cs BRAZILIAN_STOP_WORDS;
@@ -89,12 +88,3 @@ def brazilian_light_stem(term: str) -> str:
     if len(s) >= 4 and s[-1] in "aeo":
         s = s[:-1]
     return s.translate(_FOLD)
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else brazilian_light_stem(t)
-    return out

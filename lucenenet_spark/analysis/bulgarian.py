@@ -32,7 +32,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Bulgarian stop list shipped with the
 # reference (Analysis/Bg/BulgarianAnalyzer.cs DEFAULT_STOPWORD_FILE;
@@ -98,12 +97,3 @@ def bulgarian_light_stem(term: str) -> str:
     if len(s) >= 4 and s[-1] in "аяое":
         s = s[:-1]
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else bulgarian_light_stem(t)
-    return out

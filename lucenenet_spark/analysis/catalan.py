@@ -31,7 +31,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Catalan stop list shipped with the
 # reference (Analysis/Ca/CatalanAnalyzer.cs DEFAULT_STOPWORD_FILE; tail
@@ -73,12 +72,3 @@ def catalan_light_stem(term: str) -> str:
                 s = s[: -len(suf)]
                 break
     return s.translate(_FOLD)
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else catalan_light_stem(t)
-    return out

@@ -31,7 +31,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Czech stop list shipped with the reference
 # (Analysis/Cz/CzechAnalyzer.cs DEFAULT_STOPWORD_FILE; tail omitted —
@@ -82,12 +81,3 @@ def czech_light_stem(term: str) -> str:
     if s and s[-1] in _PALATAL:
         s = s[:-1] + _PALATAL[s[-1]]
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else czech_light_stem(t)
-    return out

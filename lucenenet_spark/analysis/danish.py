@@ -34,7 +34,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Snowball Danish stop list
 # (DanishAnalyzer.cs:52 loads snowball danish_stop.txt; tail omitted —
@@ -78,12 +77,3 @@ def danish_light_stem(term: str) -> str:
     if len(s) >= 4 and s[-1] == s[-2] and s[-1] in _CONSONANTS:
         s = s[:-1]
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else danish_light_stem(t)
-    return out

@@ -9,6 +9,11 @@ description, not from any implementation; behavior is pinned by the
 golden suite in tests/test_dutch.py against the examples the published
 spec defines.
 
+Chain (Analysis/Nl/DutchAnalyzer.cs:47): StandardTokenizer -> LowerCase
+-> StopFilter(Dutch) -> Snowball Dutch stemmer. The reference's
+stem-override dictionary (DutchAnalyzer stemdict: the fiets/ei
+exceptions) is omitted — documented divergence.
+
 Algorithm summary (vowels = a e i o u y è):
 
 - preprocess: fold umlauted/acute vowels to their base; mark consonantal
@@ -34,7 +39,6 @@ Vectorization contract: per UNIQUE term at dictionary-encode time
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Snowball Dutch stop list (DutchAnalyzer.cs:58
 # loads the full snowball dutch_stop.txt; conjugated zijn/hebben/worden
@@ -172,12 +176,3 @@ def dutch_stem(term: str) -> str:
             s = s[:-2] + s[-1]
 
     return s.lower()
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else dutch_stem(t)
-    return out

@@ -30,7 +30,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Snowball Finnish stop list (the reference
 # loads snowball finnish_stop.txt at FinnishAnalyzer.cs:52; the long
@@ -87,12 +86,3 @@ def finnish_light_stem(term: str) -> str:
     if len(s) >= 4 and s[-1] == s[-2] and s[-1] in _VOWELS:
         s = s[:-1]
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else finnish_light_stem(t)
-    return out

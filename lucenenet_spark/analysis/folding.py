@@ -22,7 +22,6 @@ from __future__ import annotations
 import unicodedata
 from functools import lru_cache
 
-import numpy as np
 
 # Folds in the reference's table that NFKD cannot derive (these letters
 # have no canonical/compatibility decomposition). Lowercase only: the
@@ -66,12 +65,3 @@ def fold(term: str) -> str:
     if term.isascii():
         return term
     return "".join(_fold_char(c) for c in term)
-
-
-def fold_unique(uniques: np.ndarray) -> np.ndarray:
-    """Vectorized-over-vocabulary fold for term_filter_unique: applies per
-    UNIQUE term; keyword-namespaced terms (containing ':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if (":" in t or t.isascii()) else fold(t)
-    return out

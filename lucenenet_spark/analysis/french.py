@@ -10,6 +10,13 @@ Analysis/Fr/FrenchLightStemmer.cs:69-350). Original implementation from
 the algorithm description; behavior-pinned by the golden suite in
 tests/test_french.py.
 
+Chain (Analysis/Fr/FrenchAnalyzer.cs:187-212): StandardTokenizer ->
+Elision -> LowerCase -> StopFilter(French) -> FrenchLightStemFilter.
+Divergence note: the reference's ElisionFilter strips "l'" from "l'avion"
+inside one UAX#29 token; our tokenizer already splits on the apostrophe,
+so elision is realized by including the article tokens (l, d, qu, ...)
+in the stop set (FRENCH_STOP_WORDS).
+
 The algorithm: strip plural/gender suffixes (x, s, aux->al), rewrite a
 fixed table of derivational suffixes to canonical verb/noun bases
 (issement/issant -> ir, ateur/atrice -> er, cateur -> quer, ...), then a
@@ -27,7 +34,6 @@ encode-time hook applies chains to text-field suffixes itself).
 
 from __future__ import annotations
 
-import numpy as np
 
 # The reference FrenchAnalyzer stop list (FrenchAnalyzer.cs:62-85 —
 # public Snowball-project stopword data), plus the elision articles
@@ -212,12 +218,3 @@ def french_light_stem(term: str) -> str:  # noqa: PLR0911, PLR0912
     if len(s) > 8 and _ends(s, "ition"):
         return _norm(s[:-5])
     return _norm(s)
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else french_light_stem(t)
-    return out

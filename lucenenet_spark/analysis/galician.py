@@ -22,7 +22,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Galician stop list shipped with the
 # reference (Analysis/Gl/GalicianAnalyzer.cs DEFAULT_STOPWORD_FILE;
@@ -62,12 +61,3 @@ def galician_minimal_stem(term: str) -> str:
         if term.endswith(suf) and len(term) - len(suf) + len(rep) >= 3:
             return term[: -len(suf)] + rep
     return term
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else galician_minimal_stem(t)
-    return out

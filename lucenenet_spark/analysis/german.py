@@ -22,7 +22,6 @@ time (term_filter_unique) — vocabulary cost, never per-token cost.
 
 from __future__ import annotations
 
-import numpy as np
 
 # GermanAnalyzer.cs:62-75 (public Snowball-project stopword data)
 GERMAN_STOP_WORDS: frozenset[str] = frozenset(
@@ -113,12 +112,3 @@ def german_light_stem(term: str) -> str:
 def german_term(term: str) -> str:
     """The full post-stop filter slot: normalization then light stem."""
     return german_light_stem(german_normalize(term))
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: normalize+stem per UNIQUE vocabulary
-    entry; namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else german_term(t)
-    return out

@@ -11,6 +11,11 @@ full Ntais automaton. Only Greek-script terms are rewritten. Original
 implementation from the published descriptions; behavior is pinned by
 the golden suite in tests/test_greek.py.
 
+Stop matching note: entries are stored NORMALIZED and the stop filter
+runs before the term function here, so Greek stopwords written WITH
+tonos in text are normalized by the stem instead of dropped — the suite
+pins the normalized-entry behavior.
+
 Steps:
 
 1. normalization (GreekLowerCaseFilter.cs): accented vowels lose tonos/
@@ -27,7 +32,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Greek stop list shipped with the reference
 # (Analysis/El/GreekAnalyzer.cs DEFAULT_STOPWORD_FILE; entries stored
@@ -87,12 +91,3 @@ def greek_light_stem(term: str) -> str:
         if s.endswith(suf) and len(s) - n >= 3:
             return s[:-n]
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: normalize+stem per UNIQUE vocabulary
-    entry; namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else greek_light_stem(t)
-    return out

@@ -35,7 +35,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Snowball Hungarian stop list
 # (HungarianAnalyzer.cs:52 loads snowball hungarian_stop.txt; the long
@@ -81,12 +80,3 @@ def hungarian_light_stem(term: str) -> str:
             s = s[:-n]
             break
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else hungarian_light_stem(t)
-    return out

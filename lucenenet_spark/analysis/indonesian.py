@@ -32,7 +32,6 @@ cost, never per-token cost. ':'-namespaced field postings pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Tala/reference Indonesian stop list
 # (Analysis/Id/IndonesianAnalyzer.cs DEFAULT_STOPWORD_FILE; the long tail
@@ -83,12 +82,3 @@ def indonesian_stem(term: str) -> str:
             s = s[: -len(suf)]
             break
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else indonesian_stem(t)
-    return out

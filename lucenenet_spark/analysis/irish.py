@@ -29,7 +29,6 @@ per-token cost. ':'-namespaced field postings pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Irish stop list shipped with the reference
 # (Analysis/Ga/IrishAnalyzer.cs DEFAULT_STOPWORD_FILE; tail omitted —
@@ -90,12 +89,3 @@ def irish_light_stem(term: str) -> str:
         if s.endswith(suf) and len(s) - len(suf) >= 3:
             return s[: -len(suf)]
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else irish_light_stem(t)
-    return out

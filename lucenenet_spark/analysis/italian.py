@@ -9,6 +9,11 @@ Analysis/It/ItalianLightStemmer.cs:63-110). Original implementation from
 the algorithm description; behavior-pinned by the golden suite in
 tests/test_italian.py.
 
+Chain (Analysis/It/ItalianAnalyzer.cs:130-155): StandardTokenizer ->
+Elision -> LowerCase -> StopFilter(Italian) -> ItalianLightStemFilter.
+Elision is realized by stopping the split article tokens (the French
+pack's divergence note).
+
 The algorithm (words shorter than 6 letters pass through unchanged):
 
 1. fold accented vowels to their ASCII base;
@@ -26,7 +31,6 @@ postings and pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Snowball Italian stop list (the reference
 # loads the full snowball italian_stop.txt at ItalianAnalyzer.cs:62; the
@@ -73,12 +77,3 @@ def italian_light_stem(term: str) -> str:
     if last in ("a", "o"):
         return s[:-2] if prev == "h" else s[:-1]
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else italian_light_stem(t)
-    return out

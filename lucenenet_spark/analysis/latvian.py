@@ -10,6 +10,9 @@ implementation keeps that vowel-count guard. Original implementation
 from the published inventory; behavior is pinned by the golden suite in
 tests/test_latvian.py.
 
+Chain (Analysis/Lv/LatvianAnalyzer.cs:47): StandardTokenizer ->
+LowerCase -> StopFilter(Latvian) -> LatvianStemFilter.
+
 Affix inventory (longest first; the palatalization un-doubling of the
 full algorithm — ``ņ``->``n``, ``ļ``->``l`` at a stripped boundary — is
 applied as the final normalization step):
@@ -25,7 +28,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Latvian stop list shipped with the
 # reference (Analysis/Lv/LatvianAnalyzer.cs DEFAULT_STOPWORD_FILE; tail
@@ -75,12 +77,3 @@ def latvian_light_stem(term: str) -> str:
     if s and s[-1] in _PALATAL:
         s = s[:-1] + _PALATAL[s[-1]]
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else latvian_light_stem(t)
-    return out

@@ -27,7 +27,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Snowball Norwegian stop list
 # (NorwegianAnalyzer.cs:52 loads snowball norwegian_stop.txt; tail
@@ -69,12 +68,3 @@ def norwegian_light_stem(term: str) -> str:
             s = s[:-n]
             break
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else norwegian_light_stem(t)
-    return out

@@ -24,6 +24,10 @@ Only Arabic-script terms are touched; Latin tokens in a mixed corpus
 pass through. Behavior pinned by the golden suite in
 tests/test_persian.py.
 
+Stop matching note: the stop list is matched AFTER normalization here
+(entries are stored normalized), whereas the reference normalizes before
+its stop filter too — same observable behavior.
+
 Vectorization contract: normalization applies per UNIQUE term at
 dictionary-encode time (StandardAnalyzer.term_filter_unique) —
 vocabulary cost, never per-token cost. ':'-namespaced field postings
@@ -32,7 +36,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Persian stop list shipped with the
 # reference (Analysis/Fa/PersianAnalyzer.cs DEFAULT_STOPWORD_FILE; tail
@@ -83,12 +86,3 @@ def persian_normalize(term: str) -> str:
     if not _is_arabic_script(term):
         return term
     return term.translate(_TRANS)
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: normalize per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else persian_normalize(t)
-    return out

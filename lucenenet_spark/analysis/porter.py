@@ -4,16 +4,16 @@ PorterStemFilter wraps the same algorithm,
 src/Lucene.Net.Analysis.Common/Analysis/En/PorterStemFilter.cs +
 PorterStemmer.cs).
 
-Written from the published algorithm description. The batch entry point
-stems only the UNIQUE terms of a dictionary-encoded batch
-(:func:`stem_unique`), so the per-word Python cost is amortized over term
-frequency — the indexing hot path stays on the Arrow kernel and pays
-Python only per vocabulary entry per segment.
+Written from the published algorithm description. :func:`porter_stem` is
+the ``english`` chain's term function, applied per UNIQUE term of a
+dictionary-encoded batch (TermFilterAnalyzer.term_filter_unique), so the
+per-word Python cost is amortized over term frequency — the indexing hot
+path stays on the Arrow kernel and pays Python only per vocabulary entry
+per segment.
 """
 
 from __future__ import annotations
 
-import numpy as np
 
 _VOWELS = frozenset("aeiou")
 
@@ -85,7 +85,10 @@ _STEP4 = [
 
 
 def porter_stem(w: str) -> str:
-    if len(w) <= 2:
+    """Stem one lowercase English word. Other terms pass through
+    unchanged: the stemmer is defined over lowercase English letters, and
+    digit-bearing or non-Latin tokens must never be rewritten."""
+    if len(w) <= 2 or not (w.isascii() and w.isalpha()):
         return w
 
     # step 1a
@@ -159,17 +162,3 @@ def porter_stem(w: str) -> str:
         w = w[:-1]
 
     return w
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """Stem a UNIQUE-terms array (object dtype). Non-ASCII-alpha terms pass
-    through unchanged — the stemmer is defined over lowercase English
-    letters, and namespaced keyword terms ("<field>:<value>") or
-    digit-bearing tokens must never be rewritten."""
-    return np.array(
-        [
-            porter_stem(t) if t.isascii() and t.isalpha() else t
-            for t in uniques
-        ],
-        dtype=object,
-    )

@@ -10,6 +10,9 @@ PortugueseLightStemFilter; stemmer spec Pt/PortugueseLightStemmer.cs).
 Original implementation from the published rule tables; behavior is pinned
 by the golden suite in tests/test_portuguese.py.
 
+Chain (Analysis/Pt/PortugueseAnalyzer.cs:119-133): StandardTokenizer ->
+LowerCase -> StopFilter(Portuguese) -> PortugueseLightStemFilter.
+
 Steps (words shorter than 4 letters pass through unchanged):
 
 1. plural reduction (Orengo Table 1 / PortugueseLightStemmer removeSuffix):
@@ -35,7 +38,6 @@ cost, never per-token cost. ':'-namespaced field postings pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Snowball Portuguese stop list (the reference
 # loads snowball portuguese_stop.txt at PortugueseAnalyzer.cs:52; the
@@ -111,12 +113,3 @@ def portuguese_light_stem(term: str) -> str:
     if len(s) > 4 and s[-1] in "aeo":
         s = s[:-1]
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else portuguese_light_stem(t)
-    return out

@@ -29,7 +29,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Snowball Romanian stop list
 # (RomanianAnalyzer.cs:52; tail omitted — the documented divergence
@@ -71,12 +70,3 @@ def romanian_light_stem(term: str) -> str:
             s = s[:-n]
             break
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else romanian_light_stem(t)
-    return out

@@ -29,7 +29,6 @@ cost, never per-token cost. ':'-namespaced field postings pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Snowball Russian stop list (the reference
 # loads snowball russian_stop.txt at RussianAnalyzer.cs:61; the long tail
@@ -92,12 +91,3 @@ def russian_light_stem(term: str) -> str:
     if s.endswith("нн"):
         s = s[:-1]
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else russian_light_stem(t)
-    return out

@@ -34,7 +34,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Sorani stop list shipped with the reference
 # (Analysis/Ckb/SoraniAnalyzer.cs DEFAULT_STOPWORD_FILE; tail omitted —
@@ -99,12 +98,3 @@ def sorani_light_stem(term: str) -> str:
         if s.endswith(suf) and len(s) - len(suf) >= 3:
             return s[: -len(suf)]
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: normalize+stem per UNIQUE vocabulary
-    entry; namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else sorani_light_stem(t)
-    return out

@@ -10,6 +10,9 @@ Analysis/Es/SpanishLightStemmer.cs:63-100). Original implementation from
 the algorithm description; behavior-pinned by the golden suite in
 tests/test_spanish.py.
 
+Chain (Analysis/Es/SpanishAnalyzer.cs:120-140): StandardTokenizer ->
+LowerCase -> StopFilter(Spanish) -> SpanishLightStemFilter.
+
 The algorithm (words shorter than 5 letters pass through unchanged):
 
 1. fold accented vowels to their ASCII base (a-acute -> a, ...);
@@ -27,7 +30,6 @@ encode-time hook applies chains to text-field suffixes itself).
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Snowball Spanish stop list (the reference
 # loads the full snowball spanish_stop.txt at SpanishAnalyzer.cs:57; that
@@ -75,12 +77,3 @@ def spanish_light_stem(term: str) -> str:
         if s[-2] in ("o", "a", "e"):
             return s[:-2]  # plain -os/-as/-es plural
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else spanish_light_stem(t)
-    return out

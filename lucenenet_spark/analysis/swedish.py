@@ -27,7 +27,6 @@ cost, never per-token cost. ':'-namespaced field postings pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Snowball Swedish stop list (the reference
 # loads snowball swedish_stop.txt at SwedishAnalyzer.cs:52; the long
@@ -72,12 +71,3 @@ def swedish_light_stem(term: str) -> str:
             s = s[:-n]
             break
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: stem per UNIQUE vocabulary entry;
-    namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else swedish_light_stem(t)
-    return out

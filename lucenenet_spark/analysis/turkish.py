@@ -35,7 +35,6 @@ pass through.
 
 from __future__ import annotations
 
-import numpy as np
 
 # High-frequency core of the Turkish stop list shipped with the
 # reference (Analysis/Tr/TurkishAnalyzer.cs DEFAULT_STOPWORD_FILE; tail
@@ -86,12 +85,3 @@ def turkish_light_stem(term: str) -> str:
             s = s[: -len(suf)]
             break
     return s
-
-
-def stem_unique(uniques: np.ndarray) -> np.ndarray:
-    """term_filter_unique hook: normalize+stem per UNIQUE vocabulary
-    entry; namespaced field postings (':') pass through."""
-    out = np.empty(len(uniques), dtype=object)
-    for i, t in enumerate(uniques):
-        out[i] = t if ":" in t else turkish_light_stem(t)
-    return out

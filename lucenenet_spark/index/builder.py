@@ -88,6 +88,14 @@ POSTINGS_SCHEMA = (
 # file one row group that each seek read whole)
 SEEK_ROW_GROUP_BYTES = 1 << 20
 
+# Entries per posting block (Lucene41PostingsFormat.cs:375 BLOCK_SIZE)
+BLOCK_SIZE = 128
+# Merge-stage scan batch (rows per columnar reader batch while reading the
+# list-heavy partials): small enough that a batch of stopword rows (arrays
+# up to flush_docs entries) fits the heap, large enough to amortize
+# JVM->Arrow dispatch. 256 measured safe at flush_docs=50k.
+MERGE_READER_BATCH_SIZE = 256
+
 DOCMAP_SCHEMA = (
     "docid long, url string, doclen int, norm_byte int, text_bytes long, pid int"
 )
@@ -181,16 +189,20 @@ class IndexBuilder:
         # query side's analyze_query for every analyzed field. Keyword
         # postings are exempt (their values must stay verbatim) because
         # only text_fields prefixes are suffix-filtered.
-        if analyzer is None:
-            from ..analysis.analyzer import ENGLISH_STOP_WORDS, analyzer_for
+        self.analyzer = analyzer if analyzer is not None else self._chain(self.config.analyzer)
 
-            analyzer = analyzer_for(
-                self.config.analyzer,
-                stop_words=ENGLISH_STOP_WORDS if self.config.stop_filter else frozenset(),
-                max_token_length=self.config.max_token_length,
-                ascii_only=self.config.ascii_tokens,
-            )
-        self.analyzer = analyzer
+    def _chain(self, name: str) -> StandardAnalyzer:
+        """The analysis chain ``name`` with the config's stop filter,
+        token-length cap and tokenizer."""
+        from ..analysis.analyzer import ENGLISH_STOP_WORDS, analyzer_for
+
+        cfg = self.config
+        return analyzer_for(
+            name,
+            stop_words=ENGLISH_STOP_WORDS if cfg.stop_filter else frozenset(),
+            max_token_length=cfg.max_token_length,
+            ascii_only=cfg.ascii_tokens,
+        )
 
     def _fp(self) -> str:
         """Stage-commit fingerprint: config identity + (optional) input
@@ -331,23 +343,10 @@ class IndexBuilder:
         if cfg.lang_chains:
             if lang_field not in pages.columns:
                 raise ValueError(f"lang_field {lang_field!r} not in input columns")
-            from ..analysis.analyzer import ENGLISH_STOP_WORDS, analyzer_for
-
             # per-language chains constructed driver-side (validates the
             # names) and shipped in the closure like the default analyzer
             route_analyzers = tuple(
-                (
-                    lang,
-                    analyzer_for(
-                        name,
-                        stop_words=(
-                            ENGLISH_STOP_WORDS if cfg.stop_filter else frozenset()
-                        ),
-                        max_token_length=cfg.max_token_length,
-                        ascii_only=cfg.ascii_tokens,
-                    ),
-                )
-                for lang, name in cfg.lang_chains
+                (lang, self._chain(name)) for lang, name in cfg.lang_chains
             )
         dv_ddl = self._dv_ddl(pages)
         dv_names = ddl_names(dv_ddl)
@@ -717,7 +716,6 @@ class IndexBuilder:
         stats = self.storage.read_stage(self.spark, "stats").collect()[0]
         avgdl = np.float32(stats["avgdl"])
         cache = BM25(cfg.k1, cfg.b).norm_cache(avgdl)
-        block_size = cfg.block_size
         index_positions = cfg.index_positions
 
         def merge_arrow(batches):
@@ -768,13 +766,13 @@ class IndexBuilder:
                 group_entry_counts = np.diff(np.append(group_first_entry, n_entries))
                 # within-group entry rank -> 128-entry block boundaries
                 rank = np.arange(n_entries) - np.repeat(group_first_entry, group_entry_counts)
-                block_starts = np.flatnonzero((rank % block_size) == 0)
+                block_starts = np.flatnonzero((rank % BLOCK_SIZE) == 0)
                 block_ends = np.append(block_starts[1:], n_entries)
                 entry_group = np.repeat(
                     np.arange(len(group_first_row)), group_entry_counts
                 )
                 block_group = entry_group[block_starts]
-                block_id = rank[block_starts] // block_size
+                block_id = rank[block_starts] // BLOCK_SIZE
 
                 # per-block stats (vectorized)
                 first_docid = docids[block_starts]
@@ -899,7 +897,7 @@ class IndexBuilder:
         #   demand GBs of contiguous heap per task on stopword rows.
         scoped = {
             "spark.sql.adaptive.enabled": "false",
-            "spark.sql.parquet.columnarReaderBatchSize": str(cfg.merge_reader_batch_size),
+            "spark.sql.parquet.columnarReaderBatchSize": str(MERGE_READER_BATCH_SIZE),
         }
         old = {k: self.spark.conf.get(k, None) for k in scoped}
         for k, v in scoped.items():

@@ -1,8 +1,7 @@
 """Index build configuration.
 
 The knobs mirror the reference's defaults where a counterpart exists
-(BASELINE.md table): postings block size 128
-(Lucene41PostingsFormat.cs:375), BM25 k1=1.2 b=0.75
+(BASELINE.md table): BM25 k1=1.2 b=0.75
 (BM25Similarity.cs:59-63). The knobs without a counterpart encode the
 Spark-first re-design:
 
@@ -33,7 +32,6 @@ from dataclasses import asdict, dataclass, field
 @dataclass(frozen=True)
 class IndexConfig:
     num_partitions: int = 32
-    block_size: int = 128
     bucket_width: int = 4
     flush_docs: int = 50_000
     index_positions: bool = True
@@ -48,11 +46,6 @@ class IndexConfig:
     # corpus; term-range partitioning keeps the output term-sorted at any
     # task count, and bucket salting already bounds any single GROUP.
     merge_partitions: int | None = None
-    # merge-stage scan batch (rows per columnar reader batch while reading
-    # the list-heavy partials): small enough that a batch of stopword rows
-    # (arrays up to flush_docs entries) fits the heap, large enough to
-    # amortize JVM->Arrow dispatch. 256 measured safe at flush_docs=50k.
-    merge_reader_batch_size: int = 256
     # apply the reference's 33-word English StopFilter (StopAnalyzer.cs:52-58).
     # False -> keyword-style chain (tokenize+lowercase only), used when the
     # index must agree with an external SQL oracle that has no stop list.
@@ -144,8 +137,13 @@ class IndexConfig:
         """Stable hash of the config — stamped into every stage's commit
         marker so a resume never mixes artifacts from different configs.
         Fields ADDED after format_version 3 are dropped at their default so
-        indexes committed before the field existed keep their identity."""
+        indexes committed before the field existed keep their identity; the
+        block size and merge batch, fields once, are now builder constants
+        and stay hashed under their old names."""
+        from .builder import BLOCK_SIZE, MERGE_READER_BATCH_SIZE
+
         d = asdict(self)
+        d.update(block_size=BLOCK_SIZE, merge_reader_batch_size=MERGE_READER_BATCH_SIZE)
         if d.get("sort_field") is None:
             d.pop("sort_field", None)
         if not d.get("text_fields"):

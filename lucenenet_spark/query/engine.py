@@ -61,7 +61,13 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.builder import DOCMAP_SCHEMA, POSTINGS_SCHEMA, STATS_SCHEMA, TERMSTATS_SCHEMA
+from ..index.builder import (
+    BLOCK_SIZE,
+    DOCMAP_SCHEMA,
+    POSTINGS_SCHEMA,
+    STATS_SCHEMA,
+    TERMSTATS_SCHEMA,
+)
 from ..index.storage import IndexStorage, arrow_schema
 from ..scoring.bm25 import BM25
 from .ast import (
@@ -589,11 +595,6 @@ class Searcher:
         self.has_positions = all(
             st.commit_meta("postings").get("index_positions", True) for st in stores
         )
-        # query-side analysis chain == the chain the index was built with
-        # (recorded in the stats meta; default chain for older indexes)
-        from ..analysis import ENGLISH_STOP_WORDS
-        from ..analysis.analyzer import analyzer_for
-
         # index-time sort (IndexConfig.sort_field): docid order == sort-key
         # order, recorded in the stats meta config. Only honored when the
         # composite is the sorted base alone — a delta generation appends
@@ -615,19 +616,13 @@ class Searcher:
                 self._field_sum_ttf[fname] = (
                     self._field_sum_ttf.get(fname, 0) + int(v["sum_ttf"])
                 )
-        am = stores[0].commit_meta("stats").get("analyzer") or {}
-        self.analyzer = analyzer_for(
-            am.get("name", "standard"),
-            stop_words=(
-                ENGLISH_STOP_WORDS if am.get("stop_filter", True) else frozenset()
-            ),
-            max_token_length=am.get("max_token_length", 255),
-            ascii_only=am.get("ascii_tokens", False),
-        )
+        # query-side analysis chain == the chain the index was built with
+        # (recorded in the stats meta; default chain for older indexes)
+        self._analyzer_meta = stores[0].commit_meta("stats").get("analyzer") or {}
+        self.analyzer = self._chain(self._analyzer_meta.get("name", "standard"))
         #: lang code -> chain name for lang-routed indexes (the build's
         #: IndexConfig.lang_chains); analyzer_for_lang picks the chain
-        self.lang_routes: dict[str, str] = dict(am.get("lang_routes") or {})
-        self._analyzer_meta = am
+        self.lang_routes: dict[str, str] = dict(self._analyzer_meta.get("lang_routes") or {})
         # avgdl over the composite, float32 exactly as BM25Similarity.cs:91-102
         self.avgdl = np.float32(sum_ttf / float(maxdoc)) if maxdoc and sum_ttf > 0 else np.float32(1.0)
         # double-precision avgdl for exact_int mode (no float32 rounding)
@@ -712,11 +707,14 @@ class Searcher:
         language must be analyzed with the SAME chain the build used for
         them — the per-document PerFieldAnalyzerWrapper contract. Unrouted
         languages use the index's default chain."""
+        name = self.lang_routes.get(lang)
+        return self.analyzer if name is None else self._chain(name)
+
+    def _chain(self, name: str):
+        """The analysis chain ``name`` with the stop filter, token-length
+        cap and tokenizer the index was built with (stats commit meta)."""
         from ..analysis.analyzer import ENGLISH_STOP_WORDS, analyzer_for
 
-        name = self.lang_routes.get(lang)
-        if name is None:
-            return self.analyzer
         am = self._analyzer_meta
         return analyzer_for(
             name,
@@ -1679,7 +1677,7 @@ class Searcher:
         take the k-th best partial score. Partial sums are LOWER bounds of
         true scores, so theta is achievable and pruning against it is safe.
         Everything collected is O(k) rows."""
-        m = max(1, -(-k // 128))
+        m = max(1, -(-k // BLOCK_SIZE))
         scored = []
         for t in terms:
             st = stats.get(t)
@@ -2427,9 +2425,7 @@ class Searcher:
         as a nested Explanation dict {value, description, details}. The
         docid-targeted posting lookup rides the block metadata: term
         equality + first/last docid range both push into the Parquet scan."""
-        if self.tombstones is not None and self.tombstones.filter(
-            F.col("docid") == int(docid)
-        ).count():
+        if int(docid) in self._dead:
             return {"value": 0.0, "description": f"doc {docid} is deleted", "details": []}
         q = rewrite(q)
         ex = self._explain(q, int(docid), self._query_stats(q))

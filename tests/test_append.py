@@ -77,12 +77,13 @@ def test_appended_docs_searchable(composite):
     assert hits > 0
 
 
-def test_wand_disabled_on_composite(composite):
+def test_wand_disabled_on_composite(composite, wand_runs):
     searcher, _ = composite
     assert searcher._wand_shape(TermQuery("data")) is None
     # but wand=True must still return correct (unpruned) results
     a = searcher.search(TermQuery("data"), 5).collect()
     b = searcher.search(TermQuery("data"), 5, wand=True).collect()
+    assert wand_runs == []
     assert [(r["docid"], r["score"]) for r in a] == [(r["docid"], r["score"]) for r in b]
 
 
@@ -100,7 +101,7 @@ def test_uncommitted_delta_ignored(spark, tmp_path_factory):
     shutil.rmtree(os.path.join(out, "deltas"))
 
 
-def test_compaction_preserves_results_and_restores_wand(spark, tmp_path_factory):
+def test_compaction_preserves_results_and_restores_wand(spark, tmp_path_factory, wand_runs):
     from pyspark.sql import functions as F
 
     from lucenenet_spark.index.builder import compact_index
@@ -132,6 +133,7 @@ def test_compaction_preserves_results_and_restores_wand(spark, tmp_path_factory)
     assert after._wand_shape(TermQuery("data")) == ["data"]
     a = after.search(TermQuery("data"), 5).collect()
     b = after.search(TermQuery("data"), 5, wand=True).collect()
+    assert wand_runs == [["data"]]
     assert [(r["docid"], r["score"]) for r in a] == [(r["docid"], r["score"]) for r in b]
     # compaction is CheckIndex-clean
     from lucenenet_spark.index.checkindex import verify

@@ -6,15 +6,11 @@ hand-traced goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import (
-    ArabicLightAnalyzer,
-    analyzer_for,
-)
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.arabic import (
     ARABIC_STOP_WORDS,
     arabic_light_stem,
     arabic_normalize,
-    stem_unique,
 )
 
 NORMALIZE = [
@@ -67,7 +63,7 @@ def test_min_length_guards():
 
 
 def test_chain_stop_and_positions():
-    a = ArabicLightAnalyzer(ARABIC_STOP_WORDS)
+    a = analyzer_for("arabic", ARABIC_STOP_WORDS, 255, False)
     an = a.analyze("هذا الكتاب في المكتبة")
     # 'هذا' and 'في' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -88,11 +84,11 @@ def test_analyzer_for_arabic():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["الكتاب", "lang:الكتاب"], dtype=object)
-    out = stem_unique(arr)
+    out = analyzer_for("arabic", frozenset(), 255, False).term_filter_unique(arr)
     assert list(out) == ["كتاب", "lang:الكتاب"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(ArabicLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("arabic", frozenset(), 255, False))

@@ -5,11 +5,10 @@ as the spec), hand-traced goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import ArmenianLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.armenian import (
     ARMENIAN_STOP_WORDS,
     armenian_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -39,7 +38,7 @@ def test_paradigm_conflates():
 
 
 def test_chain_stop_and_positions():
-    a = ArmenianLightAnalyzer(ARMENIAN_STOP_WORDS)
+    a = analyzer_for("armenian", ARMENIAN_STOP_WORDS, 255, False)
     an = a.analyze("գիրքը և լեզուն")
     # 'և' is a stopword; positions keep the gap
     assert an.tokens == [
@@ -60,10 +59,10 @@ def test_analyzer_for_armenian():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["գրքերը", "lang:գրքերը"], dtype=object)
-    assert list(stem_unique(arr)) == ["գրք", "lang:գրքերը"]
+    assert list(analyzer_for("armenian", frozenset(), 255, False).term_filter_unique(arr)) == ["գրք", "lang:գրքերը"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(ArmenianLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("armenian", frozenset(), 255, False))

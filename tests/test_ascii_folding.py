@@ -9,7 +9,7 @@ import pyarrow as pa
 
 from lucenenet_spark.analysis import ASCIIFoldingAnalyzer
 from lucenenet_spark.analysis.analyzer import analyze_flat_arrow
-from lucenenet_spark.analysis.folding import fold, fold_unique
+from lucenenet_spark.analysis.folding import fold
 from lucenenet_spark.index import IndexConfig, build_index
 from lucenenet_spark.query.ast import TermQuery
 from lucenenet_spark.query.engine import Searcher
@@ -52,7 +52,7 @@ def test_unmapped_scripts_pass_through():
 
 def test_fold_unique_skips_keyword_terms():
     arr = np.array(["café", "lang:café", "plain"], dtype=object)
-    assert list(fold_unique(arr)) == ["cafe", "lang:café", "plain"]
+    assert list(ASCIIFoldingAnalyzer().term_filter_unique(arr)) == ["cafe", "lang:café", "plain"]
 
 
 def test_arrow_fast_path_parity():

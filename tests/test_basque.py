@@ -5,11 +5,10 @@ spec), hand-traced goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import BasqueLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.basque import (
     BASQUE_STOP_WORDS,
     basque_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -41,7 +40,7 @@ def test_paradigm_conflates():
 
 
 def test_chain_stop_and_positions():
-    a = BasqueLightAnalyzer(BASQUE_STOP_WORDS)
+    a = analyzer_for("basque", BASQUE_STOP_WORDS, 255, False)
     an = a.analyze("gizona eta etxeak")
     # 'eta' is a stopword; positions keep the gap
     assert an.tokens == [basque_light_stem("gizona"), basque_light_stem("etxeak")]
@@ -59,10 +58,10 @@ def test_analyzer_for_basque():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["etxeak", "lang:etxeak"], dtype=object)
-    assert list(stem_unique(arr)) == ["etxe", "lang:etxeak"]
+    assert list(analyzer_for("basque", frozenset(), 255, False).term_filter_unique(arr)) == ["etxe", "lang:etxeak"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(BasqueLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("basque", frozenset(), 255, False))

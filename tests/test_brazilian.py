@@ -6,11 +6,10 @@ integration; asserts divergence from the UniNE ``portuguese`` pack."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import BrazilianLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.brazilian import (
     BRAZILIAN_STOP_WORDS,
     brazilian_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -58,7 +57,7 @@ def test_distinct_from_portuguese_pack():
 
 
 def test_chain_stop_and_positions():
-    a = BrazilianLightAnalyzer(BRAZILIAN_STOP_WORDS)
+    a = analyzer_for("brazilian", BRAZILIAN_STOP_WORDS, 255, False)
     an = a.analyze("as casas e os livros")
     assert an.tokens == ["cas", "livr"]
     assert an.positions == [1, 4]
@@ -75,10 +74,10 @@ def test_analyzer_for_brazilian():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["casas", "lang:casas"], dtype=object)
-    assert list(stem_unique(arr)) == ["cas", "lang:casas"]
+    assert list(analyzer_for("brazilian", frozenset(), 255, False).term_filter_unique(arr)) == ["cas", "lang:casas"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(BrazilianLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("brazilian", frozenset(), 255, False))

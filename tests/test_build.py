@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from lucenenet_spark.data.pages import pages_spark_df
 from lucenenet_spark.index import IndexBuilder, IndexConfig, IndexStorage, build_index
-from lucenenet_spark.index.builder import partition_id_expr
+from lucenenet_spark.index.builder import BLOCK_SIZE, partition_id_expr
 from lucenenet_spark.index.checkindex import verify
 
 CFG = IndexConfig(num_partitions=8, bucket_width=2, flush_docs=64)
@@ -88,6 +88,16 @@ def test_config_change_invalidates_resume(built):
     assert st.is_committed("postings", CFG.fingerprint())
 
 
+def test_config_fingerprint_is_pinned():
+    """Index identity survives moving the block size and merge batch from
+    IndexConfig to builder constants: existing indexes keep resuming."""
+    assert IndexConfig().fingerprint() == "d543ce08e2b2c520"
+    assert (
+        IndexConfig(analyzer="french", text_fields=("title",)).fingerprint()
+        == "b2f965cd8543590d"
+    )
+
+
 def test_byte_identical_text_invariant(built):
     """The per-url byte-identity invariant (BASELINE.json input_hint): text
     flows through the pipeline unmodified — sha256 of the input text matches
@@ -117,7 +127,7 @@ def test_lineage_counters(built):
 def test_block_size_respected(built):
     spark, _, out, _ = built
     post = IndexStorage(out).read_stage(spark, "postings")
-    assert post.filter(F.col("entry_count") > CFG.block_size).count() == 0
+    assert post.filter(F.col("entry_count") > BLOCK_SIZE).count() == 0
     assert post.filter(F.col("entry_count") <= 0).count() == 0
 
 

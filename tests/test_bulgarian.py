@@ -6,14 +6,10 @@ from the published Nakov 2003 / Savoy descriptions), hand-traced goldens
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import (
-    BulgarianLightAnalyzer,
-    analyzer_for,
-)
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.bulgarian import (
     BULGARIAN_STOP_WORDS,
     bulgarian_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -52,7 +48,7 @@ def test_latin_passthrough():
 
 
 def test_chain_stop_and_positions():
-    a = BulgarianLightAnalyzer(BULGARIAN_STOP_WORDS)
+    a = analyzer_for("bulgarian", BULGARIAN_STOP_WORDS, 255, False)
     an = a.analyze("той чете книгата в града")
     # 'той' and 'в' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -74,10 +70,10 @@ def test_analyzer_for_bulgarian():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["градовете", "lang:градовете"], dtype=object)
-    assert list(stem_unique(arr)) == ["град", "lang:градовете"]
+    assert list(analyzer_for("bulgarian", frozenset(), 255, False).term_filter_unique(arr)) == ["град", "lang:градовете"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(BulgarianLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("bulgarian", frozenset(), 255, False))

@@ -5,11 +5,10 @@ hand-traced goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import CatalanLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.catalan import (
     CATALAN_STOP_WORDS,
     catalan_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -42,7 +41,7 @@ def test_paradigm_conflates():
 
 
 def test_chain_stop_elision_and_positions():
-    a = CatalanLightAnalyzer(CATALAN_STOP_WORDS)
+    a = analyzer_for("catalan", CATALAN_STOP_WORDS, 255, False)
     # "l'aigua" splits at the apostrophe; the article token is stopped
     an = a.analyze("l'aigua de les cases")
     assert an.tokens == [catalan_light_stem("aigua"), catalan_light_stem("cases")]
@@ -60,10 +59,10 @@ def test_analyzer_for_catalan():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["cases", "lang:cases"], dtype=object)
-    assert list(stem_unique(arr)) == ["cas", "lang:cases"]
+    assert list(analyzer_for("catalan", frozenset(), 255, False).term_filter_unique(arr)) == ["cas", "lang:cases"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(CatalanLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("catalan", frozenset(), 255, False))

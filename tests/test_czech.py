@@ -5,11 +5,10 @@ IP&M 2009 paper), hand-traced goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import CzechLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.czech import (
     CZECH_STOP_WORDS,
     czech_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -53,7 +52,7 @@ def test_min_stem_length_guard():
 
 
 def test_chain_stop_and_positions():
-    a = CzechLightAnalyzer(CZECH_STOP_WORDS)
+    a = analyzer_for("czech", CZECH_STOP_WORDS, 255, False)
     an = a.analyze("to město a ženy")
     # 'to' and 'a' are stopwords; positions keep the gaps
     assert an.tokens == [czech_light_stem("město"), czech_light_stem("ženy")]
@@ -71,10 +70,10 @@ def test_analyzer_for_czech():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["ženami", "lang:ženami"], dtype=object)
-    assert list(stem_unique(arr)) == ["žen", "lang:ženami"]
+    assert list(analyzer_for("czech", frozenset(), 255, False).term_filter_unique(arr)) == ["žen", "lang:ženami"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(CzechLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("czech", frozenset(), 255, False))

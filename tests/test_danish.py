@@ -6,11 +6,10 @@ hand-traced goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import DanishLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.danish import (
     DANISH_STOP_WORDS,
     danish_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -52,7 +51,7 @@ def test_undoubling_only_after_strip_candidates():
 
 
 def test_chain_stop_and_positions():
-    a = DanishLightAnalyzer(DANISH_STOP_WORDS)
+    a = analyzer_for("danish", DANISH_STOP_WORDS, 255, False)
     an = a.analyze("han så hunden i huset")
     # 'han', 'så' and 'i' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -73,10 +72,10 @@ def test_analyzer_for_danish():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["hundene", "lang:hundene"], dtype=object)
-    assert list(stem_unique(arr)) == ["hund", "lang:hundene"]
+    assert list(analyzer_for("danish", frozenset(), 255, False).term_filter_unique(arr)) == ["hund", "lang:hundene"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(DanishLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("danish", frozenset(), 255, False))

@@ -20,7 +20,7 @@ from lucenenet_spark.analysis import (
     StopAnalyzer,
 )
 from lucenenet_spark.analysis.analyzer import analyze_flat_arrow
-from lucenenet_spark.analysis.porter import porter_stem, stem_unique
+from lucenenet_spark.analysis.porter import porter_stem
 from lucenenet_spark.data.pages import pages_spark_df
 from lucenenet_spark.index import IndexConfig, build_index
 from lucenenet_spark.query.ast import TermQuery
@@ -62,7 +62,7 @@ def test_porter_golden_pairs():
 
 def test_stem_unique_skips_non_alpha():
     arr = np.array(["running", "lang:en", "abc123", "日本"], dtype=object)
-    out = list(stem_unique(arr))
+    out = list(EnglishAnalyzer().term_filter_unique(arr))
     assert out == ["run", "lang:en", "abc123", "日本"]
 
 

@@ -6,11 +6,10 @@ chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import FinnishLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.finnish import (
     FINNISH_STOP_WORDS,
     finnish_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -54,7 +53,7 @@ def test_min_stem_length_guard():
 
 
 def test_chain_stop_and_positions():
-    a = FinnishLightAnalyzer(FINNISH_STOP_WORDS)
+    a = analyzer_for("finnish", FINNISH_STOP_WORDS, 255, False)
     an = a.analyze("hän asuu talossa ja lukee")
     # 'hän' and 'ja' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -76,10 +75,10 @@ def test_analyzer_for_finnish():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["talossa", "lang:talossa"], dtype=object)
-    assert list(stem_unique(arr)) == ["talo", "lang:talossa"]
+    assert list(analyzer_for("finnish", frozenset(), 255, False).term_filter_unique(arr)) == ["talo", "lang:talossa"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(FinnishLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("finnish", frozenset(), 255, False))

@@ -10,10 +10,7 @@ import dataclasses
 
 import pytest
 
-from lucenenet_spark.analysis.analyzer import (
-    FrenchLightAnalyzer,
-    analyzer_for,
-)
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.french import (
     FRENCH_STOP_WORDS,
     french_light_stem,
@@ -70,7 +67,7 @@ def test_stem_idempotent_on_goldens():
 
 
 def test_chain_elision_and_stop():
-    a = FrenchLightAnalyzer(FRENCH_STOP_WORDS)
+    a = analyzer_for("french", FRENCH_STOP_WORDS, 255, False)
     # "l'avion" tokenizes to (l, avion); the article token is stopped —
     # the ElisionFilter-equivalent path (FrenchAnalyzer.cs:100)
     toks = a.analyze("L'avion de la recherche").tokens
@@ -91,7 +88,7 @@ def test_analyzer_for_french_stop_signal():
 def test_term_filter_unique_skips_namespaced():
     import numpy as np
 
-    a = FrenchLightAnalyzer(FRENCH_STOP_WORDS)
+    a = analyzer_for("french", FRENCH_STOP_WORDS, 255, False)
     out = a.term_filter_unique(np.array(["recherches", "src:recherches"], dtype=object))
     assert list(out) == ["recherch", "src:recherches"]
 

@@ -5,11 +5,10 @@ goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import GalicianMinimalAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.galician import (
     GALICIAN_STOP_WORDS,
     galician_minimal_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -42,7 +41,7 @@ def test_paradigm_conflates():
 
 
 def test_chain_stop_and_positions():
-    a = GalicianMinimalAnalyzer(GALICIAN_STOP_WORDS)
+    a = analyzer_for("galician", GALICIAN_STOP_WORDS, 255, False)
     an = a.analyze("as cancións e os animais")
     # 'as' 'e' 'os' are stopwords; positions keep the gaps
     assert an.tokens == ["canción", "animal"]
@@ -60,10 +59,10 @@ def test_analyzer_for_galician():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["cancións", "lang:cancións"], dtype=object)
-    assert list(stem_unique(arr)) == ["canción", "lang:cancións"]
+    assert list(analyzer_for("galician", frozenset(), 255, False).term_filter_unique(arr)) == ["canción", "lang:cancións"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(GalicianMinimalAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("galician", frozenset(), 255, False))

@@ -5,7 +5,7 @@ hand-traced goldens + routed-build integration."""
 
 import pytest
 
-from lucenenet_spark.analysis.analyzer import GermanLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.german import (
     GERMAN_STOP_WORDS,
     german_light_stem,
@@ -58,7 +58,7 @@ def test_haus_s_ending_rule():
 
 
 def test_chain_stop_and_positions():
-    a = GermanLightAnalyzer(GERMAN_STOP_WORDS)
+    a = analyzer_for("german", GERMAN_STOP_WORDS, 255, False)
     an = a.analyze("die Häuser und der Müller")
     assert an.tokens == ["haus", "mull"]
     assert an.positions == [1, 4]

@@ -6,12 +6,11 @@ chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import GreekLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.greek import (
     GREEK_STOP_WORDS,
     greek_light_stem,
     greek_normalize,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -50,7 +49,7 @@ def test_latin_passthrough():
 
 
 def test_chain_stop_and_positions():
-    a = GreekLightAnalyzer(GREEK_STOP_WORDS)
+    a = analyzer_for("greek", GREEK_STOP_WORDS, 255, False)
     an = a.analyze("το βιβλιο και η θαλασσα")
     # 'το', 'και', 'η' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -71,10 +70,10 @@ def test_analyzer_for_greek():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["βιβλια", "lang:βιβλια"], dtype=object)
-    assert list(stem_unique(arr)) == ["βιβλι", "lang:βιβλια"]
+    assert list(analyzer_for("greek", frozenset(), 255, False).term_filter_unique(arr)) == ["βιβλι", "lang:βιβλια"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(GreekLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("greek", frozenset(), 255, False))

@@ -6,12 +6,11 @@ paper), hand-traced goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import HindiAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.hindi import (
     HINDI_STOP_WORDS,
     hindi_light_stem,
     hindi_normalize,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -59,7 +58,7 @@ def test_single_longest_strip():
 
 
 def test_chain_stop_and_positions():
-    a = HindiAnalyzer(HINDI_STOP_WORDS)
+    a = analyzer_for("hindi", HINDI_STOP_WORDS, 255, False)
     an = a.analyze("वह किताबें और घर")
     # 'वह' and 'और' are stopwords; positions keep the gaps
     assert an.tokens == [hindi_light_stem("किताबें"), "घर"]
@@ -77,16 +76,16 @@ def test_analyzer_for_hindi():
 
 def test_tokenizer_keeps_matras():
     # combining marks are word-Extend (UAX#29): a matra'd word is ONE token
-    a = HindiAnalyzer(frozenset())
+    a = analyzer_for("hindi", frozenset(), 255, False)
     assert a.tokenize("लड़कियाँ और किताबें") == ["लड़कियाँ", "और", "किताबें"]
 
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["किताबें", "lang:किताबें"], dtype=object)
-    assert list(stem_unique(arr)) == ["किताब", "lang:किताबें"]
+    assert list(analyzer_for("hindi", frozenset(), 255, False).term_filter_unique(arr)) == ["किताब", "lang:किताबें"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(HindiAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("hindi", frozenset(), 255, False))

@@ -6,14 +6,10 @@ goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import (
-    HungarianLightAnalyzer,
-    analyzer_for,
-)
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.hungarian import (
     HUNGARIAN_STOP_WORDS,
     hungarian_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -54,7 +50,7 @@ def test_min_stem_length_guard():
 
 
 def test_chain_stop_and_positions():
-    a = HungarianLightAnalyzer(HUNGARIAN_STOP_WORDS)
+    a = analyzer_for("hungarian", HUNGARIAN_STOP_WORDS, 255, False)
     an = a.analyze("a házakat és könyveket")
     # 'a' and 'és' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -75,10 +71,10 @@ def test_analyzer_for_hungarian():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["házakat", "lang:házakat"], dtype=object)
-    assert list(stem_unique(arr)) == ["ház", "lang:házakat"]
+    assert list(analyzer_for("hungarian", frozenset(), 255, False).term_filter_unique(arr)) == ["ház", "lang:házakat"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(HungarianLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("hungarian", frozenset(), 255, False))

@@ -6,14 +6,10 @@ integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import (
-    IndonesianAnalyzer,
-    analyzer_for,
-)
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.indonesian import (
     INDONESIAN_STOP_WORDS,
     indonesian_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -58,7 +54,7 @@ def test_syllable_guard():
 
 
 def test_chain_stop_and_positions():
-    a = IndonesianAnalyzer(INDONESIAN_STOP_WORDS)
+    a = analyzer_for("indonesian", INDONESIAN_STOP_WORDS, 255, False)
     an = a.analyze("dia membaca bukunya di rumah")
     # 'dia' and 'di' are stopwords; positions keep the gaps
     assert an.tokens == ["baca", "buku", "rumah"]
@@ -76,11 +72,11 @@ def test_analyzer_for_indonesian():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["membaca", "lang:membaca"], dtype=object)
-    out = stem_unique(arr)
+    out = analyzer_for("indonesian", frozenset(), 255, False).term_filter_unique(arr)
     assert list(out) == ["baca", "lang:membaca"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(IndonesianAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("indonesian", frozenset(), 255, False))

@@ -5,12 +5,11 @@ Snowball Irish as the spec), hand-traced goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import IrishLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.irish import (
     IRISH_STOP_WORDS,
     irish_demutate,
     irish_light_stem,
-    stem_unique,
 )
 
 DEMUTATE = [
@@ -58,7 +57,7 @@ def test_paradigm_conflates():
 
 
 def test_chain_stop_and_positions():
-    a = IrishLightAnalyzer(IRISH_STOP_WORDS)
+    a = analyzer_for("irish", IRISH_STOP_WORDS, 255, False)
     # "an t-athair" tokenizes t / athair; the prothetic particle is stopped
     an = a.analyze("an t-athair agus na ceisteanna")
     assert an.tokens == [
@@ -79,10 +78,10 @@ def test_analyzer_for_irish():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["ceisteanna", "lang:ceisteanna"], dtype=object)
-    assert list(stem_unique(arr)) == ["ceist", "lang:ceisteanna"]
+    assert list(analyzer_for("irish", frozenset(), 255, False).term_filter_unique(arr)) == ["ceist", "lang:ceisteanna"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(IrishLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("irish", frozenset(), 255, False))

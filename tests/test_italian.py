@@ -5,7 +5,7 @@ hand-traced goldens + routed-build integration."""
 
 import pytest
 
-from lucenenet_spark.analysis.analyzer import ItalianLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.italian import (
     ITALIAN_STOP_WORDS,
     italian_light_stem,
@@ -34,7 +34,7 @@ def test_golden_stems(surface, stem):
 
 
 def test_chain_stop_and_positions():
-    a = ItalianLightAnalyzer(ITALIAN_STOP_WORDS)
+    a = analyzer_for("italian", ITALIAN_STOP_WORDS, 255, False)
     an = a.analyze("le tecnologie dei giornali")
     assert an.tokens == ["tecnolog", "giornal"]
     assert an.positions == [1, 3]
@@ -50,8 +50,9 @@ def test_arrow_fast_path_and_namespaced():
     import numpy as np
 
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
-    from lucenenet_spark.analysis.italian import stem_unique
 
-    assert arrow_fast_path_for(ItalianLightAnalyzer(frozenset()))
-    out = stem_unique(np.array(["abitanti", "title:abitanti"], dtype=object))
+    assert arrow_fast_path_for(analyzer_for("italian", frozenset(), 255, False))
+    out = analyzer_for("italian", frozenset(), 255, False).term_filter_unique(
+        np.array(["abitanti", "title:abitanti"], dtype=object)
+    )
     assert list(out) == ["abitant", "title:abitanti"]

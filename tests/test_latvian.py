@@ -5,11 +5,10 @@ light form with the 2-syllable guard (Analysis/Lv/LatvianAnalyzer.cs:47
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import LatvianLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.latvian import (
     LATVIAN_STOP_WORDS,
     latvian_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -49,7 +48,7 @@ def test_monosyllable_guard():
 
 
 def test_chain_stop_and_positions():
-    a = LatvianLightAnalyzer(LATVIAN_STOP_WORDS)
+    a = analyzer_for("latvian", LATVIAN_STOP_WORDS, 255, False)
     an = a.analyze("es lasu grāmatas un bērni")
     # 'es' and 'un' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -71,10 +70,10 @@ def test_analyzer_for_latvian():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["grāmatas", "lang:grāmatas"], dtype=object)
-    assert list(stem_unique(arr)) == ["grāmat", "lang:grāmatas"]
+    assert list(analyzer_for("latvian", frozenset(), 255, False).term_filter_unique(arr)) == ["grāmat", "lang:grāmatas"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(LatvianLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("latvian", frozenset(), 255, False))

@@ -6,14 +6,10 @@ goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import (
-    NorwegianLightAnalyzer,
-    analyzer_for,
-)
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.norwegian import (
     NORWEGIAN_STOP_WORDS,
     norwegian_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -52,7 +48,7 @@ def test_min_stem_length_guard():
 
 
 def test_chain_stop_and_positions():
-    a = NorwegianLightAnalyzer(NORWEGIAN_STOP_WORDS)
+    a = analyzer_for("norwegian", NORWEGIAN_STOP_WORDS, 255, False)
     an = a.analyze("han leste bilene i huset")
     # 'han' and 'i' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -74,10 +70,10 @@ def test_analyzer_for_norwegian():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["bilene", "lang:bilene"], dtype=object)
-    assert list(stem_unique(arr)) == ["bil", "lang:bilene"]
+    assert list(analyzer_for("norwegian", frozenset(), 255, False).term_filter_unique(arr)) == ["bil", "lang:bilene"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(NorwegianLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("norwegian", frozenset(), 255, False))

@@ -6,11 +6,10 @@ integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import PersianAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.persian import (
     PERSIAN_STOP_WORDS,
     persian_normalize,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -55,7 +54,7 @@ def test_no_stemming():
 
 
 def test_chain_stop_and_positions():
-    a = PersianAnalyzer(PERSIAN_STOP_WORDS)
+    a = analyzer_for("persian", PERSIAN_STOP_WORDS, 255, False)
     an = a.analyze("او كتاب را خواند")
     # 'او' and 'را' are stopwords; positions keep the gaps
     assert an.tokens == ["کتاب", "خواند"]
@@ -73,10 +72,10 @@ def test_analyzer_for_persian():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["كتاب", "lang:كتاب"], dtype=object)
-    assert list(stem_unique(arr)) == ["کتاب", "lang:كتاب"]
+    assert list(analyzer_for("persian", frozenset(), 255, False).term_filter_unique(arr)) == ["کتاب", "lang:كتاب"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(PersianAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("persian", frozenset(), 255, False))

@@ -6,14 +6,10 @@ Savoy ACM SAC 2006), hand-traced goldens + routed-build integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import (
-    PortugueseLightAnalyzer,
-    analyzer_for,
-)
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.portuguese import (
     PORTUGUESE_STOP_WORDS,
     portuguese_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -56,7 +52,7 @@ def test_short_words_untouched():
 
 
 def test_chain_stop_and_positions():
-    a = PortugueseLightAnalyzer(PORTUGUESE_STOP_WORDS)
+    a = analyzer_for("portuguese", PORTUGUESE_STOP_WORDS, 255, False)
     an = a.analyze("as flores de um jardim")
     assert an.tokens == ["flor", "jardim"]
     assert an.positions == [1, 4]
@@ -73,11 +69,11 @@ def test_analyzer_for_portuguese():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["flores", "lang:flores", "title:flores"], dtype=object)
-    out = stem_unique(arr)
+    out = analyzer_for("portuguese", frozenset(), 255, False).term_filter_unique(arr)
     assert list(out) == ["flor", "lang:flores", "title:flores"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(PortugueseLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("portuguese", frozenset(), 255, False))

@@ -107,7 +107,7 @@ def test_tokenize_override_drops_to_generic_path():
     assert arrow_fast_path_for(Pack())
 
 
-def test_wand_ignores_boosted_group_and_matches_unpruned(spark, tmp_path):
+def test_wand_ignores_boosted_group_and_matches_unpruned(spark, tmp_path, wand_runs):
     out = str(tmp_path / "wandidx")
     cfg = IndexConfig(num_partitions=4, bucket_width=2, flush_docs=64)
     build_index(spark, pages_spark_df(spark, 300, seed=42), out, cfg)
@@ -117,6 +117,7 @@ def test_wand_ignores_boosted_group_and_matches_unpruned(spark, tmp_path):
     a = [(r.docid, float(r.score)) for r in s.search(q, 10, wand=True).collect()]
     b = [(r.docid, float(r.score)) for r in s.search(q, 10, wand=False).collect()]
     assert a == b and a
+    assert wand_runs == []
     # unboosted disjunction still WAND-eligible
     assert s._wand_shape(rewrite(parse_query("tiger OR heart"))) is not None
 

@@ -5,14 +5,10 @@ documented non-goal), hand-traced goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import (
-    RomanianLightAnalyzer,
-    analyzer_for,
-)
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.romanian import (
     ROMANIAN_STOP_WORDS,
     romanian_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -48,7 +44,7 @@ def test_paradigm_conflates():
 
 
 def test_chain_stop_and_positions():
-    a = RomanianLightAnalyzer(ROMANIAN_STOP_WORDS)
+    a = analyzer_for("romanian", ROMANIAN_STOP_WORDS, 255, False)
     an = a.analyze("și casele din oraș")
     # 'și' and 'din' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -69,10 +65,10 @@ def test_analyzer_for_romanian():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["casele", "lang:casele"], dtype=object)
-    assert list(stem_unique(arr)) == ["cas", "lang:casele"]
+    assert list(analyzer_for("romanian", frozenset(), 255, False).term_filter_unique(arr)) == ["cas", "lang:casele"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(RomanianLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("romanian", frozenset(), 255, False))

@@ -6,14 +6,10 @@ hand-traced goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import (
-    RussianLightAnalyzer,
-    analyzer_for,
-)
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.russian import (
     RUSSIAN_STOP_WORDS,
     russian_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -55,7 +51,7 @@ def test_min_stem_length_guard():
 
 
 def test_chain_stop_and_positions():
-    a = RussianLightAnalyzer(RUSSIAN_STOP_WORDS)
+    a = analyzer_for("russian", RUSSIAN_STOP_WORDS, 255, False)
     an = a.analyze("он читает книги в доме")
     # 'он' and 'в' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -77,11 +73,11 @@ def test_analyzer_for_russian():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["книги", "lang:книги", "title:книги"], dtype=object)
-    out = stem_unique(arr)
+    out = analyzer_for("russian", frozenset(), 255, False).term_filter_unique(arr)
     assert list(out) == ["книг", "lang:книги", "title:книги"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(RussianLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("russian", frozenset(), 255, False))

@@ -258,6 +258,13 @@ def test_other_shapes_and_large_queries_stay_on_spark(spark, searchers, monkeypa
     assert jobs > 0 and rows == seek
 
 
+def test_explain_deleted_doc_launches_no_job(spark, searchers):
+    s = searchers[("composite", "lucene")]
+    assert 7 in s._dead  # the fixture's first delete op tombstones docid 7
+    ex, jobs = _jobs(spark, lambda: s.explain(QUERIES["term"], 7))
+    assert jobs == 0 and ex["value"] == 0.0 and "deleted" in ex["description"]
+
+
 # ------------------------------------------------- randomized query trees #
 # terms of the composite index (text, title and keyword keys), one absent
 _TERMS = ["heart", "human", "tiger", "data", "search", "index", "crawl", "web", "zzabsent"]

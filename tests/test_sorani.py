@@ -5,12 +5,11 @@ SoraniStemmer.cs), hand-traced goldens + chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import SoraniAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.sorani import (
     SORANI_STOP_WORDS,
     sorani_light_stem,
     sorani_normalize,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -49,7 +48,7 @@ def test_latin_passthrough():
 
 
 def test_chain_stop_and_positions():
-    a = SoraniAnalyzer(SORANI_STOP_WORDS)
+    a = analyzer_for("sorani", SORANI_STOP_WORDS, 255, False)
     an = a.analyze("ئەو کتابەکان و ماڵی")
     # 'ئەو' and 'و' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -70,10 +69,10 @@ def test_analyzer_for_sorani():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["کتابەکان", "lang:کتابەکان"], dtype=object)
-    assert list(stem_unique(arr)) == ["کتاب", "lang:کتابەکان"]
+    assert list(analyzer_for("sorani", frozenset(), 255, False).term_filter_unique(arr)) == ["کتاب", "lang:کتابەکان"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(SoraniAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("sorani", frozenset(), 255, False))

@@ -5,7 +5,7 @@ hand-traced goldens + routed-build integration."""
 
 import pytest
 
-from lucenenet_spark.analysis.analyzer import SpanishLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.spanish import (
     SPANISH_STOP_WORDS,
     spanish_light_stem,
@@ -41,7 +41,7 @@ def test_es_plural_rules_exactly():
 
 
 def test_chain_stop_and_positions():
-    a = SpanishLightAnalyzer(SPANISH_STOP_WORDS)
+    a = analyzer_for("spanish", SPANISH_STOP_WORDS, 255, False)
     an = a.analyze("las casas de los técnicos")
     assert an.tokens == ["cas", "tecnic"]
     assert an.positions == [1, 4]
@@ -56,16 +56,16 @@ def test_analyzer_for_spanish():
 def test_term_filter_unique_namespaced_passthrough():
     import numpy as np
 
-    from lucenenet_spark.analysis.spanish import stem_unique
-
-    out = stem_unique(np.array(["casas", "title:casas"], dtype=object))
+    out = analyzer_for("spanish", frozenset(), 255, False).term_filter_unique(
+        np.array(["casas", "title:casas"], dtype=object)
+    )
     assert list(out) == ["cas", "title:casas"]
 
 
 def test_arrow_fast_path():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(SpanishLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("spanish", frozenset(), 255, False))
 
 
 def test_routed_build_with_spanish(spark, tmp_path):

@@ -6,14 +6,10 @@ chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import (
-    SwedishLightAnalyzer,
-    analyzer_for,
-)
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.swedish import (
     SWEDISH_STOP_WORDS,
     swedish_light_stem,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -62,7 +58,7 @@ def test_min_stem_length_guard():
 
 
 def test_chain_stop_and_positions():
-    a = SwedishLightAnalyzer(SWEDISH_STOP_WORDS)
+    a = analyzer_for("swedish", SWEDISH_STOP_WORDS, 255, False)
     an = a.analyze("han läser boken i huset")
     # 'han' and 'i' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -84,11 +80,11 @@ def test_analyzer_for_swedish():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["bilarna", "lang:bilarna"], dtype=object)
-    out = stem_unique(arr)
+    out = analyzer_for("swedish", frozenset(), 255, False).term_filter_unique(arr)
     assert list(out) == ["bil", "lang:bilarna"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(SwedishLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("swedish", frozenset(), 255, False))

@@ -6,12 +6,11 @@ chain integration."""
 import numpy as np
 import pytest
 
-from lucenenet_spark.analysis.analyzer import TurkishLightAnalyzer, analyzer_for
+from lucenenet_spark.analysis.analyzer import analyzer_for
 from lucenenet_spark.analysis.turkish import (
     TURKISH_STOP_WORDS,
     turkish_light_stem,
     turkish_normalize,
-    stem_unique,
 )
 
 GOLDEN = [
@@ -46,7 +45,7 @@ def test_paradigm_conflates():
 
 
 def test_chain_stop_and_positions():
-    a = TurkishLightAnalyzer(TURKISH_STOP_WORDS)
+    a = analyzer_for("turkish", TURKISH_STOP_WORDS, 255, False)
     an = a.analyze("bu kitaplar ve gözler")
     # 'bu' and 've' are stopwords; positions keep the gaps
     assert an.tokens == [
@@ -59,7 +58,7 @@ def test_chain_stop_and_positions():
 def test_apostrophe_suffix_splits_structurally():
     # the tokenizer splits on the apostrophe, so the enclitic becomes its
     # own token (ApostropheFilter's effect, achieved structurally)
-    a = TurkishLightAnalyzer(frozenset())
+    a = analyzer_for("turkish", frozenset(), 255, False)
     assert a.analyze_query("istanbul'dan")[0] == "istanbul"
 
 
@@ -74,10 +73,10 @@ def test_analyzer_for_turkish():
 
 def test_term_filter_unique_namespaced_passthrough():
     arr = np.array(["kitaplar", "lang:kitaplar"], dtype=object)
-    assert list(stem_unique(arr)) == ["kitap", "lang:kitaplar"]
+    assert list(analyzer_for("turkish", frozenset(), 255, False).term_filter_unique(arr)) == ["kitap", "lang:kitaplar"]
 
 
 def test_arrow_fast_path_kept():
     from lucenenet_spark.analysis.analyzer import arrow_fast_path_for
 
-    assert arrow_fast_path_for(TurkishLightAnalyzer(frozenset()))
+    assert arrow_fast_path_for(analyzer_for("turkish", frozenset(), 255, False))

@@ -38,10 +38,11 @@ WAND_QUERIES = [
 
 @pytest.mark.parametrize("k", [1, 10, 50])
 @pytest.mark.parametrize("qi", range(len(WAND_QUERIES)))
-def test_wand_result_identical(searcher, qi, k):
+def test_wand_result_identical(searcher, qi, k, wand_runs):
     q = WAND_QUERIES[qi]
     plain = searcher.search(q, k).collect()
     pruned = searcher.search(q, k, wand=True).collect()
+    assert wand_runs == [searcher._wand_shape(q)]
     assert [(r["docid"], r["score"], r["rank"]) for r in plain] == [
         (r["docid"], r["score"], r["rank"]) for r in pruned
     ]
@@ -64,7 +65,7 @@ def test_wand_shape_detection(searcher):
     )
 
 
-def test_wand_actually_prunes(spark, tmp_path_factory):
+def test_wand_actually_prunes(spark, tmp_path_factory, wand_runs):
     """The pruned plan must read fewer blocks than the full plan for a
     high-df term at small k (otherwise 'WAND' is a no-op). Uses a larger
     corpus so posting lists span many blocks with varied block maxima."""
@@ -91,6 +92,7 @@ def test_wand_actually_prunes(spark, tmp_path_factory):
     # and the pruned search is still identical
     plain = s.search(TermQuery("data"), 1).collect()
     pruned = s.search(TermQuery("data"), 1, wand=True).collect()
+    assert wand_runs == [["data"]]
     assert [(r["docid"], r["score"]) for r in plain] == [
         (r["docid"], r["score"]) for r in pruned
     ]
