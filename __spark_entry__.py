@@ -329,12 +329,12 @@ _FR_STEM_MAP = {
     "order": "ord", "small": "smal", "table": "tabl",
     "value": "valu", "vector": "vecto",
 }
-# GermanLightAnalyzer (normalize + UniNE stem) image of the same vocabulary
+# analyzer_for("german", ...) (normalize + UniNE stem) image of the same vocabulary
 _DE_STEM_MAP = {
     "customer": "custom", "filter": "filt", "line": "lin",
     "merge": "merg", "order": "ord", "table": "tabl", "value": "valu",
 }
-# SpanishLightAnalyzer (UniNE stem) image of the same vocabulary
+# analyzer_for("spanish", ...) (UniNE stem) image of the same vocabulary
 _ES_STEM_MAP = {"merge": "merg", "table": "tabl", "value": "valu"}
 _CORPUS_VOCAB = (
     "a agg batch big column customer data dup fast filter group hash join "
@@ -346,7 +346,7 @@ _CORPUS_VOCAB = (
 def _lang_searcher(spark, sf_dir):
     """A THIRD index over the same corpus, built with per-document
     language routing (IndexConfig.lang_field/lang_chains): documents with
-    lang='fr' run the FrenchLightAnalyzer chain
+    lang='fr' run the analyzer_for("french", ...) chain
     (Analysis/Fr/FrenchAnalyzer.cs:187-212 — the UniNE light stemmer,
     FrenchLightStemmer.cs:69-350), lang='de' the German chain, lang='es'
     the Spanish chain (Es/SpanishLightStemmer.cs:63-100), everything else

@@ -1312,11 +1312,14 @@ def compact_index(
     function is a single snapshot commit. Returns the build summary."""
     from functools import reduce as _reduce
 
-    from .deletes import read_tombstones
+    from .deletes import read_tombstones, tombstone_ops
 
     base = IndexStorage(index_dir)
     deltas = base.delta_dirs()
-    tomb = read_tombstones(spark, index_dir)
+    # the delete ops, listed once: the doc rows anti-join their Spark read,
+    # the posting strip their driver-side docid array
+    ops = tombstone_ops(index_dir)
+    tomb = read_tombstones(spark, index_dir, ops)
     if not deltas and tomb is None:
         return {"skipped": True, "reason": "no deltas and no tombstones"}
     # config=None inherits the base's recorded config — compacting an
@@ -1347,7 +1350,7 @@ def compact_index(
         # doc rows anti-join out; posting rows drop tombstoned entries in a
         # vectorized Arrow kernel. Stats/termstats then rebuild WITHOUT the
         # deleted docs, so df/avgdl and block-max metadata are fresh.
-        merged, n_deleted = _apply_tombstones(merged, tomb, dv_ddl)
+        merged, n_deleted = _apply_tombstones(merged, tomb, ops, dv_ddl)
         builder.docids_dense = False  # deletion leaves docid gaps
     st.write_stage(
         merged, "partials", cfg.fingerprint(), partition_by=["row_type"],
@@ -1374,18 +1377,21 @@ def compact_index(
     return summary
 
 
-def _apply_tombstones(partials: DataFrame, tomb: DataFrame, dv_ddl: str = ""):
+def _apply_tombstones(
+    partials: DataFrame, tomb: DataFrame, ops: list[str], dv_ddl: str = ""
+):
     """Strip tombstoned docs out of a partials table: 'd' rows via a
-    distributed anti-join; 'p' rows via an Arrow kernel that drops the dead
-    entries from every list column (docids/freqs/norm_bytes/doclens) and
-    their position spans (freq == per-entry position count addresses the
-    flat stream). The tombstone set is collected to a sorted numpy array
-    for the kernel — compaction-cycle delete volumes are driver-sized by
-    assumption (the Iceberg merge-on-read contract); shard the compaction
-    if that ever stops holding. Returns (filtered_df, n_tombstones)."""
-    tombs = np.sort(
-        np.array([r["docid"] for r in tomb.collect()], dtype=np.int64)
-    )
+    distributed anti-join with ``tomb``; 'p' rows via an Arrow kernel that
+    drops the dead entries from every list column (docids/freqs/
+    norm_bytes/doclens) and their position spans (freq == per-entry
+    position count addresses the flat stream). The kernel reads the
+    delete ``ops`` on the driver as one sorted numpy array (no Spark job)
+    — compaction-cycle delete volumes are driver-sized by assumption (the
+    Iceberg merge-on-read contract); shard the compaction if that ever
+    stops holding. Returns (filtered_df, n_tombstones)."""
+    from .deletes import tombstone_docids
+
+    tombs = tombstone_docids(ops)
 
     d_rows = partials.filter(F.col("row_type") == "d").join(
         F.broadcast(tomb), "docid", "left_anti"

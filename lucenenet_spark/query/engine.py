@@ -29,13 +29,19 @@ Every query kernel shares one decode/score path of three private helpers:
   cumsum(``docid_deltas``), flat per-block ``positions`` split by ``freqs``);
 - :class:`_BM25Scorer` — the one per-entry BM25 score, float32 on quantized
   norm bytes or ``exact_int`` double micro-units, owning the per-field norm
-  cache / avgdl and the boost placement;
+  cache / avgdl and the boost placement; a keyword field (norms omitted,
+  tf 1) scores boost*idf through it too;
 - :func:`_flat_keys` — the one ``row * 2^33 + position`` flat-key builder of
   the phrase and span kernels.
 
+The five non-BM25 similarities of :meth:`Searcher.similarity_score_df` are
+one table, :data:`_SIMILARITIES`, of per-term ``fn(tf, doclen)`` factories;
+:class:`_MicroScorer` floors ``fn`` to micro units and runs it through the
+same :func:`_term_kernel`.
+
 Two executors run the same per-shape kernels (:func:`_term_kernel`,
-:func:`_docid_kernel`, :func:`_position_kernel`, :func:`_phrase_kernel`),
-generators over an iterator of pandas posting batches:
+:func:`_position_kernel`, :func:`_phrase_kernel`), generators over an
+iterator of pandas posting batches:
 
 - Spark: the kernel runs inside ``mapInPandas`` over the pushdown-pruned
   postings scan; docid joins, unions and the top-k are Spark plans.
@@ -301,6 +307,12 @@ class _BM25Scorer:
       on exact doclens, the boost folded into ``w`` as a double multiply
       so the integers stay reproducible.
 
+    - keyword field (neither ``"text"`` nor an extra text field,
+      StringField.cs:43): norms are omitted and tf is 1, so BM25 reduces
+      to ``idf`` and every entry scores boost*idf —
+      ``floor(idf*boost*1e6 + 0.5)`` (the SQL oracle's op order) or
+      ``float32(idf)*float32(boost)``.
+
     ``sts`` lists the term stats of the (pseudo-)term: a phrase or span
     scores with the sum of its members' idfs. ``sts=None`` leaves the
     weight to the caller, which passes per-entry :meth:`weight` values
@@ -313,9 +325,11 @@ class _BM25Scorer:
     ):
         self.exact = s.scoring == "exact_int"
         self.k1, self.b = s.k1d, s.bd
-        text = field == "text"
-        self.cache = s.cache if text else s.field_cache[field]
-        self.avgdl = s.avgdl_exact if text else s.field_avgdl_exact[field]
+        self.keyword = field != "text" and field not in s.text_fields
+        if not self.keyword:
+            text = field == "text"
+            self.cache = s.cache if text else s.field_cache[field]
+            self.avgdl = s.avgdl_exact if text else s.field_avgdl_exact[field]
         self.boost, self.fold_boost = float(boost), fold_boost
         self.w = None
         if sts is not None:
@@ -325,7 +339,12 @@ class _BM25Scorer:
             )
 
     def weight(self, idf, idf_exact):
-        """``idf*(k1+1)`` in the mode's precision (scalar or per entry)."""
+        """``idf*(k1+1)`` in the mode's precision (scalar or per entry);
+        boost*idf for a keyword field."""
+        if self.keyword:
+            if self.exact:
+                return idf_exact * self.boost
+            return np.float32(idf) * np.float32(self.boost)
         if self.exact:
             return idf_exact * (self.k1 + 1.0) * self.boost
         w = np.float32(idf) * (np.float32(self.k1) + np.float32(1.0))
@@ -336,6 +355,9 @@ class _BM25Scorer:
         integer micro-units). ``norm`` is the entry's norm byte (float32)
         or exact doclen (exact_int); ``w`` overrides the driver weight."""
         w = self.w if w is None else w
+        if self.keyword:
+            s = np.floor(w * 1e6 + 0.5) if self.exact else w
+            return np.broadcast_to(s, np.shape(freq)).astype(np.float64)
         if self.exact:
             f = np.asarray(freq, dtype=np.float64)
             dl = np.asarray(norm, dtype=np.float64)
@@ -371,6 +393,93 @@ def _sloppy_freq(rows, match_len, n: int, hit, exact: bool) -> np.ndarray:
     return np.bincount(rows, weights=1.0 / (1.0 + m), minlength=n)[hit]
 
 
+# ---------------- non-BM25 similarities ------------------------------------ #
+# Each factory maps (searcher, a term's TermStat, mu, jm_lambda) to that
+# term's per-entry ``fn(tf, doclen)`` in double precision.
+def _classic(s: "Searcher", st: TermStat, mu: float, lam: float):
+    """TF-IDF / DefaultSimilarity (Similarities/TFIDFSimilarity.cs:33,
+    DefaultSimilarity.cs:30): ``sqrt(tf) * idf^2 / sqrt(dl)`` with ``idf =
+    1 + ln(maxdoc / (df + 1))``."""
+    idf = 1.0 + math.log(s.maxdoc / (st.df + 1.0))
+    w = idf * idf
+    return lambda tf, dl: np.sqrt(tf) * w / np.sqrt(dl)
+
+
+def _lm_dirichlet(s: "Searcher", st: TermStat, mu: float, lam: float):
+    """LMDirichletSimilarity.cs:48: ``ln(1 + tf/(mu*p)) + ln(mu/(dl+mu))``
+    with collection model ``p = ttf/sum_ttf``, clamped at 0 as
+    LMDirichletSimilarity.cs:77 does (``score > 0 ? score : 0``): a common
+    term in a long document otherwise adds a negative score."""
+    mup = mu * (st.ttf / float(s.sum_ttf))
+    return lambda tf, dl: np.maximum(np.log(1.0 + tf / mup) + np.log(mu / (dl + mu)), 0.0)
+
+
+def _lm_jelinek_mercer(s: "Searcher", st: TermStat, mu: float, lam: float):
+    """LMJelinekMercerSimilarity.cs:40: ``ln(1 + ((1-lambda)*tf/dl) /
+    (lambda*p))``, ``p = ttf/sum_ttf``."""
+    lp = lam * (st.ttf / float(s.sum_ttf))
+    return lambda tf, dl: np.log(1.0 + ((1.0 - lam) * tf / dl) / lp)
+
+
+def _ib_ll_d2(s: "Searcher", st: TermStat, mu: float, lam: float):
+    """IBSimilarity.cs:113 with DistributionLL.cs + LambdaDF.cs +
+    NormalizationH2.cs (c=1): lambda = (df+1)/(N+1), tfn = tf*log2(1 +
+    avgdl/dl), score = -ln(lambda/(tfn+lambda))."""
+    lam_df = (st.df + 1.0) / (float(s.maxdoc) + 1.0)
+    avgdl = s.avgdl_exact
+
+    def fn(tf, dl):
+        tfn = tf * np.log2(1.0 + avgdl / dl)
+        return -np.log(lam_df / (tfn + lam_df))
+    return fn
+
+
+def _dfr_ine_b2(s: "Searcher", st: TermStat, mu: float, lam: float):
+    """DFRSimilarity.cs:121 with BasicModelIne.cs + AfterEffectB.cs +
+    NormalizationH2.cs (c=1): tfn = tf*log2(1 + avgdl/dl); ne = N*(1 -
+    ((N-1)/N)^F); score = tfn * log2((N+1)/(ne+0.5)) * (F+2)/((df+1)*(tfn+1)).
+    The reference's intermediate float32 casts are dropped — this runs on
+    the integer-exact double contract like the others."""
+    N = float(s.maxdoc)
+    Fq = float(st.ttf)
+    ne = N * (1.0 - math.pow((N - 1.0) / N, Fq))
+    bw = math.log2((N + 1.0) / (ne + 0.5))
+    gnum = Fq + 2.0  # AfterEffectB: (F+1), F = ttf+1
+    gdf = float(st.df + 1)
+    avgdl = s.avgdl_exact
+
+    def fn(tf, dl):
+        tfn = tf * np.log2(1.0 + avgdl / dl)
+        return (tfn * bw) * (gnum / (gdf * (tfn + 1.0)))
+    return fn
+
+
+_SIMILARITIES = {
+    "classic": _classic,
+    "lm_dirichlet": _lm_dirichlet,
+    "lm_jelinek_mercer": _lm_jelinek_mercer,
+    "ib_ll_d2": _ib_ll_d2,
+    "dfr_ine_b2": _dfr_ine_b2,
+}
+
+
+class _MicroScorer:
+    """The per-entry scorer of a non-BM25 similarity, always integer-exact:
+    ``w`` is the term's ``fn(tf, doclen)`` from :data:`_SIMILARITIES` and
+    every entry floors to micro units ``floor(fn*1e6 + 0.5)``. It plugs
+    into :func:`_term_kernel` where a :class:`_BM25Scorer` does
+    (``exact`` makes the kernel read exact doclens)."""
+
+    exact = True
+
+    def __init__(self, fn):
+        self.w = fn
+
+    def __call__(self, freq, norm, w=None) -> np.ndarray:
+        tf = np.asarray(freq, dtype=np.float64)
+        return np.floor(self.w(tf, np.asarray(norm, dtype=np.float64)) * 1e6 + 0.5)
+
+
 # ---------------- per-shape kernels (both executors) ----------------------- #
 def _term_kernel(batches, scorer: _BM25Scorer, maxdoc: int):
     """Posting blocks -> (docid, score float64-holding-float32-value): the
@@ -390,7 +499,7 @@ def _term_kernel(batches, scorer: _BM25Scorer, maxdoc: int):
 
 def _docid_kernel(batches):
     """Posting blocks -> the docids alone (deduped per batch): the match
-    set of a norms-free or constant-score scorer."""
+    set of a constant-score query."""
     for _, docids, _, _ in _decode_blocks(batches):
         yield pd.DataFrame({"docid": np.unique(docids)})
 
@@ -816,35 +925,15 @@ class Searcher:
         return self.spark.createDataFrame([], _EMPTY_SCHEMA)
 
     def _score_term(self, q: TermQuery, stats: dict[str, TermStat]) -> DataFrame:
-        if q.field != "text" and q.field not in self.text_fields:
-            return self._score_keyword_term(q, stats)
+        """TermQuery on any field: a pushdown-pruned seek of the (namespaced)
+        key's blocks through :func:`_term_kernel`; the scorer knows a
+        keyword field's norms-omitted boost*idf."""
         key = _skey(q.field, q.term)
         st = stats.get(key)
         if st is None:
             return self._empty()
         blocks = self.postings.filter(F.col("term") == key)
         return self._decode_score(blocks, _BM25Scorer(self, q.field, [st], q.boost))
-
-    def _score_keyword_term(self, q: TermQuery, stats: dict[str, TermStat]) -> DataFrame:
-        """TermQuery on a keyword field (StringField.cs:43): postings seek
-        on the namespaced key, scored with norms omitted — BM25Similarity
-        with norms==null reduces to ``idf * (k1+1) * tf / (tf + k1)`` and
-        keyword tf is 1 by construction, so every match scores boost*idf.
-        The docid decode is the same pushdown-pruned block scan as a text
-        term; the constant score is computed driver-side (no join)."""
-        key = _skey(q.field, q.term)
-        st = stats.get(key)
-        if st is None:
-            return self._empty()
-        docs = self._decode_docids(self.postings.filter(F.col("term") == key))
-        return docs.withColumn("score", F.lit(self._keyword_score(q, st)).cast("double"))
-
-    def _keyword_score(self, q: TermQuery, st: TermStat) -> float:
-        """The constant score of every match of a keyword-field term."""
-        if self.scoring == "exact_int":
-            # op order mirrors the SQL oracle: floor((idf*boost)*1e6 + 0.5)
-            return float(np.floor(_idf(self.maxdoc, st.df) * float(q.boost) * 1e6 + 0.5))
-        return float(np.float32(st.idf) * np.float32(q.boost))
 
     def _expand_terms(self, q: Query) -> DataFrame:
         """Term-dictionary scan for MultiTermQuery shapes — returns a
@@ -1441,39 +1530,14 @@ class Searcher:
                 order = [F.desc("df"), F.asc("term")]
             ts = ts.orderBy(*order).limit(n)
         blocks = self.postings.join(F.broadcast(ts), "term")
-        fld = getattr(q, "field", "text")
-        qboost = float(getattr(q, "boost", 1.0))
-        if fld != "text" and fld not in self.text_fields:
-            return self._scored_rewrite_keyword(blocks, qboost)
-        # an extra ANALYZED field scores the full BM25 kernel with the
-        # FIELD'S norms/avgdl (its namespaced postings carry the field's
-        # doclens) — only KEYWORD fields take the norms-omitted path
-        scorer = _BM25Scorer(self, fld, None, qboost, fold_boost=True)
+        # an extra ANALYZED field scores with the FIELD'S norms/avgdl (its
+        # namespaced postings carry the field's doclens), a keyword field
+        # boost*idf per match; a doc matching several expanded terms sums
+        scorer = _BM25Scorer(
+            self, getattr(q, "field", "text"), None,
+            float(getattr(q, "boost", 1.0)), fold_boost=True,
+        )
         scored = self._decode_score(blocks, scorer)
-        return scored.groupBy("docid").agg(F.sum("score").alias("score"))
-
-    def _scored_rewrite_keyword(self, blocks: DataFrame, qboost: float) -> DataFrame:
-        """Scored rewrite over a KEYWORD field: norms are omitted and tf is 1
-        by construction (StringField contract, same as _score_keyword_term),
-        so each expanded-term match scores boost*idf — NOT the text-field
-        BM25 kernel with doclen norms. Disjunction-sums per doc, so a
-        multi-valued doc matching several expanded terms adds their idfs."""
-        exact = self.scoring == "exact_int"
-        maxdoc = self.maxdoc
-
-        def decode(batches):
-            for pdf, docids, lens, _ in _decode_blocks(batches):
-                idf = _idf_per_entry(pdf["df"], lens, maxdoc)
-                if exact:
-                    score = np.floor(idf * qboost * 1e6 + 0.5)
-                else:
-                    score = (idf.astype(np.float32) * np.float32(qboost)).astype(
-                        np.float32
-                    )
-                yield pd.DataFrame({"docid": docids, "score": score.astype(np.float64)})
-
-        cols = blocks.select("first_docid", "docid_deltas", "df")
-        scored = cols.mapInPandas(decode, schema=_EMPTY_SCHEMA)
         return scored.groupBy("docid").agg(F.sum("score").alias("score"))
 
     # ---------------- boolean composition -------------------------------- #
@@ -1751,12 +1815,15 @@ class Searcher:
         _collect_terms(q, terms)
         return sum(stats[t].df for t in terms if t in stats) <= _SEEK_MAX_ENTRIES
 
-    def _seek_blocks(self, key: str, cols: list[str]) -> list[pd.DataFrame]:
+    def _seek_blocks(self, key: str, cols: list[str], docid: int | None = None) -> list[pd.DataFrame]:
         """The posting blocks of one term key in every generation, read
-        with pyarrow, as one pandas batch for a kernel."""
-        term = pc.field("term") == key
+        with pyarrow, as one pandas batch for a kernel; ``docid`` keeps
+        only the blocks whose docid range holds it."""
+        cond = pc.field("term") == key
+        if docid is not None:
+            cond = cond & (pc.field("first_docid") <= docid) & (pc.field("last_docid") >= docid)
         cols = ["first_docid", "docid_deltas", *cols]
-        tabs = [st.read_local("postings", POSTINGS_SCHEMA, cols, term) for st in self._stores]
+        tabs = [st.read_local("postings", POSTINGS_SCHEMA, cols, cond) for st in self._stores]
         return [pa.concat_tables(tabs).to_pandas()]
 
     def _seek(self, q: Query, stats: dict[str, TermStat]) -> pd.Series:
@@ -1773,9 +1840,6 @@ class Searcher:
             st = stats.get(key)
             if st is None:
                 return _hits([])
-            if q.field != "text" and q.field not in self.text_fields:
-                val = self._keyword_score(q, st)
-                return _hits(f.assign(score=val) for f in _docid_kernel(self._seek_blocks(key, [])))
             scorer = _BM25Scorer(self, q.field, [st], q.boost)
             norm = "doclens" if scorer.exact else "norm_bytes"
             return _hits(_term_kernel(self._seek_blocks(key, ["freqs", norm]), scorer, self.maxdoc))
@@ -1877,123 +1941,43 @@ class Searcher:
     ) -> DataFrame:
         """Pluggable-similarity disjunction scorer over the SAME postings
         the BM25 path reads — the Similarity extension point
-        (Search/Similarities/Similarity.cs:55) exercised with two
-        published formulas beyond BM25:
-
-        - ``"classic"`` — TF-IDF / DefaultSimilarity
-          (Similarities/TFIDFSimilarity.cs:33, DefaultSimilarity.cs:30):
-          per matched term ``sqrt(tf) * idf^2 / sqrt(dl)`` with
-          ``idf = 1 + ln(maxdoc / (df + 1))``; coord(q,d) =
-          matched/|q| multiplies the sum (BooleanWeight.Coord). queryNorm
-          is omitted — it is constant per query, so ranks are unchanged
-          (the reference itself calls it "not relevant to ranking",
-          TFIDFSimilarity.cs queryNorm doc) — the documented divergence.
-        - ``"lm_dirichlet"`` — LMDirichletSimilarity.cs:48: per matched
-          term ``ln(1 + tf/(mu*p)) + ln(mu/(dl+mu))`` with collection
-          model ``p = ttf/sum_ttf`` (mu default 2000, as the reference).
-        - ``"lm_jelinek_mercer"`` — LMJelinekMercerSimilarity.cs:40: per
-          matched term ``ln(1 + ((1-lambda)*tf/dl) / (lambda*p))``,
-          lambda = ``jm_lambda`` (default 0.7, the reference's
-          long-query recommendation).
-        - ``"ib_ll_d2"`` — IBSimilarity.cs:113 with DistributionLL.cs +
-          LambdaDF.cs + NormalizationH2.cs (c=1): lambda = (df+1)/(N+1),
-          tfn = tf*log2(1 + avgdl/dl), score = -ln(lambda/(tfn+lambda)).
-        - ``"dfr_ine_b2"`` — DFRSimilarity.cs:121 with BasicModelIne.cs
-          + AfterEffectB.cs + NormalizationH2.cs (c=1): tfn =
-          tf*log2(1 + avgdl/dl); ne = N*(1-((N-1)/N)^F); score =
-          tfn * log2((N+1)/(ne+0.5)) * (F+2)/((df+1)*(tfn+1)). The
-          reference's intermediate float32 casts are dropped — this
-          runs on the integer-exact double contract like the others.
+        (Search/Similarities/Similarity.cs:55) with the published formulas
+        of :data:`_SIMILARITIES`: ``mu`` (default 2000, as the reference)
+        for ``"lm_dirichlet"``, ``jm_lambda`` (default 0.7, the reference's
+        long-query recommendation) for ``"lm_jelinek_mercer"``. Each term's postings
+        run through :func:`_term_kernel` with a :class:`_MicroScorer`.
 
         Integer-exact contract (the exact_int convention): each per-term
         per-doc contribution floors to micro units BEFORE summation, so
-        cross-engine comparison is integer arithmetic; classic's coord is
-        applied as ``(sum * matched) DIV |q|`` — a rational floor both
-        engines compute identically.
-
-        LM Dirichlet clamps each term's contribution at zero before the
-        micro-unit floor, as LMDirichletSimilarity.cs:77 does (``score > 0
-        ? score : 0``): a common term in a long document otherwise adds a
-        negative score."""
-        if similarity not in (
-            "classic", "lm_dirichlet", "lm_jelinek_mercer", "dfr_ine_b2",
-            "ib_ll_d2",
-        ):
+        cross-engine comparison is integer arithmetic; classic's coord(q,d)
+        = matched/|q| (BooleanWeight.Coord) is applied as ``(sum * matched)
+        DIV |q|`` — a rational floor both engines compute identically.
+        Classic omits queryNorm — it is constant per query, so ranks are
+        unchanged (the reference itself calls it "not relevant to
+        ranking", TFIDFSimilarity.cs queryNorm doc) — the documented
+        divergence."""
+        factory = _SIMILARITIES.get(similarity)
+        if factory is None:
             raise ValueError(f"unknown similarity {similarity!r}")
         stats = self.term_stats(terms)
-        n_q = len(terms)
-        parts = []
-        for t in terms:
-            st = stats.get(t)
-            if st is None:
-                continue
-            blocks = self.postings.filter(F.col("term") == t)
-            if similarity == "classic":
-                idf_c = 1.0 + math.log(self.maxdoc / (st.df + 1.0))
-                w = idf_c * idf_c
-
-                def score_fn(tf, dl, w=w):
-                    return np.sqrt(tf) * w / np.sqrt(dl)
-            elif similarity == "lm_dirichlet":
-                mup = mu * (st.ttf / float(self.sum_ttf))
-
-                def score_fn(tf, dl, mup=mup, mu=mu):
-                    s = np.log(1.0 + tf / mup) + np.log(mu / (dl + mu))
-                    return np.maximum(s, 0.0)
-            elif similarity == "lm_jelinek_mercer":
-                lp = jm_lambda * (st.ttf / float(self.sum_ttf))
-
-                def score_fn(tf, dl, lp=lp, lam=jm_lambda):
-                    return np.log(1.0 + ((1.0 - lam) * tf / dl) / lp)
-            elif similarity == "ib_ll_d2":
-                lam = (st.df + 1.0) / (float(self.maxdoc) + 1.0)
-                avgdl = self.avgdl_exact
-
-                def score_fn(tf, dl, lam=lam, avgdl=avgdl):
-                    tfn = tf * np.log2(1.0 + avgdl / dl)
-                    return -np.log(lam / (tfn + lam))
-            else:
-                N = float(self.maxdoc)
-                Fq = float(st.ttf)
-                ne = N * (1.0 - math.pow((N - 1.0) / N, Fq))
-                bw = math.log2((N + 1.0) / (ne + 0.5))
-                gnum = Fq + 2.0         # AfterEffectB: (F+1), F = ttf+1
-                gdf = float(st.df + 1)
-                avgdl = self.avgdl_exact
-
-                def score_fn(tf, dl, bw=bw, gnum=gnum, gdf=gdf, avgdl=avgdl):
-                    tfn = tf * np.log2(1.0 + avgdl / dl)
-                    return (tfn * bw) * (gnum / (gdf * (tfn + 1.0)))
-
-            def decode(batches, score_fn=score_fn):
-                for _, docids, _, flat in _decode_blocks(batches, "freqs", "doclens"):
-                    tf = flat["freqs"].astype(np.float64)
-                    s = score_fn(tf, flat["doclens"].astype(np.float64))
-                    yield pd.DataFrame({
-                        "docid": docids,
-                        "s": np.floor(s * 1e6 + 0.5).astype(np.int64),
-                    })
-
-            parts.append(
-                blocks.select(
-                    "first_docid", "docid_deltas", "freqs", "doclens"
-                ).mapInPandas(decode, schema="docid long, s long")
+        parts = [
+            self._decode_score(
+                self.postings.filter(F.col("term") == t),
+                _MicroScorer(factory(self, stats[t], mu, jm_lambda)),
             )
+            for t in terms
+            if t in stats
+        ]
         if not parts:
-            return self.spark.createDataFrame(
-                [], "docid long, score long"
-            )
+            return self.spark.createDataFrame([], "docid long, score long")
         u = reduce(lambda a, b: a.unionAll(b), parts)
         agg = u.groupBy("docid").agg(
-            F.sum("s").alias("ssum"), F.count(F.lit(1)).alias("matched")
+            F.sum("score").alias("ssum"), F.count(F.lit(1)).alias("matched")
         )
+        score = F.col("ssum")
         if similarity == "classic":
-            score = F.floor(
-                F.col("ssum") * F.col("matched") / F.lit(n_q)
-            ).cast("long")
-        else:
-            score = F.col("ssum").cast("long")
-        return self._live(agg.select("docid", score.alias("score")))
+            score = F.floor(score * F.col("matched") / F.lit(len(terms)))
+        return self._live(agg.select("docid", score.cast("long").alias("score")))
 
     def auto_stop_terms(self, max_doc_freq_frac: float = 0.4) -> set[str]:
         """QueryAutoStopWordAnalyzer analogue (Analysis/Query/
@@ -2422,9 +2406,11 @@ class Searcher:
     def explain(self, q: Query, docid: int) -> dict:
         """IndexSearcher.Explain analogue (IndexSearcher.cs Explain /
         BM25Similarity.Explain): the scoring breakdown for one (query, doc)
-        as a nested Explanation dict {value, description, details}. The
-        docid-targeted posting lookup rides the block metadata: term
-        equality + first/last docid range both push into the Parquet scan."""
+        as a nested Explanation dict {value, description, details}. A
+        term's docid-targeted posting lookup is a driver-side pyarrow read
+        whose term equality + first/last docid range both skip row groups
+        by their footer statistics, so a term, or a boolean of terms,
+        explains without a Spark job."""
         if int(docid) in self._dead:
             return {"value": 0.0, "description": f"doc {docid} is deleted", "details": []}
         q = rewrite(q)
@@ -2435,45 +2421,15 @@ class Searcher:
         return ex
 
     def _explain(self, q: Query, docid: int, stats: dict[str, TermStat]) -> dict:
-        if (
-            isinstance(q, TermQuery)
-            and q.field != "text"
-            and q.field not in self.text_fields
-        ):
-            key = _skey(q.field, q.term)
-            st = stats.get(key)
-            if st is None:
-                return {"value": 0.0, "description": f"keyword({key!r}): no match", "details": []}
-            rows = self._score_keyword_term(q, stats).filter(F.col("docid") == docid).collect()
-            if not rows:
-                return {"value": 0.0, "description": f"keyword({key!r}): no match", "details": []}
-            idf = (
-                _idf(self.maxdoc, st.df) if self.scoring == "exact_int" else float(st.idf)
-            )
-            return {
-                "value": float(rows[0]["score"]),
-                "description": f"weight(keyword={key!r} in {docid}) [norms omitted: score = boost*idf]",
-                "details": [
-                    {"value": idf, "description": f"idf(docFreq={st.df}, maxDocs={self.maxdoc})", "details": []},
-                ],
-            }
         if isinstance(q, TermQuery):
             key = _skey(q.field, q.term)
             st = stats.get(key)
-            if st is None:
-                return {"value": 0.0, "description": f"term({key!r}): no match", "details": []}
             cols = ("freqs", "norm_bytes", "doclens")
-            pdf = (
-                self.postings.filter(
-                    (F.col("term") == key)
-                    & (F.col("first_docid") <= docid)
-                    & (F.col("last_docid") >= docid)
-                )
-                .select("first_docid", "docid_deltas", *cols)
-                .toPandas()
-            )
+            # the doc's posting entry, read on the driver from the blocks
+            # whose docid range holds it
             entry = None
-            for _, docids, _, flat in _decode_blocks([pdf], *cols):
+            blocks = [] if st is None else self._seek_blocks(key, list(cols), docid)
+            for _, docids, _, flat in _decode_blocks(blocks, *cols):
                 hit = np.flatnonzero(docids == docid)
                 if len(hit):
                     entry = [int(flat[c][hit[0]]) for c in cols]
@@ -2483,29 +2439,34 @@ class Searcher:
             # the search path's own scorer, so value == score (boost included)
             sc = _BM25Scorer(self, q.field, [st], q.boost)
             value = float(sc([tf], [doclen if sc.exact else norm_byte])[0])
-            if sc.exact:
-                idf = _idf(self.maxdoc, st.df)
-                norm_detail = {"value": doclen, "description": "exact doclen", "details": []}
-                avgdl = sc.avgdl
-            else:
-                idf = float(st.idf)
-                norm_detail = {
-                    "value": norm_byte,
-                    "description": f"norm byte (quantized doclen {doclen})",
-                    "details": [],
-                }
-                avgdl = float(self.avgdl if q.field == "text" else np.float32(sc.avgdl))
+            idf = _idf(self.maxdoc, st.df) if sc.exact else float(st.idf)
             details = [
-                {"value": float(idf), "description": f"idf(docFreq={st.df}, maxDocs={self.maxdoc})", "details": []},
-                {"value": tf, "description": "termFreq", "details": []},
-                norm_detail,
-                {"value": avgdl, "description": "avgFieldLength", "details": []},
+                {"value": idf, "description": f"idf(docFreq={st.df}, maxDocs={self.maxdoc})", "details": []},
             ]
+            if sc.keyword:
+                what = "norms omitted: score = boost*idf"
+            else:
+                what = f"BM25 k1={self.k1d} b={self.bd}"
+                if sc.exact:
+                    norm_detail = {"value": doclen, "description": "exact doclen", "details": []}
+                    avgdl = sc.avgdl
+                else:
+                    norm_detail = {
+                        "value": norm_byte,
+                        "description": f"norm byte (quantized doclen {doclen})",
+                        "details": [],
+                    }
+                    avgdl = float(self.avgdl if q.field == "text" else np.float32(sc.avgdl))
+                details += [
+                    {"value": tf, "description": "termFreq", "details": []},
+                    norm_detail,
+                    {"value": avgdl, "description": "avgFieldLength", "details": []},
+                ]
             if q.boost != 1.0:
                 details.append({"value": float(q.boost), "description": "boost", "details": []})
             return {
                 "value": value,
-                "description": f"weight(term={key!r} in {docid}) [BM25 k1={self.k1d} b={self.bd}]",
+                "description": f"weight(term={key!r} in {docid}) [{what}]",
                 "details": details,
             }
         if isinstance(q, BooleanQuery):

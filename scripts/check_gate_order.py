@@ -18,13 +18,14 @@ from __future__ import annotations
 
 import importlib.util
 import inspect
+import os
 import re
 import subprocess
 import sys
 import tempfile
 
 GATE_CAP = 50
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _round_base_ref() -> str:

@@ -2,14 +2,10 @@
 TestCJKAnalyzer.cs / TestCJKBigramFilter.cs / TestCJKWidthFilter.cs
 (Cjk/CJKAnalyzer.cs:40, CJKBigramFilter.cs, CJKWidthFilter.cs)."""
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from lucenenet_spark.analysis.analyzer import analyzer_for  # noqa: E402
-from lucenenet_spark.analysis.cjk import (  # noqa: E402
+from lucenenet_spark.analysis.analyzer import analyzer_for
+from lucenenet_spark.analysis.cjk import (
     CJK_STOP_WORDS,
     CJKAnalyzer,
     cjk_bigrams,

@@ -2,13 +2,9 @@
 min-label propagation over an undirected pair graph — chains collapse
 transitively, components stay separate, convergence cap raises."""
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from __spark_entry__ import cc_labels  # noqa: E402
+from __spark_entry__ import cc_labels
 
 
 def _labels(spark, edges):

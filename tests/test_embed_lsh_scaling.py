@@ -7,14 +7,10 @@ Verified empirically: quadrupling a random corpus must grow candidates by
 ~4x, not ~16x.
 """
 
-import sys
-
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entrymod  # noqa: E402
+import __spark_entry__ as entrymod
 
 
 def _rand_emb(spark, n, seed):

@@ -3,15 +3,11 @@ subset of __spark_entry__ queries vs their DuckDB oracles at sf0.001.
 (The full 33-query sweep is scripts/check_entry.py / the driver's
 CORRECTNESS_r{N}.json.)"""
 
-import sys
-
 import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entrymod  # noqa: E402
+import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = (

@@ -9,9 +9,6 @@ import pytest
 
 
 def test_band_rows_scale_rule():
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from __spark_entry__ import _MINHASH_PERMS, _minhash_band_rows
 
     assert _MINHASH_PERMS == 128
@@ -43,9 +40,6 @@ def mini_sf(spark, tmp_path_factory):
 
 
 def test_exact_dup_always_candidate_disjoint_never(spark, mini_sf):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from __spark_entry__ import q_dd_minhash_lsh
 
     pairs = {(r["a"], r["b"]) for r in q_dd_minhash_lsh(spark, mini_sf).collect()}
@@ -59,9 +53,6 @@ def test_exact_dup_always_candidate_disjoint_never(spark, mini_sf):
 def test_recall_drops_when_rows_per_band_grow(spark, mini_sf):
     """Band-shape semantics: larger r makes collisions stricter — the
     candidate set at r=8 is a subset of the candidate set at r=2."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from __spark_entry__ import q_dd_minhash_lsh
 
     loose = {(r["a"], r["b"]) for r in q_dd_minhash_lsh(spark, mini_sf, band_rows=2).collect()}

@@ -9,17 +9,14 @@ The storage crash-injection tests of this round live in test_storage.py.
 """
 
 import os
-import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entrymod  # noqa: E402
-from lucenenet_spark.index import IndexConfig, build_index  # noqa: E402
-from lucenenet_spark.query.ast import PhraseQuery  # noqa: E402
-from lucenenet_spark.query.engine import Searcher  # noqa: E402
+import __spark_entry__ as entrymod
+from lucenenet_spark.index import IndexConfig, build_index
+from lucenenet_spark.query.ast import PhraseQuery
+from lucenenet_spark.query.engine import Searcher
 
 CFG = IndexConfig(num_partitions=4, bucket_width=2, flush_docs=64)
 

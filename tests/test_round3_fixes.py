@@ -16,27 +16,24 @@ The crashed-delete-op test of this round lives in test_storage.py.
 import json
 import math
 import os
-import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entrymod  # noqa: E402
-from lucenenet_spark.data.pages import pages_spark_df  # noqa: E402
-from lucenenet_spark.index import (  # noqa: E402
+import __spark_entry__ as entrymod
+from lucenenet_spark.data.pages import pages_spark_df
+from lucenenet_spark.index import (
     IndexConfig,
     IndexStorage,
     append_index,
     build_index,
 )
-from lucenenet_spark.index.builder import next_docid_base  # noqa: E402
-from lucenenet_spark.index.storage import COMMIT_MARKER  # noqa: E402
-from lucenenet_spark.query.ast import PrefixQuery  # noqa: E402
-from lucenenet_spark.query.engine import Searcher  # noqa: E402
+from lucenenet_spark.index.builder import next_docid_base
+from lucenenet_spark.index.storage import COMMIT_MARKER
+from lucenenet_spark.query.ast import PrefixQuery
+from lucenenet_spark.query.engine import Searcher
 
 CFG = IndexConfig(num_partitions=4, bucket_width=2, flush_docs=64)
 
@@ -114,8 +111,8 @@ def test_append_docid_base_pre_format3_fallback(spark, tmp_path):
 
 def test_scored_rewrite_keyword_field_norms_omitted(spark, tmp_path):
     """PrefixQuery(field='lang', rewrite_method='scoring_boolean') must score
-    every match boost*idf — identical to the constant _score_keyword_term
-    contract — regardless of the doc's text length."""
+    every match boost*idf — the same norms-omitted score a keyword-field
+    TermQuery gets — regardless of the doc's text length."""
     out = str(tmp_path / "idx")
     # texts of wildly different lengths so a norms leak would separate scores
     rows = []

@@ -10,14 +10,10 @@
   postings (span trees are single-field, SpanNearQuery.cs:56).
 """
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from lucenenet_spark.index import IndexConfig, build_index  # noqa: E402
-from lucenenet_spark.query.ast import (  # noqa: E402
+from lucenenet_spark.index import IndexConfig, build_index
+from lucenenet_spark.query.ast import (
     BooleanQuery,
     ConstantScoreQuery,
     MatchAllDocsQuery,
@@ -26,7 +22,7 @@ from lucenenet_spark.query.ast import (  # noqa: E402
     SpanNearQuery,
     TermQuery,
 )
-from lucenenet_spark.query.engine import Searcher, _df_bounded  # noqa: E402
+from lucenenet_spark.query.engine import Searcher, _df_bounded
 
 
 # --------------------------------------------------------------------- #

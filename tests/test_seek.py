@@ -136,8 +136,9 @@ def _rows(df):
 
 
 def _types(df):
-    """Column names and types. Nullability is left out: the Spark path's
-    own flags vary by shape (a keyword term's literal score is non-null)."""
+    """Column names and types. Nullability is left out: the driver's local
+    relation marks every column nullable, the Spark path's ``rank`` (a
+    ``row_number``) is non-null."""
     return [(f.name, f.dataType) for f in df.schema]
 
 
@@ -263,6 +264,36 @@ def test_explain_deleted_doc_launches_no_job(spark, searchers):
     assert 7 in s._dead  # the fixture's first delete op tombstones docid 7
     ex, jobs = _jobs(spark, lambda: s.explain(QUERIES["term"], 7))
     assert jobs == 0 and ex["value"] == 0.0 and "deleted" in ex["description"]
+
+
+def test_explain_launches_no_job(spark, searchers):
+    """explain reads a term's posting entry on the driver, for text, extra
+    text and keyword fields alike, so a term or a boolean of terms
+    explains without a Spark job, to the doc's search score."""
+    text, title, kind = T("data"), T("index", field="title"), T("k1", field="kind")
+    queries = [text, title, kind, BooleanQuery.build(must=[text, kind], should=[title])]
+    for mode in MODES:
+        s = searchers[("composite", mode)]
+        hits = s.search(BooleanQuery.build(must=[text, title, kind]), 1).collect()
+        assert hits, mode
+        doc = hits[0]["docid"]
+        assert doc not in s._dead
+        for q in queries:
+            ex, jobs = _jobs(spark, lambda: s.explain(q, doc))
+            score = {r["docid"]: r["score"] for r in s.search(q, 1000).collect()}[doc]
+            assert jobs == 0 and ex["value"] == score, (mode, q)
+
+
+def test_spark_path_schema_same_for_keyword_and_text_terms(searchers):
+    """On the Spark path a keyword term and a text term return the same
+    result schema, nullability flags included: both score through the
+    term kernel."""
+    for mode in MODES:
+        s = searchers[("base", mode)]
+        with _on_spark():
+            keyword = s.search(QUERIES["term_keyword"], 10).schema
+            text = s.search(QUERIES["term"], 10).schema
+        assert keyword == text, mode
 
 
 # ------------------------------------------------- randomized query trees #
