@@ -2636,11 +2636,13 @@ def q_ft_dismax_fields(spark, sf_dir):
 
 
 def q_ft_search_batch(spark, sf_dir):
-    """Batched multi-query search (TopDocs-per-query in ONE Spark job —
+    """Batched multi-query search (TopDocs per query —
     Searcher.search_batch, the mixed-stream throughput lever priced in
-    BENCH): two query shapes resolve their term stats in one metadata
-    lookup and run as one DAG; output is the union of per-query top-5s
-    keyed by query_id. Oracle = union of the per-query oracles."""
+    BENCH): two query shapes resolve their term stats in one driver-side
+    lookup; df-bounded queries like these are answered on the driver with
+    no Spark job, and the rest would union on as Spark branches. Output is
+    the union of per-query top-5s keyed by query_id. Oracle = union of the
+    per-query oracles."""
     s = _searcher(spark, sf_dir)
     res = s.search_batch(
         {"q_data": TermQuery("data"), "q_join_row": PhraseQuery(("join", "row"))},
@@ -3952,122 +3954,6 @@ def q_txt_unigram_surprisal(spark, sf_dir):
     )
 
 
-def q_mm_meta(spark, sf_dir):
-    """Multimodal column plumbing: opaque binary payload + typed metadata
-    (byte length, sha256) — the schema/partitioning layer under any
-    decode/feature-extract UDF."""
-    d = _docs(spark, sf_dir).select("doc_id", F.col("text").cast("binary").alias("blob"))
-    return d.select(
-        "doc_id",
-        F.length("blob").cast("long").alias("n_bytes"),
-        F.sha2("blob", 256).alias("sha"),
-    ).orderBy("doc_id")
-
-
-def q_mm_decode_stub(spark, sf_dir):
-    """Multimodal decode pipeline over mapInPandas: Arrow-batched binary
-    column -> (width, height, n_frames) features. The decoder itself is a
-    STUB (deterministic arithmetic on the byte length — image/audio libs are
-    not in this container); the Spark plumbing (schema, batching, UDF
-    signature) is the real production path."""
-    import pandas as pd  # noqa: PLC0415
-
-    d = _docs(spark, sf_dir).select("doc_id", F.col("text").cast("binary").alias("blob"))
-
-    def decode(batches):
-        for pdf in batches:
-            n = pdf["blob"].map(len)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": 16 + (n % 97),
-                    "height": 16 + (n * 31 % 89),
-                    "n_frames": 1 + (n % 7),
-                }
-            )
-
-    return d.mapInPandas(
-        decode, schema="doc_id long, width long, height long, n_frames long"
-    ).orderBy("doc_id")
-
-
-def q_mm_frame_sample(spark, sf_dir):
-    """Multimodal frame sampling over ``mapInPandas``: every 2nd frame of
-    the (stubbed) decoded stream becomes its own output row with a
-    deterministic frame signature — the Arrow-batched explode shape a real
-    video pipeline uses (decode is the same honest stub as mm_decode_stub:
-    frame count derived from byte length; media libs absent here)."""
-    import hashlib as _hl  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    d = _docs(spark, sf_dir).select("doc_id", F.col("text").cast("binary").alias("blob"))
-
-    import numpy as np  # noqa: PLC0415
-
-    def sample(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # vectorized explode: np.repeat doc rows by their kept-frame
-            # count, flat arange minus per-doc start offsets gives the
-            # 0,2,4,... frame indices — no per-row Python loop; only the
-            # per-item hash calls remain (irreducibly per-value)
-            lens = pdf["blob"].map(len).to_numpy(np.int64)
-            n_frames = 1 + (lens % 7)
-            n_out = (n_frames + 1) // 2  # frames 0,2,4,...
-            doc_ids = np.repeat(pdf["doc_id"].to_numpy(np.int64), n_out)
-            starts = np.concatenate([[0], np.cumsum(n_out)[:-1]])
-            fi = (np.arange(int(n_out.sum())) - np.repeat(starts, n_out)) * 2
-            shas = np.array(
-                [_hl.sha256(bytes(b)).hexdigest() for b in pdf["blob"]], dtype=object
-            )
-            sigs = [
-                _hl.md5(f"{s}:{f}".encode()).hexdigest()
-                for s, f in zip(np.repeat(shas, n_out), fi)
-            ]
-            yield pd.DataFrame(
-                {"doc_id": doc_ids, "frame_idx": fi, "frame_sig": sigs}
-            )
-
-    return d.mapInPandas(
-        sample, schema="doc_id long, frame_idx long, frame_sig string"
-    ).orderBy("doc_id", "frame_idx")
-
-
-def q_mm_resize_stub(spark, sf_dir):
-    """Multimodal resize-to-thumbnail stub over ``mapInPandas``: source
-    dimensions from the deterministic decode stub, fixed 32x32 target,
-    integer-micro scale factors — the schema/batching layer of an image
-    resize stage (the pixel work is the stub; the Spark plumbing is real)."""
-    import pandas as pd  # noqa: PLC0415
-
-    d = _docs(spark, sf_dir).select("doc_id", F.col("text").cast("binary").alias("blob"))
-
-    def resize(batches):
-        for pdf in batches:
-            n = pdf["blob"].map(len)
-            w = 16 + (n % 97)
-            h = 16 + (n * 31 % 89)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": w,
-                    "height": h,
-                    "out_w": 32,
-                    "out_h": 32,
-                    "scale_x_x1m": (32.0 * 1000000.0 / w + 0.5).astype("int64"),
-                    "scale_y_x1m": (32.0 * 1000000.0 / h + 0.5).astype("int64"),
-                }
-            )
-
-    return d.mapInPandas(
-        resize,
-        schema="doc_id long, width long, height long, out_w long, out_h long, "
-        "scale_x_x1m long, scale_y_x1m long",
-    ).orderBy("doc_id")
-
-
 _LANG_MARKERS = {
     "de": ("der", "die", "das", "und"),
     "en": ("the", "of", "with", "this"),
@@ -4148,40 +4034,6 @@ def q_txt_quality_ratios(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-# ---- relational module analogues (Join / faceting over other tables) ------ #
-
-
-def q_rel_join_customers(spark, sf_dir):
-    """Join module (JoinUtil.cs:29): query-time join on a key column —
-    top-10 customers by order count (broadcast the small dim side)."""
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    customer = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-    agg = orders.groupBy("o_custkey").agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
-    cust = customer.select("c_custkey", "c_name")
-    top = (
-        agg.join(F.broadcast(cust), agg["o_custkey"] == cust["c_custkey"])
-        .select(F.col("c_custkey").cast("long").alias("c_custkey"), "c_name", "n_orders")
-        .orderBy(F.desc("n_orders"), F.asc("c_custkey"))
-        .limit(10)
-    )
-    return top
-
-
-def q_rel_facet_events(spark, sf_dir):
-    """Faceting over the events table: counts + integer-cent value sums per
-    event_type (DrillDownQuery-style category rollup)."""
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return (
-        ev.withColumn("cents", F.floor(F.col("value") * 100.0 + 0.5).cast("long"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("cents").cast("long").alias("sum_cents"),
-        )
-        .orderBy("event_type")
-    )
-
-
 # --------------------------------------------------------------------------- #
 # registry
 # --------------------------------------------------------------------------- #
@@ -4218,6 +4070,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ft_percolate": q_ft_percolate,
         "ft_classic_tfidf": q_ft_classic_tfidf,
         "ft_lm_dirichlet": q_ft_lm_dirichlet,
+        "ft_search_batch": q_ft_search_batch,
         "ft_lm_jm": q_ft_lm_jm,
         "ft_dfr_ineb2": q_ft_dfr_ineb2,
         "dd_exact_substring": q_dd_exact_substring,
@@ -4292,7 +4145,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ft_group_count": q_ft_group_count,
         "pipe_chunk_sliding": q_pipe_chunk_sliding,
         "ft_fuzzy_suggest": q_ft_fuzzy_suggest,
-        "ft_search_batch": q_ft_search_batch,
         "ft_join_scores": q_ft_join_scores,
         "ft_facet_ts_range": q_ft_facet_ts_range,
         "txt_decontam": q_txt_decontam,
@@ -4302,17 +4154,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ft_recency_boost": q_ft_recency_boost,
         "ft_boosting": q_ft_boosting,
         "ft_drilldown": q_ft_drilldown,
-        "mm_resize_stub": q_mm_resize_stub,
         "txt_langid_ngram": q_txt_langid_ngram,
         "txt_token_bpe": q_txt_token_bpe,
         "txt_quality_ratios": q_txt_quality_ratios,
-        "rel_join_customers": q_rel_join_customers,
-        "rel_facet_events": q_rel_facet_events,
         "ft_ts_range": q_ft_ts_range,
         "ft_sort_by_ts": q_ft_sort_by_ts,
         "ft_highlight_multi": q_ft_highlight_multi,
         "ann_lsh_multiprobe": q_ann_lsh_multiprobe,
-        "mm_frame_sample": q_mm_frame_sample,
         "ft_term_topk": q_ft_term_topk,
         "ft_bool_and": q_ft_bool_and,
         "ft_bool_or": q_ft_bool_or,
@@ -4323,8 +4171,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ft_prefix": q_ft_prefix,
         "ft_wildcard": q_ft_wildcard,
         "ft_fuzzy": q_ft_fuzzy,
-        "mm_meta": q_mm_meta,
-        "mm_decode_stub": q_mm_decode_stub,
         "dd_exact": q_dd_exact,
         "ann_cosine_topk": q_ann_cosine_topk,
     }
@@ -6922,36 +6768,6 @@ WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) %
 ORDER BY doc_id
 """
 
-    o["mm_meta"] = (
-        "SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, "
-        "sha256(text) AS sha FROM documents ORDER BY doc_id"
-    )
-
-    o["mm_decode_stub"] = (
-        "WITH d AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents) "
-        "SELECT doc_id, CAST(16 + (n % 97) AS BIGINT) AS width, "
-        "CAST(16 + (n * 31 % 89) AS BIGINT) AS height, "
-        "CAST(1 + (n % 7) AS BIGINT) AS n_frames FROM d ORDER BY doc_id"
-    )
-
-    o["mm_frame_sample"] = (
-        "WITH d AS (SELECT doc_id, octet_length(encode(text)) AS n, sha256(text) AS sha FROM documents), "
-        "f AS (SELECT doc_id, sha, unnest(range(0, 1 + (n % 7), 2)) AS frame_idx FROM d) "
-        "SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx, "
-        "md5(sha || ':' || CAST(frame_idx AS VARCHAR)) AS frame_sig "
-        "FROM f ORDER BY doc_id, frame_idx"
-    )
-
-    o["mm_resize_stub"] = (
-        "WITH d AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents) "
-        "SELECT doc_id, CAST(16 + (n % 97) AS BIGINT) AS width, "
-        "CAST(16 + (n * 31 % 89) AS BIGINT) AS height, "
-        "CAST(32 AS BIGINT) AS out_w, CAST(32 AS BIGINT) AS out_h, "
-        "CAST(floor(32.0 * 1000000.0 / (16 + (n % 97)) + 0.5) AS BIGINT) AS scale_x_x1m, "
-        "CAST(floor(32.0 * 1000000.0 / (16 + (n * 31 % 89)) + 0.5) AS BIGINT) AS scale_y_x1m "
-        "FROM d ORDER BY doc_id"
-    )
-
     o["txt_langid_ngram"] = f"""
 WITH d AS (SELECT doc_id, {_TOKS_DUCK} AS toks FROM documents),
 h AS (
@@ -6991,13 +6807,6 @@ SELECT doc_id,
 FROM d WHERE len(toks) > 0 ORDER BY doc_id
 """
 
-    o["rel_join_customers"] = (
-        "WITH a AS (SELECT o_custkey, count(*)::BIGINT AS n_orders FROM orders GROUP BY o_custkey) "
-        "SELECT CAST(c.c_custkey AS BIGINT) AS c_custkey, c.c_name, a.n_orders "
-        "FROM a JOIN customer c ON a.o_custkey = c.c_custkey "
-        "ORDER BY a.n_orders DESC, c.c_custkey ASC LIMIT 10"
-    )
-
     # The Spark side REALLY runs wrap -> extract and counts byte-identical
     # round-trips; the oracle states the invariant the input_hint promises
     # (every row's extracted text is byte-identical): n_exact == n_docs.
@@ -7033,12 +6842,6 @@ SELECT source, count(*)::BIGINT AS cnt FROM sel GROUP BY source ORDER BY source
         "(s0.doc_id % 100000) >= 65000 THEN 3 ELSE 1 END) AS BIGINT) AS score "
         "FROM s0) "
         + _TOPK_TAIL.format(k=10)
-    )
-
-    o["rel_facet_events"] = (
-        "SELECT event_type, count(*)::BIGINT AS n, "
-        "CAST(sum(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents "
-        "FROM events GROUP BY event_type ORDER BY event_type"
     )
 
     # r5: the float32 Lucene scoring battery finally gets a REAL SQL

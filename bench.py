@@ -11,7 +11,7 @@ Two build measurements:
 - the sf documents table (what the correctness queries run on), and
 - a synthetic Common-Crawl-style ``pages`` corpus (SPARK_GRAFT_BENCH_SYNTH_DOCS,
   default 50_000, seed 42) — the north-rule indexing path at a size where
-  per-doc cost, not fixed overhead, dominates. Used by scripts/scaling_bench.py
+  per-doc cost, not fixed overhead, dominates. Used by scripts/scaling.py
   for the N-vs-4N-cores scaling-efficiency evidence.
 """
 
@@ -47,8 +47,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     # SPARK_GRAFT_MASTER overrides the master URL (e.g. a localhost
-    # standalone cluster, spark://127.0.0.1:7077) — scripts/scaling_cluster.py
-    # uses this to run the SAME bench job on N separate 1-core executor
+    # standalone cluster, spark://127.0.0.1:7077) — scripts/scaling.py
+    # passes it through to run the SAME bench job on N separate 1-core executor
     # JVMs instead of N threads in one JVM. cpus then means spark.cores.max
     # (the executor count at 1 core each).
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -121,7 +121,7 @@ def main() -> None:
         m = synth.count()  # materialize input so build timing excludes synthesis
         # build twice; time the warm run (first run pays one-time JVM codegen
         # + Python-worker fork costs that a long-lived cluster amortizes away)
-        # pid-suffixed output: concurrent control jobs (scaling_control.py
+        # pid-suffixed output: concurrent control jobs (scaling.py --control
         # runs four bench.py processes at once) must not race on the dir
         synth_dir = f"/tmp/lucenenet_spark_bench_synth_{os.getpid()}"
         build_index(spark, synth, synth_dir, cfg, overwrite=True)

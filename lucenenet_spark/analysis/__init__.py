@@ -10,8 +10,6 @@ from .analyzer import (
     StandardAnalyzer,
     StopAnalyzer,
     WhitespaceAnalyzer,
-    analyze_series,
-    tokenize_series,
 )
 
 __all__ = [
@@ -26,6 +24,4 @@ __all__ = [
     "StandardAnalyzer",
     "StopAnalyzer",
     "WhitespaceAnalyzer",
-    "analyze_series",
-    "tokenize_series",
 ]

@@ -554,71 +554,17 @@ def analyzer_for(
     raise ValueError(f"unknown analyzer chain {name!r}")
 
 
-def tokenize_series(texts: pd.Series, analyzer: StandardAnalyzer = _DEFAULT) -> pd.Series:
-    """Vectorized tokenize (no stop filter) -> Series of list[str]."""
-    return texts.fillna("").map(analyzer.tokenize)
-
-
-def analyze_flat(
-    texts: pd.Series, analyzer: StandardAnalyzer = _DEFAULT
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized full chain over a batch, FLAT output (the shape the
-    inversion kernel wants):
-
-    returns ``(tokens, doc_idx, positions, doclens)`` where tokens/doc_idx/
-    positions are aligned flat arrays over all surviving tokens of the batch
-    (doc_idx = 0-based row index into ``texts``; positions = pre-stop-filter
-    token index within the doc, matching :meth:`StandardAnalyzer.analyze`)
-    and doclens[i] = post-stop token count of row i (0 for empty docs).
-
-    Semantics are identical to ``analyze()`` row-by-row (asserted by
-    tests/test_analyzer.py); the difference is that every per-token step —
-    explode, position numbering, stop/length filtering — runs inside
-    pandas/numpy C loops instead of per-row Python. This is the indexing
-    hot path (DocInverterPerField analogue, DocInverterPerField.cs:150-197).
-    """
-    n = len(texts)
-    s = texts.fillna("").str.lower()
-    s.index = pd.RangeIndex(n)
-    tok_lists = s.str.findall(analyzer._pattern)
-    flat = tok_lists.explode().dropna()
-    if len(flat) == 0:
-        empty_o = np.array([], dtype=object)
-        empty_i = np.array([], dtype=np.int64)
-        return empty_o, empty_i, empty_i, np.zeros(n, dtype=np.int64)
-    # 255-char cap first (tokenize() drops overlong tokens before numbering)
-    flat = flat[flat.str.len() <= analyzer.max_token_length]
-    doc_idx_all = flat.index.to_numpy(np.int64)
-    # pre-stop position = rank within doc after the cap filter
-    pos_all = flat.groupby(level=0).cumcount().to_numpy(np.int64)
-    keep = ~flat.isin(analyzer.stop_words).to_numpy()
-    tokens = flat.to_numpy(dtype=object)[keep]
-    doc_idx = doc_idx_all[keep]
-    positions = pos_all[keep]
-    if arrow_fast_path_for(analyzer) and len(tokens):
-        tf_codes, tf_uniq = pd.factorize(tokens)
-        tf = analyzer.term_filter_unique(np.asarray(tf_uniq, dtype=object))
-        if tf is not None:
-            tokens = np.asarray(tf, dtype=object)[tf_codes]
-    doclens = np.zeros(n, dtype=np.int64)
-    if len(doc_idx):
-        uniq, cnt = np.unique(doc_idx, return_counts=True)
-        doclens[uniq] = cnt
-    return tokens, doc_idx, positions, doclens
-
-
 def analyze_flat_arrow(
     texts, analyzer: StandardAnalyzer = _DEFAULT, encode: bool = True
 ) -> tuple:
     """Arrow-native full analysis chain — the indexing hot path at scale.
 
-    Same semantics as :func:`analyze_flat` (asserted by tests) but tokens
-    never become Python objects: tokenize/lower/filter run inside pyarrow
-    compute (C++, re2), and the term dictionary comes from
-    ``dictionary_encode`` so only the UNIQUE terms of the batch materialize
-    as Python strings. This removes the per-token allocation churn that
-    capped multi-core scaling of the pandas path (memory-allocator bound,
-    not CPU bound).
+    Same semantics as :meth:`StandardAnalyzer.analyze` row by row (asserted
+    by tests) but tokens never become Python objects: tokenize/lower/filter
+    run inside pyarrow compute (C++, re2), and the term dictionary comes
+    from ``dictionary_encode`` so only the UNIQUE terms of the batch
+    materialize as Python strings. Per-token Python objects make indexing
+    memory-allocator bound, not CPU bound, and cap multi-core scaling.
 
     ``texts``: pa.Array/ChunkedArray of strings (nulls = empty docs).
 
@@ -785,17 +731,3 @@ def _analyze_flat_generic(texts, analyzer: StandardAnalyzer, encode: bool) -> tu
         return e, np.array([], dtype=object), e, e, doclens
     codes, uniques = pd.factorize(np.asarray(toks, dtype=object), sort=True)
     return codes.astype(np.int64), uniques, di, po, doclens
-
-
-def analyze_series(
-    texts: pd.Series, analyzer: StandardAnalyzer = _DEFAULT
-) -> tuple[pd.Series, pd.Series, np.ndarray]:
-    """Vectorized full chain -> (tokens, positions, field_len) aligned Series.
-
-    field_len is the post-stop token count used for the norm byte.
-    """
-    analyzed = texts.fillna("").map(analyzer.analyze)
-    tokens = analyzed.map(lambda a: a.tokens)
-    positions = analyzed.map(lambda a: a.positions)
-    lengths = np.fromiter((len(a.tokens) for a in analyzed), dtype=np.int64, count=len(analyzed))
-    return tokens, positions, lengths

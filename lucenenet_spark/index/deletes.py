@@ -139,13 +139,3 @@ def delete_by_query(spark: SparkSession, index_dir: str, query) -> dict:
 
     s = Searcher(spark, index_dir)
     return delete_docs(spark, index_dir, s.score_df(query).select("docid"))
-
-
-def clear_tombstones(index_dir: str) -> None:
-    """Drop all delete ops — called by compaction AFTER the physical apply
-    is published (the tombstones are then redundant)."""
-    import shutil
-
-    base = tombstone_dir(index_dir)
-    if os.path.isdir(base):
-        shutil.rmtree(base)

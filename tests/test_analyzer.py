@@ -1,6 +1,4 @@
-import pandas as pd
-
-from lucenenet_spark.analysis import ENGLISH_STOP_WORDS, StandardAnalyzer, analyze_series
+from lucenenet_spark.analysis import ENGLISH_STOP_WORDS, StandardAnalyzer
 
 
 def test_stopword_set_is_the_reference_33():
@@ -40,42 +38,10 @@ def test_apostrophe_splits():
     assert a.tokenize("water'd heaven") == ["water", "d", "heaven"]
 
 
-def test_analyze_series_vectorized():
-    toks, poss, lens = analyze_series(pd.Series(["the tiger", None, "of to and", "heart beat"]))
-    assert list(toks) == [["tiger"], [], [], ["heart", "beat"]]
-    assert list(lens) == [1, 0, 0, 2]
-    assert list(poss) == [[1], [], [], [0, 1]]
-
-
 def test_unicode_tokens():
     a = StandardAnalyzer()
     # IDEOGRAPHIC class (StandardTokenizer.cs:84-102): one token per Han char
     assert a.tokenize("Köln Zürich 北京 data") == ["köln", "zürich", "北", "京", "data"]
-
-
-def test_analyze_flat_equivalent_to_analyze():
-    from lucenenet_spark.analysis.analyzer import analyze_flat
-    import numpy as np
-    import random
-
-    rng = random.Random(7)
-    vocab = ["the", "tiger", "of", "Data", "X" * 256, "forest", "a", "Köln", "42"]
-    texts = []
-    for _ in range(50):
-        n = rng.randint(0, 12)
-        texts.append(" ".join(rng.choice(vocab) for _ in range(n)))
-    texts += [None, "", "   ", "the of and to"]
-    s = pd.Series(texts)
-    a = StandardAnalyzer()
-    tokens, doc_idx, positions, doclens = analyze_flat(s, a)
-    # reassemble per-doc and compare to the row-at-a-time reference chain
-    for i, t in enumerate(texts):
-        ref = a.analyze(t or "")
-        m = doc_idx == i
-        assert list(tokens[m]) == ref.tokens, f"doc {i}"
-        assert list(positions[m]) == ref.positions, f"doc {i}"
-        assert doclens[i] == len(ref.tokens)
-    assert doclens.sum() == len(tokens)
 
 
 def test_analyze_flat_arrow_equivalent_to_analyze():
