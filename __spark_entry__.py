@@ -27,11 +27,13 @@ caller-supplied docids (= doc_id) so the oracle can name them.
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import math
 import numpy as np
 import os
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -63,7 +65,9 @@ from lucenenet_spark.query.engine import Searcher
 # --------------------------------------------------------------------------- #
 
 _INDEX_ROOT = "/tmp/lucenenet_spark_entry_index"
-_SEARCHERS: dict[str, Searcher] = {}
+#: every open registry searcher: _index_searcher's, keyed by (sf_dir
+#: basename, index tag), and ft_lucene_rank's float32 one
+_SEARCHERS: dict = {}
 
 _ENTRY_CONFIG = IndexConfig(
     num_partitions=16,
@@ -135,18 +139,32 @@ def _entry_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _searcher(spark: SparkSession, sf_dir: str) -> Searcher:
+def _index_searcher(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    cfg: IndexConfig,
+    pages: Callable[[SparkSession, str], DataFrame],
+) -> Searcher:
+    """The registry's one index fixture: the index ``tag`` over
+    ``sf_dir``, built from ``pages(spark, sf_dir)`` under ``cfg`` on first
+    use (resuming a build already on disk) and opened in exact_int
+    scoring. The main index (tag "") lives at ``_INDEX_ROOT/<key>``, the
+    sorted one at ``_INDEX_ROOT_sorted/<key>``, every other index at
+    ``_INDEX_ROOT/<key>_<tag>``."""
     key = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    if key in _SEARCHERS:
-        return _SEARCHERS[key]
-    idx = os.path.join(_INDEX_ROOT, key)
-    build_index(spark, _entry_pages(spark, sf_dir), idx, _ENTRY_CONFIG)  # resumes
-    s = Searcher(spark, idx, scoring="exact_int")
-    _SEARCHERS[key] = s
-    return s
+    if (key, tag) not in _SEARCHERS:
+        if tag == "sorted":
+            idx = os.path.join(_INDEX_ROOT + "_sorted", key)
+        else:
+            idx = os.path.join(_INDEX_ROOT, f"{key}_{tag}" if tag else key)
+        build_index(spark, pages(spark, sf_dir), idx, cfg)  # resumes
+        _SEARCHERS[key, tag] = Searcher(spark, idx, scoring="exact_int")
+    return _SEARCHERS[key, tag]
 
 
-_SORTED_SEARCHERS: dict[str, Searcher] = {}
+def _searcher(spark: SparkSession, sf_dir: str) -> Searcher:
+    return _index_searcher(spark, sf_dir, "", _ENTRY_CONFIG, _entry_pages)
 
 
 def _sorted_searcher(spark: SparkSession, sf_dir: str) -> Searcher:
@@ -156,19 +174,31 @@ def _sorted_searcher(spark: SparkSession, sf_dir: str) -> Searcher:
     order, so a warc_ts range filter selects one contiguous docid interval
     and posting blocks outside it are pruned by skip metadata before
     scoring (see Searcher._docid_bounds_for_filter)."""
-    import dataclasses
-
-    key = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    if key in _SORTED_SEARCHERS:
-        return _SORTED_SEARCHERS[key]
-    idx = os.path.join(_INDEX_ROOT + "_sorted", key)
     cfg = dataclasses.replace(
         _ENTRY_CONFIG, external_docids=False, sort_field="warc_ts"
     )
-    build_index(spark, _entry_pages(spark, sf_dir), idx, cfg)  # resumes
-    s = Searcher(spark, idx, scoring="exact_int")
-    _SORTED_SEARCHERS[key] = s
-    return s
+    return _index_searcher(spark, sf_dir, "sorted", cfg, _entry_pages)
+
+
+def _text_pages(docs: DataFrame, text_expr: str, *cols: str) -> DataFrame:
+    """``docs`` shaped for a single-text-field build: caller-assigned
+    docids, their urls, the SQL expression ``text_expr`` as the text and
+    the extra columns ``cols``."""
+    return docs.select(
+        F.col("doc_id").alias("docid"),
+        F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
+        F.expr(text_expr).alias("text"),
+        *cols,
+    )
+
+
+def _text_config(**changes) -> IndexConfig:
+    """_ENTRY_CONFIG without its keyword, doc-value and extra text fields
+    (a single-text-field index), plus ``changes``."""
+    return dataclasses.replace(
+        _ENTRY_CONFIG, keyword_fields=(), docvalue_fields=(), text_fields=(),
+        **changes,
+    )
 
 
 def _topk_df(s: Searcher, q, k: int = 10) -> DataFrame:
@@ -318,24 +348,16 @@ def q_ft_phrase_sloppy(spark, sf_dir):
     return _topk_df(_searcher(spark, sf_dir), q, 10)
 
 
-_LANG_SEARCHERS: dict[str, Searcher] = {}
+# --------------------------------------------------------------------------- #
+# language-routed indexes: per-DOCUMENT chain dispatch (IndexConfig
+# lang_field/lang_chains) into one term-sorted postings table per index.
+# The corpus has a FIXED 31-word vocabulary, so every route's analysis is
+# embedded in the DuckDB oracles as a finite map (DuckDB has no stemmers
+# offline); _route_guard proves each embedded map against the REAL chain
+# on every run, and the stemmers themselves are pinned by the per-pack
+# golden suites (tests/test_french.py, tests/test_russian.py, ...).
+# --------------------------------------------------------------------------- #
 
-# the FrenchLightStemmer image of the corpus's FIXED 31-word vocabulary —
-# only these 8 words change under the stem (verified per-run by the entry's
-# vocabulary guard; the stemmer itself is pinned by tests/test_french.py's
-# golden suite vs the published UniNE algorithm)
-_FR_STEM_MAP = {
-    "customer": "custom", "filter": "filt", "merge": "merg",
-    "order": "ord", "small": "smal", "table": "tabl",
-    "value": "valu", "vector": "vecto",
-}
-# analyzer_for("german", ...) (normalize + UniNE stem) image of the same vocabulary
-_DE_STEM_MAP = {
-    "customer": "custom", "filter": "filt", "line": "lin",
-    "merge": "merg", "order": "ord", "table": "tabl", "value": "valu",
-}
-# analyzer_for("spanish", ...) (UniNE stem) image of the same vocabulary
-_ES_STEM_MAP = {"merge": "merg", "table": "tabl", "value": "valu"}
 _CORPUS_VOCAB = (
     "a agg batch big column customer data dup fast filter group hash join "
     "key line merge order part query row scan slow small sort spark stream "
@@ -343,38 +365,369 @@ _CORPUS_VOCAB = (
 ).split()
 
 
-def _lang_searcher(spark, sf_dir):
-    """A THIRD index over the same corpus, built with per-document
-    language routing (IndexConfig.lang_field/lang_chains): documents with
-    lang='fr' run the analyzer_for("french", ...) chain
-    (Analysis/Fr/FrenchAnalyzer.cs:187-212 — the UniNE light stemmer,
-    FrenchLightStemmer.cs:69-350), lang='de' the German chain, lang='es'
-    the Spanish chain (Es/SpanishLightStemmer.cs:63-100), everything else
-    the default chain. ONE term-sorted postings table serves the mixed
-    corpus."""
-    import dataclasses
+class _Route(NamedTuple):
+    """One language of a routed index."""
 
-    key = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    if key in _LANG_SEARCHERS:
-        return _LANG_SEARCHERS[key]
-    cfg = dataclasses.replace(
-        _ENTRY_CONFIG, lang_field="lang",
-        # r5 adds the zh -> CJK route (Cjk/CJKAnalyzer.cs:40). The corpus's
-        # zh stratum holds ascii tokens, which the CJK bigram filter passes
-        # through untouched — so the route exercises the per-document chain
-        # dispatch (and the per-route guard proves the pass-through) while
-        # real ideographic bigramming is gated by ft_cjk_bigram's own index
-        lang_chains=(
-            ("fr", "french"), ("de", "german"), ("es", "spanish"),
-            ("zh", "cjk"),
+    #: the analyzer_for chain its documents run
+    chain: str
+    #: vocabulary word -> INDEXED term, the chain's image of word_map's
+    #: native form (identity entries omitted). For the Latin-script
+    #: stemmers that also rewrite unmapped ascii surfaces the map is the
+    #: COMPLETE chain image over the vocabulary.
+    route_map: dict[str, str]
+    #: vocabulary word -> the real inflected native form its documents are
+    #: re-spelled into (the corpus carries no native-script strata; empty
+    #: for a route that stems the ascii surface itself)
+    word_map: dict[str, str] = {}
+    #: vocabulary word whose indexed image the entry queries
+    probe: str = "table"
+
+
+class _RoutedIndex(NamedTuple):
+    """One routed index: its language column, the SQL expression (Spark
+    SQL == DuckDB dialect) that derives that column from ``documents``,
+    and its routes in chain-dispatch order."""
+
+    column: str
+    relabel: str
+    routes: dict[str, _Route]
+
+
+def _relabeled(column: str, first_src: int, routes: dict[str, _Route]):
+    """A routed index over a deterministic relabeling of the corpus: one
+    source stratum per route (src<first_src> onward), the rest 'en'."""
+    relabel = "CASE " + " ".join(
+        f"WHEN source = 'src{first_src + i}' THEN '{lang}'"
+        for i, lang in enumerate(routes)
+    ) + " ELSE 'en' END"
+    return _RoutedIndex(column, relabel, routes)
+
+
+#: index tag -> routed index. The first two route the surface vocabulary
+#: (same tokenizer and keyword/doc-value fields as the main index); the
+#: other four re-spell their routed strata word-by-word into real native
+#: words, so their stemmers do genuine morphological work on Cyrillic,
+#: Arabic-script, Devanagari, Greek, Armenian and accented Latin text.
+_ROUTED: dict[str, _RoutedIndex] = {
+    "langroute": _RoutedIndex("lang", "lang", {
+        # Analysis/Fr/FrenchAnalyzer.cs:187-212, FrenchLightStemmer.cs:69-350
+        "fr": _Route("french", {
+            "customer": "custom", "filter": "filt", "merge": "merg",
+            "order": "ord", "small": "smal", "table": "tabl",
+            "value": "valu", "vector": "vecto",
+        }),
+        # normalization FSM + UniNE stem
+        "de": _Route("german", {
+            "customer": "custom", "filter": "filt", "line": "lin",
+            "merge": "merg", "order": "ord", "table": "tabl", "value": "valu",
+        }),
+        # Es/SpanishLightStemmer.cs:63-100
+        "es": _Route("spanish", {"merge": "merg", "table": "tabl", "value": "valu"}),
+        # Cjk/CJKAnalyzer.cs:40. The zh stratum holds ascii tokens, which
+        # the CJK bigram filter passes through untouched (an empty map the
+        # guard proves); real ideographic bigramming is ft_cjk_bigram's
+        "zh": _Route("cjk", {}),
+    }),
+    # the corpus carries no pt/nl stratum: three sources relabeled each
+    "langroute2": _RoutedIndex(
+        "lang2",
+        "CASE WHEN source IN ('src0','src1','src2') THEN 'pt' "
+        "WHEN source IN ('src3','src4','src5') THEN 'nl' ELSE lang END",
+        {
+            # Pt/PortugueseAnalyzer.cs:119 (UniNE/RSLP light rules)
+            "pt": _Route("portuguese", {"merge": "merg", "table": "tabl", "value": "valu"}),
+            # Nl/DutchAnalyzer.cs:47 (Snowball Dutch)
+            "nl": _Route("dutch", {"line": "lin", "merge": "merg", "table": "tabl"}),
+        },
+    ),
+    # two sources each, disjoint from the pt/nl relabeling's src0-5
+    "langroute3": _RoutedIndex(
+        "lang3",
+        "CASE WHEN source IN ('src12','src13') THEN 'ru' "
+        "WHEN source IN ('src14','src15') THEN 'sv' "
+        "WHEN source IN ('src16','src17') THEN 'ar' "
+        "WHEN source IN ('src18','src19') THEN 'id' ELSE 'en' END",
+        {
+            "ru": _Route(  # Ru/RussianAnalyzer.cs:48
+                "russian",
+                {"table": "стол", "row": "книг", "value": "красив", "merge": "нов",
+                 "line": "лин", "data": "лошад", "filter": "длин", "order": "осен"},
+                {"table": "столами", "row": "книгами", "value": "красивый",
+                 "merge": "новая", "line": "линия", "data": "лошадь",
+                 "filter": "длинный", "order": "осенью"},
+            ),
+            "sv": _Route(  # Sv/SwedishAnalyzer.cs:120
+                "swedish",
+                {
+                    # native-form stems
+                    "table": "flick", "row": "bil", "value": "fri", "merge": "stark",
+                    "line": "rör", "data": "hus", "filter": "läs", "order": "gård",
+                    # the Swedish light stemmer also rewrites these ascii surfaces
+                    "column": "colum", "customer": "custom", "fast": "fas",
+                    "join": "joi", "part": "par", "scan": "sca", "sort": "sor",
+                    "vector": "vect",
+                },
+                {"table": "flickorna", "row": "bilarna", "value": "friheterna",
+                 "merge": "starkare", "line": "rörelse", "data": "huset",
+                 "filter": "läsande", "order": "gårdarna"},
+            ),
+            "ar": _Route(  # Ar/ArabicAnalyzer.cs:43
+                "arabic",
+                {"table": "كتاب", "row": "مكتب", "value": "مسلم", "merge": "مدرس",
+                 "line": "عرب", "data": "قلم", "filter": "بيت", "order": "مستشف"},
+                {"table": "الكتاب", "row": "مكتبات", "value": "مسلمون",
+                 "merge": "المدرسة", "line": "العربية", "data": "بالقلم",
+                 "filter": "للبيت", "order": "مستشفى"},
+            ),
+            "id": _Route(  # Id/IndonesianAnalyzer.cs:43
+                "indonesian",
+                {"table": "baca", "row": "buku", "value": "ambil", "merge": "baik",
+                 "line": "ajar", "data": "guna", "filter": "bija", "order": "jalan"},
+                {"table": "membaca", "row": "bukunya", "value": "mengambil",
+                 "merge": "terbaik", "line": "ajaran", "data": "gunakan",
+                 "filter": "kebijakan", "order": "berjalan"},
+            ),
+        },
+    ),
+    # five Latin-script morphologies plus Cyrillic, Arabic-script and
+    # Devanagari; the Unicode tokenizer's combining-mark Extend class keeps
+    # the Devanagari matras inside tokens
+    "langroute4": _relabeled("lang4", 0, {
+        "fi": _Route(  # Fi/FinnishAnalyzer.cs:120
+            "finnish",
+            {"column": "colum", "data": "dat", "fast": "fas", "join": "joi",
+             "line": "lin", "merge": "metsä", "part": "par", "row": "kirja",
+             "scan": "sca", "sort": "sor", "table": "talo", "value": "auto"},
+            {"table": "taloissa", "row": "kirjassa",
+             "value": "autollansa", "merge": "metsässä"},
         ),
-        text_fields=(),  # lang routing is incompatible with text_fields
+        "hu": _Route(  # Hu/HungarianAnalyzer.cs:120
+            "hungarian",
+            {"fast": "fas", "merge": "város", "part": "par", "row": "könyv",
+             "sort": "sor", "spark": "spar", "table": "ház", "value": "autó"},
+            {"table": "házakat", "row": "könyveket",
+             "value": "autóval", "merge": "városokban"},
+        ),
+        # da's 'table' image collides with no's, so both probe via 'row'
+        "no": _Route(  # No/NorwegianAnalyzer.cs:120
+            "norwegian",
+            {"column": "colum", "customer": "custom", "data": "dat",
+             "fast": "fas", "filter": "filt", "join": "joi", "line": "lin",
+             "merge": "les", "order": "ord", "part": "par", "row": "bil",
+             "scan": "sca", "sort": "sor", "table": "mulig", "value": "gård"},
+            {"table": "mulighetene", "row": "bilene",
+             "value": "gårdane", "merge": "lesende"},
+            probe="row",
+        ),
+        "da": _Route(  # Da/DanishAnalyzer.cs:120
+            "danish",
+            {"customer": "custom", "filter": "filt", "line": "lin",
+             "merge": "kat", "order": "ord", "row": "hund", "small": "smal",
+             "table": "mulig", "value": "bøg"},
+            {"table": "mulighederne", "row": "hundene",
+             "value": "bøgerne", "merge": "kattene"},
+            probe="row",
+        ),
+        "cs": _Route(  # Cz/CzechAnalyzer.cs:60
+            "czech",
+            {"data": "dat", "line": "lin", "merge": "matk", "query": "quer",
+             "row": "student", "table": "žen", "value": "měst"},
+            {"table": "ženami", "row": "studentovi",
+             "value": "městech", "merge": "matčin"},
+        ),
+        "bg": _Route(  # Bg/BulgarianAnalyzer.cs:55
+            "bulgarian",
+            {"merge": "мор", "row": "книг", "table": "град", "value": "студент"},
+            {"table": "градовете", "row": "книгата",
+             "value": "студентите", "merge": "морето"},
+        ),
+        "fa": _Route(  # Fa/PersianAnalyzer.cs:48
+            "persian",
+            {"merge": "موسی", "row": "مدرسه", "table": "کتاب", "value": "علی"},
+            {"table": "كتاب", "row": "مدرسة", "value": "علي", "merge": "موسى"},
+        ),
+        "hi": _Route(  # Hi/HindiAnalyzer.cs:47
+            "hindi",
+            {"merge": "आदम", "row": "लडक", "table": "किताब", "value": "कर"},
+            {"table": "किताबें", "row": "लड़कियाँ",
+             "value": "करने", "merge": "आदमियों"},
+        ),
+    }),
+    "langroute5": _relabeled("lang5", 8, {
+        "el": _Route(  # El/GreekAnalyzer.cs:40
+            "greek",
+            {"merge": "ομορφ", "row": "βιβλι", "table": "ανθρωπ", "value": "θαλασσ"},
+            {"table": "άνθρωπος", "row": "βιβλια",
+             "value": "θαλασσες", "merge": "ομορφη"},
+        ),
+        "tr": _Route(  # Tr/TurkishAnalyzer.cs:43
+            "turkish",
+            {"data": "dat", "line": "lin", "merge": "göz", "row": "okul",
+             "table": "kitap", "value": "araba"},
+            {"table": "kitaplardan", "row": "okullarda",
+             "value": "arabası", "merge": "gözler"},
+        ),
+        "ro": _Route(  # Ro/RomanianAnalyzer.cs:43
+            "romanian",
+            {"data": "dat", "line": "lin", "merge": "oraș", "row": "cas",
+             "table": "băiat", "value": "timp"},
+            {"table": "băiatului", "row": "casele",
+             "value": "timpurile", "merge": "orașul"},
+        ),
+        "lv": _Route(  # Lv/LatvianAnalyzer.cs:47
+            "latvian",
+            {"data": "dat", "line": "lin", "merge": "zal", "row": "bērn",
+             "table": "grāmat", "value": "skol"},
+            {"table": "grāmatām", "row": "bērniem",
+             "value": "skolās", "merge": "zaļais"},
+        ),
+    }),
+    "langroute6": _relabeled("lang6", 12, {
+        "ca": _Route(  # Ca/CatalanAnalyzer.cs:121
+            "catalan",
+            {"table": "forma", "row": "llibr", "value": "canc",
+             "merge": "aix", "data": "dat", "line": "lin", "vector": "vect"},
+            {"table": "formacions", "row": "llibres",
+             "value": "cançons", "merge": "això"},
+        ),
+        "eu": _Route(  # Eu/BasqueAnalyzer.cs:40
+            "basque",
+            {"table": "etxe", "row": "liburu", "value": "gizon", "merge": "mendi"},
+            {"table": "etxeak", "row": "liburuak",
+             "value": "gizonarekin", "merge": "mendietan"},
+        ),
+        "hy": _Route(  # Hy/ArmenianAnalyzer.cs:40
+            "armenian",
+            {"table": "գրք", "row": "լեզու", "value": "տուն", "merge": "մարդիկ"},
+            {"table": "գրքերը", "row": "լեզուներում",
+             "value": "տունը", "merge": "մարդիկ"},
+        ),
+        "ga": _Route(  # Ga/IrishAnalyzer.cs:48
+            "irish",
+            {"table": "caird", "row": "ceist", "value": "fuinneog", "merge": "teach"},
+            {"table": "gcairde", "row": "ceisteanna",
+             "value": "bhfuinneog", "merge": "dteach"},
+        ),
+        "gl": _Route(  # Gl/GalicianMinimalStemmer.cs:25
+            "galician",
+            {"table": "canción", "row": "animal", "value": "papel", "merge": "flor"},
+            {"table": "cancións", "row": "animais",
+             "value": "papeis", "merge": "flores"},
+        ),
+        "br": _Route(  # Br/BrazilianAnalyzer.cs:43
+            "brazilian",
+            {"table": "coraca", "row": "livr", "value": "rapid",
+             "merge": "bom", "data": "dat", "line": "lin"},
+            {"table": "corações", "row": "livrinhos",
+             "value": "rapidamente", "merge": "bons"},
+        ),
+    }),
+}
+
+
+def _word_map_case(var: str, word_map: dict[str, str]) -> str:
+    """Shared CASE expression (Spark SQL == DuckDB dialect) rewriting a
+    vocabulary token to its mapped form (identity outside the map)."""
+    cases = " ".join(f"WHEN '{k}' THEN '{v}'" for k, v in word_map.items())
+    return f"CASE {var} {cases} ELSE {var} END"
+
+
+def _respell(word_map: dict[str, str]) -> str:
+    """A document's text re-spelled word by word through ``word_map``
+    (token count is preserved, so doclens/norms match the oracle's dl
+    over the same stream)."""
+    return (
+        f"array_join(transform({_TOKS_SPARK}, "
+        f"x -> {_word_map_case('x', word_map)}), ' ')"
     )
-    idx = os.path.join(_INDEX_ROOT, key + "_langroute")
-    build_index(spark, _entry_pages(spark, sf_dir), idx, cfg)  # resumes
-    s = Searcher(spark, idx, scoring="exact_int")
-    _LANG_SEARCHERS[key] = s
-    return s
+
+
+def _route_probes(tag: str) -> list[str]:
+    """One indexed term per route of ``tag``: the image of its probe."""
+    return [r.route_map[r.probe] for r in _ROUTED[tag].routes.values()]
+
+
+def _routed_searcher(spark, sf_dir, tag: str) -> Searcher:
+    """The routed index ``tag`` built from its _ROUTED row: documents
+    whose language column names a route run that route's chain,
+    everything else the default chain."""
+    row = _ROUTED[tag]
+    chains = tuple((lang, r.chain) for lang, r in row.routes.items())
+    if any(r.word_map for r in row.routes.values()):
+        # native-script text: the Unicode tokenizer, the text field only
+        cfg = _text_config(
+            lang_field=row.column, lang_chains=chains, ascii_tokens=False
+        )
+        arms = " ".join(
+            f"WHEN '{lang}' THEN {_respell(r.word_map)}"
+            for lang, r in row.routes.items()
+        )
+
+        def pages(spark, sf_dir):
+            docs = _docs(spark, sf_dir).withColumn(row.column, F.expr(row.relabel))
+            return _text_pages(
+                docs, f"CASE {row.column} {arms} ELSE text END", row.column
+            )
+    else:
+        cfg = dataclasses.replace(
+            _ENTRY_CONFIG, lang_field=row.column, lang_chains=chains,
+            text_fields=(),  # lang routing is incompatible with text_fields
+        )
+
+        def pages(spark, sf_dir):
+            return _entry_pages(spark, sf_dir).withColumn(
+                row.column, F.expr(row.relabel)
+            )
+    return _index_searcher(spark, sf_dir, tag, cfg, pages)
+
+
+def _route_guard(spark, sf_dir, s: Searcher, tag: str) -> None:
+    """Per-route vocabulary guard: for every surface token present in a
+    route's documents, the route's REAL chain (``analyzer_for_lang``, the
+    chain the build used) applied to the token's re-spelled form must give
+    exactly the oracle's embedded image ``route_map.get(w, w)``. Checking
+    each route on its own (not the union of all routes' images) keeps a
+    wrong stem that happens to equal another language's image from
+    passing; a token outside the fixed vocabulary fails too."""
+    row = _ROUTED[tag]
+    per_lang = (
+        _docs(spark, sf_dir)
+        .select(
+            F.expr(row.relabel).alias("lang"),
+            F.explode(F.array_distinct(F.expr(_TOKS_SPARK))).alias("w"),
+        )
+        .distinct()
+        .collect()  # bounded: |langs| x the fixed 31-word corpus vocabulary
+    )
+    bad: list[str] = []
+    for lang, w in per_lang:
+        if w not in _CORPUS_VOCAB:
+            bad.append(f"{lang}:{w} outside the fixed corpus vocabulary")
+            continue
+        route = row.routes.get(lang)
+        if route is None:
+            continue  # unrouted docs keep the default chain's surface form
+        an = s.analyzer_for_lang(lang)
+        toks = an.tokenize(route.word_map.get(w, w))
+        rew = an.term_filter_unique(np.asarray(toks, dtype=object))
+        got = [str(t) for t in (toks if rew is None else rew)]
+        want = [route.route_map.get(w, w)]
+        if got != want:
+            bad.append(f"{lang}:{w} -> {got} but oracle embeds {want}")
+    if bad:
+        raise AssertionError(
+            f"{'/'.join(row.routes)} router oracle mapping diverges from the "
+            "real chains: " + "; ".join(sorted(bad)[:10])
+        )
+
+
+def _routed_topk(spark, sf_dir, tag: str, terms: list[str]) -> DataFrame:
+    """Top-10 of a SHOULD disjunction of ``terms`` over the routed index
+    ``tag``, after its route guard passed."""
+    s = _routed_searcher(spark, sf_dir, tag)
+    _route_guard(spark, sf_dir, s, tag)
+    q = BooleanQuery.build(should=[TermQuery(t) for t in terms])
+    return _topk_df(s, q, 10)
 
 
 def q_ft_lang_router(spark, sf_dir):
@@ -382,279 +735,24 @@ def q_ft_lang_router(spark, sf_dir):
     analogue for multilingual corpora: lang='fr' documents are stemmed by
     the French light chain at index time, lang='de' by the German chain
     (normalization FSM + UniNE stem), lang='es' by the Spanish light
-    chain, the rest keep the default chain,
+    chain, lang='zh' by the CJK chain, the rest keep the default chain,
     and query-side Searcher.analyzer_for_lang reproduces each chain.
     Query: a SHOULD disjunction of the shared stem 'tabl' (all three packs
     map 'table' there) and the surface 'table' — the stem hits only routed
     docs, the surface only unrouted ones, so rows verify both routing
-    boundaries exactly. The DuckDB
-    oracle embeds the stem image of the corpus's fixed 31-word vocabulary
-    (DuckDB has no UniNE stemmer offline); the entry GUARDS that embedding
-    by failing loudly if the index vocabulary leaves the 31-word closure,
-    and the stemmer itself is pinned by tests/test_french.py."""
-    s = _lang_searcher(spark, sf_dir)
-    # PER-ROUTE vocabulary guard (r5, review fix): the r1-r4 guard checked
-    # the index vocabulary against the UNION of all routes' stem images, so
-    # a wrong per-language mapping whose (incorrect) stem collided with
-    # another language's image passed silently while the embedded DuckDB
-    # oracle mapping was wrong. Now each route is verified independently:
-    # for every surface token actually present in that route's documents,
-    # the route's REAL analysis chain (analyzer_for_lang — the same chain
-    # the build used) must map it to exactly the embedded oracle image
-    # (map.get(w, w)). This checks the oracle mapping itself, not just set
-    # membership, so cross-language collisions can no longer mask a bug.
-    route_maps = {
-        "fr": _FR_STEM_MAP, "de": _DE_STEM_MAP, "es": _ES_STEM_MAP,
-        # zh routes through the CJK chain, whose bigram filter passes
-        # ascii tokens through verbatim — an EMPTY stem map, and the
-        # per-route guard below proves that identity against the chain
-        "zh": {},
-    }
-    per_lang = (
-        _docs(spark, sf_dir)
-        .select("lang", F.explode(F.array_distinct(F.expr(_TOKS_SPARK))).alias("w"))
-        .distinct()
-        .collect()  # bounded: |langs| x the fixed 31-word corpus vocabulary
-    )
-    bad: list[str] = []
-    for r in per_lang:
-        lang, w = r["lang"], r["w"]
-        if w not in _CORPUS_VOCAB:
-            bad.append(f"{lang}:{w} outside the fixed corpus vocabulary")
-            continue
-        if lang not in route_maps:
-            continue  # unrouted docs keep the default chain's surface form
-        an = s.analyzer_for_lang(lang)
-        toks = an.tokenize(w)
-        rew = an.term_filter_unique(np.asarray(toks, dtype=object))
-        got = [str(t) for t in (toks if rew is None else rew)]
-        want = [route_maps[lang].get(w, w)]
-        if got != want:
-            bad.append(f"{lang}:{w} -> {got} but oracle embeds {want}")
-    if bad:
-        raise AssertionError(
-            "lang-router oracle mapping diverges from the real chains: "
-            + "; ".join(sorted(bad)[:10])
-        )
-    q = BooleanQuery.build(should=[TermQuery("tabl"), TermQuery("table")])
-    return _topk_df(s, q, 10)
-
-
-# PortugueseLight / Snowball-Dutch images of the same fixed vocabulary
-# (r5 packs; verified per-run by the per-route guard, pinned by
-# tests/test_portuguese.py / test_dutch.py)
-_PT_STEM_MAP = {"merge": "merg", "table": "tabl", "value": "valu"}
-_NL_STEM_MAP = {"line": "lin", "merge": "merg", "table": "tabl"}
-
-_LANG2_SEARCHERS: dict[str, Searcher] = {}
-
-#: deterministic pt/nl relabeling of the corpus (it carries no pt/nl
-#: stratum): three sources each, reproducible in SQL
-_LANG2_CASE = (
-    "CASE WHEN source IN ('src0','src1','src2') THEN 'pt' "
-    "WHEN source IN ('src3','src4','src5') THEN 'nl' ELSE lang END"
-)
-
-
-def _lang2_searcher(spark, sf_dir):
-    """A FIFTH index: per-document routing over a DERIVED language column
-    covering the r5 Portuguese/Dutch packs (Pt/PortugueseAnalyzer.cs:119,
-    Nl/DutchAnalyzer.cs:47). The corpus has no pt/nl stratum, so lang2
-    deterministically relabels six sources (SQL-reproducible CASE); docs
-    routed 'pt' run the Portuguese light chain, 'nl' the Snowball Dutch
-    chain, everything else the default — one mixed postings table."""
-    import dataclasses
-
-    key = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    if key in _LANG2_SEARCHERS:
-        return _LANG2_SEARCHERS[key]
-    cfg = dataclasses.replace(
-        _ENTRY_CONFIG, lang_field="lang2",
-        lang_chains=(("pt", "portuguese"), ("nl", "dutch")),
-        text_fields=(),
-    )
-    pages = _entry_pages(spark, sf_dir).withColumn("lang2", F.expr(_LANG2_CASE))
-    idx = os.path.join(_INDEX_ROOT, key + "_langroute2")
-    build_index(spark, pages, idx, cfg)  # resumes
-    s = Searcher(spark, idx, scoring="exact_int")
-    _LANG2_SEARCHERS[key] = s
-    return s
+    boundaries exactly. The DuckDB oracle embeds each route's image of the
+    corpus's fixed 31-word vocabulary; the route guard proves it."""
+    return _routed_topk(spark, sf_dir, "langroute", ["tabl", "table"])
 
 
 def q_ft_lang_router_ptnl(spark, sf_dir):
     """Language routing over the r5 Portuguese + Dutch packs: pt docs are
     stemmed by the UniNE/RSLP light rules, nl docs by the published
     Snowball Dutch algorithm, at INDEX time via per-document chain
-    dispatch; the 2-term disjunction then matches stemmed and unstemmed
-    strata with one postings seek each. The same per-route vocabulary
-    guard as ft_lang_router: every routed surface token must map through
-    the route's REAL chain to exactly the embedded oracle image."""
-    s = _lang2_searcher(spark, sf_dir)
-    route_maps = {"pt": _PT_STEM_MAP, "nl": _NL_STEM_MAP}
-    per_lang = (
-        _docs(spark, sf_dir)
-        .select(
-            F.expr(_LANG2_CASE).alias("lang2"),
-            F.explode(F.array_distinct(F.expr(_TOKS_SPARK))).alias("w"),
-        )
-        .distinct()
-        .collect()  # bounded: |langs| x the fixed 31-word corpus vocabulary
-    )
-    bad: list[str] = []
-    for r in per_lang:
-        lang, w = r["lang2"], r["w"]
-        if w not in _CORPUS_VOCAB:
-            bad.append(f"{lang}:{w} outside the fixed corpus vocabulary")
-            continue
-        if lang not in route_maps:
-            continue
-        an = s.analyzer_for_lang(lang)
-        toks = an.tokenize(w)
-        rew = an.term_filter_unique(np.asarray(toks, dtype=object))
-        got = [str(t) for t in (toks if rew is None else rew)]
-        want = [route_maps[lang].get(w, w)]
-        if got != want:
-            bad.append(f"{lang}:{w} -> {got} but oracle embeds {want}")
-    if bad:
-        raise AssertionError(
-            "pt/nl router oracle mapping diverges from the real chains: "
-            + "; ".join(sorted(bad)[:10])
-        )
-    q = BooleanQuery.build(should=[TermQuery("tabl"), TermQuery("table")])
-    return _topk_df(s, q, 10)
-
-
-# --------------------------------------------------------------------------- #
-# r5 multi-pack router (ru/sv/ar/id): the corpus carries no native-script
-# strata, so a FIXED word map rewrites part of the 31-word vocabulary into
-# real inflected words of each routed language (the CJK entry's derived-text
-# trick, generalized) — the stemmers then do genuine morphological work and
-# the oracle reproduces surface -> indexed-term with one CASE per route.
-# --------------------------------------------------------------------------- #
-
-#: vocabulary word -> native inflected form, per routed language
-_RU_WORD_MAP = {
-    "table": "столами", "row": "книгами", "value": "красивый",
-    "merge": "новая", "line": "линия", "data": "лошадь",
-    "filter": "длинный", "order": "осенью",
-}
-_SV_WORD_MAP = {
-    "table": "flickorna", "row": "bilarna", "value": "friheterna",
-    "merge": "starkare", "line": "rörelse", "data": "huset",
-    "filter": "läsande", "order": "gårdarna",
-}
-_AR_WORD_MAP = {
-    "table": "الكتاب", "row": "مكتبات", "value": "مسلمون",
-    "merge": "المدرسة", "line": "العربية", "data": "بالقلم",
-    "filter": "للبيت", "order": "مستشفى",
-}
-_ID_WORD_MAP = {
-    "table": "membaca", "row": "bukunya", "value": "mengambil",
-    "merge": "terbaik", "line": "ajaran", "data": "gunakan",
-    "filter": "kebijakan", "order": "berjalan",
-}
-
-#: vocabulary word -> INDEXED term (the chain's image of the native form;
-#: unmapped words pass the word map, so their image is the chain's image of
-#: the ascii surface — identity for the script-guarded ru/ar/id stemmers,
-#: the hand-traced light stem for Swedish). Verified per-run by the
-#: per-route guard; the stemmers themselves are pinned by the golden
-#: suites (tests/test_russian.py etc.).
-_RU_ROUTE_MAP = {
-    "table": "стол", "row": "книг", "value": "красив", "merge": "нов",
-    "line": "лин", "data": "лошад", "filter": "длин", "order": "осен",
-}
-_SV_ROUTE_MAP = {
-    # native-form stems
-    "table": "flick", "row": "bil", "value": "fri", "merge": "stark",
-    "line": "rör", "data": "hus", "filter": "läs", "order": "gård",
-    # the Swedish light stemmer also rewrites these ascii surfaces
-    "column": "colum", "customer": "custom", "fast": "fas", "join": "joi",
-    "part": "par", "scan": "sca", "sort": "sor", "vector": "vect",
-}
-_AR_ROUTE_MAP = {
-    "table": "كتاب", "row": "مكتب", "value": "مسلم", "merge": "مدرس",
-    "line": "عرب", "data": "قلم", "filter": "بيت", "order": "مستشف",
-}
-_ID_ROUTE_MAP = {
-    "table": "baca", "row": "buku", "value": "ambil", "merge": "baik",
-    "line": "ajar", "data": "guna", "filter": "bija", "order": "jalan",
-}
-
-#: deterministic ru/sv/ar/id relabeling (two sources each, disjoint from
-#: the pt/nl relabeling's src0-5), reproducible in SQL
-_LANG3_CASE = (
-    "CASE WHEN source IN ('src12','src13') THEN 'ru' "
-    "WHEN source IN ('src14','src15') THEN 'sv' "
-    "WHEN source IN ('src16','src17') THEN 'ar' "
-    "WHEN source IN ('src18','src19') THEN 'id' ELSE 'en' END"
-)
-
-
-def _word_map_case(var: str, word_map: dict[str, str]) -> str:
-    """Shared CASE expression (Spark SQL == DuckDB dialect) rewriting a
-    vocabulary token to its native form (identity outside the map)."""
-    cases = " ".join(f"WHEN '{k}' THEN '{v}'" for k, v in word_map.items())
-    return f"CASE {var} {cases} ELSE {var} END"
-
-
-_LANG3_SEARCHERS: dict[str, Searcher] = {}
-
-
-def _lang3_text_expr() -> str:
-    """Per-doc derived text: routed docs re-spelled word-by-word through
-    the language's word map, unrouted docs verbatim (token count is
-    preserved, so doclens/norms match the oracle's dl over the same
-    stream)."""
-    arms = " ".join(
-        f"WHEN '{lang}' THEN array_join(transform({_TOKS_SPARK}, "
-        f"x -> {_word_map_case('x', wm)}), ' ')"
-        for lang, wm in (
-            ("ru", _RU_WORD_MAP), ("sv", _SV_WORD_MAP),
-            ("ar", _AR_WORD_MAP), ("id", _ID_WORD_MAP),
-        )
-    )
-    return f"CASE lang3 {arms} ELSE text END"
-
-
-def _lang3_searcher(spark, sf_dir):
-    """A SIXTH index: per-document routing over the derived lang3 column
-    covering the r5 Russian/Swedish/Arabic/Indonesian packs
-    (Ru/RussianAnalyzer.cs:48, Sv/SwedishAnalyzer.cs:120,
-    Ar/ArabicAnalyzer.cs:43, Id/IndonesianAnalyzer.cs:43). Routed strata
-    are re-spelled into native inflected words by the fixed word maps, so
-    the four stemmers exercise real Cyrillic/Latin/Arabic morphology
-    inside ONE mixed postings table; the Unicode tokenizer
-    (ascii_tokens=False) handles the three scripts."""
-    import dataclasses
-
-    key = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    if key in _LANG3_SEARCHERS:
-        return _LANG3_SEARCHERS[key]
-    cfg = dataclasses.replace(
-        _ENTRY_CONFIG, lang_field="lang3",
-        lang_chains=(
-            ("ru", "russian"), ("sv", "swedish"),
-            ("ar", "arabic"), ("id", "indonesian"),
-        ),
-        ascii_tokens=False,  # Cyrillic/Arabic/å-ä-ö text
-        keyword_fields=(), docvalue_fields=(), text_fields=(),
-    )
-    pages = (
-        _docs(spark, sf_dir)
-        .withColumn("lang3", F.expr(_LANG3_CASE))
-        .select(
-            F.col("doc_id").alias("docid"),
-            F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
-            F.expr(_lang3_text_expr()).alias("text"),
-            "lang3",
-        )
-    )
-    idx = os.path.join(_INDEX_ROOT, key + "_langroute3")
-    build_index(spark, pages, idx, cfg)  # resumes
-    s = Searcher(spark, idx, scoring="exact_int")
-    _LANG3_SEARCHERS[key] = s
-    return s
+    dispatch over the derived lang2 column; the 2-term disjunction then
+    matches stemmed and unstemmed strata with one postings seek each,
+    after the same per-route guard as ft_lang_router."""
+    return _routed_topk(spark, sf_dir, "langroute2", ["tabl", "table"])
 
 
 def q_ft_lang_router_multi(spark, sf_dir):
@@ -665,178 +763,9 @@ def q_ft_lang_router_multi(spark, sf_dir):
     all stemmed at INDEX time via per-document chain dispatch into one
     term-sorted postings table. The query is a 4-term SHOULD disjunction
     of one stemmed term per language, so each term's postings seek hits
-    exactly its routed stratum. Per-route guard (the r5 convention):
-    every routed surface token must map through the route's REAL chain —
-    word map, then tokenize + term_filter_unique — to exactly the
-    embedded oracle image."""
-    s = _lang3_searcher(spark, sf_dir)
-    word_maps = {
-        "ru": _RU_WORD_MAP, "sv": _SV_WORD_MAP,
-        "ar": _AR_WORD_MAP, "id": _ID_WORD_MAP,
-    }
-    route_maps = {
-        "ru": _RU_ROUTE_MAP, "sv": _SV_ROUTE_MAP,
-        "ar": _AR_ROUTE_MAP, "id": _ID_ROUTE_MAP,
-    }
-    per_lang = (
-        _docs(spark, sf_dir)
-        .select(
-            F.expr(_LANG3_CASE).alias("lang3"),
-            F.explode(F.array_distinct(F.expr(_TOKS_SPARK))).alias("w"),
-        )
-        .distinct()
-        .collect()  # bounded: |langs| x the fixed 31-word corpus vocabulary
-    )
-    bad: list[str] = []
-    for r in per_lang:
-        lang, w = r["lang3"], r["w"]
-        if w not in _CORPUS_VOCAB:
-            bad.append(f"{lang}:{w} outside the fixed corpus vocabulary")
-            continue
-        if lang not in route_maps:
-            continue
-        an = s.analyzer_for_lang(lang)
-        toks = an.tokenize(word_maps[lang].get(w, w))
-        rew = an.term_filter_unique(np.asarray(toks, dtype=object))
-        got = [str(t) for t in (toks if rew is None else rew)]
-        want = [route_maps[lang].get(w, w)]
-        if got != want:
-            bad.append(f"{lang}:{w} -> {got} but oracle embeds {want}")
-    if bad:
-        raise AssertionError(
-            "ru/sv/ar/id router oracle mapping diverges from the real "
-            "chains: " + "; ".join(sorted(bad)[:10])
-        )
-    q = BooleanQuery.build(
-        should=[
-            TermQuery(_RU_ROUTE_MAP["table"]),
-            TermQuery(_SV_ROUTE_MAP["table"]),
-            TermQuery(_AR_ROUTE_MAP["table"]),
-            TermQuery(_ID_ROUTE_MAP["table"]),
-        ]
-    )
-    return _topk_df(s, q, 10)
-
-
-# --------------------------------------------------------------------------- #
-# r5 eight-pack router (fi/hu/no/da/cs/bg/fa/hi): same derived-text trick as
-# the ru/sv/ar/id entry — a fixed word map re-spells part of the vocabulary
-# into real inflected words per routed language; the Latin-script stemmers
-# (fi/hu/no/da/cs) also rewrite UNMAPPED ascii vocabulary, so each route map
-# is the COMPLETE chain image over the 31-word vocabulary (generated from
-# the real chains, re-verified per run by the per-route guard).
-# --------------------------------------------------------------------------- #
-
-_XEU_WORD_MAPS: dict[str, dict[str, str]] = {
-    "fi": {"table": "taloissa", "row": "kirjassa",
-           "value": "autollansa", "merge": "metsässä"},
-    "hu": {"table": "házakat", "row": "könyveket",
-           "value": "autóval", "merge": "városokban"},
-    "no": {"table": "mulighetene", "row": "bilene",
-           "value": "gårdane", "merge": "lesende"},
-    "da": {"table": "mulighederne", "row": "hundene",
-           "value": "bøgerne", "merge": "kattene"},
-    "cs": {"table": "ženami", "row": "studentovi",
-           "value": "městech", "merge": "matčin"},
-    "bg": {"table": "градовете", "row": "книгата",
-           "value": "студентите", "merge": "морето"},
-    "fa": {"table": "كتاب", "row": "مدرسة",
-           "value": "علي", "merge": "موسى"},
-    "hi": {"table": "किताबें", "row": "लड़कियाँ",
-           "value": "करने", "merge": "आदमियों"},
-}
-
-#: COMPLETE vocabulary -> indexed-term maps (chain image of word map ∘
-#: stemmer; identity entries omitted). The Latin-script rows include the
-#: ascii surfaces each stemmer rewrites.
-_XEU_ROUTE_MAPS: dict[str, dict[str, str]] = {
-    "fi": {"column": "colum", "data": "dat", "fast": "fas", "join": "joi",
-           "line": "lin", "merge": "metsä", "part": "par", "row": "kirja",
-           "scan": "sca", "sort": "sor", "table": "talo", "value": "auto"},
-    "hu": {"fast": "fas", "merge": "város", "part": "par", "row": "könyv",
-           "sort": "sor", "spark": "spar", "table": "ház", "value": "autó"},
-    "no": {"column": "colum", "customer": "custom", "data": "dat",
-           "fast": "fas", "filter": "filt", "join": "joi", "line": "lin",
-           "merge": "les", "order": "ord", "part": "par", "row": "bil",
-           "scan": "sca", "sort": "sor", "table": "mulig", "value": "gård"},
-    "da": {"customer": "custom", "filter": "filt", "line": "lin",
-           "merge": "kat", "order": "ord", "row": "hund", "small": "smal",
-           "table": "mulig", "value": "bøg"},
-    "cs": {"data": "dat", "line": "lin", "merge": "matk", "query": "quer",
-           "row": "student", "table": "žen", "value": "měst"},
-    "bg": {"merge": "мор", "row": "книг", "table": "град",
-           "value": "студент"},
-    "fa": {"merge": "موسی", "row": "مدرسه", "table": "کتاب",
-           "value": "علی"},
-    "hi": {"merge": "आदम", "row": "लडक", "table": "किताब", "value": "कर"},
-}
-
-_XEU_LANGS = ("fi", "hu", "no", "da", "cs", "bg", "fa", "hi")
-_XEU_CHAINS = {
-    "fi": "finnish", "hu": "hungarian", "no": "norwegian", "da": "danish",
-    "cs": "czech", "bg": "bulgarian", "fa": "persian", "hi": "hindi",
-}
-
-#: deterministic relabeling: one source stratum per language
-_LANG4_CASE = (
-    "CASE " + " ".join(
-        f"WHEN source = 'src{i}' THEN '{lang}'"
-        for i, lang in enumerate(_XEU_LANGS)
-    ) + " ELSE 'en' END"
-)
-
-
-def _lang4_text_expr() -> str:
-    """Routed docs re-spelled word-by-word through the language's word
-    map, unrouted docs verbatim (token counts preserved)."""
-    arms = " ".join(
-        f"WHEN '{lang}' THEN array_join(transform({_TOKS_SPARK}, "
-        f"x -> {_word_map_case('x', _XEU_WORD_MAPS[lang])}), ' ')"
-        for lang in _XEU_LANGS
-    )
-    return f"CASE lang4 {arms} ELSE text END"
-
-
-_LANG4_SEARCHERS: dict[str, Searcher] = {}
-
-
-def _lang4_searcher(spark, sf_dir):
-    """A SEVENTH index: per-document routing over the derived lang4
-    column covering the r5 Finnish/Hungarian/Norwegian/Danish/Czech/
-    Bulgarian/Persian/Hindi packs (Fi/FinnishAnalyzer.cs:120,
-    Hu/HungarianAnalyzer.cs:120, No/NorwegianAnalyzer.cs:120,
-    Da/DanishAnalyzer.cs:120, Cz/CzechAnalyzer.cs:60,
-    Bg/BulgarianAnalyzer.cs:55, Fa/PersianAnalyzer.cs:48,
-    Hi/HindiAnalyzer.cs:47). Five Latin-script morphologies plus
-    Cyrillic, Arabic-script and Devanagari text flow through ONE mixed
-    postings table; the Unicode tokenizer's combining-mark Extend class
-    (r5) keeps the Devanagari matras inside tokens."""
-    import dataclasses
-
-    key = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    if key in _LANG4_SEARCHERS:
-        return _LANG4_SEARCHERS[key]
-    cfg = dataclasses.replace(
-        _ENTRY_CONFIG, lang_field="lang4",
-        lang_chains=tuple((lang, _XEU_CHAINS[lang]) for lang in _XEU_LANGS),
-        ascii_tokens=False,
-        keyword_fields=(), docvalue_fields=(), text_fields=(),
-    )
-    pages = (
-        _docs(spark, sf_dir)
-        .withColumn("lang4", F.expr(_LANG4_CASE))
-        .select(
-            F.col("doc_id").alias("docid"),
-            F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
-            F.expr(_lang4_text_expr()).alias("text"),
-            "lang4",
-        )
-    )
-    idx = os.path.join(_INDEX_ROOT, key + "_langroute4")
-    build_index(spark, pages, idx, cfg)  # resumes
-    s = Searcher(spark, idx, scoring="exact_int")
-    _LANG4_SEARCHERS[key] = s
-    return s
+    exactly its routed stratum. The route guard proves every word map ∘
+    chain composition against the embedded oracle image."""
+    return _routed_topk(spark, sf_dir, "langroute3", _route_probes("langroute3"))
 
 
 def q_ft_lang_router_xeu(spark, sf_dir):
@@ -848,135 +777,8 @@ def q_ft_lang_router_xeu(spark, sf_dir):
     per-document at INDEX time into one term-sorted postings table. The
     query is an 8-term SHOULD disjunction of one stemmed/normalized term
     per language (each term's postings seek hits exactly its routed
-    stratum). Per-route guard (the r5 convention): every routed surface
-    token must map through the route's REAL chain — word map, then
-    tokenize + term_filter_unique — to exactly the embedded oracle
-    image."""
-    s = _lang4_searcher(spark, sf_dir)
-    per_lang = (
-        _docs(spark, sf_dir)
-        .select(
-            F.expr(_LANG4_CASE).alias("lang4"),
-            F.explode(F.array_distinct(F.expr(_TOKS_SPARK))).alias("w"),
-        )
-        .distinct()
-        .collect()  # bounded: |langs| x the fixed 31-word corpus vocabulary
-    )
-    bad: list[str] = []
-    for r in per_lang:
-        lang, w = r["lang4"], r["w"]
-        if w not in _CORPUS_VOCAB:
-            bad.append(f"{lang}:{w} outside the fixed corpus vocabulary")
-            continue
-        if lang not in _XEU_ROUTE_MAPS:
-            continue
-        an = s.analyzer_for_lang(lang)
-        toks = an.tokenize(_XEU_WORD_MAPS[lang].get(w, w))
-        rew = an.term_filter_unique(np.asarray(toks, dtype=object))
-        got = [str(t) for t in (toks if rew is None else rew)]
-        want = [_XEU_ROUTE_MAPS[lang].get(w, w)]
-        if got != want:
-            bad.append(f"{lang}:{w} -> {got} but oracle embeds {want}")
-    if bad:
-        raise AssertionError(
-            "fi/hu/no/da/cs/bg/fa/hi router oracle mapping diverges from "
-            "the real chains: " + "; ".join(sorted(bad)[:10])
-        )
-    # one distinct term per language (da's 'table' image collides with
-    # no's, so da probes via 'row' -> hund, no via 'row' -> bil)
-    probes = [
-        _XEU_ROUTE_MAPS["fi"]["table"], _XEU_ROUTE_MAPS["hu"]["table"],
-        _XEU_ROUTE_MAPS["no"]["row"], _XEU_ROUTE_MAPS["da"]["row"],
-        _XEU_ROUTE_MAPS["cs"]["table"], _XEU_ROUTE_MAPS["bg"]["table"],
-        _XEU_ROUTE_MAPS["fa"]["table"], _XEU_ROUTE_MAPS["hi"]["table"],
-    ]
-    q = BooleanQuery.build(should=[TermQuery(t) for t in probes])
-    return _topk_df(s, q, 10)
-
-
-# --------------------------------------------------------------------------- #
-# r5 four-pack router (el/tr/ro/lv) over src8-11 — same construction as
-# the xeu entry (complete chain-image route maps, per-route guard)
-# --------------------------------------------------------------------------- #
-
-_MISC_WORD_MAPS: dict[str, dict[str, str]] = {
-    "el": {"table": "άνθρωπος", "row": "βιβλια",
-           "value": "θαλασσες", "merge": "ομορφη"},
-    "tr": {"table": "kitaplardan", "row": "okullarda",
-           "value": "arabası", "merge": "gözler"},
-    "ro": {"table": "băiatului", "row": "casele",
-           "value": "timpurile", "merge": "orașul"},
-    "lv": {"table": "grāmatām", "row": "bērniem",
-           "value": "skolās", "merge": "zaļais"},
-}
-
-_MISC_ROUTE_MAPS: dict[str, dict[str, str]] = {
-    "el": {"merge": "ομορφ", "row": "βιβλι", "table": "ανθρωπ",
-           "value": "θαλασσ"},
-    "tr": {"data": "dat", "line": "lin", "merge": "göz", "row": "okul",
-           "table": "kitap", "value": "araba"},
-    "ro": {"data": "dat", "line": "lin", "merge": "oraș", "row": "cas",
-           "table": "băiat", "value": "timp"},
-    "lv": {"data": "dat", "line": "lin", "merge": "zal", "row": "bērn",
-           "table": "grāmat", "value": "skol"},
-}
-
-_MISC_LANGS = ("el", "tr", "ro", "lv")
-_MISC_CHAINS = {
-    "el": "greek", "tr": "turkish", "ro": "romanian", "lv": "latvian",
-}
-
-_LANG5_CASE = (
-    "CASE " + " ".join(
-        f"WHEN source = 'src{8 + i}' THEN '{lang}'"
-        for i, lang in enumerate(_MISC_LANGS)
-    ) + " ELSE 'en' END"
-)
-
-
-def _lang5_text_expr() -> str:
-    arms = " ".join(
-        f"WHEN '{lang}' THEN array_join(transform({_TOKS_SPARK}, "
-        f"x -> {_word_map_case('x', _MISC_WORD_MAPS[lang])}), ' ')"
-        for lang in _MISC_LANGS
-    )
-    return f"CASE lang5 {arms} ELSE text END"
-
-
-_LANG5_SEARCHERS: dict[str, Searcher] = {}
-
-
-def _lang5_searcher(spark, sf_dir):
-    """An EIGHTH index: per-document routing over the derived lang5
-    column covering the r5 Greek/Turkish/Romanian/Latvian packs
-    (El/GreekAnalyzer.cs:40, Tr/TurkishAnalyzer.cs:43,
-    Ro/RomanianAnalyzer.cs:43, Lv/LatvianAnalyzer.cs:47)."""
-    import dataclasses
-
-    key = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    if key in _LANG5_SEARCHERS:
-        return _LANG5_SEARCHERS[key]
-    cfg = dataclasses.replace(
-        _ENTRY_CONFIG, lang_field="lang5",
-        lang_chains=tuple((lang, _MISC_CHAINS[lang]) for lang in _MISC_LANGS),
-        ascii_tokens=False,
-        keyword_fields=(), docvalue_fields=(), text_fields=(),
-    )
-    pages = (
-        _docs(spark, sf_dir)
-        .withColumn("lang5", F.expr(_LANG5_CASE))
-        .select(
-            F.col("doc_id").alias("docid"),
-            F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
-            F.expr(_lang5_text_expr()).alias("text"),
-            "lang5",
-        )
-    )
-    idx = os.path.join(_INDEX_ROOT, key + "_langroute5")
-    build_index(spark, pages, idx, cfg)  # resumes
-    s = Searcher(spark, idx, scoring="exact_int")
-    _LANG5_SEARCHERS[key] = s
-    return s
+    stratum), after the route guard."""
+    return _routed_topk(spark, sf_dir, "langroute4", _route_probes("langroute4"))
 
 
 def q_ft_lang_router_misc(spark, sf_dir):
@@ -985,215 +787,9 @@ def q_ft_lang_router_misc(spark, sf_dir):
     Romanian (enclitic-article strip) and Latvian (published Kreslins
     inventory) packs — per-document chain dispatch into one term-sorted
     postings table, 4-term SHOULD disjunction of one stemmed term per
-    language, per-route guard proving every word-map ∘ chain composition
+    language, route guard proving every word-map ∘ chain composition
     against the embedded oracle image per run."""
-    s = _lang5_searcher(spark, sf_dir)
-    per_lang = (
-        _docs(spark, sf_dir)
-        .select(
-            F.expr(_LANG5_CASE).alias("lang5"),
-            F.explode(F.array_distinct(F.expr(_TOKS_SPARK))).alias("w"),
-        )
-        .distinct()
-        .collect()  # bounded: |langs| x the fixed 31-word corpus vocabulary
-    )
-    bad: list[str] = []
-    for r in per_lang:
-        lang, w = r["lang5"], r["w"]
-        if w not in _CORPUS_VOCAB:
-            bad.append(f"{lang}:{w} outside the fixed corpus vocabulary")
-            continue
-        if lang not in _MISC_ROUTE_MAPS:
-            continue
-        an = s.analyzer_for_lang(lang)
-        toks = an.tokenize(_MISC_WORD_MAPS[lang].get(w, w))
-        rew = an.term_filter_unique(np.asarray(toks, dtype=object))
-        got = [str(t) for t in (toks if rew is None else rew)]
-        want = [_MISC_ROUTE_MAPS[lang].get(w, w)]
-        if got != want:
-            bad.append(f"{lang}:{w} -> {got} but oracle embeds {want}")
-    if bad:
-        raise AssertionError(
-            "el/tr/ro/lv router oracle mapping diverges from the real "
-            "chains: " + "; ".join(sorted(bad)[:10])
-        )
-    q = BooleanQuery.build(
-        should=[
-            TermQuery(_MISC_ROUTE_MAPS[lang]["table"]) for lang in _MISC_LANGS
-        ]
-    )
-    return _topk_df(s, q, 10)
-
-
-# fixed word -> ideograph map (one han codepoint per corpus-vocabulary
-# word, assigned in vocabulary order from U+4E00): a deterministic,
-# SQL-reproducible way to derive REAL CJK text from the synthetic corpus
-_CJK_CHAR_MAP = {w: chr(0x4E00 + i) for i, w in enumerate(_CORPUS_VOCAB)}
-
-_CJK_SEARCHERS: dict[str, Searcher] = {}
-
-
-def _cjk_map_case(var: str) -> str:
-    """Shared CASE expression (Spark SQL == DuckDB dialect) mapping a
-    vocabulary token to its han codepoint ('' for out-of-vocabulary)."""
-    cases = " ".join(
-        f"WHEN '{w}' THEN '{c}'" for w, c in _CJK_CHAR_MAP.items()
-    )
-    return f"CASE {var} {cases} ELSE '' END"
-
-
-def _cjk_searcher(spark, sf_dir):
-    """A FOURTH index: the zh stratum's documents re-expressed as genuine
-    ideographic text (each vocabulary word -> one han codepoint,
-    concatenated), analyzed by the CJK bigram chain
-    (Cjk/CJKAnalyzer.cs:40, CJKBigramFilter.cs — analysis/cjk.py): the
-    per-ideograph tokenizer classes + codepoint bigram runs produce
-    overlapping 2-gram terms, which is what makes CJK search precise
-    instead of unigram-noise. The chain is a generic (non-Arrow) path:
-    analyze() runs per row inside the distributed build batches."""
-    import dataclasses
-
-    key = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    if key in _CJK_SEARCHERS:
-        return _CJK_SEARCHERS[key]
-    cfg = dataclasses.replace(
-        _ENTRY_CONFIG,
-        analyzer="cjk",
-        ascii_tokens=False,  # the input IS ideographic
-        max_token_length=255,
-        keyword_fields=(), docvalue_fields=(), text_fields=(),
-    )
-    pages = (
-        _docs(spark, sf_dir)
-        .filter(F.col("lang") == "zh")
-        .select(
-            F.col("doc_id").alias("docid"),
-            F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
-            F.expr(
-                f"array_join(transform({_TOKS_SPARK}, x -> {_cjk_map_case('x')}), '')"
-            ).alias("text"),
-        )
-    )
-    idx = os.path.join(_INDEX_ROOT, key + "_cjk")
-    build_index(spark, pages, idx, cfg)  # resumes
-    s = Searcher(spark, idx, scoring="exact_int")
-    _CJK_SEARCHERS[key] = s
-    return s
-
-
-def q_ft_cjk_bigram(spark, sf_dir):
-    """CJK bigram search end-to-end: the zh documents as han text, indexed
-    through the CJKAnalyzer chain (width fold -> per-ideograph tokens ->
-    codepoint bigrams -> BM25 postings), then a bigram TermQuery top-k.
-    The DuckDB oracle reproduces the bigram token stream with
-    substring-windowing over the same word->ideograph mapping and scores
-    with the shared exact-int formula — so tokenization, bigramming,
-    doclen/norms, df and ranking are all cross-checked."""
-    s = _cjk_searcher(spark, sf_dir)
-    b1 = _CJK_CHAR_MAP["the"] + _CJK_CHAR_MAP["row"]
-    b2 = _CJK_CHAR_MAP["table"] + _CJK_CHAR_MAP["table"]
-    q = BooleanQuery.build(should=[TermQuery(b1), TermQuery(b2)])
-    return _topk_df(s, q, 10)
-
-
-# --------------------------------------------------------------------------- #
-# r5 six-pack router (ca/eu/hy/ga/gl/br) over src12-17 — closes the
-# reference's analysis-common LANGUAGE coverage (every Analysis/<Lang>
-# directory now has a routed pack). Same construction as the xeu/misc
-# entries: complete chain-image route maps, per-route guard.
-# --------------------------------------------------------------------------- #
-
-_WEST_WORD_MAPS: dict[str, dict[str, str]] = {
-    "ca": {"table": "formacions", "row": "llibres",
-           "value": "cançons", "merge": "això"},
-    "eu": {"table": "etxeak", "row": "liburuak",
-           "value": "gizonarekin", "merge": "mendietan"},
-    "hy": {"table": "գրքերը", "row": "լեզուներում",
-           "value": "տունը", "merge": "մարդիկ"},
-    "ga": {"table": "gcairde", "row": "ceisteanna",
-           "value": "bhfuinneog", "merge": "dteach"},
-    "gl": {"table": "cancións", "row": "animais",
-           "value": "papeis", "merge": "flores"},
-    "br": {"table": "corações", "row": "livrinhos",
-           "value": "rapidamente", "merge": "bons"},
-}
-
-# complete chain-image maps: every corpus-vocabulary word whose routed
-# chain image differs from identity (including the word-mapped natives)
-_WEST_ROUTE_MAPS: dict[str, dict[str, str]] = {
-    "ca": {"table": "forma", "row": "llibr", "value": "canc",
-           "merge": "aix", "data": "dat", "line": "lin",
-           "vector": "vect"},
-    "eu": {"table": "etxe", "row": "liburu", "value": "gizon",
-           "merge": "mendi"},
-    "hy": {"table": "գրք", "row": "լեզու", "value": "տուն",
-           "merge": "մարդիկ"},
-    "ga": {"table": "caird", "row": "ceist", "value": "fuinneog",
-           "merge": "teach"},
-    "gl": {"table": "canción", "row": "animal", "value": "papel",
-           "merge": "flor"},
-    "br": {"table": "coraca", "row": "livr", "value": "rapid",
-           "merge": "bom", "data": "dat", "line": "lin"},
-}
-
-_WEST_LANGS = ("ca", "eu", "hy", "ga", "gl", "br")
-_WEST_CHAINS = {
-    "ca": "catalan", "eu": "basque", "hy": "armenian",
-    "ga": "irish", "gl": "galician", "br": "brazilian",
-}
-
-_LANG6_CASE = (
-    "CASE " + " ".join(
-        f"WHEN source = 'src{12 + i}' THEN '{lang}'"
-        for i, lang in enumerate(_WEST_LANGS)
-    ) + " ELSE 'en' END"
-)
-
-
-def _lang6_text_expr() -> str:
-    arms = " ".join(
-        f"WHEN '{lang}' THEN array_join(transform({_TOKS_SPARK}, "
-        f"x -> {_word_map_case('x', _WEST_WORD_MAPS[lang])}), ' ')"
-        for lang in _WEST_LANGS
-    )
-    return f"CASE lang6 {arms} ELSE text END"
-
-
-_LANG6_SEARCHERS: dict[str, Searcher] = {}
-
-
-def _lang6_searcher(spark, sf_dir):
-    """A NINTH index: per-document routing over the derived lang6 column
-    covering the r5 Catalan/Basque/Armenian/Irish/Galician/Brazilian
-    packs (Ca/CatalanAnalyzer.cs:121, Eu/BasqueAnalyzer.cs:40,
-    Hy/ArmenianAnalyzer.cs:40, Ga/IrishAnalyzer.cs:48,
-    Gl/GalicianMinimalStemmer.cs:25, Br/BrazilianAnalyzer.cs:43)."""
-    import dataclasses
-
-    key = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    if key in _LANG6_SEARCHERS:
-        return _LANG6_SEARCHERS[key]
-    cfg = dataclasses.replace(
-        _ENTRY_CONFIG, lang_field="lang6",
-        lang_chains=tuple((lang, _WEST_CHAINS[lang]) for lang in _WEST_LANGS),
-        ascii_tokens=False,
-        keyword_fields=(), docvalue_fields=(), text_fields=(),
-    )
-    pages = (
-        _docs(spark, sf_dir)
-        .withColumn("lang6", F.expr(_LANG6_CASE))
-        .select(
-            F.col("doc_id").alias("docid"),
-            F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
-            F.expr(_lang6_text_expr()).alias("text"),
-            "lang6",
-        )
-    )
-    idx = os.path.join(_INDEX_ROOT, key + "_langroute6")
-    build_index(spark, pages, idx, cfg)  # resumes
-    s = Searcher(spark, idx, scoring="exact_int")
-    _LANG6_SEARCHERS[key] = s
-    return s
+    return _routed_topk(spark, sf_dir, "langroute5", _route_probes("langroute5"))
 
 
 def q_ft_lang_router_six(spark, sf_dir):
@@ -1206,45 +802,44 @@ def q_ft_lang_router_six(spark, sf_dir):
     per-document at INDEX time into one term-sorted postings table; with
     this entry every language directory under the reference's
     Analysis/ tree is covered by a routed pack. 6-term SHOULD
-    disjunction of one stemmed term per language; per-route guard (the
-    r5 convention): every routed surface token must map through the
-    route's REAL chain — word map, then tokenize + term_filter_unique —
-    to exactly the embedded oracle image."""
-    s = _lang6_searcher(spark, sf_dir)
-    per_lang = (
-        _docs(spark, sf_dir)
-        .select(
-            F.expr(_LANG6_CASE).alias("lang6"),
-            F.explode(F.array_distinct(F.expr(_TOKS_SPARK))).alias("w"),
-        )
-        .distinct()
-        .collect()  # bounded: |langs| x the fixed 31-word corpus vocabulary
+    disjunction of one stemmed term per language, after the route
+    guard."""
+    return _routed_topk(spark, sf_dir, "langroute6", _route_probes("langroute6"))
+
+
+# fixed word -> ideograph map (one han codepoint per corpus-vocabulary
+# word, assigned in vocabulary order from U+4E00): a deterministic,
+# SQL-reproducible way to derive REAL CJK text from the synthetic corpus
+_CJK_CHAR_MAP = {w: chr(0x4E00 + i) for i, w in enumerate(_CORPUS_VOCAB)}
+
+
+def _cjk_map_case(var: str) -> str:
+    """Shared CASE expression (Spark SQL == DuckDB dialect) mapping a
+    vocabulary token to its han codepoint ('' for out-of-vocabulary)."""
+    cases = " ".join(
+        f"WHEN '{w}' THEN '{c}'" for w, c in _CJK_CHAR_MAP.items()
     )
-    bad: list[str] = []
-    for r in per_lang:
-        lang, w = r["lang6"], r["w"]
-        if w not in _CORPUS_VOCAB:
-            bad.append(f"{lang}:{w} outside the fixed corpus vocabulary")
-            continue
-        if lang not in _WEST_ROUTE_MAPS:
-            continue
-        an = s.analyzer_for_lang(lang)
-        toks = an.tokenize(_WEST_WORD_MAPS[lang].get(w, w))
-        rew = an.term_filter_unique(np.asarray(toks, dtype=object))
-        got = [str(t) for t in (toks if rew is None else rew)]
-        want = [_WEST_ROUTE_MAPS[lang].get(w, w)]
-        if got != want:
-            bad.append(f"{lang}:{w} -> {got} but oracle embeds {want}")
-    if bad:
-        raise AssertionError(
-            "ca/eu/hy/ga/gl/br router oracle mapping diverges from the "
-            "real chains: " + "; ".join(sorted(bad)[:10])
-        )
-    q = BooleanQuery.build(
-        should=[
-            TermQuery(_WEST_ROUTE_MAPS[lang]["table"]) for lang in _WEST_LANGS
-        ]
+    return f"CASE {var} {cases} ELSE '' END"
+
+
+def q_ft_cjk_bigram(spark, sf_dir):
+    """CJK bigram search end-to-end: the zh documents as han text (each
+    vocabulary word -> one han codepoint, concatenated), indexed through
+    the CJKAnalyzer chain (Cjk/CJKAnalyzer.cs:40, CJKBigramFilter.cs —
+    analysis/cjk.py: width fold -> per-ideograph tokens -> overlapping
+    codepoint bigrams -> BM25 postings), then a bigram TermQuery top-k.
+    The DuckDB oracle reproduces the bigram token stream with
+    substring-windowing over the same word->ideograph mapping and scores
+    with the shared exact-int formula — so tokenization, bigramming,
+    doclen/norms, df and ranking are all cross-checked."""
+    s = _module_searcher(
+        spark, sf_dir, "cjk", "cjk",
+        f"array_join(transform({_TOKS_SPARK}, x -> {_cjk_map_case('x')}), '')",
+        where="lang = 'zh'", ascii_tokens=False, max_token_length=255,
     )
+    b1 = _CJK_CHAR_MAP["the"] + _CJK_CHAR_MAP["row"]
+    b2 = _CJK_CHAR_MAP["table"] + _CJK_CHAR_MAP["table"]
+    q = BooleanQuery.build(should=[TermQuery(b1), TermQuery(b2)])
     return _topk_df(s, q, 10)
 
 
@@ -1274,40 +869,6 @@ _THAI_EXPANSIONS: dict[str, str] = {
     "slow": "ช้า",              # one cluster -> unigram
 }
 
-_THAI_SEARCHERS: dict[str, Searcher] = {}
-
-
-def _thai_searcher(spark, sf_dir):
-    import dataclasses
-
-    key = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    if key in _THAI_SEARCHERS:
-        return _THAI_SEARCHERS[key]
-    cfg = dataclasses.replace(
-        _ENTRY_CONFIG,
-        analyzer="thai",
-        ascii_tokens=False,  # the input IS Thai script
-        max_token_length=255,
-        keyword_fields=(), docvalue_fields=(), text_fields=(),
-    )
-    pages = (
-        _docs(spark, sf_dir)
-        .filter(F.col("source") == "src18")
-        .select(
-            F.col("doc_id").alias("docid"),
-            F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
-            F.expr(
-                f"array_join(transform({_TOKS_SPARK}, "
-                f"x -> {_word_map_case('x', _THAI_WORD_MAP)}), ' ')"
-            ).alias("text"),
-        )
-    )
-    idx = os.path.join(_INDEX_ROOT, key + "_thai")
-    build_index(spark, pages, idx, cfg)  # resumes
-    s = Searcher(spark, idx, scoring="exact_int")
-    _THAI_SEARCHERS[key] = s
-    return s
-
 
 def q_ft_thai_tcc(spark, sf_dir):
     """Thai search end-to-end without a dictionary: the src18 documents
@@ -1318,7 +879,10 @@ def q_ft_thai_tcc(spark, sf_dir):
     (unnest of the space-joined bigram literals), so segmentation,
     bigramming, doclen/norms, df and ranking are all cross-checked; the
     guard below proves each embedded expansion against the real chain."""
-    s = _thai_searcher(spark, sf_dir)
+    s = _module_searcher(
+        spark, sf_dir, "thai", "thai", _respell(_THAI_WORD_MAP),
+        where="source = 'src18'", ascii_tokens=False, max_token_length=255,
+    )
     from lucenenet_spark.analysis.analyzer import analyzer_for
 
     an = analyzer_for(
@@ -1349,32 +913,21 @@ def q_ft_thai_tcc(spark, sf_dir):
 # that rebuild the module's token stream with pure SQL.
 # --------------------------------------------------------------------------- #
 
-_MODULE_SEARCHERS: dict[tuple[str, str], Searcher] = {}
 
+def _module_searcher(
+    spark, sf_dir, tag: str, analyzer: str, text_expr: str,
+    where: str = "true", **cfg,
+):
+    """A single-text-field index ``tag`` over the documents matching
+    ``where``, whose text column is ``text_expr`` analyzed by
+    ``analyzer``; ``cfg`` overrides further IndexConfig fields."""
 
-def _module_searcher(spark, sf_dir, tag: str, analyzer: str, text_expr: str):
-    """Build/open a single-text-field index whose text column is
-    ``text_expr`` analyzed by ``analyzer`` (one per module entry)."""
-    import dataclasses
+    def pages(spark, sf_dir):
+        return _text_pages(_docs(spark, sf_dir).filter(where), text_expr)
 
-    key = (os.path.basename(os.path.normpath(sf_dir)) or "default", tag)
-    if key in _MODULE_SEARCHERS:
-        return _MODULE_SEARCHERS[key]
-    cfg = dataclasses.replace(
-        _ENTRY_CONFIG,
-        analyzer=analyzer,
-        keyword_fields=(), docvalue_fields=(), text_fields=(),
+    return _index_searcher(
+        spark, sf_dir, tag, _text_config(analyzer=analyzer, **cfg), pages
     )
-    pages = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("docid"),
-        F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
-        F.expr(text_expr).alias("text"),
-    )
-    idx = os.path.join(_INDEX_ROOT, key[0] + "_" + tag)
-    build_index(spark, pages, idx, cfg)  # resumes
-    s = Searcher(spark, idx, scoring="exact_int")
-    _MODULE_SEARCHERS[key] = s
-    return s
 
 
 def q_ft_shingle(spark, sf_dir):
@@ -4524,14 +4077,15 @@ ORDER BY df DESC, term ASC LIMIT 10
     # image of the fixed 31-word corpus vocabulary to lang='fr' docs (the
     # entry guards the closure; stemmer pinned by tests/test_french.py) —
     # then the ordinary 2-term disjunction scoring over the routed terms
+    _r = _ROUTED["langroute"].routes
     _fr_case = " ".join(
-        f"WHEN '{k}' THEN '{v}'" for k, v in _FR_STEM_MAP.items()
+        f"WHEN '{k}' THEN '{v}'" for k, v in _r["fr"].route_map.items()
     )
     _de_case = " ".join(
-        f"WHEN '{k}' THEN '{v}'" for k, v in _DE_STEM_MAP.items()
+        f"WHEN '{k}' THEN '{v}'" for k, v in _r["de"].route_map.items()
     )
     _es_case = " ".join(
-        f"WHEN '{k}' THEN '{v}'" for k, v in _ES_STEM_MAP.items()
+        f"WHEN '{k}' THEN '{v}'" for k, v in _r["es"].route_map.items()
     )
     o["ft_lang_router"] = (
         f"""
@@ -4554,11 +4108,12 @@ st AS (SELECT (SELECT count(*) FROM documents)::DOUBLE AS maxdoc,
 
     # pt/nl routing (r5): same shape as ft_lang_router over the DERIVED
     # lang2 column and the pt/nl stem images
+    _r = _ROUTED["langroute2"].routes
     _pt_case = " ".join(
-        f"WHEN '{k}' THEN '{v}'" for k, v in _PT_STEM_MAP.items()
+        f"WHEN '{k}' THEN '{v}'" for k, v in _r["pt"].route_map.items()
     )
     _nl_case = " ".join(
-        f"WHEN '{k}' THEN '{v}'" for k, v in _NL_STEM_MAP.items()
+        f"WHEN '{k}' THEN '{v}'" for k, v in _r["nl"].route_map.items()
     )
     o["ft_lang_router_ptnl"] = (
         f"""
@@ -4567,7 +4122,7 @@ WITH tok AS (
          CASE WHEN lang2 = 'pt' THEN CASE t {_pt_case} ELSE t END
               WHEN lang2 = 'nl' THEN CASE t {_nl_case} ELSE t END
               ELSE t END AS term
-  FROM (SELECT doc_id, {_LANG2_CASE} AS lang2, unnest({_TOKS_DUCK}) AS t
+  FROM (SELECT doc_id, {_ROUTED["langroute2"].relabel} AS lang2, unnest({_TOKS_DUCK}) AS t
         FROM documents)
 ),
 dl AS (SELECT doc_id, count(*)::DOUBLE AS dl FROM tok GROUP BY doc_id),
@@ -4583,113 +4138,62 @@ st AS (SELECT (SELECT count(*) FROM documents)::DOUBLE AS maxdoc,
     # so the tok CTE rewrites each routed surface token straight to its
     # indexed term (identity outside the maps); the entry's per-route
     # guard proves each composition against the real chains per run
+    _r = _ROUTED["langroute3"].routes
     o["ft_lang_router_multi"] = (
         f"""
 WITH tok AS (
   SELECT doc_id,
-         CASE WHEN lang3 = 'ru' THEN {_word_map_case('t', _RU_ROUTE_MAP)}
-              WHEN lang3 = 'sv' THEN {_word_map_case('t', _SV_ROUTE_MAP)}
-              WHEN lang3 = 'ar' THEN {_word_map_case('t', _AR_ROUTE_MAP)}
-              WHEN lang3 = 'id' THEN {_word_map_case('t', _ID_ROUTE_MAP)}
+         CASE WHEN lang3 = 'ru' THEN {_word_map_case('t', _r["ru"].route_map)}
+              WHEN lang3 = 'sv' THEN {_word_map_case('t', _r["sv"].route_map)}
+              WHEN lang3 = 'ar' THEN {_word_map_case('t', _r["ar"].route_map)}
+              WHEN lang3 = 'id' THEN {_word_map_case('t', _r["id"].route_map)}
               ELSE t END AS term
-  FROM (SELECT doc_id, {_LANG3_CASE} AS lang3, unnest({_TOKS_DUCK}) AS t
+  FROM (SELECT doc_id, {_ROUTED["langroute3"].relabel} AS lang3, unnest({_TOKS_DUCK}) AS t
         FROM documents)
 ),
 dl AS (SELECT doc_id, count(*)::DOUBLE AS dl FROM tok GROUP BY doc_id),
 st AS (SELECT (SELECT count(*) FROM documents)::DOUBLE AS maxdoc,
               (SELECT count(*) FROM tok)::DOUBLE AS sum_ttf)
 """
-        + _term_ctes(
-            [
-                _RU_ROUTE_MAP["table"], _SV_ROUTE_MAP["table"],
-                _AR_ROUTE_MAP["table"], _ID_ROUTE_MAP["table"],
-            ]
-        )
+        + _term_ctes(_route_probes("langroute3"))
         + f", scored AS (SELECT doc_id, score FROM {_sum_scored([0, 1, 2, 3])}) "
         + _TOPK_TAIL.format(k=10)
     )
 
-    # fi/hu/no/da/cs/bg/fa/hi routing (r5): the route maps are the COMPLETE
-    # chain image over the corpus vocabulary (Latin-script stemmers rewrite
-    # unmapped ascii too), so the tok CTE rewrites every routed token
-    # straight to its indexed term; the entry's per-route guard proves each
-    # composition against the real chains per run
-    _xeu_arms = " ".join(
-        f"WHEN lang4 = '{lang}' THEN "
-        f"{_word_map_case('t', _XEU_ROUTE_MAPS[lang])}"
-        for lang in _XEU_LANGS
-    )
-    _xeu_probes = [
-        _XEU_ROUTE_MAPS["fi"]["table"], _XEU_ROUTE_MAPS["hu"]["table"],
-        _XEU_ROUTE_MAPS["no"]["row"], _XEU_ROUTE_MAPS["da"]["row"],
-        _XEU_ROUTE_MAPS["cs"]["table"], _XEU_ROUTE_MAPS["bg"]["table"],
-        _XEU_ROUTE_MAPS["fa"]["table"], _XEU_ROUTE_MAPS["hi"]["table"],
-    ]
-    o["ft_lang_router_xeu"] = (
-        f"""
+    # fi/hu/no/da/cs/bg/fa/hi, el/tr/ro/lv and ca/eu/hy/ga/gl/br routing
+    # (r5): the route maps are the COMPLETE chain image over the corpus
+    # vocabulary (Latin-script stemmers rewrite unmapped ascii too), so the
+    # tok CTE rewrites every routed token straight to its indexed term; the
+    # entry's route guard proves each composition against the real chains
+    # per run
+    for name, tag in (
+        ("ft_lang_router_xeu", "langroute4"),
+        ("ft_lang_router_misc", "langroute5"),
+        ("ft_lang_router_six", "langroute6"),
+    ):
+        row = _ROUTED[tag]
+        arms = " ".join(
+            f"WHEN {row.column} = '{lang}' THEN "
+            f"{_word_map_case('t', r.route_map)}"
+            for lang, r in row.routes.items()
+        )
+        probes = _route_probes(tag)
+        o[name] = (
+            f"""
 WITH tok AS (
-  SELECT doc_id, CASE {_xeu_arms} ELSE t END AS term
-  FROM (SELECT doc_id, {_LANG4_CASE} AS lang4, unnest({_TOKS_DUCK}) AS t
+  SELECT doc_id, CASE {arms} ELSE t END AS term
+  FROM (SELECT doc_id, {row.relabel} AS {row.column}, unnest({_TOKS_DUCK}) AS t
         FROM documents)
 ),
 dl AS (SELECT doc_id, count(*)::DOUBLE AS dl FROM tok GROUP BY doc_id),
 st AS (SELECT (SELECT count(*) FROM documents)::DOUBLE AS maxdoc,
               (SELECT count(*) FROM tok)::DOUBLE AS sum_ttf)
 """
-        + _term_ctes(_xeu_probes)
-        + f", scored AS (SELECT doc_id, score FROM "
-          f"{_sum_scored(list(range(len(_xeu_probes))))}) "
-        + _TOPK_TAIL.format(k=10)
-    )
-
-    # el/tr/ro/lv routing (r5): same construction as ft_lang_router_xeu
-    _misc_arms = " ".join(
-        f"WHEN lang5 = '{lang}' THEN "
-        f"{_word_map_case('t', _MISC_ROUTE_MAPS[lang])}"
-        for lang in _MISC_LANGS
-    )
-    _misc_probes = [_MISC_ROUTE_MAPS[lang]["table"] for lang in _MISC_LANGS]
-    o["ft_lang_router_misc"] = (
-        f"""
-WITH tok AS (
-  SELECT doc_id, CASE {_misc_arms} ELSE t END AS term
-  FROM (SELECT doc_id, {_LANG5_CASE} AS lang5, unnest({_TOKS_DUCK}) AS t
-        FROM documents)
-),
-dl AS (SELECT doc_id, count(*)::DOUBLE AS dl FROM tok GROUP BY doc_id),
-st AS (SELECT (SELECT count(*) FROM documents)::DOUBLE AS maxdoc,
-              (SELECT count(*) FROM tok)::DOUBLE AS sum_ttf)
-"""
-        + _term_ctes(_misc_probes)
-        + f", scored AS (SELECT doc_id, score FROM "
-          f"{_sum_scored(list(range(len(_misc_probes))))}) "
-        + _TOPK_TAIL.format(k=10)
-    )
-
-    # ca/eu/hy/ga/gl/br routing (r5): same construction — completes the
-    # reference's analysis-common language coverage
-    _west_arms = " ".join(
-        f"WHEN lang6 = '{lang}' THEN "
-        f"{_word_map_case('t', _WEST_ROUTE_MAPS[lang])}"
-        for lang in _WEST_LANGS
-    )
-    _west_probes = [_WEST_ROUTE_MAPS[lang]["table"] for lang in _WEST_LANGS]
-    o["ft_lang_router_six"] = (
-        f"""
-WITH tok AS (
-  SELECT doc_id, CASE {_west_arms} ELSE t END AS term
-  FROM (SELECT doc_id, {_LANG6_CASE} AS lang6, unnest({_TOKS_DUCK}) AS t
-        FROM documents)
-),
-dl AS (SELECT doc_id, count(*)::DOUBLE AS dl FROM tok GROUP BY doc_id),
-st AS (SELECT (SELECT count(*) FROM documents)::DOUBLE AS maxdoc,
-              (SELECT count(*) FROM tok)::DOUBLE AS sum_ttf)
-"""
-        + _term_ctes(_west_probes)
-        + f", scored AS (SELECT doc_id, score FROM "
-          f"{_sum_scored(list(range(len(_west_probes))))}) "
-        + _TOPK_TAIL.format(k=10)
-    )
+            + _term_ctes(probes)
+            + f", scored AS (SELECT doc_id, score FROM "
+              f"{_sum_scored(list(range(len(probes))))}) "
+            + _TOPK_TAIL.format(k=10)
+        )
 
     # Thai TCC bigrams (r5): token stream rebuilt from the embedded
     # per-word cluster-bigram expansions (space-joined literals, proved

@@ -57,6 +57,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from ..analysis import StandardAnalyzer
 from ..scoring.bm25 import BM25
@@ -333,6 +334,13 @@ class IndexBuilder:
         cfg = self.config
         analyzer = self.analyzer
         external = cfg.external_docids
+        if external:
+            docid_type = pages.schema["docid"].dataType
+            if not isinstance(docid_type, IntegralType):
+                raise ValueError(
+                    "external_docids needs an integer docid column, got "
+                    + docid_type.simpleString()
+                )
         offsets = None if external else self._offsets()
         index_positions = cfg.index_positions
         flush_docs = cfg.flush_docs
@@ -368,6 +376,7 @@ class IndexBuilder:
             dv_types: list = []
             state_pid = None
             next_docid = 0
+            last_docid = None  # external docids: the previous batch's last
             seg = 0
             # per-seg accumulators: tokens stay as Arrow arrays, everything
             # else as numpy — zero per-token Python objects
@@ -494,7 +503,8 @@ class IndexBuilder:
                         texts, analyzer, encode=False
                     )
                 if external:
-                    docids = rb.column("docid").to_numpy(zero_copy_only=False).astype(np.int64)
+                    docids = _checked_docids(rb, last_docid)
+                    last_docid = int(docids[-1])
                 else:
                     docids = np.arange(next_docid, next_docid + n, dtype=np.int64)
                     next_docid += n
@@ -1000,6 +1010,26 @@ def _partials_pa():
     if _PARTIALS_PA is None:
         _PARTIALS_PA = _arrow_partials_schema()
     return _PARTIALS_PA
+
+
+def _checked_docids(rb, prev: int | None) -> np.ndarray:
+    """A batch's caller-assigned docids, each non-null and greater than
+    the one before it (``prev``: the previous batch's last). Batches arrive
+    range-partitioned and sorted by docid, so equal docids meet in one
+    partition, adjacent."""
+    col = rb.column("docid")
+    if col.null_count:
+        url = rb.column("url").filter(col.is_null())[0].as_py()
+        raise ValueError(f"null docid (url {url!r}); external docids must be set")
+    docids = col.to_numpy(zero_copy_only=False).astype(np.int64)
+    seq = docids if prev is None else np.concatenate(([prev], docids))
+    bad = np.flatnonzero(np.diff(seq) <= 0)
+    if len(bad):
+        raise ValueError(
+            f"docid {seq[bad[0] + 1]} is not greater than the docid before it "
+            f"({seq[bad[0]]}); external docids must be unique"
+        )
+    return docids
 
 
 def _const_str(value: str, n: int):

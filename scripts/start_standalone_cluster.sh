@@ -16,5 +16,14 @@ for i in $(seq 1 $NW); do
     --work-dir /tmp/spark-worker-$i \
     spark://127.0.0.1:7077 > /tmp/spark-worker-$i.log 2>&1 &
 done
-sleep 8
-grep -c "Registering worker" /tmp/spark-master.log
+# wait up to 60 s for every worker to register with the master
+for _ in $(seq 1 60); do
+  REG=$(grep -c "Registering worker" /tmp/spark-master.log || true)
+  [ "$REG" -ge "$NW" ] && break
+  sleep 1
+done
+echo "$REG of $NW workers registered"
+if [ "$REG" -lt "$NW" ]; then
+  echo "only $REG of $NW workers registered within 60 s; see /tmp/spark-worker-*.log" >&2
+  exit 1
+fi

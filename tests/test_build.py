@@ -200,3 +200,24 @@ def test_empty_corpus_build_and_search(spark, tmp_path):
     assert s.maxdoc == 0
     assert s.search(TermQuery("anything"), 5).count() == 0
     assert s.search(MatchAllDocsQuery(), 5).count() == 0
+
+
+@pytest.mark.parametrize(
+    "docids, ddl, message",
+    [
+        ([1.5, 1.0, 2.0], "docid double", "integer docid column, got double"),
+        (["7", "x9", "8"], "docid string", "integer docid column, got string"),
+        ([3, None, 5], "docid long", "null docid"),
+        ([2, 4, 4, 6], "docid long", "docid 4 is not greater"),
+    ],
+    ids=["float", "string", "null", "duplicate"],
+)
+def test_external_docids_reject_dirty_ids(spark, tmp_path, docids, ddl, message):
+    """Caller-assigned docids must be integral, non-null and unique: each
+    dirty column fails the build with an error naming the fault, instead
+    of truncating, defaulting or merging documents."""
+    rows = [(d, f"u://{i}", "data table") for i, d in enumerate(docids)]
+    pages = spark.createDataFrame(rows, f"{ddl}, url string, text string")
+    cfg = IndexConfig(num_partitions=2, external_docids=True)
+    with pytest.raises(Exception, match=message):
+        build_index(spark, pages, str(tmp_path / "idx"), cfg, overwrite=True)

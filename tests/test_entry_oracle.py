@@ -1,7 +1,7 @@
 """In-suite insurance for the driver correctness gate: a representative
 subset of __spark_entry__ queries vs their DuckDB oracles at sf0.001.
-(The full 33-query sweep is scripts/check_entry.py / the driver's
-CORRECTNESS_r{N}.json.)"""
+(The full sweep of all 124 registry entries is scripts/check_entry.py /
+the driver's CORRECTNESS_r{N}.json.)"""
 
 import duckdb
 import pandas as pd
@@ -32,6 +32,13 @@ SUBSET = [
     "ft_prefix_scored_field",
     "ft_field_keyword",
     "ft_span_field",
+    # the index fixtures beside the main index: a surface-routed and a
+    # re-spelled routed index, the CJK and Thai chains, an analysis module
+    "ft_lang_router",
+    "ft_lang_router_multi",
+    "ft_cjk_bigram",
+    "ft_thai_tcc",
+    "ft_shingle",
 ]
 
 
@@ -88,3 +95,18 @@ def test_lucene_rank_gate_runs(spark):
     for shape, ranks in by_shape.items():
         assert 1 <= len(ranks) <= 10, shape
         assert ranks == list(range(1, len(ranks) + 1)), shape
+
+
+def test_route_guard_catches_a_wrong_image(spark, monkeypatch):
+    """The shared route guard still guards: a wrong stem in one route map
+    fails the routed entry, naming the language and the word."""
+    routes = entrymod._ROUTED["langroute"].routes
+    monkeypatch.setitem(routes["fr"].route_map, "table", "tablx")
+    with pytest.raises(AssertionError, match="fr:table -> "):
+        entrymod.q_ft_lang_router(spark, SF_DIR)
+
+
+def test_thai_guard_catches_a_wrong_expansion(spark, monkeypatch):
+    monkeypatch.setitem(entrymod._THAI_EXPANSIONS, "table", "ตารา")
+    with pytest.raises(AssertionError, match="table -> "):
+        entrymod.q_ft_thai_tcc(spark, SF_DIR)
